@@ -54,41 +54,10 @@ from financial_market_data_analysis_spark.plans.candles import (
     time_bucket_us,
 )
 from financial_market_data_analysis_spark.sources.batch import load_table
-from financial_market_data_analysis_spark.functions.core import (
-    push_small_shuffle,
-    pop_small_shuffle,
-)
+from financial_market_data_analysis_spark.streaming.pipeline import streaming_run
 
 # ---------------------------------------------------------------------------
 # helpers
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def _no_nodata_batches(spark: SparkSession):
-    """Scope ``spark.sql.streaming.noDataMicroBatches.enabled=false``
-    around one availableNow streaming harness (r16, guide §1.2: the
-    trailing data-less micro-batch exists to advance the watermark and
-    emit/evict watermark-gated state — for a query whose EMISSION is
-    data-driven (inner band joins, dropDuplicates*, data-driven
-    applyInPandasWithState) it produces zero rows and costs a full
-    batch round of per-operator state-store commits plus a driver
-    planning pass). Applied ONLY to harnesses whose output provably
-    does not depend on watermark-time emission; the left-outer join /
-    session-window / late-drop / state-metrics proofs keep the default
-    (their null-padding, window finalization, or eviction metrics NEED
-    the no-data batch). Serial-adjudication contract as
-    push_small_shuffle: the conf is session-global; every execution
-    context here runs one query at a time."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 
 def _candles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,103 +68,6 @@ _ORDER = ["bucket_start"]
 
 # DuckDB CTE prefix shared by every indicator oracle.
 _CANDLES_CTE = f"WITH candles AS ({candles_oracle_sql()})"
-
-
-def _stage_batches(
-    df: DataFrame, filters, src: str, fmt: str = "parquet", line_col: str = "value"
-) -> None:
-    """Write a DataFrame as N sequential single-file drops (parquet by
-    default, ``fmt="text"`` for CSV-line staging; ``line_col`` names
-    the rendered-line column the text file carries) — the
-    N-micro-batch feed for the availableNow streaming harnesses.
-
-    All N slices are written by ONE Spark job: the mutually-exclusive
-    batch filters become a ``__b`` tag, the frame is repartitioned on
-    it (one file per batch) and written ``partitionBy("__b")`` to a
-    scratch dir, and the driver then RENAMES each part file into the
-    flat ``src`` layout the FileStreamSource reads — byte-identical
-    files to the previous N sequential single-file appends (the tag
-    rides in the directory name, never in the file), at one
-    plan+job+commit instead of N (guide §1.2/§2.4: the N-job loop was
-    pure fixed overhead — measured ~0.3 s per staged batch across the
-    ~20 streaming harnesses). An empty slice still stages an empty
-    file (parquet keeps a schema-only file so the batch count — and
-    therefore the stateful operators' batch boundaries — is unchanged;
-    an empty TEXT slice stages an empty text file likewise).
-
-    FileStreamSource orders files by modification time; on a coarse-
-    granularity filesystem two files can land with IDENTICAL mtimes,
-    and the tie then breaks on the random temp part-file path — which
-    could invert micro-batch order and violate the stateful operators'
-    in-order per-key arrival contract (r4 advice). Each staged file's
-    mtime is therefore set explicitly, strictly increasing in batch
-    order.
-    """
-    import glob
-    import os as _os
-    import shutil as _shutil
-    import time as _time
-
-    ext = "parquet" if fmt == "parquet" else "txt"
-    if fmt != "parquet" and line_col not in df.columns:
-        raise ValueError(
-            f"text staging needs line column {line_col!r}; "
-            f"frame has {df.columns}"
-        )
-    tag = F.lit(None).cast("int")
-    for i, flt in reversed(list(enumerate(filters))):
-        tag = F.when(flt, F.lit(i)).otherwise(tag)
-    tagged = df.withColumn("__b", tag).filter(F.col("__b").isNotNull())
-    if fmt != "parquet":
-        tagged = tagged.select(F.col(line_col).alias("value"), "__b")
-    scratch = src.rstrip("/") + ".__staging__"
-    writer = tagged.repartition(len(filters), F.col("__b")).write.mode(
-        "overwrite"
-    ).partitionBy("__b")
-    if fmt == "parquet":
-        writer.parquet(scratch)
-    else:
-        writer.text(scratch)
-    _os.makedirs(src, exist_ok=True)
-    now = _time.time()
-    for i in range(len(filters)):
-        parts = sorted(
-            glob.glob(_os.path.join(scratch, f"__b={i}", f"*.{ext}"))
-        )
-        if not parts:
-            # Empty slice: hash-partitioning put no rows (and hence no
-            # file) under this tag — stage the schema-only/empty file
-            # the old per-slice append produced, so the micro-batch
-            # count is exactly what the harness staged for.
-            part = df.filter(filters[i]).limit(0)
-            if fmt != "parquet":
-                part = part.select(F.col(line_col).alias("value"))
-            w = part.coalesce(1).write.mode("overwrite")
-            empty_dir = _os.path.join(scratch, f"__empty_{i}")
-            if fmt == "parquet":
-                w.parquet(empty_dir)
-            else:
-                w.text(empty_dir)
-            parts = sorted(glob.glob(_os.path.join(empty_dir, f"*.{ext}")))
-            if not parts:
-                # The writer produced no file at all for the empty
-                # slice — identical to what the old per-slice append
-                # did in that case; stage nothing for this batch.
-                continue
-        if len(parts) != 1:
-            raise RuntimeError(
-                f"staging batch {i}: expected one part file, got {parts}"
-            )
-        dest = _os.path.join(src, f"batch-{i:05d}-{_os.path.basename(parts[0])}")
-        _os.rename(parts[0], dest)
-        # Strictly increasing mtimes in batch order, 2 s apart.
-        _os.utime(dest, (now + 2 * i, now + 2 * i))
-    _shutil.rmtree(scratch, ignore_errors=True)
-
-
-def _stage_two_halves(df: DataFrame, half_filters, src: str) -> None:
-    """Two-batch form of :func:`_stage_batches` (the common case)."""
-    _stage_batches(df, half_filters, src)
 
 
 # ---------------------------------------------------------------------------
@@ -2365,19 +2237,15 @@ def _t21_stream_csv_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOTH sinks are idempotent under replay (per-batch_id dynamic
     partition overwrite, the t7/K1 pattern: a retried batch replaces
     its own partition instead of appending duplicates)."""
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.sources import files as FS
 
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "lang", "n_chars"
     )
-    src = tempfile.mkdtemp(prefix="t21_drop_")
-    acct = tempfile.mkdtemp(prefix="t21_acct_")
-    clean_dir = tempfile.mkdtemp(prefix="t21_clean_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract
-    try:
+    with streaming_run(spark) as sr:
+        src = sr.path("drop")
+        acct = sr.path("acct")
+        clean_dir = sr.path("clean")
         _stage_corrupt_csv(docs, src, n_files=_T21_N_FILES)
         stream = (
             spark.readStream.schema(
@@ -2409,14 +2277,7 @@ def _t21_stream_csv_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             batch.unpersist()
 
-        q = (
-            stream.writeStream.foreachBatch(_ingest)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t21_stream_csv_drop did not finish in 300 s")
+        sr.run(stream.writeStream.foreachBatch(_ingest))
         rep = spark.read.parquet(acct).agg(
             F.count(F.lit(1)).alias("n_batches"),
             F.sum("n_clean").alias("n_clean"),
@@ -2425,13 +2286,7 @@ def _t21_stream_csv_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         chk = spark.read.parquet(clean_dir).agg(
             F.sum("n_chars").alias("clean_chars_sum")
         )
-        out = rep.crossJoin(chk).localCheckpoint(eager=True)
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(acct, ignore_errors=True)
-        shutil.rmtree(clean_dir, ignore_errors=True)
-    return out
+        return rep.crossJoin(chk).localCheckpoint(eager=True)
 
 
 _T21_ORACLE = f"""
@@ -3118,7 +2973,7 @@ def _j9_aqe_skew_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     Skew thresholds are scoped DOWN for the fixture (the hot
     partition is ~100s of KB compressed here, not the 256 MB default
     threshold) under the serial-execution contract documented at
-    functions/core.py ``push_small_shuffle``; on a real cluster the
+    functions/core.py ``scoped_confs``; on a real cluster the
     defaults fire on genuinely hot keys. Aggregates are
     order-independent (counts, integer sums, min over strings) so the
     proof never rides float-addition order.
@@ -3131,6 +2986,7 @@ def _j9_aqe_skew_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     (spark_consumer.py processes one feed per core); skew handling is
     what its topology needs the moment two feeds join on a hot
     symbol."""
+    from financial_market_data_analysis_spark.functions.core import scoped_confs
     from financial_market_data_analysis_spark.operators.joins import (
         assert_skew_join_split,
     )
@@ -3176,14 +3032,7 @@ def _j9_aqe_skew_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64KB",
     }
-    old: dict[str, str | None] = {}
-    for k, v in scoped.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, scoped):
         out = (
             fact.join(dim, "hot_key")
             .groupBy("tag")
@@ -3197,14 +3046,7 @@ def _j9_aqe_skew_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         # freeze the audited result: after the confs restore, a
         # re-plan would broadcast the dim and collect a DIFFERENT
         # (unaudited) plan
-        result = out.localCheckpoint(eager=True)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return result
+        return out.localCheckpoint(eager=True)
 
 
 _J9_ORACLE = """
@@ -3267,6 +3109,7 @@ def _j10_runtime_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuine 100 TB shape of the win — the flip saves the fact
     shuffle in multi-stage pipelines; it cannot refund one already
     paid."""
+    from financial_market_data_analysis_spark.functions.core import scoped_confs
     from financial_market_data_analysis_spark.operators.joins import (
         assert_runtime_broadcast_demotion,
     )
@@ -3303,14 +3146,7 @@ def _j10_runtime_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "10MB",
     }
-    old: dict[str, str | None] = {}
-    for k, v in scoped.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, scoped):
         out = (
             ev.join(heavy, "user_id")
             .groupBy((F.col("user_id") % 7).alias("g"))
@@ -3320,14 +3156,7 @@ def _j10_runtime_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         assert_runtime_broadcast_demotion(out)
-        result = out.localCheckpoint(eager=True)
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    return result
+        return out.localCheckpoint(eager=True)
 
 
 _J10_ORACLE = f"""
@@ -3799,10 +3628,6 @@ def _t25_stream_evolving_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side ``from_csv`` projections, casts are columnar, the
     cross-version union never shuffles, and all three sinks are
     epoch-idempotent dynamic partition overwrites."""
-    import os
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.streaming import pipeline as P
     from pyspark.sql.types import (
         DoubleType,
@@ -3880,41 +3705,28 @@ def _t25_stream_evolving_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         ),
     }
-    base = tempfile.mkdtemp(prefix="t25_")
-    src = os.path.join(base, "drops")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract
-    try:
-        _stage_batches(
+    with streaming_run(spark) as sr:
+        src = sr.stage(
             lines,
             [
                 F.col("doc_id") % 4 == 0,
                 F.col("doc_id") % 2 == 1,
                 F.col("doc_id") % 4 == 2,
             ],
-            src,
             fmt="text",
         )
-        stream = (
-            spark.readStream.schema("value string")
-            .option("maxFilesPerTrigger", 1)
-            .text(src)
-        )
-        q = P.evolving_ingest_sink(
-            stream,
-            schemas,
-            os.path.join(base, "clean"),
-            os.path.join(base, "quar"),
-            os.path.join(base, "ckpt"),
-            trigger={"availableNow": True},
-            accounting_dir=os.path.join(base, "acct"),
-        ).start()
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "t25 evolving-ingest stream did not finish in 300 s"
+        sr.run(
+            P.evolving_ingest_sink(
+                sr.source(src, "value string", fmt="text"),
+                schemas,
+                sr.path("clean"),
+                sr.path("quar"),
+                sr.path("ckpt"),
+                accounting_dir=sr.path("acct"),
             )
-        out = (
-            spark.read.parquet(os.path.join(base, "clean"))
+        )
+        return (
+            spark.read.parquet(sr.path("clean"))
             .select(
                 F.col("epoch_id").cast("int").alias("epoch_id"),
                 "schema_version",
@@ -3925,10 +3737,6 @@ def _t25_stream_evolving_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 _T25_ORACLE = """
@@ -3985,10 +3793,6 @@ def _t26_stream_inference_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch join is stream-static with no state and no shuffle on
     the stream side, and the scoring is whole-stage-codegen column
     math. No Python in the row path."""
-    import os
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.ml import lag_matrix
     from financial_market_data_analysis_spark.streaming import pipeline as P
 
@@ -4012,20 +3816,10 @@ def _t26_stream_inference_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.when(idx % 3 == 2, F.lit(5000)).otherwise(F.lit(300))
         ).alias("arr_s"),
     )
-    base = tempfile.mkdtemp(prefix="t26_")
-    src = os.path.join(base, "triggers")
-    out_dir = os.path.join(base, "signals")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract
-    try:
+    with streaming_run(spark) as sr:
+        out_dir = sr.path("signals")
         tidx = F.expr("trig_s div 300")
-        _stage_batches(
-            triggers, [tidx % 14 == 0, tidx % 14 == 7], src
-        )
-        stream = (
-            spark.readStream.schema("trig_s long, arr_s long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+        stream = sr.stream(triggers, [tidx % 14 == 0, tidx % 14 == 7])
         fresh = stream.filter(
             F.col("arr_s") - F.col("trig_s") <= F.lit(_T26_MAX_LAG_S)
         )
@@ -4051,20 +3845,12 @@ def _t26_stream_inference_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(prob, 6).alias("prob_up"),
             (prob > 0.5).cast("int").alias("signal"),
         )
-        q = (
+        sr.run(
             signals.writeStream.foreachBatch(
                 P.epoch_idempotent_writer(out_dir)
-            )
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            ).option("checkpointLocation", sr.path("ckpt"))
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "t26 inference-loop stream did not finish in 300 s"
-            )
-        out = (
+        return (
             spark.read.parquet(out_dir)
             .select(
                 F.col("epoch_id").cast("int").alias("epoch_id"),
@@ -4074,10 +3860,6 @@ def _t26_stream_inference_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 def _t26_oracle() -> str:
@@ -4139,8 +3921,6 @@ def _t27_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per epoch and the final collapse shuffles only registers. The
     exact column exists to adjudicate the estimator, as in a20."""
     import os
-    import shutil
-    import tempfile
 
     from financial_market_data_analysis_spark.streaming import pipeline as SP
 
@@ -4149,24 +3929,15 @@ def _t27_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_max = ev.agg(F.max("event_id")).first()[0]
     cut1, cut2 = n_max // 3, 2 * n_max // 3
-    work = tempfile.mkdtemp(prefix="t27_hll_")
-    src_dir = f"{work}/arrivals"
-    store = f"{work}/registers"
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract
-    try:
-        _stage_batches(
+    with streaming_run(spark) as sr:
+        store = sr.path("registers")
+        stream = sr.stream(
             ev,
             (
                 F.col("event_id") <= cut1,
                 (F.col("event_id") > cut1) & (F.col("event_id") <= cut2),
                 F.col("event_id") > cut2,
             ),
-            src_dir,
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
         )
         write = SP.epoch_idempotent_writer(store)
         # prebuilt register closure: the ~60-expression tree is built
@@ -4177,15 +3948,11 @@ def _t27_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         def merge(batch_df: DataFrame, batch_id: int) -> None:
             write(registers_of(batch_df), batch_id)
 
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        sr.run(
+            stream.writeStream.foreachBatch(merge).option(
+                "checkpointLocation", sr.path("ckpt")
+            )
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t27_stream_hll_merge did not finish in 300 s")
         # Guard BEFORE reading the store (r13 advice): a staging or
         # trigger regression that coalesces batches into fewer epochs
         # should fail here, not after the merged estimate has been
@@ -4201,11 +3968,7 @@ def _t27_stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.max("rho").alias("rho"))
         )
         est = SK.hll_estimate_from_registers(regs, ["event_type"])
-        out = _hll_grade(est, ev).localCheckpoint(eager=True)
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+        return _hll_grade(est, ev).localCheckpoint(eager=True)
 
 
 _S10_ORACLE = """
@@ -4878,25 +4641,17 @@ def _t7_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates and the row count/hash would mismatch. The halves are
     split on a BUCKET boundary so each bar lands wholly in one epoch.
     """
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.streaming.pipeline import (
         epoch_idempotent_writer,
     )
 
     bars = _candles(spark, sf_dir)
     cut = bars.agg(F.percentile_approx("bucket_start", 0.5)).first()[0]
-    src = tempfile.mkdtemp(prefix="t7_bars_")
-    wh = tempfile.mkdtemp(prefix="t7_wh_")
-    ckpt = tempfile.mkdtemp(prefix="t7_ckpt_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            bars,
-            (F.col("bucket_start") <= cut, F.col("bucket_start") > cut),
-            src,
+    with streaming_run(spark) as sr:
+        stream = sr.stream(
+            bars, (F.col("bucket_start") <= cut, F.col("bucket_start") > cut)
         )
+        wh = sr.path("wh")
         write = epoch_idempotent_writer(wh)
         # poison: half of epoch 1's rows, already under epoch_id=1 —
         # the crashed first attempt the stream's retry must replace
@@ -4907,34 +4662,12 @@ def _t7_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
         write(poisoned, 1)
-        stream = (
-            spark.readStream.schema(bars.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        sr.run(
+            stream.writeStream.foreachBatch(write).option(
+                "checkpointLocation", sr.path("ckpt")
+            )
         )
-        q = (
-            stream.writeStream.foreachBatch(write)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t7 sink stream did not finish in 300 s")
-        out = (
-            spark.read.parquet(wh)
-            .drop("epoch_id")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(wh, ignore_errors=True)
-        # explicitly-set checkpoint locations are never auto-deleted by
-        # Spark; un-removed, every bench/adjudication pass would leak a
-        # populated state dir (r5 review finding)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+        return spark.read.parquet(wh).drop("epoch_id").localCheckpoint(eager=True)
 
 
 def _s6_session_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4996,8 +4729,6 @@ def _t9_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream, by design, only emits rows whose LEAD targets are final) —
     so the stateful streaming operator gets a hard value-hash signal,
     not just a pytest parity check."""
-    import tempfile
-
     from financial_market_data_analysis_spark.streaming.pipeline import (
         stateful_indicator_suite,
     )
@@ -5013,42 +4744,12 @@ def _t9_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("low").cast("double").alias("low"),
         F.col("volume").cast("double").alias("volume"),
     )
-    import shutil
-
     cut = bars.agg(F.percentile_approx("ts", 0.5)).first()[0]
-    src = tempfile.mkdtemp(prefix="t9_bars_")
-    # The state store creates one partition per shuffle partition per
-    # micro-batch; a vanilla session's 200 defaults cost ~20 s of pure
-    # state-partition setup for a 5-key stream. Pin a small count for
-    # the streaming run and RESTORE the caller's setting after — a
-    # scoped, documented override, not a hidden session mutation.
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
+    with streaming_run(spark) as sr:
         # two time-ordered files → two micro-batches; per-key in-order
-        # arrival, the operator's documented contract (mtime-ordered by
-        # construction — see _stage_two_halves)
-        _stage_two_halves(bars, (F.col("ts") <= cut, F.col("ts") > cut), src)
-        stream = (
-            spark.readStream.schema(bars.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = stateful_indicator_suite(stream, ("symbol",), "ts")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t9_stateful_suite_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # a timed-out stream must FAIL LOUDLY, not return the partially
-        # filled memory table as if it were the operator's answer
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t9_stateful_suite stream did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
+        # arrival, the operator's documented contract
+        stream = sr.stream(bars, (F.col("ts") <= cut, F.col("ts") > cut))
+        rows = sr.memory(stateful_indicator_suite(stream, ("symbol",), "ts"))
     # derived indicators are rounded to 6 decimals on BOTH sides (the
     # x19/x33 precedent): the op's in-Python two-pass variance agrees
     # with SQL stddev_pop only to ULPs, and the driver's check is an
@@ -5057,7 +4758,7 @@ def _t9_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vol_MA6", "vol_MA20", "price_MA20",
         "upper_BB_dist", "lower_BB_dist", "stoch", "price_change", "ATR",
     ]
-    return spark.table("t9_stateful_suite_out").select(
+    return rows.select(
         "symbol",
         F.unix_micros(F.col("ts")).alias("ts_us"),
         "close", "high", "low", "volume",
@@ -5075,9 +4776,6 @@ def _t11_stateful_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     full per-symbol batch SQL — RSI-14 with the flat-50/all-gain-100
     branches, exact integer OBV, MACD(12,26,9) from rank-join
     truncated EWMAs — with no emission trim at all."""
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.streaming.pipeline import (
         stateful_momentum_suite,
     )
@@ -5092,32 +4790,10 @@ def _t11_stateful_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("volume").cast("double").alias("volume"),
     )
     cut = bars.agg(F.percentile_approx("ts", 0.5)).first()[0]
-    src = tempfile.mkdtemp(prefix="t11_bars_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(bars, (F.col("ts") <= cut, F.col("ts") > cut), src)
-        stream = (
-            spark.readStream.schema(bars.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = stateful_momentum_suite(stream, ("symbol",), "ts")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t11_stateful_momentum_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "t11_stateful_momentum stream did not finish in 300 s"
-            )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table("t11_stateful_momentum_out").select(
+    with streaming_run(spark) as sr:
+        stream = sr.stream(bars, (F.col("ts") <= cut, F.col("ts") > cut))
+        rows = sr.memory(stateful_momentum_suite(stream, ("symbol",), "ts"))
+    return rows.select(
         "symbol",
         F.unix_micros(F.col("ts")).alias("ts_us"),
         "close",
@@ -5222,9 +4898,6 @@ def _t6_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     No broker in the sandbox, so parquet files stand in for Kafka
     topics; the join/state/watermark semantics under test are
     identical."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir)
     deep = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("deep_id"),
@@ -5237,42 +4910,20 @@ def _t6_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("view_val"),
     )
     cut = ev.agg(F.percentile_approx("ts", 0.5)).first()[0]
-    dirs = {}
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        for name, df, ts in (("deep", deep, "deep_ts"), ("quote", quote, "view_ts")):
-            src = tempfile.mkdtemp(prefix=f"t6_{name}_")
-            _stage_two_halves(df, (F.col(ts) <= cut, F.col(ts) > cut), src)
-            dirs[name] = (src, df.schema, ts)
-        streams = {
-            name: spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark(ts, "5 minutes")
-            for name, (src, schema, ts) in dirs.items()
-        }
+    # INNER join — every output row is emitted on match arrival, so the
+    # trailing watermark-only batch is pure eviction cost.
+    with streaming_run(spark, no_data_batches=False) as sr:
+        deep_s, quote_s = (
+            sr.stream(df, (F.col(ts) <= cut, F.col(ts) > cut)).withWatermark(
+                ts, "5 minutes"
+            )
+            for df, ts in ((deep, "deep_ts"), (quote, "view_ts"))
+        )
         joined = asof_band_join(
-            streams["deep"], streams["quote"], "deep_ts", "view_ts",
+            deep_s, quote_s, "deep_ts", "view_ts",
             band_seconds=180, ts_unit="ts",
         ).select("deep_id", "view_id", "deep_val", "view_val")
-        # INNER join — every output row is emitted on match arrival,
-        # so the trailing watermark-only batch is pure eviction cost.
-        with _no_nodata_batches(spark):
-            q = (
-                joined.writeStream.format("memory")
-                .queryName("t6_stream_join_out")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError("t6 stream join did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        for src, _, _ in dirs.values():
-            shutil.rmtree(src, ignore_errors=True)
-    return spark.table("t6_stream_join_out")
+        return sr.memory(joined)
 
 
 def _t1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5285,9 +4936,6 @@ def _t1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original distinct events (the oracle). Duplicates ride in the
     same batch as their originals, so state retention is exercised
     without depending on cross-batch watermark timing."""
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.streaming.pipeline import (
         dedup_within_watermark,
     )
@@ -5297,36 +4945,14 @@ def _t1_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dups = ev.filter(F.col("event_id") % 10 == 0)
     cut = ev.agg(F.percentile_approx("ts", 0.5)).first()[0]
-    src = tempfile.mkdtemp(prefix="t1_dedup_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            ev.unionAll(dups), (F.col("ts") <= cut, F.col("ts") > cut), src
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("ts", "5 minutes")
-        )
-        out = dedup_within_watermark(stream, ["event_id"])
-        # Dedup emits every non-duplicate on arrival — the trailing
-        # no-data batch only evicts expired keys, emitting nothing.
-        with _no_nodata_batches(spark):
-            q = (
-                out.writeStream.format("memory")
-                .queryName("t1_stream_dedup_out")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError("t1 stream dedup did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table("t1_stream_dedup_out").select(
+    # Dedup emits every non-duplicate on arrival — the trailing no-data
+    # batch only evicts expired keys, emitting nothing.
+    with streaming_run(spark, no_data_batches=False) as sr:
+        stream = sr.stream(
+            ev.unionAll(dups), (F.col("ts") <= cut, F.col("ts") > cut)
+        ).withWatermark("ts", "5 minutes")
+        rows = sr.memory(dedup_within_watermark(stream, ["event_id"]))
+    return rows.select(
         "event_id", F.unix_micros(F.col("ts")).alias("ts_us"), "user_id", "value"
     )
 
@@ -5348,9 +4974,6 @@ def _t6b_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     therefore trim to ``deep_ts ≤ final_watermark − band − 1 s``, the
     identical integer expression on both engines.
     """
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir)
     deep = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("deep_id"),
@@ -5363,38 +4986,18 @@ def _t6b_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("view_val"),
     )
     cut = ev.agg(F.percentile_approx("ts", 0.5)).first()[0]
-    dirs = {}
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        for name, df, ts in (("deep", deep, "deep_ts"), ("quote", quote, "view_ts")):
-            src = tempfile.mkdtemp(prefix=f"t6b_{name}_")
-            _stage_two_halves(df, (F.col(ts) <= cut, F.col(ts) > cut), src)
-            dirs[name] = (src, df.schema, ts)
-        streams = {
-            name: spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark(ts, "5 minutes")
-            for name, (src, schema, ts) in dirs.items()
-        }
+    with streaming_run(spark) as sr:
+        deep_s, quote_s = (
+            sr.stream(df, (F.col(ts) <= cut, F.col(ts) > cut)).withWatermark(
+                ts, "5 minutes"
+            )
+            for df, ts in ((deep, "deep_ts"), (quote, "view_ts"))
+        )
         joined = asof_band_join(
-            streams["deep"], streams["quote"], "deep_ts", "view_ts",
+            deep_s, quote_s, "deep_ts", "view_ts",
             band_seconds=180, ts_unit="ts", how="leftOuter",
         ).select("deep_id", "deep_ts", "view_id", "deep_val", "view_val")
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("t6b_stream_left_join_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t6b stream left join did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        for src, _, _ in dirs.values():
-            shutil.rmtree(src, ignore_errors=True)
+        rows = sr.memory(joined)
     # final-watermark trim: identical expression in the oracle SQL
     max_deep = deep.agg(F.max(F.unix_micros("deep_ts"))).first()[0]
     max_view = quote.agg(F.max(F.unix_micros("view_ts"))).first()[0]
@@ -5405,8 +5008,7 @@ def _t6b_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         - 1_000_000  # 1 s safety against boundary semantics
     )
     return (
-        spark.table("t6b_stream_left_join_out")
-        .filter(F.unix_micros("deep_ts") <= F.lit(bound))
+        rows.filter(F.unix_micros("deep_ts") <= F.lit(bound))
         .select(
             "deep_id",
             F.unix_micros("deep_ts").alias("deep_ts_us"),
@@ -5435,8 +5037,8 @@ _T22_LAG_US = 6 * 3600 * 1_000_000
 def _t22_feed_base(ev: DataFrame) -> DataFrame:
     """ONE grouped pass over events builds every feed's hourly
     aggregates — (event_type, hour_us, n, val) — so the five feeds
-    (and their ten staged halves) are row-local projections of a
-    single eagerly-checkpointed frame instead of five separate
+    (and their two staged micro-batch files) are row-local projections
+    of a single eagerly-checkpointed frame instead of five separate
     scan+shuffle pipelines (measured: staging dropped ~2× at sf0.1)."""
     hour_us = F.unix_micros("ts") - F.unix_micros("ts") % F.lit(
         3_600_000_000
@@ -5488,100 +5090,66 @@ def _t22_stream_five_feed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is needed for determinism.
 
     Scale shape: ALL feed derivation is one partial-aggregatable
-    grouped pass (checkpointed once, ten staged halves project from
-    it); every join is the bucketed EQUI-join (state hash-partitioned
+    grouped pass (checkpointed once, both staged micro-batch files
+    project from it); every join is the bucketed EQUI-join (state hash-partitioned
     on the 5-min bucket, watermark-evicted); dedup is key-scoped
-    ``dropDuplicatesWithinWatermark`` state, not all-columns; no
-    collect anywhere. The fixture-scale harness scopes the stream to
+    ``dropDuplicatesWithinWatermark`` state, not all-columns; the
+    only collects are the cut and the ten (feed, half) row counts
+    that guard the cross-batch proof. The fixture-scale harness scopes the stream to
     2 state partitions (720 hourly rows per feed; state-store commit
     overhead per op × partition × batch dominated the run at the
     session default — at cluster scale the stream keeps the cluster's
     shuffle-partition setting)."""
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.streaming import pipeline as P
 
     ev = load_table(spark, "events", sf_dir)
-    old_sp = push_small_shuffle(spark, 2)  # serial-adjudication contract: functions/core.py
-    dirs = {}
-    try:
-        base = _t22_feed_base(ev).localCheckpoint(eager=True)
-        deep = _t22_hourly_feed(base, "purchase", 0, "deep")
-        cut_us = deep.agg(
-            F.percentile_approx(F.unix_micros("ts"), 0.5)
-        ).first()[0]
-        # Stage ALL ten feed halves with ONE Spark job (r16, guide
-        # §2.4): the five feeds are projections of the same
-        # checkpointed base, so a canonical (feed, ts, n, val) frame
-        # partitioned by (feed, half) writes every staged file at
-        # once; the driver renames the parts into the per-feed flat
-        # dirs the FileStreamSources read (identical layout to the
-        # previous five _stage_two_halves calls) and the per-feed
-        # {name}_n/{name}_val columns are re-aliased on the stream
-        # side — a stateless projection. Previously: 10 sequential
-        # write jobs (~0.25 s fixed cost each at fixture scale).
-        import glob as _glob
-        import os as _os
-        import time as _time
-
-        spec = {"deep": ("purchase", 0), **_T22_FEEDS}
-        feed_name = F.lit(None).cast("string")
-        offset_us = F.lit(None).cast("long")
-        for name, (etype, off) in spec.items():
-            m = F.col("event_type") == etype
-            feed_name = F.when(m, F.lit(name)).otherwise(feed_name)
-            offset_us = F.when(m, F.lit(off * 1_000_000)).otherwise(offset_us)
-        canon = base.select(
-            feed_name.alias("feed"),
-            F.timestamp_micros(F.col("hour_us") + offset_us).alias("ts"),
-            "n",
-            "val",
-        ).filter(F.col("feed").isNotNull())
-        lag_us = F.when(F.col("feed") == "deep", F.lit(0)).otherwise(
-            F.lit(_T22_LAG_US)
+    base = _t22_feed_base(ev).localCheckpoint(eager=True)
+    deep = _t22_hourly_feed(base, "purchase", 0, "deep")
+    cut_us = deep.agg(F.percentile_approx(F.unix_micros("ts"), 0.5)).first()[0]
+    # Stage ALL five feeds with ONE Spark job (r16, guide §2.4): the
+    # feeds are projections of the same checkpointed base, so one
+    # canonical (feed, ts, n, val) frame is staged as the two
+    # micro-batch files, and each feed's FileStreamSource reads them
+    # back filtered to its own rows, re-aliased to {name}_n/{name}_val
+    # (a stateless projection). Previously: 10 sequential write jobs
+    # (~0.25 s fixed cost each at fixture scale).
+    spec = {"deep": ("purchase", 0), **_T22_FEEDS}
+    feed_name = F.lit(None).cast("string")
+    offset_us = F.lit(None).cast("long")
+    for name, (etype, off) in spec.items():
+        m = F.col("event_type") == etype
+        feed_name = F.when(m, F.lit(name)).otherwise(feed_name)
+        offset_us = F.when(m, F.lit(off * 1_000_000)).otherwise(offset_us)
+    canon = base.select(
+        feed_name.alias("feed"),
+        F.timestamp_micros(F.col("hour_us") + offset_us).alias("ts"),
+        "n",
+        "val",
+    ).filter(F.col("feed").isNotNull())
+    lag_us = F.when(F.col("feed") == "deep", F.lit(0)).otherwise(
+        F.lit(_T22_LAG_US)
+    )
+    first = F.unix_micros("ts") <= cut_us - lag_us
+    cells = {
+        (r["feed"], r["first"])
+        for r in canon.groupBy("feed", first.alias("first")).count().collect()
+    }
+    empty = [(n, h) for n in spec for h in (True, False) if (n, h) not in cells]
+    if empty:
+        raise RuntimeError(
+            f"t22 staging: (feed, first half) cells {empty} have no rows — "
+            "the two-batch cross-state proof needs both halves non-empty"
         )
-        tagged = canon.withColumn(
-            "__b",
-            F.when(F.unix_micros("ts") <= cut_us - lag_us, F.lit(0)).otherwise(
-                F.lit(1)
-            ),
-        )
-        scratch = tempfile.mkdtemp(prefix="t22_staging_")
-        (
-            tagged.repartition(2 * len(spec), "feed", "__b")
-            .write.mode("overwrite")
-            .partitionBy("feed", "__b")
-            .parquet(scratch)
-        )
-        file_schema = canon.drop("feed").schema
-        now = _time.time()
-        for name in spec:
-            src = tempfile.mkdtemp(prefix=f"t22_{name}_")
-            for b in (0, 1):
-                parts = sorted(
-                    _glob.glob(
-                        _os.path.join(scratch, f"feed={name}", f"__b={b}", "*.parquet")
-                    )
-                )
-                if len(parts) != 1:
-                    raise RuntimeError(
-                        f"t22 staging: feed {name} half {b} expected one "
-                        f"part file, got {parts} — the two-batch "
-                        "cross-state proof needs both halves non-empty"
-                    )
-                dest = _os.path.join(
-                    src, f"batch-{b}-{_os.path.basename(parts[0])}"
-                )
-                _os.rename(parts[0], dest)
-                _os.utime(dest, (now + 2 * b, now + 2 * b))
-            dirs[name] = (src, file_schema)
-        shutil.rmtree(scratch, ignore_errors=True)
+    # Inner joins emit on match and the dedup emits on first arrival —
+    # no output row waits on the watermark, so the trailing no-data
+    # batch (a sixth stateful-op round over five operators) is pure
+    # eviction overhead here.
+    with streaming_run(spark, state_partitions=2, no_data_batches=False) as sr:
+        src = sr.stage(canon, (first, ~first))
         streams = {
             name: P.watermarked(
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
+                sr.source(src, canon.schema)
+                .filter(F.col("feed") == name)
                 .select(
                     "ts",
                     F.col("n").alias(f"{name}_n"),
@@ -5589,7 +5157,7 @@ def _t22_stream_five_feed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 "ts",
             )
-            for name, (src, schema) in dirs.items()
+            for name in spec
         }
         joined = P.join_feeds(
             streams["deep"], {k: streams[k] for k in _T22_FEEDS}
@@ -5598,29 +5166,10 @@ def _t22_stream_five_feed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (spark_consumer.py:477-479); both are no-ops on this fixture
         # (one row per feed per hour; inner joins produce no nulls) but
         # the operators run for topology parity.
-        result = P.dedup_within_watermark(joined, ["deep_ts"]).na.fill(0.0)
-        # Inner joins emit on match and the dedup emits on first
-        # arrival — no output row waits on the watermark, so the
-        # trailing no-data batch (a sixth stateful-op round over five
-        # operators) is pure eviction overhead here.
-        with _no_nodata_batches(spark):
-            q = (
-                result.writeStream.format("memory")
-                .queryName("t22_five_feed_out")
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    "t22 five-feed stream join did not finish in 300 s"
-                )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        for src, _ in dirs.values():
-            shutil.rmtree(src, ignore_errors=True)
-    return spark.table("t22_five_feed_out").select(
+        rows = sr.memory(
+            P.dedup_within_watermark(joined, ["deep_ts"]).na.fill(0.0)
+        )
+    return rows.select(
         F.unix_micros("deep_ts").alias("hour_us"),
         "deep_n", "deep_val",
         "vix_n", "vix_val",
@@ -5649,16 +5198,12 @@ def _t23_stream_drift_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch 1 flags ALL columns via quarantine_frac ≥ 0.3, batch 2 flags
     ONLY lang (fully null; the partial n_chars null rate must NOT
     flag), batch 0 flags nothing. Epoch↔drop mapping is deterministic
-    by staged mtime order (_stage_batches).
+    by staged mtime order (``StreamRun.stage``).
 
     Scale shape: the accounting is ONE partial-aggregatable pass over
     the already-materialized batch, per-column rows via inline over a
     single array-of-structs (the s10 shape); sinks are
     epoch-idempotent dynamic partition overwrites."""
-    import os
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.sources import files as FS
     from financial_market_data_analysis_spark.streaming import pipeline as P
 
@@ -5703,15 +5248,9 @@ def _t23_stream_drift_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(nch),
         ).alias("value"),
     )
-    base = tempfile.mkdtemp(prefix="t23_")
-    src = os.path.join(base, "drops")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_batches(
-            lines,
-            [F.col("doc_id") % 3 == i for i in range(3)],
-            src,
-            fmt="text",
+    with streaming_run(spark) as sr:
+        src = sr.stage(
+            lines, [F.col("doc_id") % 3 == i for i in range(3)], fmt="text"
         )
         stream = (
             spark.readStream.schema(
@@ -5723,22 +5262,18 @@ def _t23_stream_drift_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .csv(src)
         )
-        q = P.quarantining_ingest_sink(
-            stream,
-            os.path.join(base, "clean"),
-            os.path.join(base, "quar"),
-            os.path.join(base, "ckpt"),
-            trigger={"availableNow": True},
-            drift_dir=os.path.join(base, "drift"),
-            quarantine_alert=_T23_QUAR_ALERT,
-        ).start()
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "t23 drift-accounting stream did not finish in 300 s"
+        sr.run(
+            P.quarantining_ingest_sink(
+                stream,
+                sr.path("clean"),
+                sr.path("quar"),
+                sr.path("ckpt"),
+                drift_dir=sr.path("drift"),
+                quarantine_alert=_T23_QUAR_ALERT,
             )
-        out = (
-            spark.read.parquet(os.path.join(base, "drift"))
+        )
+        return (
+            spark.read.parquet(sr.path("drift"))
             .select(
                 F.col("epoch_id").cast("int").alias("epoch_id"),
                 "column",
@@ -5748,10 +5283,6 @@ def _t23_stream_drift_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(base, ignore_errors=True)
-    return out
 
 
 def _t24_stream_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5770,9 +5301,6 @@ def _t24_stream_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: O(1) state per key (last bucket + last value), Arrow-
     batched; emission is data-driven (no watermark wait), so the
     availableNow output equals the batch spine exactly with no trim."""
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.streaming import pipeline as P
 
     bars = (
@@ -5788,34 +5316,12 @@ def _t24_stream_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = gaps.agg(
         F.percentile_approx("bucket_start", 0.5)
     ).first()[0]
-    src = tempfile.mkdtemp(prefix="t24_bars_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            bars,
-            (F.col("bucket_start") <= cut, F.col("bucket_start") > cut),
-            src,
+    with streaming_run(spark) as sr:
+        stream = sr.stream(
+            bars, (F.col("bucket_start") <= cut, F.col("bucket_start") > cut)
         )
-        stream = (
-            spark.readStream.schema(bars.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        filled = P.stateful_gap_fill(stream, key_cols=("symbol",))
-        q = (
-            filled.writeStream.format("memory")
-            .queryName("t24_gap_fill_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t24 stream gap fill did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table("t24_gap_fill_out").select(
+        rows = sr.memory(P.stateful_gap_fill(stream, key_cols=("symbol",)))
+    return rows.select(
         "bucket_start",
         "is_gap",
         F.round("close", 6).alias("close_filled"),
@@ -5847,9 +5353,6 @@ def _t28_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     every open session's aggregation buffer), Arrow-batched, one state
     round-trip per key per batch; emission composes with any batch
     rollup downstream (a19's per-day frame is one groupBy away)."""
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.streaming import pipeline as P
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -5885,31 +5388,13 @@ def _t28_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             "no multi-event session closes after a candidate cut — "
             "the cross-batch merge law is not provable on this fixture"
         )
-    src = tempfile.mkdtemp(prefix="t28_sessions_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            ev, (F.col("ts_us") <= cut, F.col("ts_us") > cut), src
+    with streaming_run(spark) as sr:
+        stream = sr.stream(ev, (F.col("ts_us") <= cut, F.col("ts_us") > cut))
+        out = (
+            sr.memory(P.stateful_sessionize(stream, gap_us=_A19_GAP_US))
+            .select("user_id", "start_us", "n_events", "dur_us")
+            .localCheckpoint(eager=True)
         )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        sessions = P.stateful_sessionize(stream, gap_us=_A19_GAP_US)
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName("t28_sessionize_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t28 stream sessionize did not finish in 300 s")
-        out = spark.table("t28_sessionize_out").select(
-            "user_id", "start_us", "n_events", "dur_us"
-        ).localCheckpoint(eager=True)
         # the adjudication is only about cross-batch state if some
         # emitted session actually spans the cut — raise loudly if the
         # fixture ever degenerates (the s13 'unprovable' discipline)
@@ -5922,9 +5407,6 @@ def _t28_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"no emitted session spans the batch cut at {cut} — "
                 "the cross-batch merge law is not being exercised"
             )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
     return out
 
 
@@ -6006,8 +5488,8 @@ def _t29_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the oracle certifies it."""
     import glob
     import os
-    import shutil
-    import tempfile
+
+    from pyspark.errors import StreamingQueryException
 
     from financial_market_data_analysis_spark.streaming import pipeline as P
     from financial_market_data_analysis_spark.streaming.pipeline import (
@@ -6043,33 +5525,23 @@ def _t29_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             "no multi-event session closes after a candidate cut — "
             "state recovery is not provable on this fixture"
         )
-    src = tempfile.mkdtemp(prefix="t29_src_")
-    wh = tempfile.mkdtemp(prefix="t29_wh_")
-    ckpt = tempfile.mkdtemp(prefix="t29_ckpt_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_batches(ev, (F.col("ts_us") <= cut,), src)
+    with streaming_run(spark) as sr:
+        src = sr.stage(ev, (F.col("ts_us") <= cut,))
+        wh = sr.path("wh")
+        ckpt = sr.path("ckpt")
         write = epoch_idempotent_writer(wh)
 
-        def start_run(write_fn):
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
+        def run_with(write_fn) -> None:
+            sessions = P.stateful_sessionize(
+                sr.source(src, ev.schema), gap_us=_A19_GAP_US
             )
-            sessions = P.stateful_sessionize(stream, gap_us=_A19_GAP_US)
-            return (
+            sr.run(
                 sessions.writeStream.foreachBatch(write_fn)
                 .outputMode("append")
-                .trigger(availableNow=True)
                 .option("checkpointLocation", ckpt)
-                .start()
             )
 
-        q1 = start_run(write)
-        if not q1.awaitTermination(300):
-            q1.stop()
-            raise RuntimeError("t29 run 1 did not finish in 300 s")
+        run_with(write)
         # between runs: every session closed so far ended inside the
         # first half; the spanning session lives ONLY in the
         # checkpoint's state store
@@ -6086,8 +5558,8 @@ def _t29_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"the cut at {cut} — the staged halves are wrong"
                 )
         # land the post-cut file with an mtime strictly AFTER run 1's
-        # files (FileStreamSource orders by mtime — the _stage_batches
-        # tie rule, applied across staging calls)
+        # files (FileStreamSource orders by mtime — the staging tie
+        # rule, applied across staging calls)
         before = set(glob.glob(os.path.join(src, "*.parquet")))
         last_mtime = max(os.path.getmtime(p) for p in before)
         ev.filter(F.col("ts_us") > cut).coalesce(1).write.mode(
@@ -6107,21 +5579,18 @@ def _t29_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 raise RuntimeError("t29 injected crash")
             write(batch, epoch_id)
 
-        q2 = start_run(sabotaged)
         try:
-            q2.awaitTermination(300)
+            run_with(sabotaged)
+        except StreamingQueryException as exc:
+            if "injected crash" not in str(exc):
+                raise
+        else:
             raise RuntimeError(
                 "t29 run 2 was supposed to crash but finished clean"
             )
-        except Exception as exc:  # StreamingQueryException expected
-            if "injected crash" not in str(exc):
-                raise
         if not crashed["fired"]:
             raise RuntimeError("t29 crash injection never ran")
-        q3 = start_run(write)
-        if not q3.awaitTermination(300):
-            q3.stop()
-            raise RuntimeError("t29 run 3 did not finish in 300 s")
+        run_with(write)
         out = (
             spark.read.parquet(wh)
             .select("user_id", "start_us", "n_events", "dur_us")
@@ -6136,13 +5605,6 @@ def _t29_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"no emitted session spans the cut at {cut} — state "
                 "recovery was not exercised"
             )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(wh, ignore_errors=True)
-        # explicitly-set checkpoint locations are never auto-deleted
-        # (r5 review finding)
-        shutil.rmtree(ckpt, ignore_errors=True)
     return out
 
 
@@ -6181,9 +5643,6 @@ def _t30_stream_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct (user, week) pairs, and the read-time collapse is a16's
     exact two-shuffle rollup; no read-modify-write, no snapshot
     chain, no per-batch store scan."""
-    import shutil
-    import tempfile
-
     from financial_market_data_analysis_spark.streaming.pipeline import (
         epoch_idempotent_writer,
     )
@@ -6213,21 +5672,17 @@ def _t30_stream_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "no user spans the first time-tertile — out-of-order "
             "cohort correction is not provable on this fixture"
         )
-    src = tempfile.mkdtemp(prefix="t30_src_")
-    store = tempfile.mkdtemp(prefix="t30_store_")
-    ckpt = tempfile.mkdtemp(prefix="t30_ckpt_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
+    with streaming_run(spark) as sr:
         # deliberately out of time order: middle, latest, EARLIEST
-        _stage_batches(
+        stream = sr.stream(
             ev,
             (
                 (F.col("ts_us") > t1) & (F.col("ts_us") <= t2),
                 F.col("ts_us") > t2,
                 F.col("ts_us") <= t1,
             ),
-            src,
         )
+        store = sr.path("store")
         write = epoch_idempotent_writer(store)
 
         def sink(batch: DataFrame, epoch_id: int) -> None:
@@ -6242,20 +5697,11 @@ def _t30_stream_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 epoch_id,
             )
 
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        sr.run(
+            stream.writeStream.foreachBatch(sink).option(
+                "checkpointLocation", sr.path("ckpt")
+            )
         )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t30 cohort stream did not finish in 300 s")
         # read-time collapse: union across epochs (distinct), then
         # a16's exact rollup — min-fold cohorts, distinct activity,
         # cell counts, broadcast cohort sizes
@@ -6280,7 +5726,7 @@ def _t30_stream_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
         sizes = first.groupBy("cohort_week").agg(
             F.count(F.lit(1)).alias("cohort_size")
         )
-        out = (
+        return (
             cells.join(F.broadcast(sizes), "cohort_week")
             .select(
                 "cohort_week",
@@ -6293,12 +5739,6 @@ def _t30_stream_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 # a16's batch law verbatim: streaming + disorder must change nothing
@@ -6345,37 +5785,17 @@ def _t4b_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical integer expression, conservative against sub-second
     boundary semantics.
     """
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "value")
     cut = ev.agg(F.percentile_approx("ts", 0.5)).first()[0]
-    src = tempfile.mkdtemp(prefix="t4b_sessions_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(ev, (F.col("ts") <= cut, F.col("ts") > cut), src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .withWatermark("ts", "5 minutes")
+    with streaming_run(spark) as sr:
+        stream = sr.stream(
+            ev, (F.col("ts") <= cut, F.col("ts") > cut)
+        ).withWatermark("ts", "5 minutes")
+        rows = sr.memory(
+            W.session_windows(stream, "ts", ("user_id",), "30 minutes")
         )
-        out = W.session_windows(stream, "ts", ("user_id",), "30 minutes")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t4b_stream_sessions_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t4b stream sessions did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
     max_s = ev.agg(F.floor(F.max(F.unix_micros("ts")) / 1_000_000)).first()[0]
-    return spark.table("t4b_stream_sessions_out").filter(
+    return rows.filter(
         F.col("session_last") <= F.lit(int(max_s) - 300 - 1800 - 2)
     )
 
@@ -6497,43 +5917,21 @@ def _t12_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch itself (KBs), the streaming-native cardinality the
     reference's per-row JDBC appends (spark_consumer.py:68-84) could
     never bound."""
-    import shutil
-    import tempfile
-
     import financial_market_data_analysis_spark.operators.sketches as SK
     from financial_market_data_analysis_spark.functions.text import tokens
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     cut = docs.agg(F.percentile_approx("doc_id", 0.5)).first()[0]
-    src = tempfile.mkdtemp(prefix="t12_docs_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            docs, (F.col("doc_id") <= cut, F.col("doc_id") > cut), src
-        )
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with streaming_run(spark) as sr:
+        stream = sr.stream(
+            docs, (F.col("doc_id") <= cut, F.col("doc_id") > cut)
         )
         occ = stream.select(F.explode(tokens("text")).alias("tok")).withColumn(
             "cnt", F.lit(1)
         )
-        cells = SK.countmin_sketch(occ, "tok", "cnt")
-        q = (
-            cells.writeStream.format("memory")
-            .queryName("t12_cms_cells")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+        sketch = sr.memory(
+            SK.countmin_sketch(occ, "tok", "cnt"), output_mode="complete"
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t12_stream_countmin did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-    sketch = spark.table("t12_cms_cells")
     counts = (
         docs.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
@@ -6583,7 +5981,7 @@ def _t17_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     takes each window's LAST update. Scale shape: watermark state is
     bounded per window key; dropped-late rows cost a row-local filter,
     never state."""
-    out, _q, _ns, _nsw, _nw = _late_drop_stream(spark, sf_dir)
+    out, _progress, _ns, _nsw, _nw = _late_drop_stream(spark, sf_dir)
     return out
 
 
@@ -6591,17 +5989,13 @@ def _late_drop_stream(spark: SparkSession, sf_dir: str):
     """Shared core of t17 (VALUE adjudication of the late-drop
     policy) and t31 (METRICS adjudication of the same run): stages
     the three-batch late-arrival stream, runs the watermarked
-    windowed aggregation, and returns ``(out, query, n_stragglers,
+    windowed aggregation, and returns ``(out, progress, n_stragglers,
     n_straggler_windows, n_kept_windows)`` — the final window frame,
-    the terminated query handle (its ``recentProgress`` carries the
-    state-operator metrics), the exact staged straggler row and
-    distinct-window counts, and the number of distinct 5-minute
-    windows in the kept data. See t17's docstring for the
-    three-batch watermark-lag design."""
-    import os
-    import shutil
-    import tempfile
-
+    the query's progress records (they carry the state-operator
+    metrics), the exact staged straggler row and distinct-window
+    counts, and the number of distinct 5-minute windows in the kept
+    data. See t17's docstring for the three-batch watermark-lag
+    design."""
     ev = load_table(spark, "events", sf_dir).select("ts", "user_id", "value")
     bounds = ev.agg(
         F.min(F.unix_micros("ts")).alias("mn"),
@@ -6631,26 +6025,16 @@ def _late_drop_stream(spark: SparkSession, sf_dir: str):
         F.count_distinct(F.when(~is_straggler, w_us)).alias("nw"),
     ).first()
     n_strag, n_strag_windows, n_windows = pre.n_strag, pre.nsw, pre.nw
-    work = tempfile.mkdtemp(prefix="t17_late_")
-    src_dir = f"{work}/arrivals"
-    upd = f"{work}/updates"
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_batches(
+    with streaming_run(spark) as sr:
+        upd = sr.path("updates")
+        stream = sr.stream(
             ev,
             (
                 ~is_straggler & ~is_recent,
                 ~is_straggler & is_recent,
                 is_straggler,
             ),
-            src_dir,
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-            .withWatermark("ts", "10 minutes")
-        )
+        ).withWatermark("ts", "10 minutes")
         agg = (
             stream.groupBy(F.window("ts", "5 minutes").alias("w"))
             .agg(
@@ -6669,16 +6053,11 @@ def _late_drop_stream(spark: SparkSession, sf_dir: str):
                 "overwrite"
             ).parquet(f"{upd}/b{batch_id}")
 
-        q = (
+        progress = sr.run(
             agg.writeStream.foreachBatch(sink)
             .outputMode("update")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", sr.path("ckpt"))
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t17_late_drop did not finish in 300 s")
         all_upd = spark.read.option("recursiveFileLookup", "true").parquet(upd)
         latest = all_upd.groupBy("window_start_us").agg(
             F.max(F.struct("batch_id", "n", "sum_value")).alias("s")
@@ -6688,10 +6067,7 @@ def _late_drop_stream(spark: SparkSession, sf_dir: str):
             F.col("s.n").alias("n"),
             F.round("s.sum_value", 6).alias("sum_value"),
         ).localCheckpoint(eager=True)
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(work, ignore_errors=True)
-    return out, q, n_strag, n_strag_windows, n_windows
+    return out, progress, n_strag, n_strag_windows, n_windows
 
 
 def _t31_state_metrics_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6726,16 +6102,13 @@ def _t31_state_metrics_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the executed scan. The emitted windows ride t17's oracle
     verbatim — the metrics must hold AND the answer must stay
     exact."""
-    import json
-
-    out, q, n_strag, n_strag_windows, n_windows = _late_drop_stream(
+    out, progresses, n_strag, n_strag_windows, n_windows = _late_drop_stream(
         spark, sf_dir
     )
     if n_strag_windows < 1:
         raise RuntimeError(
             "no stragglers staged — the drop accounting is unprovable"
         )
-    progresses = [json.loads(p.json) for p in q.recentProgress]
     ops = [op for p in progresses for op in p.get("stateOperators", [])]
     if not ops:
         raise RuntimeError(
@@ -6838,9 +6211,6 @@ def _t19_stream_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     split the hash, in which case the fix is the t20 pattern (round
     before compare is already the published form here — there is no
     threshold filter on this query, only the rounded floats)."""
-    import shutil
-    import tempfile
-
     c = _candles(spark, sf_dir)
     lab = c.select(
         "bucket_start",
@@ -6849,20 +6219,13 @@ def _t19_stream_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("next_close").isNotNull())
     is_test = (F.col("bucket_start") / F.lit(300)).cast("long") % ML8_TEST_MOD == 0
     train = lab.filter(~is_test)
-    src_dir = tempfile.mkdtemp(prefix="t19_ols_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
+    with streaming_run(spark) as sr:
         # split the TRAIN rows on bucket-index parity: labeled rows are
         # precomputed (the LEAD needs its successor bar, which a file
         # split would sever), so the stream carries (x, y) examples —
         # the shape a feature-store feed actually delivers
         par = (F.col("bucket_start") / F.lit(300)).cast("long") % 2
-        _stage_two_halves(train, (par == 0, par == 1), src_dir)
-        stream = (
-            spark.readStream.schema(train.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
+        stream = sr.stream(train, (par == 0, par == 1))
         moments = stream.agg(
             F.count(F.lit(1)).cast("double").alias("n"),
             F.sum("close").alias("sx"),
@@ -6870,17 +6233,7 @@ def _t19_stream_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("close") * F.col("next_close")).alias("sxy"),
             F.sum(F.col("close") * F.col("close")).alias("sx2"),
         )
-        q = (
-            moments.writeStream.format("memory")
-            .queryName("t19_ols_moments")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t19_stream_ols did not finish in 300 s")
-        m = spark.table("t19_ols_moments")
+        m = sr.memory(moments, output_mode="complete")
         b = (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")) / (
             F.col("sx2") - F.col("sx") * F.col("sx") / F.col("n")
         )
@@ -6889,11 +6242,7 @@ def _t19_stream_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sy") / F.col("n") - b * (F.col("sx") / F.col("n"))).alias("a"),
         )
         test = lab.filter(is_test)
-        out = _t19_score(test, params).localCheckpoint(eager=True)
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src_dir, ignore_errors=True)
-    return out
+        return _t19_score(test, params).localCheckpoint(eager=True)
 
 
 def _t20_score(ev: DataFrame, params: DataFrame) -> DataFrame:
@@ -6930,48 +6279,24 @@ def _t20_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the K-row moment table onto the event scan — row-local,
     no shuffle of the big side. At 100 TB the same topology scores
     each micro-batch inside foreachBatch against the running state."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "event_type", "value"
     )
     cut = ev.agg(F.percentile_approx("event_id", 0.5)).first()[0]
-    src_dir = tempfile.mkdtemp(prefix="t20_anom_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            ev, (F.col("event_id") <= cut, F.col("event_id") > cut), src_dir
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    with streaming_run(spark) as sr:
+        stream = sr.stream(
+            ev, (F.col("event_id") <= cut, F.col("event_id") > cut)
         )
         moments = stream.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("double").alias("n"),
             F.sum("value").alias("s1"),
             F.sum(F.col("value") * F.col("value")).alias("s2"),
         )
-        q = (
-            moments.writeStream.format("memory")
-            .queryName("t20_anom_moments")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t20_stream_anomaly did not finish in 300 s")
-        m = spark.table("t20_anom_moments")
+        m = sr.memory(moments, output_mode="complete")
         mu = F.col("s1") / F.col("n")
         sig = F.sqrt(F.col("s2") / F.col("n") - mu * mu)
         params = m.select("event_type", mu.alias("mu"), sig.alias("sig"))
-        out = _t20_score(ev, params).localCheckpoint(eager=True)
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src_dir, ignore_errors=True)
-    return out
+        return _t20_score(ev, params).localCheckpoint(eager=True)
 
 
 def _t20_oracle() -> str:
@@ -7014,9 +6339,6 @@ def _t16_stream_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is KB-sized (groups × 32 bins), arrival work is
     one broadcast join + one partial-aggregated count per batch; the
     interpolation runs over the sketch, never the feed."""
-    import shutil
-    import tempfile
-
     import financial_market_data_analysis_spark.operators.sketches as SK
 
     ev = load_table(spark, "events", sf_dir).select(
@@ -7024,16 +6346,9 @@ def _t16_stream_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bounds = SK.histogram_bounds(ev, "value", ["event_type"])
     cut = ev.agg(F.percentile_approx("event_id", 0.5)).first()[0]
-    src = tempfile.mkdtemp(prefix="t16_hist_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            ev, (F.col("event_id") <= cut, F.col("event_id") > cut), src
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with streaming_run(spark) as sr:
+        stream = sr.stream(
+            ev, (F.col("event_id") <= cut, F.col("event_id") > cut)
         )
         cells = (
             stream.join(F.broadcast(bounds), "event_type")
@@ -7044,22 +6359,8 @@ def _t16_stream_hist_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "__mn", "__mx", "__n", "__b")
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        q = (
-            cells.writeStream.format("memory")
-            .queryName("t16_hist_cells")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t16_stream_hist_quantiles did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-    return SK.histogram_quantiles_from_hist(
-        spark.table("t16_hist_cells"), ["event_type"]
-    )
+        sketch = sr.memory(cells, output_mode="complete")
+    return SK.histogram_quantiles_from_hist(sketch, ["event_type"])
 
 
 def _t16_oracle() -> str:
@@ -7103,8 +6404,6 @@ def _t18_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     The exact column exists only to adjudicate the estimator — at
     100 TB it is dropped and the sketch IS the answer."""
     import os
-    import shutil
-    import tempfile
 
     import financial_market_data_analysis_spark.operators.sketches as SK
     from financial_market_data_analysis_spark.streaming import pipeline as SP
@@ -7114,18 +6413,10 @@ def _t18_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "text"
     )
     cut = docs.agg(F.percentile_approx("doc_id", 0.5)).first()[0]
-    work = tempfile.mkdtemp(prefix="t18_kmv_")
-    src_dir = f"{work}/arrivals"
-    snap = f"{work}/state"
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            docs, (F.col("doc_id") <= cut, F.col("doc_id") > cut), src_dir
-        )
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
+    with streaming_run(spark) as sr:
+        snap = sr.path("state")
+        stream = sr.stream(
+            docs, (F.col("doc_id") <= cut, F.col("doc_id") > cut)
         )
 
         # Columns prebuilt ONCE — the per-batch rebuild of the token/
@@ -7158,15 +6449,11 @@ def _t18_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             write(bottom, batch_id)
 
-        q = (
-            stream.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        sr.run(
+            stream.writeStream.foreachBatch(merge).option(
+                "checkpointLocation", sr.path("ckpt")
+            )
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t18_stream_kmv did not finish in 300 s")
         epochs = len(
             [d for d in os.listdir(snap) if d.startswith("epoch_id=")]
         )
@@ -7201,7 +6488,7 @@ def _t18_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = F.when(
             F.col("__cnt") < k, F.col("__cnt").cast("double")
         ).otherwise(F.lit(float(k - 1)) / F.col("__uk"))
-        out = (
+        return (
             exact.join(est, "source")
             .select(
                 "source",
@@ -7213,10 +6500,6 @@ def _t18_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 def _t15_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7241,23 +6524,13 @@ def _t15_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair is the streaming-native MERGE the reference's per-row JDBC
     upserts (spark_consumer.py:68-84) approximate with none of the
     replay safety."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "user_id", "event_id", "ts_us", "value", "event_type"
     )
     cut = ev.agg(F.percentile_approx("event_id", 0.5)).first()[0]
-    src = tempfile.mkdtemp(prefix="t15_cdc_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            ev, (F.col("event_id") <= cut, F.col("event_id") > cut), src
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with streaming_run(spark) as sr:
+        stream = sr.stream(
+            ev, (F.col("event_id") <= cut, F.col("event_id") > cut)
         )
         rec = F.struct(
             F.col("ts_us"),
@@ -7275,22 +6548,9 @@ def _t15_stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_ops"),
             )
         )
-        q = (
-            state.writeStream.format("memory")
-            .queryName("t15_cdc_state")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t15_stream_cdc_apply did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
+        rows = sr.memory(state, output_mode="complete")
     return (
-        spark.table("t15_cdc_state")
-        .filter(F.col("last.op") != "delete")
+        rows.filter(F.col("last.op") != "delete")
         .select(
             "user_id",
             F.col("last.event_id").alias("last_event_id"),
@@ -7329,25 +6589,19 @@ def _t15b_stream_cdc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     via dynamic partition overwrite on a key-bucket column (the K1
     sink's layout), or a real MERGE on a table format."""
     import os
-    import shutil
-    import tempfile
+
+    from financial_market_data_analysis_spark.streaming.pipeline import (
+        snapshot_merge_sink,
+    )
 
     ev = load_table(spark, "events", sf_dir).select(
         "user_id", "event_id", "ts_us", "value", "event_type"
     )
     cut = ev.agg(F.percentile_approx("event_id", 0.5)).first()[0]
-    work = tempfile.mkdtemp(prefix="t15b_cdc_")
-    src = f"{work}/arrivals"
-    snap = f"{work}/snap"
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            ev, (F.col("event_id") <= cut, F.col("event_id") > cut), src
-        )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    with streaming_run(spark) as sr:
+        snap = sr.path("snap")
+        stream = sr.stream(
+            ev, (F.col("event_id") <= cut, F.col("event_id") > cut)
         )
         rec = F.struct(
             F.col("ts_us"),
@@ -7365,23 +6619,13 @@ def _t15b_stream_cdc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count(F.lit(1)).alias("n_ops"),
             )
         )
-
-        from financial_market_data_analysis_spark.streaming.pipeline import (
-            snapshot_merge_sink,
-        )
-
-        q = (
+        sr.run(
             state.writeStream.foreachBatch(snapshot_merge_sink(spark, snap))
             .outputMode("update")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", sr.path("ckpt"))
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t15b_stream_cdc_sink did not finish in 300 s")
         last = max(int(d[1:]) for d in os.listdir(snap))
-        out = (
+        return (
             spark.read.parquet(f"{snap}/v{last}")
             .filter(F.col("last.op") != "delete")
             .select(
@@ -7393,10 +6637,6 @@ def _t15b_stream_cdc_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 def _t13_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7426,9 +6666,6 @@ def _t13_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per micro-batch — the latency-optimal shape for an ingest gate;
     the two-join variant that re-reads a corpus shingle table is the
     storage-optimal fallback when index size dominates."""
-    import shutil
-    import tempfile
-
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     corp_sh = D.shingle_arrays(D.ensure_parallelism(docs))
     index = (
@@ -7442,18 +6679,13 @@ def _t13_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     incoming = X.ingest_incoming(spark, sf_dir)
-    src = tempfile.mkdtemp(prefix="t13_docs_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            incoming,
-            (F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1),
-            src,
-        )
-        stream = (
-            spark.readStream.schema(incoming.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+    # The complete-mode aggregation has NO watermark: the trailing
+    # no-data micro-batch recomputes and rewrites the IDENTICAL complete
+    # table (r16 measured ~1.5 s/run; rows verified identical with the
+    # batch skipped) — emission is data-driven, so skip it.
+    with streaming_run(spark, no_data_batches=False) as sr:
+        stream = sr.stream(
+            incoming, (F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1)
         )
         s_bands = D.lsh_bands(D.shingle_arrays(stream), carry_cols=("sh_arr",))
         probe = s_bands.join(index, ["band", "band_hash"], "left")
@@ -7479,28 +6711,8 @@ def _t13_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("best"),
             )
         )
-        # the complete-mode aggregation has NO watermark: the trailing
-        # no-data micro-batch recomputes and rewrites the IDENTICAL
-        # complete table (r16 measured ~1.5 s/run; rows verified
-        # identical with the batch skipped) — emission is data-driven,
-        # so skip it per the _no_nodata_batches contract
-        with _no_nodata_batches(spark):
-            q = (
-                gate.writeStream.format("memory")
-                .queryName("t13_gate")
-                .outputMode("complete")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    "t13_stream_ingest_dedup did not finish in 300 s"
-                )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table("t13_gate").select(
+        rows = sr.memory(gate, output_mode="complete")
+    return rows.select(
         "doc_id",
         "n_sh",
         (-F.col("best.neg_id")).alias("best_match"),
@@ -7546,22 +6758,9 @@ def _t14_stream_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/pipeline.py). Readers list the tree with
     ``recursiveFileLookup``, which keeps the subdirectory layout out
     of the schema (no partition-column injection)."""
-    import shutil
-    import tempfile
-
     thr = float(X.T14_THRESHOLD)
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     corp_sh = D.shingle_arrays(D.ensure_parallelism(docs))
-    work = tempfile.mkdtemp(prefix="t14_")
-    index_dir = f"{work}/index"
-    dec_dir = f"{work}/decisions"
-    src = f"{work}/arrivals"
-    D.lsh_bands(corp_sh, carry_cols=("sh_arr",)).select(
-        "band",
-        "band_hash",
-        F.col("doc_id").alias("m_id"),
-        F.col("sh_arr").alias("m_sh"),
-    ).write.parquet(f"{index_dir}/base")
 
     def _jacc(a: str, b: str):
         inter = F.size(F.array_intersect(a, b))
@@ -7617,36 +6816,28 @@ def _t14_stream_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).write.mode("overwrite").parquet(f"{index_dir}/b{batch_id}")
 
     arrivals = X.t14_arrivals(spark, sf_dir)
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(
-            arrivals,
-            (F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1),
-            src,
+    with streaming_run(spark) as sr:
+        index_dir = sr.path("index")
+        dec_dir = sr.path("decisions")
+        D.lsh_bands(corp_sh, carry_cols=("sh_arr",)).select(
+            "band",
+            "band_hash",
+            F.col("doc_id").alias("m_id"),
+            F.col("sh_arr").alias("m_sh"),
+        ).write.parquet(f"{index_dir}/base")
+        stream = sr.stream(
+            arrivals, (F.col("doc_id") % 2 == 0, F.col("doc_id") % 2 == 1)
         )
-        stream = (
-            spark.readStream.schema(arrivals.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        sr.run(
+            stream.writeStream.foreachBatch(handle).option(
+                "checkpointLocation", sr.path("ckpt")
+            )
         )
-        q = (
-            stream.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t14_stream_index_dedup did not finish in 300 s")
-        out = (
+        return (
             spark.read.option("recursiveFileLookup", "true")
             .parquet(dec_dir)
             .localCheckpoint(eager=True)
         )
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(work, ignore_errors=True)
-    return out
 
 
 def _w19_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8880,9 +8071,6 @@ def _t10_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, the static side rebroadcast per batch). Oracle: the same
     join + normalization in plain SQL over the batch table; rounded
     to 6 decimals (the min-max ratio is float)."""
-    import shutil
-    import tempfile
-
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "event_type", "value"
     )
@@ -8890,15 +8078,8 @@ def _t10_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("value").alias("min_v"), F.max("value").alias("max_v")
     )
     cut = ev.agg(F.percentile_approx("ts", 0.5)).first()[0]
-    src = tempfile.mkdtemp(prefix="t10_norm_")
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
-        _stage_two_halves(ev, (F.col("ts") <= cut, F.col("ts") > cut), src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with streaming_run(spark) as sr:
+        stream = sr.stream(ev, (F.col("ts") <= cut, F.col("ts") > cut))
         out = stream.join(F.broadcast(params), "event_type").select(
             "event_id",
             "event_type",
@@ -8909,20 +8090,7 @@ def _t10_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("norm_value"),
         )
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t10_stream_static_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("t10 stream-static join did not finish in 300 s")
-    finally:
-        pop_small_shuffle(spark, old_sp)
-        shutil.rmtree(src, ignore_errors=True)
-    return spark.table("t10_stream_static_out")
+        return sr.memory(out)
 
 
 def _pipeline_bars_joined(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -17,32 +19,29 @@ def safe_div(num: Column, den: Column) -> Column:
     return F.try_divide(num, den)
 
 
-def push_small_shuffle(spark, n: int = 8) -> str:
-    """Scope ``spark.sql.shuffle.partitions`` down to ``n`` for a
-    graph-sized or parameter-sized frame; returns the previous value
-    for ``pop_small_shuffle`` (always call it in a ``finally``). A
-    3k-row label frame spread over the corpus-sized session default
-    pays ~an empty-task overhead per partition per iteration —
-    measured ~30% of some iterative queries' wall-clock at fixture
-    scale, which is why the scope exists.
+@contextmanager
+def scoped_confs(spark, confs: dict[str, str]):
+    """Set session ``confs`` for the block, then restore each previous
+    value (unsetting the ones that had none).
 
-    SERIAL-EXECUTION ASSUMPTION (documented per the r8 verdict): the
-    setting is session-global, so this is safe only because every
-    execution context that runs these queries — the driver's
-    correctness harness, ``tools/verify_contract.py``, ``bench.py``,
-    and the pytest suite — adjudicates ONE query at a time per
-    SparkSession. A session running concurrent queries would race on
-    the conf; there, replace the scope with an explicit
-    ``repartition(n)`` on the small frame (on a real cluster AQE
-    coalescing makes the scope largely unnecessary anyway).
+    Callers: j9's and j10's AQE-threshold scopes, the four
+    ``plans/extensions.py`` graph-sized shuffle scopes, and
+    ``streaming/pipeline.py``'s run harness around ``start()`` (which
+    holds a lock for that window). The settings are session-global, so
+    the batch scopes are safe only because every execution context
+    that runs these queries — the external correctness harness,
+    ``tools/verify_contract.py``, ``bench.py`` and the pytest suite —
+    runs ONE query at a time per SparkSession; concurrent queries on
+    one session would race on the confs.
     """
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return old_sp
-
-
-def pop_small_shuffle(spark, old_sp: str) -> None:
-    """Restore the session shuffle-partition count captured by
-    ``push_small_shuffle`` — the paired ``finally`` half of the
-    serial-execution contract documented there."""
-    spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -19,14 +19,16 @@ from financial_market_data_analysis_spark.functions import text as T
 from financial_market_data_analysis_spark.operators import dedup as D
 from financial_market_data_analysis_spark.operators import similarity as S
 from financial_market_data_analysis_spark.sources.batch import load_table
-from financial_market_data_analysis_spark.functions.core import (
-    push_small_shuffle,
-    pop_small_shuffle,
-)
+from financial_market_data_analysis_spark.functions.core import scoped_confs
 
 DUP_OFFSET = 1_000_000
 DOC_DUP_MOD = 50
 EMB_DUP_MOD = 100
+# Shuffle-partition count scoped around the graph- and pair-sized
+# frames of the triangle, clustering, LSH-tuning and near-dup-method
+# queries: a few thousand rows however large the corpus, so each
+# session-width shuffle of them is mostly empty-task scheduling.
+GRAPH_SHUFFLE = {"spark.sql.shuffle.partitions": "8"}
 DUP_SUFFIX = " near duplicate suffix"
 N_QUERY_VECS = 5
 
@@ -4151,11 +4153,8 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bands=SIMHASH_BANDS,
         max_hamming=SIMHASH_MAX_HAMMING,
     ).select("id_a", "id_b").localCheckpoint(eager=True)
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
+    with scoped_confs(spark, GRAPH_SHUFFLE):
         return _triangle_counts(pairs).localCheckpoint(eager=True)
-    finally:
-        pop_small_shuffle(spark, old_sp)
 
 
 def _triangle_counts(pairs: DataFrame) -> DataFrame:
@@ -4266,8 +4265,7 @@ def q_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_bands=SIMHASH_BANDS,
         max_hamming=SIMHASH_MAX_HAMMING,
     ).select("id_a", "id_b").localCheckpoint(eager=True)
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
+    with scoped_confs(spark, GRAPH_SHUFFLE):
         tri = _triangle_counts(pairs)
         deg = (
             pairs.select(F.col("id_a").alias("doc_id"))
@@ -4288,8 +4286,6 @@ def q_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("clust_coef"),
         ).localCheckpoint(eager=True)
-    finally:
-        pop_small_shuffle(spark, old_sp)
     return out
 
 
@@ -5103,11 +5099,8 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-partition count (the x16/x61 convention: session-width
     # shuffles of tiny frames are pure empty-task scheduling latency;
     # measured ~9 s -> ~6 s at sf0.1 from this scope alone)
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
+    with scoped_confs(spark, GRAPH_SHUFFLE):
         return _lsh_tuning_body(spark, sh_arr, sh)
-    finally:
-        pop_small_shuffle(spark, old_sp)
 
 
 def _lsh_tuning_body(spark: SparkSession, sh_arr: DataFrame, sh: DataFrame) -> DataFrame:
@@ -5347,8 +5340,7 @@ def q_neardup_method_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = sh_arr.select(
         "doc_id", F.explode("sh_arr").alias("shingle")
     ).localCheckpoint(eager=False)
-    old_sp = push_small_shuffle(spark)  # serial-adjudication contract: functions/core.py
-    try:
+    with scoped_confs(spark, GRAPH_SHUFFLE):
         present = sh_arr.select("doc_id").distinct()
         inj = (
             present.filter(
@@ -5468,8 +5460,6 @@ def q_neardup_method_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("recall"),
         )
-    finally:
-        pop_small_shuffle(spark, old_sp)
 
 
 def neardup_method_table_oracle() -> str:

@@ -20,12 +20,21 @@ indicator code is literally the batch library.
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import shutil
+import tempfile
+import threading
+import time
+import uuid
 from collections.abc import Callable, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from financial_market_data_analysis_spark.functions.core import scoped_confs
 from financial_market_data_analysis_spark.operators.joins import asof_band_join
 
 WATERMARK = "5 minutes"  # spark_consumer.py:114 etc.
@@ -1465,3 +1474,194 @@ def stateful_sessionize(
     return stream.groupBy(*[F.col(k) for k in key_cols]).applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
+
+
+# ---------------------------------------------------------------------------
+# availableNow run harness
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+# Serializes the set/start/restore window so two runs starting at once
+# cannot restore each other's values into the session.
+_START_LOCK = threading.Lock()
+# Seconds a run may take before it is stopped and TimeoutError raised.
+_TIMEOUT_S = 300
+
+
+class StreamRun:
+    """One :func:`streaming_run` scope: its scratch dir, the feeds
+    staged into it and the queries it ran. ``progress`` holds one list
+    per query, in run order, of that query's
+    ``StreamingQueryProgress`` records as dicts."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        confs: dict[str, str],
+    ):
+        self.spark = spark
+        self.root = root
+        self.progress: list[list[dict]] = []
+        self._confs = confs
+        self._views: list[str] = []
+
+    def path(self, name: str) -> str:
+        """Directory ``name`` under the scratch dir, created."""
+        p = os.path.join(self.root, name)
+        os.makedirs(p, exist_ok=True)
+        return p
+
+    def stage(
+        self,
+        df: DataFrame,
+        filters: Sequence[Column],
+        fmt: str = "parquet",
+    ) -> str:
+        """Write ``df`` as one file per filter into a fresh directory
+        and return it: the N-micro-batch feed of a FileStreamSource
+        read one file per trigger (:meth:`source`). ``fmt="text"``
+        stages the ``value`` column as text lines.
+
+        One Spark job writes every slice: the mutually exclusive
+        filters become a ``__b`` tag, the frame is repartitioned on it
+        (one file per slice) and written ``partitionBy("__b")``, and
+        each part file is then renamed into the flat feed directory.
+        An empty slice is written on its own to stage an empty
+        (schema-only, for parquet) file; if the writer emits no file
+        for it, that slice stages nothing and the feed has one
+        micro-batch fewer than ``len(filters)``.
+
+        FileStreamSource orders files by modification time, and two
+        files with equal mtimes would tie-break on their random names,
+        which could reorder micro-batches and break the stateful
+        operators' in-order arrival contract. Each staged file's mtime
+        is therefore set explicitly, strictly increasing in slice
+        order.
+        """
+        ext = "parquet" if fmt == "parquet" else "txt"
+        tag = F.lit(None).cast("int")
+        for i, flt in reversed(list(enumerate(filters))):
+            tag = F.when(flt, F.lit(i)).otherwise(tag)
+        tagged = df.withColumn("__b", tag).filter(F.col("__b").isNotNull())
+        if fmt != "parquet":
+            tagged = tagged.select("value", "__b")
+        src = tempfile.mkdtemp(prefix="feed_", dir=self.root)
+        scratch = src + ".staging"
+        tagged.repartition(len(filters), F.col("__b")).write.mode(
+            "overwrite"
+        ).partitionBy("__b").format(fmt).save(scratch)
+        now = time.time()
+        for i, flt in enumerate(filters):
+            parts = glob.glob(os.path.join(scratch, f"__b={i}", f"*.{ext}"))
+            if not parts:
+                # No rows hashed to this tag, so no file: write the
+                # empty slice on its own to keep the batch count.
+                empty = df.filter(flt).limit(0)
+                if fmt != "parquet":
+                    empty = empty.select("value")
+                empty_dir = os.path.join(scratch, f"__empty_{i}")
+                empty.coalesce(1).write.format(fmt).save(empty_dir)
+                parts = glob.glob(os.path.join(empty_dir, f"*.{ext}"))
+                if not parts:
+                    continue
+            if len(parts) != 1:
+                raise RuntimeError(
+                    f"staging batch {i}: expected one part file, got {parts}"
+                )
+            dest = os.path.join(src, f"batch-{i:05d}-{os.path.basename(parts[0])}")
+            os.rename(parts[0], dest)
+            os.utime(dest, (now + 2 * i, now + 2 * i))
+        shutil.rmtree(scratch, ignore_errors=True)
+        return src
+
+    def source(self, src: str, schema, fmt: str = "parquet") -> DataFrame:
+        """A file stream over ``src`` that reads one file per
+        micro-batch."""
+        return (
+            self.spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .format(fmt)
+            .load(src)
+        )
+
+    def stream(self, df: DataFrame, filters: Sequence[Column]) -> DataFrame:
+        """:meth:`stage` ``df`` and return its :meth:`source`: one
+        micro-batch per filter, in filter order."""
+        return self.source(self.stage(df, filters), df.schema)
+
+    def run(self, writer) -> list[dict]:
+        """Start ``writer`` with ``availableNow``, wait for it and stop
+        it; return its progress records. A query that fails re-raises
+        its ``StreamingQueryException``; one that outlives the timeout
+        raises ``TimeoutError``. Either way it is stopped first."""
+        return self._run(writer, f"stream_run_{uuid.uuid4().hex}")
+
+    def memory(self, stream: DataFrame, output_mode: str = "append") -> DataFrame:
+        """Run ``stream`` into a memory sink under a unique name and
+        return the sink's rows. The frame stays readable after the
+        scope exits, which drops the name."""
+        name = f"stream_run_{uuid.uuid4().hex}"
+        self._views.append(name)
+        self._run(
+            stream.writeStream.format("memory").outputMode(output_mode), name
+        )
+        return self.spark.table(name)
+
+    def _run(self, writer, name: str) -> list[dict]:
+        with _START_LOCK, scoped_confs(self.spark, self._confs):
+            q = writer.queryName(name).trigger(availableNow=True).start()
+        try:
+            finished = q.awaitTermination(_TIMEOUT_S)
+        finally:
+            q.stop()
+            progress = [json.loads(p.json) for p in q.recentProgress]
+            self.progress.append(progress)
+        if not finished:
+            raise TimeoutError(
+                f"streaming query {name} did not finish in {_TIMEOUT_S} s"
+            )
+        return progress
+
+
+@contextmanager
+def streaming_run(
+    spark: SparkSession,
+    *,
+    state_partitions: int = 8,
+    no_data_batches: bool = True,
+):
+    """Scope for availableNow streaming runs: yields a
+    :class:`StreamRun` that owns one scratch dir (staged feeds, sink
+    and checkpoint dirs) and every query started through it.
+
+    ``state_partitions`` is the shuffle-partition count, and so the
+    state-store instance count, the queries are fixed to; AQE is off
+    inside micro-batches, so nothing coalesces it later.
+    ``no_data_batches=False`` skips the trailing data-less micro-batch,
+    which only advances the watermark: right for queries whose output
+    is emitted on data arrival (inner joins, key dedup, data-driven
+    state), wrong for ones that wait on the watermark (outer joins,
+    session and window finalization, eviction metrics).
+
+    Both are session confs, but a query captures them when it starts,
+    so :meth:`StreamRun.run` sets them only around ``start()`` and
+    restores the session's values right after; batch work inside the
+    scope runs under the session's own settings. On exit, however it
+    is reached, every query has been stopped, the memory-sink names
+    are dropped and the scratch dir is removed.
+    """
+    run = StreamRun(
+        spark,
+        tempfile.mkdtemp(prefix="stream_run_"),
+        {
+            _SHUFFLE_PARTITIONS: str(state_partitions),
+            _NO_DATA_BATCHES: str(no_data_batches).lower(),
+        },
+    )
+    try:
+        yield run
+    finally:
+        for name in run._views:
+            spark.catalog.dropTempView(name)
+        shutil.rmtree(run.root, ignore_errors=True)

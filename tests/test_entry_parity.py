@@ -166,3 +166,30 @@ def test_no_rotation_debt():
 
     debt = check()
     assert not debt, "\n".join(debt)
+
+
+def test_rotation_round_is_derived_from_correctness_rows(tmp_path):
+    """The round under build is the largest N among
+    ``CORRECTNESS_rN.json`` plus 1 — read from the correctness records, never
+    from a VERDICT.md heading (whose wording and case vary by round).
+    Numeric, not lexicographic (r9 < r12), and files that only look
+    similar are ignored."""
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    sys.path.insert(0, str(repo / "tools"))
+    from check_rotation_debt import current_round
+
+    for name in ("CORRECTNESS_r9.json", "CORRECTNESS_r12.json",
+                 "CORRECTNESS_r40_c8.json", "BENCH_r50.json"):
+        (tmp_path / name).write_text("{}")
+    (tmp_path / "VERDICT.md").write_text("# VERDICT — round 99\n")
+    assert current_round(tmp_path) == 13
+
+    latest = max(
+        int(p.stem.removeprefix("CORRECTNESS_r"))
+        for p in repo.glob("CORRECTNESS_r*.json")
+        if p.stem.removeprefix("CORRECTNESS_r").isdigit()
+    )
+    assert current_round() == latest + 1

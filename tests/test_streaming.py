@@ -1407,6 +1407,19 @@ def test_t22_five_feed_join_has_cross_batch_matches(spark):
     assert n_cross == batch_twin.count()
 
 
+def test_t22_refuses_a_feed_with_an_empty_half(spark, monkeypatch):
+    """t22's cross-batch proof needs every feed in both micro-batches:
+    with a lag longer than the fixture's span the four trailing feeds
+    have no first-half rows, and t22 raises before running the stream
+    instead of passing without cross-batch join state."""
+    import __spark_entry__ as e
+
+    monkeypatch.setattr(e, "_T22_LAG_US", 100 * 365 * 86_400 * 1_000_000)
+    with pytest.raises(RuntimeError, match="both halves non-empty"):
+        e.queries()["t22_stream_five_feed_join"](spark, SF_SMOKE)
+    assert not spark.streams.active
+
+
 def test_stateful_gap_fill_fills_across_batch_boundary(spark, tmp_path):
     """The streaming gap fill must synthesize the buckets INSIDE a gap
     that spans the micro-batch boundary — those rows exist only if the
@@ -1877,3 +1890,223 @@ def test_stream_binary_files_decode_pipeline(spark, tmp_path):
     second = spark.read.parquet(out)
     assert second.count() == 4
     assert second.filter(F.col("format") == "pnm").count() == 2
+
+
+# ---------------------------------------------------------------------------
+# availableNow run harness (streaming_run)
+
+_HARNESS_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
+
+
+def _conf_values(spark) -> dict:
+    return {k: spark.conf.get(k) for k in _HARNESS_CONFS}
+
+
+def _dedup_feed(sr, spark):
+    """t1's fixture stream at sf0.001: events in two time-ordered
+    micro-batches through the watermarked key dedup."""
+    ev = load_table(spark, "events", SF_SMOKE).select("event_id", "ts", "value")
+    cut = ev.agg(F.percentile_approx("ts", 0.5)).first()[0]
+    stream = sr.stream(ev, (F.col("ts") <= cut, F.col("ts") > cut))
+    return ev, P.dedup_within_watermark(P.watermarked(stream, "ts"), ["event_id"])
+
+
+def test_streaming_run_state_partitions_and_trailing_batch(spark):
+    """The stream keeps the state-partition count and the no-data
+    switch it was started with: every batch reports exactly
+    ``state_partitions`` state stores, the default run adds the
+    trailing watermark batch, and ``no_data_batches=False`` runs the
+    two data batches only."""
+    batches = {}
+    for no_data in (True, False):
+        with P.streaming_run(
+            spark, state_partitions=3, no_data_batches=no_data
+        ) as sr:
+            ev, out = _dedup_feed(sr, spark)
+            rows = sr.memory(out)
+            progress = sr.progress[0]
+            assert rows.count() == ev.count()
+        stores = {
+            op["numStateStoreInstances"]
+            for p in progress
+            for op in p["stateOperators"]
+        }
+        assert stores == {3}
+        batches[no_data] = [p["numInputRows"] for p in progress]
+    assert len(batches[False]) == 2 and 0 not in batches[False]
+    assert batches[True] == batches[False] + [0]
+
+
+def test_streaming_run_restores_confs_right_after_start(spark):
+    """The confs are set only around ``start()``: while the query is
+    still running, the session already reads its own values again."""
+    before = _conf_values(spark)
+    seen = {}
+
+    class Query:
+        def __init__(self, q):
+            self._q = q
+
+        def awaitTermination(self, timeout):
+            seen.update(_conf_values(spark))
+            return self._q.awaitTermination(timeout)
+
+        def __getattr__(self, name):
+            return getattr(self._q, name)
+
+    class Writer:
+        def __init__(self, w):
+            self._w = w
+
+        def queryName(self, name):
+            return Writer(self._w.queryName(name))
+
+        def trigger(self, **kw):
+            return Writer(self._w.trigger(**kw))
+
+        def start(self):
+            return Query(self._w.start())
+
+    with P.streaming_run(spark, state_partitions=3, no_data_batches=False) as sr:
+        _, out = _dedup_feed(sr, spark)
+        progress = sr.run(Writer(out.writeStream.format("noop")))
+    assert seen == before
+    assert _conf_values(spark) == before
+    assert {
+        op["numStateStoreInstances"] for p in progress for op in p["stateOperators"]
+    } == {3}
+
+
+def test_streaming_run_failure_stops_query_and_cleans_up(spark):
+    """A foreachBatch that raises: the exception reaches the caller,
+    no query is left running, the scratch dir is gone and the session
+    confs are the caller's."""
+    from pyspark.errors import StreamingQueryException
+
+    before = _conf_values(spark)
+
+    def boom(batch, batch_id):
+        raise ValueError("sink failure")
+
+    with pytest.raises(StreamingQueryException, match="sink failure"):
+        with P.streaming_run(spark, state_partitions=3) as sr:
+            root = sr.root
+            _, out = _dedup_feed(sr, spark)
+            sr.run(out.writeStream.foreachBatch(boom))
+    assert not spark.streams.active
+    assert not os.path.exists(root)
+    assert _conf_values(spark) == before
+
+    # a failing memory-sink run leaves no sink name behind either
+    with pytest.raises(StreamingQueryException, match="bad row"):
+        with P.streaming_run(spark) as sr:
+            _, out = _dedup_feed(sr, spark)
+            sr.memory(out.select(F.raise_error(F.lit("bad row"))))
+    assert not spark.streams.active
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("stream_run_")
+    ]
+
+
+def test_streaming_run_timeout_stops_query(spark, monkeypatch):
+    """A query that outlives the run timeout raises TimeoutError and is
+    stopped, not left running."""
+    import time
+
+    def slow(batch, batch_id):
+        time.sleep(3)
+
+    monkeypatch.setattr(P, "_TIMEOUT_S", 0.5)
+    with pytest.raises(TimeoutError):
+        with P.streaming_run(spark) as sr:
+            root = sr.root
+            _, out = _dedup_feed(sr, spark)
+            sr.run(out.writeStream.foreachBatch(slow))
+    assert not spark.streams.active
+    assert not os.path.exists(root)
+
+
+def test_streaming_run_staging_failure_removes_scratch(spark):
+    """A staging error (here: a slice split over several part files)
+    raises inside the scope, and the scope still removes every file it
+    wrote, the staging dir included."""
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        with pytest.raises(RuntimeError, match="expected one part file"):
+            with P.streaming_run(spark) as sr:
+                root = sr.root
+                sr.stage(spark.range(4), (F.col("id") < 2, F.col("id") >= 2))
+    finally:
+        spark.conf.set(key, old)
+    assert not os.path.exists(root)
+
+
+def test_streaming_run_concurrent_runs_get_distinct_sinks(spark):
+    """Two runs at once each get their own memory sink, and each sink
+    holds exactly its own stream's rows after both scopes exit."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    before = _conf_values(spark)
+
+    def one(mod):
+        with P.streaming_run(spark) as sr:
+            ev = load_table(spark, "events", SF_SMOKE).filter(
+                F.col("event_id") % 2 == mod
+            )
+            rows = sr.memory(sr.stream(ev.select("event_id"), (F.lit(True),)))
+            name = sr.progress[0][0]["name"]
+        return name, rows, ev.count()
+
+    with ThreadPoolExecutor(2) as pool:
+        results = list(pool.map(one, (0, 1)))
+    (name_a, rows_a, n_a), (name_b, rows_b, n_b) = results
+    assert name_a != name_b
+    assert rows_a.count() == n_a and rows_b.count() == n_b
+    assert rows_a.filter(F.col("event_id") % 2 == 1).count() == 0
+    assert name_a not in {t.name for t in spark.catalog.listTables()}
+    assert _conf_values(spark) == before
+
+
+def test_entry_harnesses_leave_lifecycle_to_streaming_run():
+    """Guard against the hand-rolled streaming lifecycle coming back:
+    no function in ``__spark_entry__.py`` awaits a query, scopes the
+    shuffle-partition count or sets a session conf, and none that
+    builds a ``writeStream`` makes its own temp dir — all of that is
+    ``streaming_run``'s job."""
+    import ast
+    from pathlib import Path
+
+    src = Path(__file__).resolve().parent.parent / "__spark_entry__.py"
+    tree = ast.parse(src.read_text())
+
+    def dotted(node) -> str:
+        parts = []
+        while isinstance(node, ast.Attribute):
+            parts.append(node.attr)
+            node = node.value
+        if isinstance(node, ast.Name):
+            parts.append(node.id)
+        return ".".join(reversed(parts))
+
+    bad = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        names = {
+            dotted(n.func) for n in ast.walk(fn) if isinstance(n, ast.Call)
+        }
+        attrs = {n.attr for n in ast.walk(fn) if isinstance(n, ast.Attribute)}
+        for call in names:
+            last = call.rsplit(".", 1)[-1]
+            if last in ("awaitTermination", "push_small_shuffle") or call.endswith(
+                "conf.set"
+            ):
+                bad.append(f"{fn.name}: {call}")
+        if "writeStream" in attrs and "tempfile.mkdtemp" in names:
+            bad.append(f"{fn.name}: tempfile.mkdtemp beside writeStream")
+    assert not bad, bad

@@ -15,9 +15,10 @@ silently; this check makes that impossible:
   Queries born this round are exempt (the window may be full), which
   bounds any query's wait for a hard signal to exactly one round.
 
-The current round is inferred as (latest VERDICT round) + 1 — the
-VERDICT for round N is written after round N's build, so the build in
-progress is N+1. Exit 0 = no debt; exit 1 = debt (listed on stdout).
+The current round is derived from data, not from judge prose: the
+largest N among ``CORRECTNESS_rN.json`` plus 1 — round N's correctness rows
+land after round N's build, so the build in progress is N+1. Exit 0 =
+no debt; exit 1 = debt (listed on stdout).
 
 Run from the repo root. ``tests/test_entry_parity.py`` runs this in
 every pytest session so debt fails the suite, not just the judge.
@@ -36,11 +37,15 @@ BIRTHS = ROOT / "tools" / "query_births.json"
 WINDOW = 50
 
 
-def current_round() -> int:
-    m = re.search(r"#\s*VERDICT\s*—\s*Round\s+(\d+)", (ROOT / "VERDICT.md").read_text())
-    if not m:
-        raise SystemExit("cannot parse round number from VERDICT.md")
-    return int(m.group(1)) + 1
+def current_round(root: Path = ROOT) -> int:
+    rounds = [
+        int(m.group(1))
+        for f in root.glob("CORRECTNESS_r*.json")
+        if (m := re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name))
+    ]
+    if not rounds:
+        raise SystemExit(f"no CORRECTNESS_rN.json under {root}")
+    return max(rounds) + 1
 
 
 def driver_rows() -> set[str]:
