@@ -133,13 +133,6 @@ def asof_join_last(
     )
 
 
-def broadcast_dim_join(fact: DataFrame, dim: DataFrame, on: str | list[str], how: str = "inner") -> DataFrame:
-    """J2 — fact ⋈ small dimension with an explicit broadcast hint, the
-    scale-safe shape of the reference's view-assembly equi-joins
-    (create_database.py:240-258): no shuffle of the fact side."""
-    return fact.join(F.broadcast(dim), on, how)
-
-
 def salted_skew_join(
     left: DataFrame,
     right: DataFrame,

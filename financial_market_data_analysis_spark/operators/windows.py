@@ -718,19 +718,6 @@ def sliding_join_back(
     return ev.join(agg, "window_start")
 
 
-def row_id(
-    df: DataFrame,
-    order_cols: Sequence[str | Column],
-    out_col: str = "id",
-    partition_cols: Sequence[str | Column] = (),
-) -> DataFrame:
-    """The warehouse ``AUTO_INCREMENT ID`` (create_database.py:69)
-    re-expressed as ``row_number() OVER (ORDER BY ts)`` — assigned at
-    query time, not ingest time (SURVEY.md §7.4)."""
-    w = ordered_window(order_cols, partition_cols)
-    return df.withColumn(out_col, F.row_number().over(w))
-
-
 def indicator_suite(
     df: DataFrame,
     order_cols: Sequence[str | Column],

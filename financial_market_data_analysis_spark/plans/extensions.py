@@ -1218,27 +1218,6 @@ def pack_budget_sweep_oracle() -> str:
     """
 
 
-EMB_DIM = 64  # fixed embedding dimensionality of the driver's table
-
-
-def _bucket_sql(vec: str, n_planes: int = S.N_PLANES, dim: int = EMB_DIM) -> str:
-    """Mirror of similarity.hyperplane_bucket: bit p from the sign of
-    Σ_d ±v[d], sign from md5('p:d') hex-digit parity (d 0-based).
-    ``generate_series`` bounds must be constant in DuckDB (no lateral
-    column args), hence the fixed ``dim``."""
-    odd = "['1','3','5','7','9','b','d','f']"
-    bits = []
-    for p in range(n_planes):
-        dot = (
-            f"(SELECT sum(CASE WHEN list_contains({odd}, "
-            f"substr(md5('{p}:' || (i - 1)), ((i - 1) % 32) + 1, 1)) "
-            f"THEN CAST({vec}[i] AS DOUBLE) ELSE -CAST({vec}[i] AS DOUBLE) END) "
-            f"FROM generate_series(1, {dim}) g(i))"
-        )
-        bits.append(f"(CASE WHEN {dot} > 0 THEN '1' ELSE '0' END)")
-    return " || ".join(bits)
-
-
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing end-to-end: documents-as-media → Arrow
     mapInPandas decode stub → per-feature scalar rows."""
@@ -4746,10 +4725,6 @@ def _rp_signs_k(k: int) -> list[list[int]]:
         ]
         for j in range(k)
     ]
-
-
-def _rp_signs() -> list[list[int]]:
-    return _rp_signs_k(RP_OUT_DIMS)
 
 
 def _rp_project_expr_k(k: int) -> Column:

@@ -1,21 +1,20 @@
-"""Kafka streaming sources (S1-S2) and the JSON-decode flatten.
+"""The JSON-decode flatten of the reference's Kafka feeds (S2).
 
-Mirrors spark_consumer.py:94-106 (one reader per feed topic →
-``CAST(value AS STRING)`` → ``from_json`` → flatten) but
-config-driven: topic → schema comes from the registry in
-``functions.schemas``. The Kafka connector jar is not present in the
-test image, so readers are constructed lazily and everything is unit-
-tested through ``json_decode_flatten`` over file/memory streams, which
-exercises the identical decode path.
+Mirrors spark_consumer.py:94-106 (``CAST(value AS STRING)`` →
+``from_json`` → flatten), config-driven: each feed's schema comes from
+the registry in ``functions.schemas``. REST polls and file-stream
+replays of their staging directories (``sources.rest``) feed this
+decode; the engine has no Kafka reader or writer, since no
+spark-sql-kafka connector ships with PySpark.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from financial_market_data_analysis_spark.functions.schemas import FEED_SCHEMAS, flatten_projection
+from financial_market_data_analysis_spark.functions.schemas import flatten_projection
 
 
 def json_decode_flatten(
@@ -34,43 +33,3 @@ def json_decode_flatten(
         F.from_json(F.col(value_col).cast("string"), schema).alias("j")
     ).select("j.*")
     return parsed.select(*flatten_projection(schema, ts_format))
-
-
-def kafka_feed_reader(
-    spark: SparkSession,
-    topic: str,
-    bootstrap_servers: str = "localhost:9092",
-    starting_offsets: str = "latest",
-) -> DataFrame:
-    """S1 — one Kafka stream reader per feed topic
-    (spark_consumer.py:94-101; options mirror the reference:
-    ``failOnDataLoss=false``, latest offsets). Requires the
-    spark-sql-kafka connector on the classpath."""
-    raw = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .option("failOnDataLoss", "false")
-        .load()
-    )
-    schema = FEED_SCHEMAS[topic]()
-    return json_decode_flatten(raw, schema)
-
-
-def kafka_signal_writer(
-    df: DataFrame,
-    topic: str,
-    checkpoint_dir: str,
-    bootstrap_servers: str = "localhost:9092",
-):
-    """K2 — the reference's prediction-trigger signal sink
-    (spark_consumer.py:490-502): ``to_json(struct(ts))`` → Kafka."""
-    out = df.select(F.to_json(F.struct(F.col("ts"))).alias("value"))
-    return (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )

@@ -8,9 +8,9 @@ driver-side Python loop. Here the poller only LANDS raw documents: each
 poll GETs JSON and appends it as one single-row parquet file to a
 staging directory (mtimes strictly increasing, so FileStreamSource
 replays polls in arrival order), and ALL reshaping happens in Spark via
-``json_decode_flatten`` with the same feed-schema registry the Kafka
-reader uses — the transformation path is byte-identical whether a
-document arrived from Kafka, a REST poll, or a replayed directory.
+``json_decode_flatten`` with the feed-schema registry of the
+reference's Kafka feeds — the transformation path is byte-identical
+whether a document arrived from a REST poll or a replayed directory.
 
 Scale shape: the poll loop is inherently driver-side (one small HTTP
 GET per interval — the reference polls once per 300 s per feed,

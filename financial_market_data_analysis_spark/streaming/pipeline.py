@@ -75,13 +75,6 @@ def join_feeds(
     return out
 
 
-def dedup_all_columns(df: DataFrame) -> DataFrame:
-    """D1 — the reference's ``dropDuplicates()`` over all columns
-    (spark_consumer.py:477). Kept for parity; at scale prefer
-    ``dedup_within_watermark`` below."""
-    return df.dropDuplicates()
-
-
 def dedup_within_watermark(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Scale path: key-scoped dedup with watermark-bounded state
     (``dropDuplicatesWithinWatermark``, Spark 3.5+) — state holds one
@@ -610,41 +603,6 @@ def compact_warehouse(
         w = w.partitionBy(*partition_by)
     w.parquet(dest_path)
     return spark.read.parquet(dest_path).count()
-
-
-def console_sink(stream: DataFrame, trigger: dict | None = None, num_rows: int = 20):
-    """K3 — the debug console sink (the reference keeps one commented
-    out, spark_consumer.py:504-506)."""
-    return _apply_trigger(
-        stream.writeStream.format("console")
-        .option("numRows", str(num_rows))
-        .outputMode("append"),
-        trigger,
-    )
-
-
-def jdbc_append_sink(
-    stream: DataFrame,
-    url: str,
-    table: str,
-    checkpoint_dir: str,
-    properties: dict[str, str] | None = None,
-    trigger: dict | None = None,
-):
-    """K1 (reference-exact variant): foreachBatch JDBC append — kept as
-    an optional connector for MariaDB/MySQL targets."""
-
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        batch.write.jdbc(url=url, table=table, mode="append", properties=properties or {})
-
-    return _apply_trigger(
-        stream.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir),
-        trigger,
-    )
 
 
 # largest PRECEDING frame in the indicator suite: 19 rows (MA20 /

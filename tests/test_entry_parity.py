@@ -193,3 +193,27 @@ def test_rotation_round_is_derived_from_correctness_rows(tmp_path):
         if p.stem.removeprefix("CORRECTNESS_r").isdigit()
     )
     assert current_round() == latest + 1
+
+
+def test_bench_compare_flags_a_regression_with_documented_flags(tmp_path):
+    """``bench_compare.py OLD NEW --ratio R`` as its usage line documents:
+    the flag's value is not a third record path, and a query slower than
+    ``old * ratio`` by more than the floor is flagged (exit code 1)."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    old, new = tmp_path / "old.json", tmp_path / "new.json"
+    old.write_text(json.dumps({"sf": 0.1, "queries": {"q1": 1.0, "q2": 2.0}}))
+    new.write_text(json.dumps({"sf": 0.1, "queries": {"q1": 1.2, "q2": 3.0}}))
+    run = subprocess.run(
+        [sys.executable, str(repo / "tools" / "bench_compare.py"), str(old), str(new),
+         "--ratio", "1.3", "--floor", "0.3"],
+        capture_output=True, text=True,
+    )
+    assert run.returncode == 1, run.stdout + run.stderr
+    assert "REG q2: 2.00s -> 3.00s" in run.stdout
+    assert "REG q1" not in run.stdout
+    assert "regressions: 1" in run.stdout

@@ -14,25 +14,21 @@ flagged, so the check can gate a commit.
 
 from __future__ import annotations
 
+import argparse
 import json
-import sys
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    if len(args) != 2:
-        print(__doc__)
-        return 2
-    ratio = 1.3
-    floor = 0.3
-    argv = sys.argv[1:]
-    if "--ratio" in argv:
-        ratio = float(argv[argv.index("--ratio") + 1])
-    if "--floor" in argv:
-        floor = float(argv[argv.index("--floor") + 1])
+def main(argv=None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("old", metavar="OLD.json")
+    ap.add_argument("new", metavar="NEW.json")
+    ap.add_argument("--ratio", type=float, default=1.3)
+    ap.add_argument("--floor", type=float, default=0.3)
+    ns = ap.parse_args(argv)
+    ratio, floor = ns.ratio, ns.floor
 
-    old_rec = json.load(open(args[0]))
-    new_rec = json.load(open(args[1]))
+    old_rec = json.load(open(ns.old))
+    new_rec = json.load(open(ns.new))
     if old_rec.get("sf") != new_rec.get("sf"):
         print(
             f"WARNING: scale factors differ (old sf={old_rec.get('sf')}, "
@@ -44,7 +40,7 @@ def main() -> int:
     if not isinstance(old, dict) or not isinstance(new, dict):
         # Driver-recorded BENCH_r*.json files before round 7 hold only a
         # truncated stdout tail; they have no machine-readable map.
-        for label, rec, m in (("old", args[0], old), ("new", args[1], new)):
+        for label, rec, m in (("old", ns.old, old), ("new", ns.new, new)):
             if not isinstance(m, dict):
                 print(f"ERROR: {label} record {rec} has no 'queries' map "
                       "(pre-round-7 truncated format?) — use BENCH_FULL.json")

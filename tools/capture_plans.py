@@ -6,8 +6,8 @@ Writes ``<out>/<query>_<suffix>.txt``. Runs against sf0.1 by default.
 Batch queries are planned without execution; streaming-harness queries
 EXECUTE their stream during construction (their returned frame is a
 memory-sink table), so their file carries the returned frame's plan
-plus a note — job-level evidence for those lives in
-tools/profile_queries.py output, quoted in OPTIMIZATION_r16.md.
+plus a note — job-level evidence for those is in the per-sample
+job totals and micro-batch phases that tools/measure.py records.
 """
 
 from __future__ import annotations
