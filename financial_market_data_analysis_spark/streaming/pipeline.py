@@ -39,6 +39,7 @@ from financial_market_data_analysis_spark.operators.joins import asof_band_join
 
 WATERMARK = "5 minutes"  # spark_consumer.py:114 etc.
 BAND_SECONDS = 180  # 3-minute join tolerance, spark_consumer.py:440-442
+EPOCH_COL = "epoch_id"  # the per-epoch partition column every epoch sink writes
 
 
 def watermarked(df: DataFrame, ts_col: str = "ts", delay: str = WATERMARK) -> DataFrame:
@@ -93,18 +94,26 @@ def _apply_trigger(writer, trigger: dict | None):
 def epoch_idempotent_writer(
     path: str,
     partition_by: Sequence[str] = (),
-    epoch_col: str | None = "epoch_id",
 ) -> Callable[[DataFrame, int], None]:
     """The per-epoch warehouse write, exposed for direct testing of the
-    retry path. With ``epoch_col`` set (default), each micro-batch is
-    stamped with its epoch id and written via DYNAMIC partition
-    overwrite on (*partition_by, epoch_col): a retried epoch REPLACES
-    exactly its own partition directories — including a partial write
-    left by a mid-epoch crash — instead of appending duplicate bars.
-    This is the same pattern the prediction sink uses, now on the bars
-    warehouse; the reference's JDBC append is at-least-once with
-    dedup-hope (spark_consumer.py:68-84). ``epoch_col=None`` reverts to
-    the reference-exact plain append.
+    retry path. Each micro-batch is stamped with its epoch id and
+    written via DYNAMIC partition overwrite on (*partition_by,
+    ``epoch_id``): a retried epoch REPLACES exactly its own partition
+    directories — including a partial write left by a mid-epoch crash —
+    instead of appending duplicate bars. This is the same pattern the
+    prediction sink uses, now on the bars warehouse; the reference's
+    JDBC append is at-least-once with dedup-hope
+    (spark_consumer.py:68-84).
+
+    Every call is exactly one write: there is no emptiness probe. An
+    empty epoch overwrites zero partitions, so it leaves an existing
+    warehouse's rows and ``epoch_id=`` dirs as they were, and on a fresh
+    path it leaves an empty directory with no ``epoch_id=`` partition.
+    A probe would protect nothing, and on a batch caller it is not
+    cheap: a limit-1 probe over a planned frame still runs its scans,
+    aggregates and join shuffles, doubling the jobs per write. Callers
+    that gate OTHER work on emptiness (hooks, a per-batch ratio) check
+    once themselves.
 
     The epoch partition nests UNDER the user buckets, so date-bucket
     partition pruning is untouched; the epoch dirs are small and a
@@ -112,24 +121,14 @@ def epoch_idempotent_writer(
     column) without changing readers, which tolerate the extra column.
     """
 
-    def _write(batch: DataFrame, epoch_id: int, *, skip_empty_probe: bool = False) -> None:
-        if not skip_empty_probe and batch.isEmpty():
-            # the reference used rdd.isEmpty() — an extra job; isEmpty()
-            # on the DataFrame is a limit-1 probe (spark_consumer.py:76)
-            return
-        if epoch_col is None:
-            w = batch.write.mode("append")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(path)
-        else:
-            (
-                batch.withColumn(epoch_col, F.lit(epoch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy(*partition_by, epoch_col)
-                .parquet(path)
-            )
+    def _write(batch: DataFrame, epoch_id: int) -> None:
+        (
+            batch.withColumn(EPOCH_COL, F.lit(epoch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_by, EPOCH_COL)
+            .parquet(path)
+        )
 
     return _write
 
@@ -141,7 +140,6 @@ def parquet_append_sink(
     post_batch: Callable[[DataFrame, int], None] | None = None,
     trigger: dict | None = None,
     partition_by: Sequence[str] = (),
-    epoch_col: str | None = "epoch_id",
 ):
     """K1 — the warehouse sink as foreachBatch → idempotent parquet
     write (see ``epoch_idempotent_writer``).
@@ -158,12 +156,12 @@ def parquet_append_sink(
     difference between O(tail) and O(warehouse) per micro-batch at
     100 TB.
     """
-    write = epoch_idempotent_writer(path, partition_by, epoch_col)
+    write = epoch_idempotent_writer(path, partition_by)
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():  # one limit-1 probe gates write AND hooks
             return
-        write(batch, epoch_id, skip_empty_probe=True)
+        write(batch, epoch_id)
         if post_batch is not None:
             post_batch(batch, epoch_id)
 
@@ -267,6 +265,8 @@ def quarantining_ingest_sink(
     drift_proj = F.inline(F.array(*entries))
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
+        # the drift row divides by the batch's row count, which raises
+        # under ANSI on an empty batch: skip the whole epoch instead
         if batch.isEmpty():
             return
         batch = batch.localCheckpoint(eager=True)  # one parse, N sinks
@@ -275,11 +275,7 @@ def quarantining_ingest_sink(
         write_clean(clean, epoch_id)
         write_quar(quar, epoch_id)
         if write_drift is not None:
-            write_drift(
-                batch.agg(*agg_cols).select(drift_proj),
-                epoch_id,
-                skip_empty_probe=True,
-            )
+            write_drift(batch.agg(*agg_cols).select(drift_proj), epoch_id)
 
     return _apply_trigger(
         stream.writeStream.foreachBatch(_write)
@@ -449,7 +445,7 @@ def evolving_ingest_sink(
     ]
 
     def _write(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
+        if batch.isEmpty():  # one probe skips the checkpoint and 3 writes
             return
         batch = batch.localCheckpoint(eager=True)  # one parse, N sinks
         tagged = batch.select(*tagged_cols)
@@ -465,12 +461,12 @@ def evolving_ingest_sink(
         clean = union.filter(clean_flt).select(*clean_cols)
         quar = union.filter(quar_flt).select(*quar_cols)
         write_clean(clean, epoch_id)
-        write_quar(quar, epoch_id, skip_empty_probe=True)
+        write_quar(quar, epoch_id)
         if write_acct is not None:
             acct = (
                 union.groupBy(acct_key).agg(*acct_aggs).select(*acct_cols)
             )
-            write_acct(acct, epoch_id, skip_empty_probe=True)
+            write_acct(acct, epoch_id)
 
     return _apply_trigger(
         stream.writeStream.foreachBatch(_write)
@@ -560,7 +556,6 @@ def compact_warehouse(
     src_path: str,
     dest_path: str,
     partition_by: Sequence[str] = (),
-    epoch_col: str = "epoch_id",
     target_files: int = 8,
     predicate: str | Column | None = None,
 ) -> int:
@@ -589,8 +584,8 @@ def compact_warehouse(
     df = spark.read.parquet(src_path)
     if predicate is not None:
         df = df.filter(predicate)  # partition-prunes on bucket columns
-    if epoch_col in df.columns:
-        df = df.drop(epoch_col)
+    if EPOCH_COL in df.columns:
+        df = df.drop(EPOCH_COL)
     # actually merge the small epoch files: bound output files to
     # ``target_files`` per partition-key hash (keyed repartition keeps
     # each output dir's rows in few tasks) or globally when unpartitioned
@@ -1186,11 +1181,12 @@ def streaming_predictions(
 
     Only rows belonging to the CURRENT batch are scored (semi-join on
     the batch keys), mirroring the reference's score-the-new-point
-    semantics. foreachBatch hooks run at-least-once, so the sink is
-    partitioned by ``epoch_id`` and written with dynamic partition
-    overwrite: a retried epoch REPLACES its own partition instead of
-    appending duplicate prediction rows — idempotent per epoch.
+    semantics. foreachBatch hooks run at-least-once, so the rows go
+    through ``epoch_idempotent_writer``: a retried epoch REPLACES its
+    own ``epoch_id`` partition instead of appending duplicate
+    prediction rows — idempotent per epoch.
     """
+    write = epoch_idempotent_writer(predictions_path)
 
     def _hook(batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
@@ -1209,15 +1205,12 @@ def streaming_predictions(
             snap = snap.na.drop(subset=list(feature_cols))
         scored = model.transform(snap)
         fresh = scored.join(keys, order_col, "left_semi")
-        out = fresh.select(
-            order_col, *keep_cols,
-            F.col("prediction").cast("double").alias("prediction"),
-        ).withColumn("epoch_id", F.lit(epoch_id))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch_id")
-            .parquet(predictions_path)
+        write(
+            fresh.select(
+                order_col, *keep_cols,
+                F.col("prediction").cast("double").alias("prediction"),
+            ),
+            epoch_id,
         )
 
     return _hook
