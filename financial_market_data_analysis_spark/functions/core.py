@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -17,6 +17,13 @@ def safe_div(num: Column, den: Column) -> Column:
     relies on (SURVEY.md §7.4: division-by-zero → NULL → ``fillna(0)``).
     """
     return F.try_divide(num, den)
+
+
+def with_sql(df: DataFrame, frags: dict[str, str]) -> DataFrame:
+    """Add (or replace) each column from its Spark SQL fragment. The
+    JVM parses a fragment in one call, where the same formula built
+    from ``Column`` operators costs one Py4J round trip per operator."""
+    return df.withColumns({name: F.expr(sql) for name, sql in frags.items()})
 
 
 @contextmanager

@@ -1,31 +1,54 @@
 """F1-F13: row-level derived features (SURVEY.md §2.7).
 
-Every function is a pure projection built from native Column
-expressions — no UDFs — so the whole feature stack stays inside
-whole-stage codegen and Catalyst can prune/push down around it
-(mirroring the reference's deliberate UDF-avoidance,
-spark_consumer.py:320-432).
+Every feature is a pure projection — no UDFs — so the whole feature
+stack stays inside whole-stage codegen and Catalyst can prune/push down
+around it (mirroring the reference's deliberate UDF-avoidance,
+spark_consumer.py:320-432). Each formula is written once, as a Spark
+SQL fragment builder (``*_sql``); the DataFrame operator beside it
+applies that fragment, and the one-pass warehouse plans
+(``plans/full_row.py``, ``plans/pipeline.py``) splice the same text
+into their SQL.
 
 Division-by-zero: the reference's MySQL half yields NULL and then
 ``fillna(0)`` (spark_consumer.py:311,480); Spark 4 ANSI mode would
-throw, so every ratio here uses ``safe_div`` (→ NULL), preserving
+throw, so every ratio here uses ``try_divide``/``safe_div`` (→ NULL), preserving
 NULL → ``fillna(0)`` ordering (SURVEY.md §7.4).
 """
 
 from __future__ import annotations
 
-import operator
 from collections.abc import Sequence
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from financial_market_data_analysis_spark.functions.core import safe_div
+from financial_market_data_analysis_spark.functions.core import safe_div, with_sql
 
 
 # ---------------------------------------------------------------------------
 # F1 — candle wick
+
+
+def wick_sql(
+    open_col: str = "open",
+    high_col: str = "high",
+    low_col: str = "low",
+    close_col: str = "close",
+) -> dict[str, str]:
+    """F1 — candle/wick geometry (spark_consumer.py:186-193).
+
+    ``candle_size = high - low``; wick measured from close toward the
+    extreme on the candle's direction; doji (high == low) → NULL ratio
+    (division by zero), to be zero-filled downstream.
+    """
+    o, h, lo, c = open_col, high_col, low_col, close_col
+    candle = f"{h} - {lo}"
+    wick = f"CASE WHEN {c} >= {o} THEN {h} - {c} ELSE {lo} - {c} END"
+    return {
+        "candle_size": candle,
+        "wick_size": wick,
+        "wick_prct": f"try_divide({wick}, {candle})",
+    }
 
 
 def wick_features(
@@ -35,55 +58,31 @@ def wick_features(
     low_col: str = "low",
     close_col: str = "close",
 ) -> DataFrame:
-    """F1 — candle/wick geometry (spark_consumer.py:186-193).
-
-    ``candle_size = high - low``; wick measured from close toward the
-    extreme on the candle's direction; doji (high == low) → NULL ratio
-    (division by zero), to be zero-filled downstream.
-    """
-    o, h, lo, c = (F.col(x) for x in (open_col, high_col, low_col, close_col))
-    candle = h - lo
-    wick = F.when(c >= o, h - c).otherwise(lo - c)
-    return df.withColumns(
-        {
-            "candle_size": candle,
-            "wick_size": wick,
-            "wick_prct": safe_div(wick, candle),
-        }
-    )
+    """F1 — ``wick_sql`` applied."""
+    return with_sql(df, wick_sql(open_col, high_col, low_col, close_col))
 
 
 # ---------------------------------------------------------------------------
 # F2-F7 — order-book features
+#
+# Null-guarded terms are ``coalesce(x, 0)``: NULL contributes 0
+# (spark_consumer.py:326,336) and the term keeps its natural type (int
+# stays int). Horizontal sums are plain left-associative ``t0 + t1 + ...``
+# chains with no leading ``0 +`` term.
 
 
-def _guarded(col: Column) -> Column:
-    """Null-guarded term: NULL contributes 0 (spark_consumer.py:326,336).
-    ``coalesce`` keeps the column's natural type (int stays int) and is
-    the exact twin of SQL ``COALESCE(x, 0)``."""
-    return F.coalesce(col, F.lit(0))
+def _guarded_sum(terms) -> str:
+    return " + ".join(f"coalesce({t}, 0)" for t in terms)
 
 
-def _hsum(terms) -> Column:
-    """Horizontal (across-columns) left-associative sum without a
-    leading ``0 +`` term, so the expression tree mirrors a plain SQL
-    ``t0 + t1 + ...`` chain."""
-    return reduce(operator.add, terms)
-
-
-def book_weighted_average(
-    df: DataFrame,
-    side: str,
-    levels: int = 7,
-    out_col: str | None = None,
-) -> DataFrame:
+def book_weighted_average_sql(side: str, levels: int = 7) -> str:
     """F2 — size-weighted average distance from the best price for one
     book side: ``Σᵢ (best − pᵢ)·sizeᵢ / Σᵢ sizeᵢ`` with null-guarded
     terms (spark_consumer.py:320-340). ``side`` is ``"bid"``/``"ask"``;
     columns follow the fixture naming ``{side}_{i}`` / ``{side}_{i}_size``.
 
-    The fold is horizontal — a Python ``sum`` over Column expressions,
-    one row at a time — so it's pure codegen arithmetic, no aggregation.
+    The fold is horizontal — a sum over columns, one row at a time — so
+    it's pure codegen arithmetic, no aggregation.
 
     Documented deviation from the reference: spark_consumer.py:327
     guards price and size separately but leaves ``best`` un-guarded, so
@@ -93,76 +92,100 @@ def book_weighted_average(
     reference behavior is a bug its synthetic feeds never hit), kept
     consistent with the oracle's ``COALESCE((best − pᵢ)·sizeᵢ, 0)``.
     """
-    out_col = out_col or f"{side}s_ord_WA"
-    best = F.col(f"{side}_0")
-    num = _hsum(
-        _guarded((best - F.col(f"{side}_{i}")) * F.col(f"{side}_{i}_size"))
-        for i in range(levels)
-    )
-    den = _hsum(_guarded(F.col(f"{side}_{i}_size")) for i in range(levels))
-    return df.withColumn(out_col, safe_div(num, den))
+    num = _guarded_sum(f"({side}_0 - {side}_{i}) * {side}_{i}_size" for i in range(levels))
+    den = _guarded_sum(f"{side}_{i}_size" for i in range(levels))
+    return f"try_divide({num}, {den})"
+
+
+def book_weighted_average(
+    df: DataFrame,
+    side: str,
+    levels: int = 7,
+    out_col: str | None = None,
+) -> DataFrame:
+    """F2 — ``book_weighted_average_sql`` applied as ``{side}s_ord_WA``."""
+    return with_sql(df, {out_col or f"{side}s_ord_WA": book_weighted_average_sql(side, levels)})
+
+
+def order_volume_imbalance_sql() -> str:
+    """F3 — ``(bid₀size − ask₀size) / (bid₀size + ask₀size)``
+    (spark_consumer.py:342-347); empty top-of-book → NULL → fillna(0)."""
+    return "try_divide(bid_0_size - ask_0_size, bid_0_size + ask_0_size)"
 
 
 def order_volume_imbalance(
     df: DataFrame, out_col: str = "vol_imbalance"
 ) -> DataFrame:
-    """F3 — ``(bid₀size − ask₀size) / (bid₀size + ask₀size)``
-    (spark_consumer.py:342-347); empty top-of-book → NULL → fillna(0)."""
-    b, a = F.col("bid_0_size"), F.col("ask_0_size")
-    return df.withColumn(out_col, safe_div(b - a, b + a))
+    """F3 — ``order_volume_imbalance_sql`` applied."""
+    return with_sql(df, {out_col: order_volume_imbalance_sql()})
+
+
+def delta_indicator_sql(levels: int = 7) -> str:
+    """F4 — ``Σ ask sizes − Σ bid sizes`` (orientation preserved,
+    spark_consumer.py:349-353)."""
+    asks = _guarded_sum(f"ask_{i}_size" for i in range(levels))
+    bids = _guarded_sum(f"bid_{i}_size" for i in range(levels))
+    return f"({asks}) - ({bids})"
 
 
 def delta_indicator(df: DataFrame, levels: int = 7, out_col: str = "delta") -> DataFrame:
-    """F4 — ``Σ ask sizes − Σ bid sizes`` (orientation preserved,
-    spark_consumer.py:349-353)."""
-    asks = _hsum(_guarded(F.col(f"ask_{i}_size")) for i in range(levels))
-    bids = _hsum(_guarded(F.col(f"bid_{i}_size")) for i in range(levels))
-    return df.withColumn(out_col, asks - bids)
+    """F4 — ``delta_indicator_sql`` applied."""
+    return with_sql(df, {out_col: delta_indicator_sql(levels)})
+
+
+def micro_price_sql() -> str:
+    """F5 — Gatheral–Oomen micro-price ``I·ask₀ + (1−I)·bid₀`` with
+    ``I = bid₀size/(bid₀size+ask₀size)`` (spark_consumer.py:355-364)."""
+    imb = "try_divide(bid_0_size, bid_0_size + ask_0_size)"
+    return f"{imb} * ask_0 + (1 - {imb}) * bid_0"
 
 
 def micro_price(df: DataFrame, out_col: str = "micro_price") -> DataFrame:
-    """F5 — Gatheral–Oomen micro-price ``I·ask₀ + (1−I)·bid₀`` with
-    ``I = bid₀size/(bid₀size+ask₀size)`` (spark_consumer.py:355-364)."""
-    bs, as_ = F.col("bid_0_size"), F.col("ask_0_size")
-    imb = safe_div(bs, bs + as_)
-    return df.withColumn(out_col, imb * F.col("ask_0") + (1 - imb) * F.col("bid_0"))
+    """F5 — ``micro_price_sql`` applied."""
+    return with_sql(df, {out_col: micro_price_sql()})
 
 
-def bid_ask_spread(df: DataFrame, out_col: str = "spread") -> DataFrame:
+def bid_ask_spread_sql() -> str:
     """F6 — ``bid₀ − ask₀`` when both non-zero else 0. The reference's
     sign convention (bid minus ask, negative in normal markets) is kept
     (spark_consumer.py:366-368)."""
-    b, a = F.col("bid_0"), F.col("ask_0")
-    return df.withColumn(
-        out_col, F.when((b != 0) & (a != 0), b - a).otherwise(F.lit(0.0))
-    )
+    return "CASE WHEN bid_0 <> 0 AND ask_0 <> 0 THEN bid_0 - ask_0 ELSE 0.0D END"
+
+
+def bid_ask_spread(df: DataFrame, out_col: str = "spread") -> DataFrame:
+    """F6 — ``bid_ask_spread_sql`` applied."""
+    return with_sql(df, {out_col: bid_ask_spread_sql()})
+
+
+def relative_price_levels_sql(levels: int = 7) -> dict[str, str]:
+    """F7 — depth prices relative to the best level: ``ask_i ← ask₀ −
+    ask_i`` (and bids), 0-guarded (spark_consumer.py:370-400). Each value
+    replaces its own input column, so a caller that keeps the inputs
+    reads these under other names."""
+    return {
+        f"{side}_{i}": f"CASE WHEN {side}_{i} <> 0 THEN {side}_0 - {side}_{i} ELSE 0.0D END"
+        for side in ("bid", "ask")
+        for i in range(1, levels)
+    }
 
 
 def relative_price_levels(df: DataFrame, levels: int = 7) -> DataFrame:
-    """F7 — re-express depth prices relative to the best level:
-    ``ask_i ← ask₀ − ask_i`` (and bids), 0-guarded; level-0 prices are
-    dropped afterwards (always 0) — spark_consumer.py:370-400. The
-    reference's temp-column/drop/rename dance collapses into one
-    ``withColumns`` map."""
-    cols: dict[str, Column] = {}
-    for side in ("bid", "ask"):
-        best = F.col(f"{side}_0")
-        for i in range(1, levels):
-            c = F.col(f"{side}_{i}")
-            cols[f"{side}_{i}"] = F.when(c != 0, best - c).otherwise(F.lit(0.0))
-    return df.withColumns(cols).drop("bid_0", "ask_0")
+    """F7 — ``relative_price_levels_sql`` applied in place; the level-0
+    prices are dropped afterwards (always 0). The reference's
+    temp-column/drop/rename dance collapses into one ``withColumns``
+    map."""
+    return with_sql(df, relative_price_levels_sql(levels)).drop("bid_0", "ask_0")
 
 
 # ---------------------------------------------------------------------------
 # F8/F9 — calendar features + manual one-hot
 
 
-def calendar_features(
-    df: DataFrame, ts_col: str = "ts", strict_reference_semantics: bool = True
-) -> DataFrame:
+def calendar_sql(ts: str = "ts", strict_reference_semantics: bool = True) -> dict[str, str]:
     """F8 — day-of-week (Monday=1, the reference's ``date_format(u)``
     convention), week-of-month (``ceil(day/7)``), and the session-start
-    flag (spark_consumer.py:402-415).
+    flag (spark_consumer.py:402-415). ``ts`` is any timestamp-valued SQL
+    expression.
 
     Spark 3+ rejects the legacy ``u``/``W`` datetime patterns; the same
     values come from ``weekday()+1`` and ``ceil(dayofmonth/7)``.
@@ -178,28 +201,25 @@ def calendar_features(
       (``hour > 11 OR (hour = 11 AND minute ≥ 30) → 0``): 12:15 is no
       longer a session start; 11:00-11:29 still is.
     """
-    ts = F.col(ts_col)
     if strict_reference_semantics:
-        session = F.when(
-            (F.hour(ts) >= 11) & (F.minute(ts) >= 30), F.lit(0)
-        ).otherwise(F.lit(1))
+        late = f"hour({ts}) >= 11 AND minute({ts}) >= 30"
     else:
-        session = F.when(
-            (F.hour(ts) > 11) | ((F.hour(ts) == 11) & (F.minute(ts) >= 30)),
-            F.lit(0),
-        ).otherwise(F.lit(1))
-    return df.withColumns(
-        {
-            "day_of_week": (F.weekday(ts) + 1).cast("int"),
-            "week_of_month": F.ceil(F.dayofmonth(ts) / 7).cast("int"),
-            "session_start": session,
-        }
-    )
+        late = f"hour({ts}) > 11 OR (hour({ts}) = 11 AND minute({ts}) >= 30)"
+    return {
+        "day_of_week": f"CAST(weekday({ts}) + 1 AS INT)",
+        "week_of_month": f"CAST(ceil(dayofmonth({ts}) / 7) AS INT)",
+        "session_start": f"CASE WHEN {late} THEN 0 ELSE 1 END",
+    }
 
 
-def one_hot_calendar(
-    df: DataFrame, strict_reference_semantics: bool = True
+def calendar_features(
+    df: DataFrame, ts_col: str = "ts", strict_reference_semantics: bool = True
 ) -> DataFrame:
+    """F8 — ``calendar_sql`` applied to the ``ts_col`` column."""
+    return with_sql(df, calendar_sql(ts_col, strict_reference_semantics))
+
+
+def one_hot_calendar_sql(strict_reference_semantics: bool = True) -> dict[str, str]:
     """F9 — manual one-hot of day (1-4; Friday = all-zeros baseline) and
     week-of-month (spark_consumer.py:417-432).
 
@@ -211,13 +231,18 @@ def one_hot_calendar(
     * False — adds ``week_5``, so the all-zeros code means only the
       deliberate dropped-category baseline.
     """
-    cols: dict[str, Column] = {}
-    for d in range(1, 5):
-        cols[f"day_{d}"] = (F.col("day_of_week") == d).cast("int")
+    cols = {f"day_{d}": f"CAST(day_of_week = {d} AS INT)" for d in range(1, 5)}
     top_week = 5 if strict_reference_semantics else 6
     for w in range(1, top_week):
-        cols[f"week_{w}"] = (F.col("week_of_month") == w).cast("int")
-    return df.withColumns(cols)
+        cols[f"week_{w}"] = f"CAST(week_of_month = {w} AS INT)"
+    return cols
+
+
+def one_hot_calendar(
+    df: DataFrame, strict_reference_semantics: bool = True
+) -> DataFrame:
+    """F9 — ``one_hot_calendar_sql`` applied."""
+    return with_sql(df, one_hot_calendar_sql(strict_reference_semantics))
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from financial_market_data_analysis_spark.functions.core import safe_div
+from financial_market_data_analysis_spark.functions.core import with_sql
 
 
 def trailing_window(
@@ -52,14 +52,25 @@ def ordered_window(
     return w.orderBy(*order_cols)
 
 
-def moving_average(
-    df: DataFrame,
+def _over(
+    order_cols: Sequence[str],
+    partition_cols: Sequence[str] = (),
+    n_preceding: int | None = None,
+) -> str:
+    """SQL twin of ``trailing_window`` (``n_preceding`` given) and
+    ``ordered_window`` (``n_preceding=None``) over column names."""
+    part = f"PARTITION BY {', '.join(partition_cols)} " if partition_cols else ""
+    frame = f" ROWS BETWEEN {n_preceding} PRECEDING AND CURRENT ROW" if n_preceding is not None else ""
+    return f"OVER ({part}ORDER BY {', '.join(order_cols)}{frame})"
+
+
+def moving_average_sql(
     value_col: str,
     periods: Sequence[int],
-    order_cols: Sequence[str | Column],
-    partition_cols: Sequence[str | Column] = (),
+    order_cols: Sequence[str],
+    partition_cols: Sequence[str] = (),
     prefix: str | None = None,
-) -> DataFrame:
+) -> dict[str, str]:
     """W1/W2/W3 — ``AVG(x) OVER (... ROWS period-1 PRECEDING)`` per period.
 
     Reference: create_database.py:76-118 (``vol_MA``, ``price_MA``,
@@ -67,113 +78,175 @@ def moving_average(
     Column naming matches the views: ``{prefix}_MA{period}``.
     """
     prefix = prefix if prefix is not None else value_col
-    cols = {
-        f"{prefix}_MA{p}": F.avg(value_col).over(
-            trailing_window(order_cols, p - 1, partition_cols)
-        )
+    return {
+        f"{prefix}_MA{p}": f"avg({value_col}) {_over(order_cols, partition_cols, p - 1)}"
         for p in periods
     }
-    return df.withColumns(cols)
+
+
+def moving_average(
+    df: DataFrame,
+    value_col: str,
+    periods: Sequence[int],
+    order_cols: Sequence[str],
+    partition_cols: Sequence[str] = (),
+    prefix: str | None = None,
+) -> DataFrame:
+    """W1/W2/W3 — ``moving_average_sql`` applied."""
+    return with_sql(df, moving_average_sql(value_col, periods, order_cols, partition_cols, prefix))
+
+
+def bollinger_bands_sql(
+    close_col: str,
+    order_cols: Sequence[str],
+    period: int = 20,
+    num_std: float = 2.0,
+    partition_cols: Sequence[str] = (),
+) -> dict[str, str]:
+    """W4 — Bollinger band *distances* (create_database.py:120-135).
+
+    ``upper_BB_dist = (avg + k*std) - close``;
+    ``lower_BB_dist = close - (avg - k*std)``.
+    MySQL ``STD()`` is population stddev → ``stddev_pop``; that of a
+    1-row frame is 0.0 in both MySQL and Spark.
+    """
+    w = _over(order_cols, partition_cols, period - 1)
+    avg, std, c = f"avg({close_col}) {w}", f"stddev_pop({close_col}) {w}", close_col
+    k = f"{float(num_std)!r}D"
+    return {
+        "upper_BB_dist": f"({avg} + {k} * {std}) - {c}",
+        "lower_BB_dist": f"{c} - ({avg} - {k} * {std})",
+    }
 
 
 def bollinger_bands(
     df: DataFrame,
     close_col: str,
-    order_cols: Sequence[str | Column],
+    order_cols: Sequence[str],
     period: int = 20,
     num_std: float = 2.0,
-    partition_cols: Sequence[str | Column] = (),
+    partition_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """W4 — Bollinger band *distances* (create_database.py:120-135).
+    """W4 — ``bollinger_bands_sql`` applied."""
+    return with_sql(df, bollinger_bands_sql(close_col, order_cols, period, num_std, partition_cols))
 
-    ``upper_BB_dist = (avg + k*std) - close``;
-    ``lower_BB_dist = close - (avg - k*std)``.
-    MySQL ``STD()`` is population stddev → ``stddev_pop``.
-    """
-    w = trailing_window(order_cols, period - 1, partition_cols)
-    avg = F.avg(close_col).over(w)
-    # stddev_pop of a 1-row frame is 0.0 in both MySQL and Spark.
-    std = F.stddev_pop(close_col).over(w)
-    c = F.col(close_col)
-    return df.withColumns(
-        {
-            "upper_BB_dist": (avg + num_std * std) - c,
-            "lower_BB_dist": c - (avg - num_std * std),
-        }
-    )
+
+def stochastic_oscillator_sql(
+    close_col: str,
+    order_cols: Sequence[str],
+    n_preceding: int = 14,
+    partition_cols: Sequence[str] = (),
+) -> str:
+    """W5 — ``(close - MIN(close)) / (MAX(close) - MIN(close))`` over a
+    **15-row** frame (``14 PRECEDING`` hardcoded,
+    create_database.py:137-148). Flat window → division by zero → NULL,
+    matching MySQL."""
+    w = _over(order_cols, partition_cols, n_preceding)
+    lo, hi = f"min({close_col}) {w}", f"max({close_col}) {w}"
+    return f"try_divide({close_col} - {lo}, {hi} - {lo})"
 
 
 def stochastic_oscillator(
     df: DataFrame,
     close_col: str,
-    order_cols: Sequence[str | Column],
+    order_cols: Sequence[str],
     n_preceding: int = 14,
     out_col: str = "stoch",
-    partition_cols: Sequence[str | Column] = (),
+    partition_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """W5 — ``(close - MIN(close)) / (MAX(close) - MIN(close))`` over a
-    **15-row** frame (``14 PRECEDING`` hardcoded,
-    create_database.py:137-148). Flat window → division by zero → NULL,
-    matching MySQL."""
-    w = trailing_window(order_cols, n_preceding, partition_cols)
-    lo = F.min(close_col).over(w)
-    hi = F.max(close_col).over(w)
-    return df.withColumn(out_col, safe_div(F.col(close_col) - lo, hi - lo))
+    """W5 — ``stochastic_oscillator_sql`` applied."""
+    return with_sql(
+        df, {out_col: stochastic_oscillator_sql(close_col, order_cols, n_preceding, partition_cols)}
+    )
+
+
+def price_change_sql(
+    close_col: str,
+    order_cols: Sequence[str],
+    offset: int = 1,
+    partition_cols: Sequence[str] = (),
+) -> str:
+    """W6 — ``close - LAG(close, 1)`` (create_database.py:150-155).
+    First row: LAG is NULL → NULL, matching MySQL."""
+    return f"{close_col} - lag({close_col}, {offset}) {_over(order_cols, partition_cols)}"
 
 
 def price_change(
     df: DataFrame,
     close_col: str,
-    order_cols: Sequence[str | Column],
+    order_cols: Sequence[str],
     offset: int = 1,
     out_col: str = "price_change",
-    partition_cols: Sequence[str | Column] = (),
+    partition_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """W6 — ``close - LAG(close, 1)`` (create_database.py:150-155).
-    First row: LAG is NULL → NULL, matching MySQL."""
-    w = ordered_window(order_cols, partition_cols)
-    return df.withColumn(out_col, F.col(close_col) - F.lag(close_col, offset).over(w))
+    """W6 — ``price_change_sql`` applied."""
+    return with_sql(df, {out_col: price_change_sql(close_col, order_cols, offset, partition_cols)})
+
+
+def average_true_range_sql(
+    high_col: str,
+    low_col: str,
+    order_cols: Sequence[str],
+    n_preceding: int = 14,
+    partition_cols: Sequence[str] = (),
+) -> str:
+    """W7 — ``AVG(high - low)`` over a **15-row** frame
+    (create_database.py:157-164)."""
+    return f"avg({high_col} - {low_col}) {_over(order_cols, partition_cols, n_preceding)}"
 
 
 def average_true_range(
     df: DataFrame,
     high_col: str,
     low_col: str,
-    order_cols: Sequence[str | Column],
+    order_cols: Sequence[str],
     n_preceding: int = 14,
     out_col: str = "ATR",
-    partition_cols: Sequence[str | Column] = (),
+    partition_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """W7 — ``AVG(high - low)`` over a **15-row** frame
-    (create_database.py:157-164)."""
-    w = trailing_window(order_cols, n_preceding, partition_cols)
-    return df.withColumn(out_col, F.avg(F.col(high_col) - F.col(low_col)).over(w))
+    """W7 — ``average_true_range_sql`` applied."""
+    return with_sql(
+        df, {out_col: average_true_range_sql(high_col, low_col, order_cols, n_preceding, partition_cols)}
+    )
 
 
-def forward_targets(
-    df: DataFrame,
+def forward_targets_sql(
     close_col: str,
     atr_col: str,
-    order_cols: Sequence[str | Column],
+    order_cols: Sequence[str],
     leads: Sequence[int] = (8, 15),
     n_factors: Sequence[float] = (1.5, 3.0),
-    partition_cols: Sequence[str | Column] = (),
-) -> DataFrame:
+    partition_cols: Sequence[str] = (),
+) -> dict[str, str]:
     """W8 — forward-looking binary targets (create_database.py:166-190).
 
     ``up{i} = CASE WHEN LEAD(close, lead_i) >= close + n_i * ATR THEN 1
     ELSE 0 END`` and symmetric ``down{i}``. NULL LEAD at the tail →
     condition false → 0, matching MySQL CASE semantics.
     """
-    w = ordered_window(order_cols, partition_cols)
-    c = F.col(close_col)
-    atr = F.col(atr_col)
-    cols: dict[str, Column] = {}
+    w = _over(order_cols, partition_cols)
+    c = close_col
+    cols: dict[str, str] = {}
     for i, (lead, n) in enumerate(zip(leads, n_factors), start=1):
-        led = F.lead(close_col, lead).over(w)
-        cols[f"up{i}"] = F.when(led >= c + n * atr, F.lit(1)).otherwise(F.lit(0))
-        cols[f"down{i}"] = F.when(led <= c - n * atr, F.lit(1)).otherwise(F.lit(0))
-    return df.withColumns(cols)
+        led, k = f"lead({c}, {lead}) {w}", f"{float(n)!r}D"
+        cols[f"up{i}"] = f"CASE WHEN {led} >= {c} + {k} * {atr_col} THEN 1 ELSE 0 END"
+        cols[f"down{i}"] = f"CASE WHEN {led} <= {c} - {k} * {atr_col} THEN 1 ELSE 0 END"
+    return cols
+
+
+def forward_targets(
+    df: DataFrame,
+    close_col: str,
+    atr_col: str,
+    order_cols: Sequence[str],
+    leads: Sequence[int] = (8, 15),
+    n_factors: Sequence[float] = (1.5, 3.0),
+    partition_cols: Sequence[str] = (),
+) -> DataFrame:
+    """W8 — ``forward_targets_sql`` applied."""
+    return with_sql(
+        df, forward_targets_sql(close_col, atr_col, order_cols, leads, n_factors, partition_cols)
+    )
 
 
 def sliding_window_agg(
@@ -718,9 +791,8 @@ def sliding_join_back(
     return ev.join(agg, "window_start")
 
 
-def indicator_suite(
-    df: DataFrame,
-    order_cols: Sequence[str | Column],
+def indicator_suite_sql(
+    order_cols: Sequence[str],
     close_col: str = "close",
     high_col: str = "high",
     low_col: str = "low",
@@ -729,26 +801,51 @@ def indicator_suite(
     price_periods: Sequence[int] = (20,),
     delta_col: str | None = None,
     delta_periods: Sequence[int] = (12,),
-    partition_cols: Sequence[str | Column] = (),
-) -> DataFrame:
-    """The full W1-W8 view stack applied in one pass — the engine's
-    replacement for the reference's ``join_statement`` assembly
-    (create_database.py:240-258). One window spec family → Catalyst
-    evaluates all indicators in a single Window physical operator.
+    partition_cols: Sequence[str] = (),
+) -> list[dict[str, str]]:
+    """The full W1-W8 view stack as two projection stages: W1-W7, then
+    W8, whose targets read W7's ``ATR``. Every window shares one
+    partition/order spec, so Catalyst evaluates them over one sort.
 
     ``delta_col`` (the book's order-flow delta, F4) enables W3 — the
     ``delta_MA`` view (create_database.py:106-118, period 12 from
     config.py:42) — when the frame carries that column.
     """
-    df = moving_average(df, volume_col, vol_periods, order_cols, partition_cols, prefix="vol")
-    df = moving_average(df, close_col, price_periods, order_cols, partition_cols, prefix="price")
-    if delta_col is not None:
-        df = moving_average(df, delta_col, delta_periods, order_cols, partition_cols, prefix="delta")
-    df = bollinger_bands(df, close_col, order_cols, partition_cols=partition_cols)
-    df = stochastic_oscillator(df, close_col, order_cols, partition_cols=partition_cols)
-    df = price_change(df, close_col, order_cols, partition_cols=partition_cols)
-    df = average_true_range(df, high_col, low_col, order_cols, partition_cols=partition_cols)
-    df = forward_targets(df, close_col, "ATR", order_cols, partition_cols=partition_cols)
+    o, p = order_cols, partition_cols
+    w1_w7 = {
+        **moving_average_sql(volume_col, vol_periods, o, p, prefix="vol"),
+        **moving_average_sql(close_col, price_periods, o, p, prefix="price"),
+        **(moving_average_sql(delta_col, delta_periods, o, p, prefix="delta") if delta_col else {}),
+        **bollinger_bands_sql(close_col, o, partition_cols=p),
+        "stoch": stochastic_oscillator_sql(close_col, o, partition_cols=p),
+        "price_change": price_change_sql(close_col, o, partition_cols=p),
+        "ATR": average_true_range_sql(high_col, low_col, o, partition_cols=p),
+    }
+    return [w1_w7, forward_targets_sql(close_col, "ATR", o, partition_cols=p)]
+
+
+def indicator_suite(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    close_col: str = "close",
+    high_col: str = "high",
+    low_col: str = "low",
+    volume_col: str = "volume",
+    vol_periods: Sequence[int] = (6, 20),
+    price_periods: Sequence[int] = (20,),
+    delta_col: str | None = None,
+    delta_periods: Sequence[int] = (12,),
+    partition_cols: Sequence[str] = (),
+) -> DataFrame:
+    """The full W1-W8 view stack applied in one pass — the engine's
+    replacement for the reference's ``join_statement`` assembly
+    (create_database.py:240-258): ``indicator_suite_sql``'s stages in
+    turn."""
+    for stage in indicator_suite_sql(
+        order_cols, close_col, high_col, low_col, volume_col, vol_periods,
+        price_periods, delta_col, delta_periods, partition_cols,
+    ):
+        df = with_sql(df, stage)
     return df
 
 

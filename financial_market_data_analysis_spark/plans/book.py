@@ -17,28 +17,43 @@ spark_consumer.py:347).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from financial_market_data_analysis_spark.functions.core import with_sql
 
 LEVELS = 7  # 7 bid + 7 ask levels, config.py:36-37
 
 
-def book_from_events(events: DataFrame, levels: int = LEVELS) -> DataFrame:
-    """events → 7-level order book: prices fan out ±(i+1)/100 around
-    ``value``; sizes are small deterministic moduli of the id columns.
+def book_sql(
+    levels: int = LEVELS,
+    event_id: str = "event_id",
+    user_id: str = "user_id",
+    value: str = "value",
+) -> dict[str, str]:
+    """column → Spark SQL for the 7-level book over one snapshot row:
+    prices fan out ±(i+1)/100 around ``value``; sizes are small
+    deterministic moduli of the id columns.
 
-    Price offsets are written as ``(i+1) / 100.0`` (not the Python
-    literal ``0.01 * (i+1)``) so both engines derive the constant from
+    Price offsets are written as ``(i+1)D / 100.0D`` (not the Python
+    literal ``0.01 * (i+1)``, and not an unsuffixed ``100.0``, which
+    Spark SQL reads as DECIMAL) so both engines derive the constant from
     one correctly-rounded IEEE division and the downstream doubles are
     bit-identical.
     """
     cols = {}
     for i in range(levels):
-        off = F.lit(float(i + 1)) / F.lit(100.0)
-        cols[f"bid_{i}"] = F.col("value") - off
-        cols[f"ask_{i}"] = F.col("value") + off
-        cols[f"bid_{i}_size"] = (F.col("event_id") % (7 + i)).cast("int")
-        cols[f"ask_{i}_size"] = (F.col("user_id") % (5 + i)).cast("int")
-    return events.select("event_id", "ts", "ts_us", "user_id", "value").withColumns(cols)
+        off = f"({i + 1}.0D / 100.0D)"
+        cols[f"bid_{i}"] = f"{value} - {off}"
+        cols[f"ask_{i}"] = f"{value} + {off}"
+        cols[f"bid_{i}_size"] = f"CAST({event_id} % {7 + i} AS INT)"
+        cols[f"ask_{i}_size"] = f"CAST({user_id} % {5 + i} AS INT)"
+    return cols
+
+
+def book_from_events(events: DataFrame, levels: int = LEVELS) -> DataFrame:
+    """events → 7-level order book (``book_sql`` per event)."""
+    return with_sql(
+        events.select("event_id", "ts", "ts_us", "user_id", "value"), book_sql(levels)
+    )
 
 
 def book_oracle_cte(levels: int = LEVELS) -> str:

@@ -30,19 +30,24 @@ def time_bucket(ts_col: str | Column, seconds: int = BUCKET_SECONDS) -> Column:
     return (F.floor(F.unix_timestamp(c) / seconds) * seconds).cast("long")
 
 
-def time_bucket_us(ts_us_col: str, seconds: int = BUCKET_SECONDS) -> Column:
-    """F10 over an epoch-microseconds long column. Integer arithmetic
-    keeps the bucketing exact — epoch micros exceed double's 2^53
-    integer range, so float division could mis-bucket values near a
+def time_bucket_us_sql(ts_us_col: str, seconds: int = BUCKET_SECONDS) -> str:
+    """F10 over an epoch-microseconds long column, as Spark SQL. Integer
+    arithmetic keeps the bucketing exact — epoch micros exceed double's
+    2^53 integer range, so float division could mis-bucket values near a
     boundary. ``div`` truncates toward zero, so a pre-1970 negative
     timestamp gets an explicit -1 correction to FLOOR-align the same
     way ``time_bucket``/DuckDB ``time_bucket`` do (r5 advice)."""
     us = seconds * 1_000_000
-    return F.expr(
+    return (
         f"CAST((({ts_us_col} div {us})"
         f" - (CASE WHEN {ts_us_col} % {us} < 0 THEN 1 ELSE 0 END))"
         f" * {seconds} AS BIGINT)"
     )
+
+
+def time_bucket_us(ts_us_col: str, seconds: int = BUCKET_SECONDS) -> Column:
+    """``time_bucket_us_sql`` as a Column."""
+    return F.expr(time_bucket_us_sql(ts_us_col, seconds))
 
 
 def candles_from_events(

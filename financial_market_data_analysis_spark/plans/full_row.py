@@ -24,17 +24,25 @@ driver's ``events`` table (the same stand-in strategy as
 ``forc_actual_diff`` = forecast-proxy − actual, NULL → 0 via the
 template default (config.py:60-65) / fillna (P4).
 
-Single-source parity: the aggregate fragments below are SQL text used
-VERBATIM by both engines — Spark's ``F.expr`` and the DuckDB oracle
-share ``FILTER (WHERE …)`` clauses and ``min_by``/``max_by``, so the
-wide row stays hash-checkable end to end.
+Single-source parity: the COT and indicator aggregate fragments below
+are SQL text used by both engines — the engine's one SQL text (with
+the feed predicate ANDed into each ``FILTER``) and the DuckDB oracle
+(over its pre-filtered feed) share ``FILTER (WHERE …)`` clauses and
+``min_by``/``max_by``, so the wide row stays hash-checkable end to end.
+Everything else in the oracle — feeds, joins, book, features, windows —
+is written independently of the engine's text.
 
-Scale shape: each feed is one partial-aggregatable groupBy on the
-bucket key (conditional aggregation — no per-event-type sub-joins, no
-explode); the five feed joins are equi-joins on that same key (AQE
-co-locates them); the window suite is the only ordered stage
-(``partition_cols`` available at real scale, reference-parity
-unpartitioned here).
+Scale shape: ``plans/pipeline.py::one_pass_sql`` — one scan → one
+``GROUP BY (series keys, bucket_start)`` whose every aggregate is
+``FILTER``ed to its feed, with ``HAVING`` keeping the buckets that carry
+all five feeds (what the reference's inner joins keep) → projections →
+one window stage, sent to the JVM as one Spark SQL text. The deep
+snapshot is three aggregates of that ``GROUP BY``, so the book is a
+projection with no join back; the window suite is the only ordered
+stage (partitioned by symbol on the scale path, reference-parity
+unpartitioned here). Plan: one parquet scan and no join; the JVM
+parses the text in one call, so building the plan costs tens of Py4J
+round trips, not one per Column operator.
 """
 
 from __future__ import annotations
@@ -49,13 +57,14 @@ from financial_market_data_analysis_spark.functions.schemas import (
     INDICATOR_EVENTS,
     INDICATOR_VALUES,
 )
-from financial_market_data_analysis_spark.operators.windows import indicator_suite
-from financial_market_data_analysis_spark.plans.book import book_from_events, book_oracle_cte
-from financial_market_data_analysis_spark.plans.candles import time_bucket_us
+from financial_market_data_analysis_spark.plans.book import book_oracle_cte
 from financial_market_data_analysis_spark.plans.pipeline import (
     PIPELINE_BUCKET_SECONDS,
-    _feed,
     _wa_sql,
+    bar_stages,
+    feed_aggs,
+    feed_filter,
+    one_pass_sql,
 )
 from financial_market_data_analysis_spark.sources.batch import load_table
 
@@ -63,38 +72,45 @@ from financial_market_data_analysis_spark.sources.batch import load_table
 _COT_GROUP_MOD = {"asset": 2, "leveraged": 3}
 
 
-def cot_agg_fragments() -> dict[str, str]:
+def _where(feed: str | None, pred: str) -> str:
+    return f"FILTER (WHERE {feed} AND {pred})" if feed else f"FILTER (WHERE {pred})"
+
+
+def cot_agg_fragments(feed: str | None = None) -> dict[str, str]:
     """column → aggregate-SQL fragment for the 12 COT columns, generated
     from the registry (COT_GROUPS × COT_MEASURES → same names as
     ``cot_schema()``'s flattened leaves). Long/short positions split the
-    feed by the group's membership predicate."""
+    feed by the group's membership predicate; ``feed``, when given, is
+    ANDed into every ``FILTER`` (the engine's one-aggregate plan reads
+    all feeds at once; the oracle pre-filters its feed and passes none)."""
     frags: dict[str, str] = {}
     for g in COT_GROUPS:
         m = _COT_GROUP_MOD[g]
-        longs = f"user_id % {m} = 0"
-        shorts = f"user_id % {m} <> 0"
+        longs = _where(feed, f"user_id % {m} = 0")
+        shorts = _where(feed, f"user_id % {m} <> 0")
         tmpl = {
-            "long_pos": f"CAST(count(*) FILTER (WHERE {longs}) AS INT)",
-            "short_pos": f"CAST(count(*) FILTER (WHERE {shorts}) AS INT)",
-            "long_pos_change": f"sum(value) FILTER (WHERE {longs})",
-            "short_pos_change": f"sum(value) FILTER (WHERE {shorts})",
-            "long_open_int": f"avg(value) FILTER (WHERE {longs})",
-            "short_open_int": f"avg(value) FILTER (WHERE {shorts})",
+            "long_pos": f"CAST(count(*) {longs} AS INT)",
+            "short_pos": f"CAST(count(*) {shorts} AS INT)",
+            "long_pos_change": f"sum(value) {longs}",
+            "short_pos_change": f"sum(value) {shorts}",
+            "long_open_int": f"avg(value) {longs}",
+            "short_open_int": f"avg(value) {shorts}",
         }
         for name, _t in COT_MEASURES:
             frags[f"{g}_{name}"] = tmpl[name]
     return frags
 
 
-def indicator_agg_fragments() -> dict[str, str]:
+def indicator_agg_fragments(feed: str | None = None) -> dict[str, str]:
     """column → aggregate-SQL fragment for the 39 indicator columns
     (13 INDICATOR_EVENTS × INDICATOR_VALUES, names identical to
     ``indicator_schema()``'s flattened leaves). Event j owns the
-    ``user_id % 13 = j`` slice of the feed."""
+    ``user_id % 13 = j`` slice of the feed; ``feed`` as in
+    ``cot_agg_fragments``."""
     n = len(INDICATOR_EVENTS)
     frags: dict[str, str] = {}
     for j, ev in enumerate(INDICATOR_EVENTS):
-        w = f"FILTER (WHERE user_id % {n} = {j})"
+        w = _where(feed, f"user_id % {n} = {j}")
         actual = f"max_by(value, event_id) {w}"
         prev = f"min_by(value, event_id) {w}"
         tmpl = {
@@ -107,25 +123,6 @@ def indicator_agg_fragments() -> dict[str, str]:
         for v in INDICATOR_VALUES:
             frags[f"{ev}_{v}"] = tmpl[v]
     return frags
-
-
-def _wide_feed(
-    events: DataFrame,
-    event_type: str,
-    frags: dict[str, str],
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """One conditional-aggregation groupBy per feed: every column is a
-    FILTER'd aggregate, so the whole wide block is a single
-    partial-aggregatable shuffle on the bucket key (prefixed by
-    ``group_cols`` series keys on the partitioned-scale path)."""
-    b = time_bucket_us("ts_us", PIPELINE_BUCKET_SECONDS).alias("bucket_start")
-    keys = [F.col(c) for c in group_cols] + [b]
-    return (
-        events.filter(F.col("event_type") == event_type)
-        .groupBy(*keys)
-        .agg(*[F.expr(frag).alias(name) for name, frag in frags.items()])
-    )
 
 
 BOOK_SIZE_COLS = [f"{s}_{i}_size" for s in ("bid", "ask") for i in range(7)]
@@ -170,72 +167,35 @@ N_SYMBOLS = 4  # synthetic series count for the partitioned-scale variant
 def full_row(
     spark: SparkSession, sf_dir: str, group_cols: tuple[str, ...] = ()
 ) -> DataFrame:
-    """The assembled full-width warehouse row (117 feature columns).
+    """The assembled full-width warehouse row (117 feature columns), as
+    one ``one_pass_sql`` text. F7's relative depth prices replace the
+    absolute ones the other book features read, so they are computed as
+    ``rel_*`` and renamed last.
 
     With ``group_cols`` (the partitioned-scale path, SURVEY.md §7.3)
-    every feed aggregates per (series, bucket), the five feed joins
-    co-key on (series, bucket), and the W1-W8 window stage partitions
-    by the series keys — NO global single-partition sort anywhere in
-    the plan (asserted by tests/test_scale.py). The reference-parity
-    default (no groups) keeps the single unpartitioned series the
-    MariaDB views define."""
+    the aggregate keys on (series, bucket) and the W1-W8 window stage
+    partitions by the series keys — NO global single-partition sort
+    anywhere in the plan (asserted by tests/test_scale.py). The
+    reference-parity default (no groups) keeps the single unpartitioned
+    series the MariaDB views define."""
     ev = load_table(spark, "events", sf_dir)
     if group_cols:
         # synthetic series key: events split into N_SYMBOLS series
-        ev = ev.withColumn(
-            "symbol", (F.col("user_id") % N_SYMBOLS).cast("int")
-        )
-    g = list(group_cols)
-    keys = g + ["bucket_start"]
-
-    # order book: snapshot per bucket → 7-level book → features + depth
-    deep = _feed(ev, "deep", group_cols)
-    book = book_from_events(
-        deep.withColumns(
-            {
-                "ts": F.timestamp_seconds("bucket_start"),
-                "ts_us": F.col("bucket_start") * 1_000_000,
-            }
-        )
-    ).drop("ts", "ts_us")
-    # event_id is unique per (series, bucket) snapshot, so the join key
-    # stays event_id alone; the series key rides along from the deep side
-    book = deep.select(*keys, "event_id").join(book, "event_id")
-    for side in ("bid", "ask"):
-        book = FE.book_weighted_average(book, side)
-    book = FE.order_volume_imbalance(book)
-    book = FE.delta_indicator(book)
-    book = FE.micro_price(book)
-    book = FE.bid_ask_spread(book)
-    book = FE.relative_price_levels(book)
-    deep_wide = book.select(
-        *keys, *BOOK_SIZE_COLS, *BOOK_REL_COLS, *BOOK_FEAT_COLS
-    )
-
-    candle = FE.wick_features(_feed(ev, "candle", group_cols))
-    vix = _feed(ev, "vix", group_cols)
-    cot = _wide_feed(ev, "signup", cot_agg_fragments(), group_cols)
-    ind = _wide_feed(ev, "error", indicator_agg_fragments(), group_cols)
-
-    bars = (
-        candle.join(deep_wide, keys)
-        .join(vix, keys)
-        .join(cot, keys)
-        .join(ind, keys)
-    )
-    bars = FE.one_hot_calendar(
-        FE.calendar_features(
-            bars.withColumn("ts", F.timestamp_seconds("bucket_start"))
-        )
-    ).drop("ts")
-    bars = indicator_suite(
-        bars, ["bucket_start"], partition_cols=g, delta_col="delta"
-    )
-    return bars.select(*g, *FULL_ROW_COLS).na.fill(0)
+        ev = ev.withColumn("symbol", F.expr(f"CAST(user_id % {N_SYMBOLS} AS INT)"))
+    rel = {f"rel_{c}": sql for c, sql in FE.relative_price_levels_sql().items()}
+    aggs = {
+        **feed_aggs(("deep", "candle", "vix")),
+        **cot_agg_fragments(feed_filter("cot")),
+        **indicator_agg_fragments(feed_filter("ind")),
+    }
+    out = {c: f"rel_{c}" if c in BOOK_REL_COLS else c for c in (*group_cols, *FULL_ROW_COLS)}
+    text = one_pass_sql(aggs, bar_stages(group_cols, rel), out, group_cols)
+    return spark.sql(text, events=ev).na.fill(0)
 
 
 # ---------------------------------------------------------------------------
-# DuckDB oracle — generated from the SAME fragment builders
+# DuckDB oracle — the literal per-feed joins; it shares only the COT and
+# indicator fragment builders with the engine
 
 
 def _wide_feed_sql(

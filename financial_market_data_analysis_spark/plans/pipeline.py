@@ -3,7 +3,7 @@ the reference's whole dataflow (SURVEY.md §3.1-3.2) in one batch plan:
 
     5 pseudo-feeds (split from ``events`` by event_type)
       → per-bucket feed aggregation                (F10 + producer cadence)
-      → 4-way equi-join on the bucket              (J1/J2 assembly)
+      → buckets that carry all five feeds          (J1/J2 assembly)
       → order-book + candle + calendar features    (F1-F9)
       → W1-W8 indicator suite + forward targets    (the 8 MariaDB views)
       → fillna(0)                                  (P4)
@@ -12,11 +12,18 @@ One wide row per bucket — the ``stock_data_joined`` + ``join_statement``
 analog (create_database.py:240-258), with every half of the reference's
 split engine expressed in the same Spark plan.
 
-Scale shape: feed aggregation is partial-aggregatable (one shuffle per
-feed on the bucket key); the joins are equi-joins on that same key, so
-with the feeds co-partitioned AQE collapses them into co-located joins;
-the window suite is the only ordered stage (partition it by symbol/day
-at real scale — here one series, reference parity).
+Scale shape: one scan → one ``GROUP BY (series keys, bucket_start)`` →
+projections → one window stage, sent to the JVM as ONE Spark SQL text
+(``one_pass_sql``). Every feed aggregate carries ``FILTER (WHERE
+event_type = '<feed>')`` and ``HAVING`` keeps only buckets where every
+feed has rows, which is what the reference's four inner joins on the
+bucket keep; the deep snapshot (the earliest event's id, value and
+user) is three more aggregates of the same ``GROUP BY``, so the book is
+a projection, not a join back. The aggregate is partial-aggregatable
+(one shuffle on the bucket key) and the window suite is the only
+ordered stage (partition it by symbol at real scale — here one series,
+reference parity). The DuckDB oracles keep the literal per-feed joins,
+so they check this rewrite independently.
 
 The 6-hour bucket (vs the reference's 5 minutes) matches the driver
 data's event density so every feed has rows in most buckets; the
@@ -25,13 +32,14 @@ operator chain is bucket-size-agnostic.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from financial_market_data_analysis_spark.functions import features as FE
-from financial_market_data_analysis_spark.operators.windows import indicator_suite
-from financial_market_data_analysis_spark.plans.book import book_from_events, book_oracle_cte
-from financial_market_data_analysis_spark.plans.candles import time_bucket_us
+from financial_market_data_analysis_spark.operators.windows import indicator_suite_sql
+from financial_market_data_analysis_spark.plans.book import book_oracle_cte, book_sql
+from financial_market_data_analysis_spark.plans.candles import time_bucket_us_sql
 from financial_market_data_analysis_spark.sources.batch import load_table
 
 PIPELINE_BUCKET_SECONDS = 21_600  # 6 h — see module docstring
@@ -44,97 +52,126 @@ _FEED_TYPES = {
     "ind": "error",
 }
 
+# feed → its per-bucket columns, each an aggregate over that feed's events
+_FEED_AGGS = {
+    # representative snapshot per bucket (earliest event); the synthetic
+    # 7-level book is derived from it. Named apart from the event
+    # columns so the other aggregates still read the inputs.
+    "deep": {
+        "snap_event_id": "min(event_id)",
+        "snap_value": "min_by(value, event_id)",
+        "snap_user_id": "min_by(user_id, event_id)",
+    },
+    "candle": {
+        "open": "min_by(value, event_id)",
+        "high": "max(value)",
+        "low": "min(value)",
+        "close": "max_by(value, event_id)",
+        "volume": "count(1)",
+    },
+    "vix": {"vix": "min_by(value, event_id)"},
+    "cot": {"cot_pos": "min_by(value, event_id)", "cot_chg": "avg(value)"},
+    "ind": {"ind_actual": "sum(value)", "ind_count": "count(1)"},
+}
 
-def _feed(events: DataFrame, kind: str, group_cols: tuple[str, ...] = ()) -> DataFrame:
-    """Per-bucket feed aggregation. ``group_cols`` prepends series keys
-    (e.g. a symbol) to every groupBy — the partitioned-scale path where
-    each series aggregates and windows independently instead of one
-    global ordered stream (SURVEY.md §7.3)."""
-    b = time_bucket_us("ts_us", PIPELINE_BUCKET_SECONDS).alias("bucket_start")
-    keys = [F.col(c) for c in group_cols] + [b]
-    f = events.filter(F.col("event_type") == _FEED_TYPES[kind])
-    if kind == "deep":
-        # representative snapshot per bucket (earliest event), then the
-        # synthetic 7-level book is derived from it
-        return f.groupBy(*keys).agg(
-            F.min("event_id").alias("event_id"),
-            F.min_by("value", "event_id").alias("value"),
-            F.min_by("user_id", "event_id").alias("user_id"),
-        )
-    if kind == "candle":
-        return f.groupBy(*keys).agg(
-            F.min_by("value", "event_id").alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by("value", "event_id").alias("close"),
-            F.count(F.lit(1)).alias("volume"),
-        )
-    if kind == "vix":
-        return f.groupBy(*keys).agg(F.min_by("value", "event_id").alias("vix"))
-    if kind == "cot":
-        return f.groupBy(*keys).agg(
-            F.min_by("value", "event_id").alias("cot_pos"),
-            F.avg("value").alias("cot_chg"),
-        )
-    if kind == "ind":
-        return f.groupBy(*keys).agg(
-            F.sum("value").alias("ind_actual"),
-            F.count(F.lit(1)).alias("ind_count"),
-        )
-    raise ValueError(kind)
+
+def feed_filter(kind: str) -> str:
+    """The SQL predicate selecting one pseudo-feed's events."""
+    return f"event_type = '{_FEED_TYPES[kind]}'"
+
+
+def feed_aggs(kinds: Sequence[str]) -> dict[str, str]:
+    """column → FILTERed aggregate for the named feeds' own columns."""
+    return {
+        name: f"{agg} FILTER (WHERE {feed_filter(kind)})"
+        for kind in kinds
+        for name, agg in _FEED_AGGS[kind].items()
+    }
+
+
+def bar_stages(
+    partition_cols: Sequence[str] = (), extra_features: dict[str, str] | None = None
+) -> list[dict[str, str]]:
+    """The projection stages over the per-bucket aggregate: the
+    snapshot's book with F1 and F8; then F2-F6 over the book and F9 (plus
+    ``extra_features``); then the W1-W8 suite over the bucket order."""
+    ts = "timestamp_seconds(bucket_start)"
+    return [
+        {
+            **book_sql(event_id="snap_event_id", user_id="snap_user_id", value="snap_value"),
+            **FE.wick_sql(),
+            **FE.calendar_sql(ts),
+        },
+        {
+            "bids_ord_WA": FE.book_weighted_average_sql("bid"),
+            "asks_ord_WA": FE.book_weighted_average_sql("ask"),
+            "vol_imbalance": FE.order_volume_imbalance_sql(),
+            "delta": FE.delta_indicator_sql(),
+            "micro_price": FE.micro_price_sql(),
+            "spread": FE.bid_ask_spread_sql(),
+            **FE.one_hot_calendar_sql(),
+            **(extra_features or {}),
+        },
+        *indicator_suite_sql(["bucket_start"], partition_cols=partition_cols, delta_col="delta"),
+    ]
+
+
+def one_pass_sql(
+    aggs: dict[str, str],
+    stages: list[dict[str, str]],
+    out: dict[str, str],
+    group_cols: Sequence[str] = (),
+) -> str:
+    """One Spark SQL text over the ``{events}`` frame: one ``GROUP BY
+    (group_cols, bucket_start)`` computing ``aggs``, keeping the buckets
+    where every feed has rows (the deep feed's snapshot id, which the
+    book derives from, must be non-NULL) and the keys are non-NULL, as
+    inner joins on them would; each stage's columns added over the
+    previous stage; and ``out`` (name → expression) selected last."""
+    keys = [*group_cols, "bucket_start"]
+    bucket = time_bucket_us_sql("ts_us", PIPELINE_BUCKET_SECONDS)
+    present = [f"{k} IS NOT NULL" for k in keys] + [
+        f"min(event_id) FILTER (WHERE {feed_filter(k)}) IS NOT NULL" if k == "deep"
+        else f"count(1) FILTER (WHERE {feed_filter(k)}) > 0"
+        for k in _FEED_TYPES
+    ]
+    types = ", ".join(f"'{t}'" for t in _FEED_TYPES.values())
+
+    def cols(d: dict[str, str]) -> str:
+        return ",\n    ".join(f"{sql} AS {name}" for name, sql in d.items())
+
+    ctes = [
+        f"src AS (SELECT *, {bucket} AS bucket_start\nFROM {{events}} WHERE event_type IN ({types}))",
+        f"s0 AS (SELECT {', '.join(keys)},\n    {cols(aggs)}\nFROM src GROUP BY {', '.join(keys)}"
+        f"\nHAVING {' AND '.join(present)})",
+    ]
+    ctes += [f"s{i} AS (SELECT *,\n    {cols(st)}\nFROM s{i - 1})" for i, st in enumerate(stages, 1)]
+    body = ",\n".join(ctes)
+    return f"WITH {body}\nSELECT {cols(out)}\nFROM s{len(stages)}"
+
+
+BARS_JOINED_COLS = [
+    "bucket_start", "open", "high", "low", "close", "volume",
+    "candle_size", "wick_size", "wick_prct",
+    "bids_ord_WA", "asks_ord_WA", "vol_imbalance", "delta",
+    "micro_price", "spread",
+    "vix", "cot_pos", "cot_chg", "ind_actual", "ind_count",
+    "day_of_week", "week_of_month", "session_start",
+    "day_1", "day_2", "day_3", "day_4",
+    "week_1", "week_2", "week_3", "week_4",
+    "vol_MA6", "vol_MA20", "price_MA20", "delta_MA12",
+    "upper_BB_dist", "lower_BB_dist",
+    "stoch", "price_change", "ATR", "up1", "down1", "up2", "down2",
+]
 
 
 def bars_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-
-    deep = _feed(ev, "deep")
-    # book columns + book-derived features from the deep snapshot
-    book = book_from_events(
-        deep.withColumns({"ts": F.timestamp_seconds("bucket_start"), "ts_us": F.col("bucket_start") * 1_000_000})
-    ).drop("ts", "ts_us")
-    book = deep.select("bucket_start", "event_id").join(
-        book, "event_id"
+    """One bar per bucket with all five feeds: the narrow
+    ``stock_data_joined`` row, built by ``one_pass_sql``."""
+    text = one_pass_sql(
+        feed_aggs(list(_FEED_TYPES)), bar_stages(), {c: c for c in BARS_JOINED_COLS}
     )
-    book = FE.book_weighted_average(book, "bid")
-    book = FE.book_weighted_average(book, "ask")
-    book = FE.order_volume_imbalance(book)
-    book = FE.delta_indicator(book)
-    book = FE.micro_price(book)
-    book = FE.bid_ask_spread(book)
-    deep_feats = book.select(
-        "bucket_start", "bids_ord_WA", "asks_ord_WA", "vol_imbalance",
-        "delta", "micro_price", "spread",
-    )
-
-    candle = FE.wick_features(_feed(ev, "candle"))
-    bars = (
-        candle.join(deep_feats, "bucket_start")
-        .join(_feed(ev, "vix"), "bucket_start")
-        .join(_feed(ev, "cot"), "bucket_start")
-        .join(_feed(ev, "ind"), "bucket_start")
-    )
-
-    bars = FE.one_hot_calendar(
-        FE.calendar_features(
-            bars.withColumn("ts", F.timestamp_seconds("bucket_start"))
-        )
-    ).drop("ts")
-
-    bars = indicator_suite(bars, ["bucket_start"], delta_col="delta")
-    out_cols = [
-        "bucket_start", "open", "high", "low", "close", "volume",
-        "candle_size", "wick_size", "wick_prct",
-        "bids_ord_WA", "asks_ord_WA", "vol_imbalance", "delta",
-        "micro_price", "spread",
-        "vix", "cot_pos", "cot_chg", "ind_actual", "ind_count",
-        "day_of_week", "week_of_month", "session_start",
-        "day_1", "day_2", "day_3", "day_4",
-        "week_1", "week_2", "week_3", "week_4",
-        "vol_MA6", "vol_MA20", "price_MA20", "delta_MA12",
-        "upper_BB_dist", "lower_BB_dist",
-        "stoch", "price_change", "ATR", "up1", "down1", "up2", "down2",
-    ]
-    return bars.select(*out_cols).na.fill(0)
+    return spark.sql(text, events=load_table(spark, "events", sf_dir)).na.fill(0)
 
 
 def bars_joined_oracle() -> str:

@@ -25,7 +25,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state_store: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's default tuning.
 
@@ -55,14 +54,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    if rocksdb_state_store:
-        # Scale path for long-running stateful streams (join/dedup state
-        # at SURVEY.md §4 'State management'): RocksDB spills state off
-        # the JVM heap instead of growing an in-memory HashMap per
-        # partition. Also settable per-query via the same SQL conf.
-        builder = builder.config(
-            "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -56,7 +56,8 @@ def test_against_alternates_the_first_side_and_removes_its_worktree(monkeypatch,
     def fake_sample(tree, sf, names):
         trees.append(tree)
         return {"overhead_share": 0.01,
-                "calls": {n: {"ok": True, **dict.fromkeys(M.TIMINGS, 1.0)} for n in names}}
+                "calls": {n: {"ok": True, **dict.fromkeys(M.TIMINGS, 1.0),
+                              **dict.fromkeys(M.COUNTS, 1)} for n in names}}
 
     monkeypatch.setattr(M, "_run_sample", fake_sample)
     monkeypatch.setattr(M, "SAMPLES", 4)
@@ -92,6 +93,8 @@ def test_fresh_worker_run(monkeypatch, sf_without_events):
         assert (q["attempted"], q["failed"], q["wall_s"]["n"]) == (2, 0, 2)
         for s in q["samples"]:
             assert s["construct_s"] + s["execute_s"] == pytest.approx(s["wall_s"])
+            # building a plan crosses into the JVM; the crossings are a count
+            assert isinstance(s["construct_py4j_trips"], int) and s["construct_py4j_trips"] > 0
             assert s["cpu_s"] > 0 and s["jobs"] >= 1 and s["tasks"] >= 1
             assert 0 <= s["gap_s"] <= s["wall_s"]
     for s in qs["t13_stream_ingest_dedup"]["samples"]:
@@ -100,6 +103,8 @@ def test_fresh_worker_run(monkeypatch, sf_without_events):
             assert {"addBatch", "walCommit"} <= set(b["durationMs"])
             assert b["state"] and all(op["numRowsTotal"] >= 0 for op in b["state"])
     assert "batches" not in qs["q5_local_volume"]["samples"][0]
+    trips = qs["q5_local_volume"]["construct_py4j_trips"]
+    assert trips["n"] == 2 and trips["median"] > 0
     # a query that raises is failed against attempted, not dropped
     w4 = qs["w4_bollinger"]
     assert (w4["attempted"], w4["failed"], w4["wall_s"]["n"]) == (2, 2, 0)

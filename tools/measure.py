@@ -10,8 +10,9 @@ source tree on ``sys.path``; the measuring code (this file and
 A/B are timed by identical code. The worker warms every query up with
 one call at sf0.001, then times one call of each at ``--sf``:
 construction (``fn(spark, sf)``) plus execution (``.count()``), in wall
-seconds and in CPU seconds (``perfbench/harness.py::cpu_s``). A call
-that raises is recorded as failed; it still counts as attempted.
+seconds and in CPU seconds (``perfbench/harness.py::cpu_s``), and counts
+the Py4J round trips construction makes (``construct_py4j_trips``). A
+call that raises is recorded as failed; it still counts as attempted.
 
 The event log is always on. A call's jobs are those submitted while it
 ran (a stream's jobs carry the stream's job group, not the caller's),
@@ -50,6 +51,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SAMPLES = 10  # the metrics guide's minimum number of samples and of A/B pairs
 WARM_SF = "/root/testdata/sf0.001"
 TIMINGS = ("wall_s", "cpu_s", "construct_s", "execute_s", "construct_cpu_s", "execute_cpu_s")
+COUNTS = ("construct_py4j_trips",)
 
 
 # --------------------------------------------------------------------------
@@ -85,6 +87,20 @@ def _batch(p: dict) -> dict:
     }
 
 
+def count_py4j_trips(spark) -> list[int]:
+    """Count every Python→JVM command from now on: the returned one-item
+    list holds the running total."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, trips = client.send_command, [0]
+
+    def counting(*args, **kwargs):
+        trips[0] += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    return trips
+
+
 def sample(tree: str, sf: str, out: str, names: list[str]) -> None:
     """Warm up and time one call of each query, then write the calls'
     timings, job totals and micro-batches to ``out`` as JSON."""
@@ -106,12 +122,14 @@ def sample(tree: str, sf: str, out: str, names: list[str]) -> None:
         except Exception:  # the timed call records the failure
             traceback.print_exc()
     calls, windows = {}, {}
+    trips = count_py4j_trips(spark)
     ev0 = H.event_log_cpu_s(spark)
     for name in names:
         t0, c0, p0 = time.time(), H.cpu_s(pid), time.perf_counter()
         try:
+            n0 = trips[0]
             df = qs[name](spark, sf)
-            c1, p1 = H.cpu_s(pid), time.perf_counter()
+            n1, c1, p1 = trips[0], H.cpu_s(pid), time.perf_counter()
             df.count()
         except Exception as exc:
             traceback.print_exc()
@@ -119,8 +137,8 @@ def sample(tree: str, sf: str, out: str, names: list[str]) -> None:
             continue
         c2, p2 = H.cpu_s(pid), time.perf_counter()
         windows[name] = (t0, time.time())
-        calls[name] = {"ok": True, "construct_s": p1 - p0, "execute_s": p2 - p1,
-                       "wall_s": p2 - p0, "construct_cpu_s": c1 - c0,
+        calls[name] = {"ok": True, "construct_s": p1 - p0, "construct_py4j_trips": n1 - n0,
+                       "execute_s": p2 - p1, "wall_s": p2 - p0, "construct_cpu_s": c1 - c0,
                        "execute_cpu_s": c2 - c1, "cpu_s": c2 - c0}
     ev = H.event_log_cpu_s(spark) - ev0
     call_cpu = sum(c["cpu_s"] for c in calls.values() if c["ok"])
@@ -181,7 +199,7 @@ def summarize(samples: list[dict], names: list[str]) -> dict:
         ok = [c for c in calls if c["ok"]]
         queries[name] = {
             "attempted": len(calls), "failed": len(calls) - len(ok),
-            **{k: stats([c[k] for c in ok]) for k in TIMINGS},
+            **{k: stats([c[k] for c in ok]) for k in TIMINGS + COUNTS},
             "samples": calls,
         }
     families = {}
