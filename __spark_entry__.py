@@ -8085,10 +8085,11 @@ def _pipeline_bars_joined(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pipeline_full_row(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FULL-WIDTH warehouse row: 117 feature columns through the
-    real schema registry (28 book + 12 COT + 39 indicator + candle +
-    VIX + calendar + W1-W8) — the reference's ~109-column
-    stock_data_joined point (create_database.py:69-73, SURVEY §1.4).
+    """The FULL-WIDTH warehouse row: 117 columns through the real
+    schema registry (bucket_start + 26 book + 12 COT + 39 indicator +
+    book features + candle + VIX + calendar + W1-W8) — the
+    reference's ~109-column stock_data_joined point
+    (create_database.py:69-73, SURVEY §1.4).
     See plans/full_row.py."""
     from financial_market_data_analysis_spark.plans.full_row import full_row
 

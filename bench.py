@@ -18,6 +18,7 @@ import sys
 import time
 
 from financial_market_data_analysis_spark import get_spark
+from financial_market_data_analysis_spark.session import host_cpus
 
 
 def main() -> None:
@@ -116,7 +117,7 @@ def main() -> None:
         # file is overwritten each run, so without the cpu count an
         # 8-core scaling record is indistinguishable from the 32-core
         # one.
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": host_cpus(),
         "sf": sf_val,
     }
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -146,22 +146,3 @@ def flatten_projection(schema: StructType, ts_format: str = "yyyy-MM-dd HH:mm:ss
         else:
             cols.append(F.col(f.name))
     return cols
-
-
-_SPARK_TO_SQL = {"FloatType()": "FLOAT", "IntegerType()": "INT", "StringType()": "VARCHAR(64)"}
-
-
-def warehouse_ddl(table: str, schemas: dict[str, StructType]) -> str:
-    """Generate the wide warehouse DDL from the same schema registry —
-    the reference's create_database.py:29-70 string assembly, kept as a
-    single-source artifact (usable for a JDBC sink target)."""
-    cols: list[str] = ["id BIGINT", "ts TIMESTAMP"]
-    for schema in schemas.values():
-        for f in schema.fields:
-            if isinstance(f.dataType, StructType):
-                for inner in f.dataType.fields:
-                    cols.append(f"{inner.name} {_SPARK_TO_SQL[repr(inner.dataType)]}")
-            elif f.name != "ts":
-                cols.append(f"{f.name} {_SPARK_TO_SQL[repr(f.dataType)]}")
-    body = ",\n  ".join(cols)
-    return f"CREATE TABLE IF NOT EXISTS {table} (\n  {body}\n)"

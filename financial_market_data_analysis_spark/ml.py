@@ -29,23 +29,21 @@ def sliding_window_vectors(
     order_cols: Sequence[str],
     partition_cols: Sequence[str] = (),
     out_col: str = "window_features",
-    keep_partial: bool = False,
 ) -> DataFrame:
     """The tensor window: ``window`` consecutive rows × features,
     flattened to one array<double> per row (shape documented in
     sql_pytorch_dataloader.py:8-18; window=30 train, 5 inference).
 
     Each row's vector is ``[t-w+1 … t] × [f1 … fk]`` (time-major).
-    ``keep_partial=False`` drops warm-up rows whose window is short —
-    the reference's chunk loader likewise only emits full windows.
+    Warm-up rows whose window is short are dropped — the reference's
+    chunk loader likewise only emits full windows.
     """
     w = trailing_window(order_cols, window - 1, partition_cols)
     per_t = F.array(*[F.col(c).cast("double") for c in feature_cols])
     collected = F.collect_list(per_t).over(w)
-    df = df.withColumn(out_col, F.flatten(collected))
-    if not keep_partial:
-        df = df.filter(F.size(out_col) == window * len(feature_cols))
-    return df
+    return df.withColumn(out_col, F.flatten(collected)).filter(
+        F.size(out_col) == window * len(feature_cols)
+    )
 
 
 def lag_matrix(

@@ -520,7 +520,10 @@ def minhash_lsh_dedup(
     # blocking count job was pure critical-path cost (r17 interleaved
     # A/B over x6/x6b/x6c/x31/x45/x73/x78: lazy ≤ eager on every
     # query, −0.1..−0.4 s median; reverts the r16 §1 overcorrection
-    # per the r16 verdict #1).
+    # per the r16 verdict #1). The lock is per BlockManager, so this
+    # holds only with one executor (``local[*]``): on a cluster the two
+    # readers of a partition may run on different executors and each
+    # compute it. ROADMAP item 7's two-executor run is what will test it.
     pairs = band_candidate_pairs(bands, id_col).localCheckpoint(eager=True)
     bands.unpersist()
     cand = candidate_ids(pairs, id_col)
@@ -623,8 +626,9 @@ def simhash_neardup_pairs(
     _validate_bands(n_bands, max_hamming)
     sketches = _simhash_sketches(df, id_col, text_col).persist()
     # No pre-count (r17): the block-level cache lock already serializes
-    # the band join's concurrent readers of the cold persist — see
-    # minhash_lsh_dedup.
+    # the band join's concurrent readers of the cold persist — with one
+    # executor (``local[*]``) only; see minhash_lsh_dedup, and ROADMAP
+    # item 7's two-executor run for the test.
 
     # (2) intra-sketch pairs: all i<j member combinations, row-local.
     ids = F.col("ids")
@@ -665,134 +669,6 @@ def simhash_neardup_pairs(
         )
     )
     out = intra.unionByName(cross).localCheckpoint(eager=True)
-    sketches.unpersist()
-    return out
-
-
-def long_hash_neardup_pairs(
-    hashes: DataFrame,
-    hash_col: str = "dhash",
-    id_col: str = "media_id",
-    bits: int = 64,
-    n_bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Generic Hamming near-dup joiner over a 64-bit-or-narrower LONG
-    fingerprint column (perceptual dHash, any 64-bit sketch): band
-    equi-join → ``bit_count(a XOR b)`` verify. Returns
-    (id_a, id_b, hamming).
-
-    Same exact-recall design as :func:`simhash_neardup_pairs`
-    (pigeonhole: ≤ max_hamming flips can't touch all n_bands disjoint
-    bands when n_bands > max_hamming), but the sketch is a LongType so
-    banding is ``shiftrightunsigned``+mask and the Hamming distance is
-    the codegen'd ``bit_count`` popcount — zero string materialization
-    anywhere.
-
-    Scale shape mirrors the SimHash path: one groupBy collapses ids →
-    DISTINCT fingerprints (identical-fingerprint groups emit member
-    pairs row-local at hamming 0), the band self-join and popcount run
-    over distinct-fingerprint pairs only, then candidates expand back
-    to id pairs by exploding member lists."""
-    if bits % n_bands != 0:
-        raise ValueError(f"n_bands={n_bands} must divide bits={bits}")
-    if n_bands <= max_hamming:
-        raise ValueError(
-            f"n_bands={n_bands} <= max_hamming={max_hamming}: banding "
-            "would drop true near-dups (needs n_bands > max_hamming)"
-        )
-    width = bits // n_bands
-    if width >= 64:
-        # a 64-bit band mask (2^64-1) does not fit a LongType literal,
-        # and a single band is a plain equi-join anyway
-        raise ValueError(
-            f"band width {width} exceeds the 63-bit LongType mask; "
-            "use n_bands >= 2 for 64-bit fingerprints"
-        )
-    mask = (1 << width) - 1
-
-    sketches = (
-        # NULL fingerprints (e.g. a hash pipeline that emits NULL for
-        # undecodable media) would otherwise collapse into ONE group
-        # and emit every pair of them as an exact dup at hamming 0
-        hashes.filter(F.col(hash_col).isNotNull())
-        .groupBy(F.col(hash_col).alias("fp"))
-        .agg(F.collect_list(F.col(id_col)).alias("ids"))
-        .persist()
-    )
-    # No pre-count (r17): the block-level cache lock already serializes
-    # the band join's concurrent readers of the cold persist — see
-    # minhash_lsh_dedup.
-
-    ids = F.col("ids")
-    combos = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(
-                    F.least(x, y).alias("id_a"), F.greatest(x, y).alias("id_b")
-                ),
-            ),
-        )
-    )
-    intra = (
-        sketches.select(F.explode(combos).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .withColumn("hamming", F.lit(0).cast("int"))
-    )
-
-    bands_df = sketches.select(
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.shiftrightunsigned(F.col("fp"), width * i)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("b"),
-    ).select("fp", "b.band_idx", "b.band")
-    left = bands_df.select(F.col("fp").alias("fp_a"), "band_idx", "band")
-    right = bands_df.select(F.col("fp").alias("fp_b"), "band_idx", "band")
-    cand = (
-        left.join(right, ["band_idx", "band"])
-        .filter(F.col("fp_a") < F.col("fp_b"))
-        .select("fp_a", "fp_b")
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    cross = (
-        cand.join(sketches.select(F.col("fp").alias("fp_a"), F.col("ids").alias("ids_a")), "fp_a")
-        .join(sketches.select(F.col("fp").alias("fp_b"), F.col("ids").alias("ids_b")), "fp_b")
-        .select(F.explode("ids_a").alias("ia"), "ids_b", "hamming")
-        .select("ia", F.explode("ids_b").alias("ib"), "hamming")
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
-            "hamming",
-        )
-    )
-    # Guard against id_a == id_b self-pairs: an id that appears in more
-    # than one input row — duplicate (id, fp) rows, or one id under two
-    # fingerprints within the Hamming budget — would otherwise pair
-    # with itself (r16 advice). Composed callers emit one row per id,
-    # so the filter is a no-op there; the generic pairs API should
-    # never emit reflexive pairs.
-    out = (
-        intra.unionByName(cross)
-        .filter(F.col("id_a") != F.col("id_b"))
-        .localCheckpoint(eager=True)
-    )
     sketches.unpersist()
     return out
 
@@ -1117,8 +993,9 @@ def simhash_dedup_clusters(
         _set_checkpoint_dir(df, checkpoint_dir)
     sketches = _simhash_sketches(df, id_col, text_col).persist()
     # No pre-count (r17): the block-level cache lock already serializes
-    # the band join's concurrent readers of the cold persist — see
-    # minhash_lsh_dedup.
+    # the band join's concurrent readers of the cold persist — with one
+    # executor (``local[*]``) only; see minhash_lsh_dedup, and ROADMAP
+    # item 7's two-executor run for the test.
     # Checkpoint the verified edge set BEFORE symmetrizing: the union
     # below references it twice, and an unmaterialized plan would pay
     # the band self-join + Hamming verify once per branch (the r2 x6

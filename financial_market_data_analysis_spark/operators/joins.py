@@ -32,21 +32,16 @@ def asof_band_join(
     bucket_seconds: int = BUCKET_SECONDS,
     how: str = "inner",
     ts_unit: str = "us",
-    strict_bucket: bool = True,
 ) -> DataFrame:
     """J1 — bucketed interval join.
 
     ``left ⋈ right ON bucket(left.ts) = bucket(right.ts) AND
     right.ts BETWEEN left.ts AND left.ts + band``.
 
-    ``strict_bucket=True`` reproduces the reference exactly: pairs whose
-    band straddles a bucket boundary are dropped because the equi-key
-    differs (spark_consumer.py:440-445 — the reference accepts this
-    loss; its producer aligns feeds to the same 5-minute grid).
-    ``strict_bucket=False`` gives full band semantics by also probing
-    the next bucket: the left side is exploded onto {b, b+1} and the
-    band predicate then filters — still an equi-join, 2× left volume,
-    no correctness loss.
+    This reproduces the reference exactly: pairs whose band straddles a
+    bucket boundary are dropped because the equi-key differs
+    (spark_consumer.py:440-445 — the reference accepts this loss; its
+    producer aligns feeds to the same 5-minute grid).
 
     ``ts_unit="us"`` expects epoch-microsecond longs (exact integer
     comparisons); ``"ts"`` expects TimestampType columns.
@@ -62,12 +57,6 @@ def asof_band_join(
 
     l = left.withColumn("__bucket", lb)
     r = right.withColumn("__bucket", rb)
-
-    if not strict_bucket:
-        l = l.withColumn(
-            "__bucket",
-            F.explode(F.array(F.col("__bucket"), F.col("__bucket") + bucket_seconds)),
-        )
 
     lt, rt = F.col(f"l.{left_ts}"), F.col(f"r.{right_ts}")
     cond = (

@@ -1,47 +1,27 @@
 """Multimodal columns: image/audio/video as opaque binary + typed
 metadata, processed with Arrow-batched ``mapInPandas``.
 
-The heavy decode libraries (PIL/ffmpeg/torchaudio) are not in this
-container. The decode tier is therefore split in two:
-
-* **Real, in-container decode** for uncompressed container formats —
-  WAV/PCM audio via the stdlib ``wave`` module, netpbm P5/P6 and
-  24-bit BMP images via pure numpy (``decode_media``), plus a real
-  nearest-neighbor
-  letterbox resample (``resize_images``) whose integer geometry is
-  bit-identical to the declarative ``resize_geometry`` plan. These run
-  for real inside the same Arrow-batched ``mapInPandas`` kernels a
-  production codec would plug into.
-* **A documented boundary** for entropy-coded formats (JPEG/PNG/MP4…)
-  that genuinely need PIL/ffmpeg: ``decode_media(strict=False)`` (the
-  default) emits a typed null-feature row carrying the sniffed format
-  so a mixed corpus keeps flowing — at 100 TB you account for the
-  undecodable tail, you don't die on the first JPEG — while
-  ``strict=True`` raises ``NotImplementedError`` inside the kernel.
-  ``extract_features(decoder="real")`` (generic embed-grade decode)
-  stays a driver-side ``NotImplementedError`` stub.
-
-What is also real and tested here is the Spark-side plumbing a 100 TB
-multimodal pipeline needs: the schema convention, binary-safe Arrow
-batching, per-partition batch iteration, and the output contract
-(fixed-width feature arrays + passthrough keys).
+The decode libraries (PIL/ffmpeg/torchaudio) are not in this container,
+so the codec step is a deterministic stand-in
+(``fake_decode_features``) and the pixel/sample extraction stays
+stubbed. What is real and tested here is the Spark-side plumbing a
+100 TB multimodal pipeline needs: the schema convention, binary-safe
+Arrow batching, per-partition batch iteration, the output contract
+(fixed-width feature arrays + passthrough keys), and the declarative
+audio-frame and letterbox-geometry plans a codec would consume.
 """
 
 from __future__ import annotations
 
 import hashlib
-import io
-import wave
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -76,7 +56,6 @@ def fake_decode_features(payload: bytes, n: int = N_FAKE_FEATURES) -> list[int]:
 
 def extract_features(
     media: DataFrame,
-    decoder: str = "fake",
     payload_col: str = "payload",
     id_col: str = "media_id",
     n_features: int = N_FAKE_FEATURES,
@@ -85,14 +64,6 @@ def extract_features(
     binary payloads in, one batch of fixed-width feature rows out. The
     UDF never sees row-at-a-time Python objects; payload bytes stay in
     Arrow buffers until the kernel touches them."""
-    if decoder == "real":
-        raise NotImplementedError(
-            "generic embed-grade decode needs PIL/ffmpeg (not in this "
-            "image); plug the codec into the same mapInPandas kernel "
-            "below. Uncompressed WAV-PCM / netpbm / 24-bit BMP payloads DO "
-            "decode in-container today via decode_media()/resize_images()."
-        )
-
     out_schema = StructType(
         [
             StructField(id_col, LongType()),
@@ -115,30 +86,6 @@ def extract_features(
     return media.select(id_col, payload_col).mapInPandas(kernel, out_schema)
 
 
-def frame_sample(
-    media: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Video → sampled frame rows: one output row per sampled timestamp.
-    The sampling grid is pure column math (no decode needed); the frame
-    payload extraction is the stubbed part (NULL payload until a real
-    codec is plugged in)."""
-    n_frames = (F.col("duration_ms") / every_ms).cast("int") + 1
-    return (
-        media.filter(F.col("kind") == "video")
-        .select(
-            id_col,
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), n_frames - 1), lambda i: i * every_ms
-                )
-            ).alias("frame_ts_ms"),
-        )
-        .withColumn("frame_payload", F.lit(None).cast("binary"))
-    )
-
-
 def audio_frames(
     media: DataFrame,
     frame_ms: int = 25,
@@ -149,7 +96,7 @@ def audio_frames(
     with the standard ``n = floor((duration - frame) / hop) + 1``
     frame count (clips shorter than one frame yield no rows). The grid
     is pure column math — the sample extraction inside each frame is
-    the stubbed codec part, exactly like ``frame_sample`` for video."""
+    the stubbed codec part."""
     n_frames = F.expr(f"(duration_ms - {frame_ms}) div {hop_ms}").cast("int") + 1
     return (
         media.filter((F.col("kind") == "audio") & (F.col("duration_ms") >= frame_ms))
@@ -195,716 +142,6 @@ def resize_geometry(
         ((F.lit(target_w) - out_w) / 2).cast("int").alias("pad_x"),
         ((F.lit(target_h) - out_h) / 2).cast("int").alias("pad_y"),
     )
-
-
-# --------------------------------------------------------------------
-# Real in-container decode: uncompressed formats only (WAV-PCM, netpbm, BMP)
-# --------------------------------------------------------------------
-
-#: formats the in-container kernels decode for real
-DECODABLE_FORMATS = ("wav", "pnm", "bmp")
-#: image formats :func:`decode_image` dispatches over
-IMAGE_FORMATS = ("pnm", "bmp")
-#: entropy-coded formats behind the documented PIL/ffmpeg boundary
-BOUNDARY_FORMATS = ("jpeg", "png", "gif", "mp4")
-
-# Drift guard (r16 advice): the kernels dispatch off IMAGE_FORMATS and a
-# literal 'wav' branch — pin the registry constants to that dispatch so
-# they cannot silently diverge from actual behavior.
-assert set(DECODABLE_FORMATS) == set(IMAGE_FORMATS) | {"wav"}
-assert not set(DECODABLE_FORMATS) & set(BOUNDARY_FORMATS)
-
-_BOUNDARY_MSG = (
-    "decode for entropy-coded format %r needs an external codec "
-    "(PIL/ffmpeg, not in this image) — the documented boundary; only "
-    "uncompressed WAV-PCM, netpbm P5/P6 and 24-bit BMP decode in-container"
-)
-
-#: decode-shaped failures the corpus-robust kernels may skip/account —
-#: deliberately NOT a bare Exception, so a genuine code bug in a kernel
-#: fails the job loudly instead of silently emptying the output
-DECODE_ERRORS = (ValueError, NotImplementedError, wave.Error, EOFError)
-
-
-def sniff_media_format(payload: bytes) -> str:
-    """Magic-byte sniff: ``wav`` / ``pnm`` / ``bmp`` (decodable
-    in-container), ``jpeg`` / ``png`` / ``gif`` / ``mp4`` (documented
-    codec boundary), else ``unknown``. Pure bytes-in, string-out —
-    safe inside an Arrow batch kernel."""
-    if len(payload) >= 12 and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return "wav"
-    if payload[:2] in (b"P5", b"P6"):
-        return "pnm"
-    if (
-        payload[:2] == b"BM"
-        and len(payload) >= 18
-        and int.from_bytes(payload[14:18], "little")
-        in (12, 40, 52, 56, 64, 108, 124)  # known DIB header sizes
-        # floor = file header + the DECLARED DIB size (min 26 for
-        # dib=12), so a small BITMAPCOREHEADER BMP is labeled 'bmp'
-        # in the accounting instead of 'unknown'
-        and len(payload) >= 14 + int.from_bytes(payload[14:18], "little")
-    ):
-        return "bmp"
-    if payload[:2] == b"\xff\xd8":
-        return "jpeg"
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return "png"
-    if payload[:4] in (b"GIF8",):
-        return "gif"
-    if len(payload) >= 12 and payload[4:8] == b"ftyp":
-        return "mp4"
-    return "unknown"
-
-
-def _pnm_header(buf: bytes) -> tuple[bytes, int, int, int, int]:
-    """Parse a netpbm raw header (magic, width, height, maxval) honoring
-    ``#`` comments; returns the fields plus the raster offset (exactly
-    one whitespace byte after maxval, per the spec)."""
-    toks: list[bytes] = []
-    i = 0
-    while len(toks) < 4:
-        while i < len(buf) and buf[i : i + 1].isspace():
-            i += 1
-        if i >= len(buf):
-            raise ValueError("truncated netpbm header")
-        if buf[i : i + 1] == b"#":
-            while i < len(buf) and buf[i] != 0x0A:
-                i += 1
-            continue
-        j = i
-        while j < len(buf) and not buf[j : j + 1].isspace() and buf[j : j + 1] != b"#":
-            j += 1
-        toks.append(buf[i:j])
-        i = j
-    if not buf[i : i + 1].isspace():
-        # A '#' (comment with no whitespace after maxval) here would
-        # land the raster offset inside the comment text and silently
-        # decode comment bytes as pixels; the spec requires exactly one
-        # whitespace byte after maxval.
-        raise ValueError("malformed netpbm header: maxval not "
-                         "terminated by whitespace")
-    i += 1  # the single whitespace byte that terminates the header
-    return toks[0], int(toks[1]), int(toks[2]), int(toks[3]), i
-
-
-def decode_pnm(payload: bytes) -> np.ndarray:
-    """netpbm raw decode: P5 (grayscale) → ``(H, W, 1)`` uint8, P6
-    (RGB) → ``(H, W, 3)`` uint8. Pure numpy ``frombuffer`` — no
-    external codec. 16-bit (maxval > 255) stays behind the boundary."""
-    magic, w, h, maxval, off = _pnm_header(payload)
-    if magic not in (b"P5", b"P6"):
-        raise ValueError(f"not a raw netpbm payload: {magic!r}")
-    if maxval > 255:
-        raise NotImplementedError("16-bit netpbm decode not supported in-container")
-    c = 1 if magic == b"P5" else 3
-    n = w * h * c
-    if len(payload) - off < n:
-        raise ValueError("netpbm raster shorter than header promises")
-    return np.frombuffer(payload, dtype=np.uint8, count=n, offset=off).reshape(h, w, c)
-
-
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """Uncompressed 24-bit BMP decode (BITMAPINFOHEADER, BI_RGB) →
-    ``(H, W, 3)`` uint8 RGB, pure numpy: rows are 4-byte padded and
-    stored bottom-up (a negative height means top-down — both
-    handled); pixel byte order is BGR, reversed here. Palettized,
-    16-bit, and RLE-compressed BMPs stay behind the boundary."""
-    if payload[:2] != b"BM" or len(payload) < 54:
-        raise ValueError("not a BMP payload")
-    px_off = int.from_bytes(payload[10:14], "little")
-    dib = int.from_bytes(payload[14:18], "little")
-    if dib < 40:
-        raise NotImplementedError("pre-BITMAPINFOHEADER BMP not supported")
-    if px_off < 14 + dib:
-        # a raster offset inside the header would silently decode
-        # header bytes as pixels
-        raise ValueError(f"BMP pixel offset {px_off} overlaps the header")
-    w = int.from_bytes(payload[18:22], "little", signed=True)
-    h = int.from_bytes(payload[22:26], "little", signed=True)
-    bpp = int.from_bytes(payload[28:30], "little")
-    compression = int.from_bytes(payload[30:34], "little")
-    if bpp != 24 or compression != 0:
-        raise NotImplementedError(
-            f"only uncompressed 24-bit BMP decodes in-container "
-            f"(got bpp={bpp}, compression={compression})"
-        )
-    top_down = h < 0
-    h = abs(h)
-    if w <= 0 or h == 0:
-        raise ValueError(f"zero-dimension image ({w}x{h})")
-    row = (w * 3 + 3) // 4 * 4
-    if len(payload) - px_off < row * h:
-        raise ValueError("BMP raster shorter than header promises")
-    raster = np.frombuffer(payload, np.uint8, count=row * h, offset=px_off)
-    img = raster.reshape(h, row)[:, : w * 3].reshape(h, w, 3)
-    if not top_down:
-        img = img[::-1]
-    return img[:, :, ::-1].copy()  # BGR → RGB
-
-
-def encode_bmp(arr: np.ndarray) -> bytes:
-    """Inverse of :func:`decode_bmp` (fixture/sink helper): ``(H, W,
-    3)`` RGB → bottom-up uncompressed 24-bit BMP with padded rows."""
-    h, w, c = arr.shape
-    if c != 3:
-        raise ValueError("encode_bmp takes (H, W, 3) RGB")
-    row = (w * 3 + 3) // 4 * 4
-    raster = np.zeros((h, row), np.uint8)
-    raster[:, : w * 3] = arr[::-1, :, ::-1].reshape(h, w * 3)  # RGB → BGR, bottom-up
-    body = raster.tobytes()
-    header = (
-        b"BM"
-        + (54 + len(body)).to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True)
-        + h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(body).to_bytes(4, "little")
-        + b"\x00" * 16
-    )
-    return header + body
-
-
-def decode_image(payload: bytes, fmt: str | None = None) -> np.ndarray:
-    """Dispatch over the in-container image codecs (netpbm / BMP) —
-    the one entry point the image kernels share, so adding a codec
-    extends dhash / resize / embedding at once. Pass a pre-sniffed
-    ``fmt`` to avoid re-sniffing on the hot kernel path."""
-    if fmt is None:
-        fmt = sniff_media_format(payload)
-    if fmt == "pnm":
-        return decode_pnm(payload)
-    if fmt == "bmp":
-        return decode_bmp(payload)
-    raise ValueError(f"not an in-container image format: {fmt}")
-
-
-def decode_wav_pcm(payload: bytes) -> tuple[np.ndarray, int]:
-    """WAV/PCM decode via the stdlib ``wave`` module: returns
-    ``(samples, sample_rate)`` with samples shaped ``(n_frames,
-    n_channels)`` as signed integers (8-bit WAV is stored unsigned and
-    is re-centered to signed here)."""
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        nch = w.getnchannels()
-        sw = w.getsampwidth()
-        sr = w.getframerate()
-        raw = w.readframes(w.getnframes())
-    if sw == 1:
-        x = np.frombuffer(raw, dtype=np.uint8).astype(np.int16) - 128
-    elif sw == 2:
-        x = np.frombuffer(raw, dtype="<i2").astype(np.int32)
-    elif sw == 4:
-        x = np.frombuffer(raw, dtype="<i4").astype(np.int64)
-    else:
-        raise NotImplementedError(f"{8 * sw}-bit PCM not supported in-container")
-    return x.reshape(-1, nch), sr
-
-
-def encode_pnm(arr: np.ndarray) -> bytes:
-    """Inverse of :func:`decode_pnm` (fixture/sink helper): ``(H, W, 1)``
-    → P5, ``(H, W, 3)`` → P6, raw maxval-255 raster."""
-    h, w, c = arr.shape
-    magic = b"P5" if c == 1 else b"P6"
-    return magic + f"\n{w} {h}\n255\n".encode() + arr.astype(np.uint8).tobytes()
-
-
-def encode_wav_pcm16(samples: np.ndarray, sample_rate: int) -> bytes:
-    """Inverse of :func:`decode_wav_pcm` for 16-bit PCM (fixture/sink
-    helper); ``samples`` is ``(n_frames, n_channels)`` int16-range."""
-    if samples.ndim == 1:
-        samples = samples.reshape(-1, 1)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(samples.shape[1])
-        w.setsampwidth(2)
-        w.setframerate(sample_rate)
-        w.writeframes(samples.astype("<i2").tobytes())
-    return buf.getvalue()
-
-
-#: fixed feature-vector width shared by both real kernels
-N_REAL_FEATURES = 8
-
-
-def real_decode_features(payload: bytes) -> dict:
-    """Decode one payload (WAV, netpbm, or BMP) to typed metadata + an
-    8-long all-integer feature vector (deterministic, engine-portable):
-
-    * image: ``[width, height, channels, mean‰ of 255, min, max,
-      bright-pixel‰ (>127), 0]``
-    * audio: ``[sample_rate, n_frames, channels, duration_ms, peak|x|,
-      rms‰ of int16 full-scale, zero-crossings of channel 0, 1]``
-
-    Raises ``NotImplementedError`` for boundary formats — callers that
-    must survive a mixed corpus use ``decode_media(strict=False)``.
-    """
-    fmt = sniff_media_format(payload)
-    if fmt in IMAGE_FORMATS:
-        img = decode_image(payload, fmt)
-        h, w, c = img.shape
-        n = img.size
-        if n == 0:
-            raise ValueError(f"zero-dimension image ({w}x{h})")
-        flat = img.reshape(-1).astype(np.int64)
-        return {
-            "format": fmt,
-            "width": w,
-            "height": h,
-            "channels": c,
-            "sample_rate": None,
-            "n_samples": int(n),
-            "duration_ms": None,
-            "features": [
-                w,
-                h,
-                c,
-                int(flat.sum() * 1000 // (n * 255)),
-                int(flat.min()),
-                int(flat.max()),
-                int((flat > 127).sum() * 1000 // n),
-                0,
-            ],
-        }
-    if fmt == "wav":
-        x, sr = decode_wav_pcm(payload)
-        nf, nch = x.shape
-        ch0 = x[:, 0]
-        sq = ch0.astype(np.int64) ** 2
-        rms_milli = int((sq.mean() ** 0.5) * 1000 // 32768) if nf else 0
-        zc = int(((ch0[:-1] >= 0) != (ch0[1:] >= 0)).sum()) if nf > 1 else 0
-        return {
-            "format": "wav",
-            "width": None,
-            "height": None,
-            "channels": nch,
-            "sample_rate": sr,
-            "n_samples": int(nf),
-            "duration_ms": int(nf * 1000 // sr) if sr else 0,
-            "features": [
-                sr,
-                nf,
-                nch,
-                int(nf * 1000 // sr) if sr else 0,
-                int(np.abs(ch0).max()) if nf else 0,
-                rms_milli,
-                zc,
-                1,
-            ],
-        }
-    raise NotImplementedError(_BOUNDARY_MSG % fmt)
-
-
-REAL_DECODE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("format", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("n_samples", LongType()),
-        StructField("duration_ms", IntegerType()),
-        StructField("features", ArrayType(LongType())),
-    ]
-)
-
-
-def decode_media(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    strict: bool = False,
-) -> DataFrame:
-    """REAL decode of uncompressed payloads (WAV-PCM, netpbm P5/P6,
-    24-bit BMP)
-    via an Arrow-batched ``mapInPandas`` kernel — bytes stay in Arrow
-    buffers until the per-payload numpy/stdlib decode touches them.
-
-    ``strict=False`` (default — corpus-robust): an entropy-coded or
-    unknown payload emits a typed row with its sniffed ``format`` and
-    NULL metrics, so a 100 TB mixed corpus accounts for its
-    undecodable tail instead of failing the job. ``strict=True``
-    raises the documented ``NotImplementedError`` boundary inside the
-    kernel (surfaced by Spark as a ``PythonException``)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                payload = b"" if p is None else bytes(p)
-                try:
-                    rec = real_decode_features(payload)
-                # corpus-robust: CORRUPT payloads of decodable formats
-                # (bad RIFF body, truncated raster, zero-dim header) are
-                # part of the undecodable tail exactly like boundary
-                # formats — account them, don't fail the job. strict=True
-                # re-raises everything (fail-fast adjudication mode).
-                except DECODE_ERRORS:
-                    if strict:
-                        raise
-                    rec = {
-                        "format": sniff_media_format(payload),
-                        "width": None,
-                        "height": None,
-                        "channels": None,
-                        "sample_rate": None,
-                        "n_samples": None,
-                        "duration_ms": None,
-                        "features": None,
-                    }
-                rec["media_id"] = mid
-                rows.append(rec)
-            out_pdf = pd.DataFrame(rows, columns=[f.name for f in REAL_DECODE_SCHEMA])
-            # mixed int/None rows make pandas infer float64+NaN, which does
-            # not cast safely to Arrow ints — force object dtype with real
-            # None so nulls survive the Arrow conversion
-            for c in ("width", "height", "channels", "sample_rate", "n_samples", "duration_ms"):
-                out_pdf[c] = out_pdf[c].astype(object).where(pd.notna(out_pdf[c]), None)
-            yield out_pdf
-
-    out = media.select(F.col(id_col).alias("media_id"), payload_col).mapInPandas(
-        kernel, REAL_DECODE_SCHEMA
-    )
-    return out if id_col == "media_id" else out.withColumnRenamed("media_id", id_col)
-
-
-def _letterbox_dims(
-    w: int, h: int, target_w: int, target_h: int
-) -> tuple[int, int, int, int]:
-    """The ONE copy of the letterbox geometry — the same all-integer
-    ``div`` math as the declarative :func:`resize_geometry` plan (which
-    filters ``width > 0 AND height > 0``; callers replicate that
-    filter). Returns ``(out_w, out_h, pad_x, pad_y)``."""
-    if w <= 0 or h <= 0:
-        raise ValueError(f"zero-dimension image ({w}x{h})")
-    wide = w * target_h >= h * target_w
-    out_w = target_w if wide else (w * target_h) // h
-    out_h = (h * target_w) // w if wide else target_h
-    return out_w, out_h, (target_w - out_w) // 2, (target_h - out_h) // 2
-
-
-def letterbox_resize(
-    img: np.ndarray, target_w: int = 224, target_h: int = 224, pad_value: int = 0
-) -> np.ndarray:
-    """Real nearest-neighbor letterbox resample in pure numpy. The
-    output geometry (scaled dims + centering pads) uses the SAME
-    all-integer ``div`` math as the declarative :func:`resize_geometry`
-    plan, so the two are bit-identical — the plan is the contract, this
-    is the kernel. Source index for output i is ``(i * src) // out``
-    (integer), so the sample grid is deterministic across hosts.
-    Extreme aspect ratios can truncate the scaled axis to 0 (an
-    all-pad canvas) — deliberately identical to the plan/oracle's
-    integer-div, property-pinned in tests/test_properties.py.
-    Zero-dimension inputs raise (the plan filters them out; kernels
-    skip them before calling)."""
-    h, w = img.shape[:2]
-    out_w, out_h, px, py = _letterbox_dims(w, h, target_w, target_h)
-    yi = (np.arange(out_h) * h) // out_h
-    xi = (np.arange(out_w) * w) // out_w
-    resized = img[yi][:, xi]
-    canvas = np.full((target_h, target_w) + img.shape[2:], pad_value, dtype=img.dtype)
-    canvas[py : py + out_h, px : px + out_w] = resized
-    return canvas
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("out_w", IntegerType()),
-        StructField("out_h", IntegerType()),
-        StructField("pad_x", IntegerType()),
-        StructField("pad_y", IntegerType()),
-        StructField("channels", IntegerType()),
-        StructField("pixels", BinaryType()),
-    ]
-)
-
-
-def resize_images(
-    media: DataFrame,
-    target_w: int = 224,
-    target_h: int = 224,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """REAL decode→letterbox-resample for in-container image payloads (netpbm/BMP): emits the
-    resampled ``target_h × target_w × C`` raster as a binary column
-    plus the geometry columns (which match :func:`resize_geometry`
-    row-for-row — tests pin that, including the plan's
-    ``width > 0 AND height > 0`` filter). Non-image, corrupt, and
-    zero-dimension payloads are skipped (the corpus-robust convention
-    of :func:`decode_media`)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                payload = b"" if p is None else bytes(p)
-                fmt = sniff_media_format(payload)
-                if fmt not in IMAGE_FORMATS:
-                    continue
-                try:
-                    img = decode_image(payload, fmt)
-                    h, w, c = img.shape
-                    out_w, out_h, pad_x, pad_y = _letterbox_dims(
-                        w, h, target_w, target_h
-                    )
-                    canvas = letterbox_resize(img, target_w, target_h)
-                except DECODE_ERRORS:
-                    # in-format-but-bad payloads (16-bit maxval,
-                    # truncated raster, 0-dim header) are the corpus'
-                    # undecodable tail — skip, don't fail the stage
-                    continue
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "out_w": out_w,
-                        "out_h": out_h,
-                        "pad_x": pad_x,
-                        "pad_y": pad_y,
-                        "channels": c,
-                        "pixels": canvas.tobytes(),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZED_SCHEMA])
-
-    out = media.select(F.col(id_col).alias("media_id"), payload_col).mapInPandas(
-        kernel, RESIZED_SCHEMA
-    )
-    return out if id_col == "media_id" else out.withColumnRenamed("media_id", id_col)
-
-
-def _luma_grid(img: np.ndarray, grid_h: int, grid_w: int) -> np.ndarray:
-    """Integer luma (299/587/114 weights) nearest-resampled to a
-    ``grid_h × grid_w`` grid with the ``(i·src) div out`` index math —
-    the ONE copy of the conversion :func:`dhash64` and
-    :func:`image_grid_embedding` both promise is identical (their
-    upscale-invariance law depends on sharing it). Zero-dimension
-    images (legal netpbm headers) are undecodable content — raise."""
-    h, w = img.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError(f"zero-dimension image ({w}x{h})")
-    if img.ndim == 3 and img.shape[2] == 3:
-        px = img.astype(np.int64)
-        luma = (299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]) // 1000
-    else:
-        luma = img.reshape(h, w, -1)[:, :, 0].astype(np.int64)
-    yi = (np.arange(grid_h) * h) // grid_h
-    xi = (np.arange(grid_w) * w) // grid_w
-    return luma[yi][:, xi]
-
-
-def dhash64(img: np.ndarray) -> int:
-    """Perceptual difference-hash of a decoded image: integer luma →
-    nearest-resample to an 8×9 grid (the same ``(i·src) div out`` grid
-    math as :func:`letterbox_resize`) → 64 row-wise
-    brighter-than-left-neighbor bits, packed big-endian into a SIGNED
-    64-bit int (Spark LongType). All-integer, so the hash is
-    bit-identical across hosts. Robust to resizing/re-encoding and
-    small local edits — the content-aware complement to byte-level
-    fingerprint dedup."""
-    g = _luma_grid(img, 8, 9)
-    bits = (g[:, 1:] > g[:, :-1]).reshape(-1)
-    v = 0
-    for b in bits:
-        v = (v << 1) | int(b)
-    return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def image_dhash(
-    media: DataFrame, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
-    """REAL perceptual hashing for in-container image payloads (netpbm/BMP): decode + dHash-64
-    inside the Arrow kernel, one LongType fingerprint per image.
-    Non-image, corrupt, and zero-dimension payloads are skipped (the
-    corpus-robust convention)."""
-    out_schema = StructType(
-        [StructField("media_id", LongType()), StructField("dhash", LongType())]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                payload = b"" if p is None else bytes(p)
-                fmt = sniff_media_format(payload)
-                if fmt not in IMAGE_FORMATS:
-                    continue
-                try:
-                    fp = dhash64(decode_image(payload, fmt))
-                except DECODE_ERRORS:
-                    continue  # undecodable tail (16-bit, truncated, 0-dim)
-                rows.append({"media_id": mid, "dhash": fp})
-            yield pd.DataFrame(rows, columns=["media_id", "dhash"])
-
-    out = media.select(F.col(id_col).alias("media_id"), payload_col).mapInPandas(
-        kernel, out_schema
-    )
-    return out if id_col == "media_id" else out.withColumnRenamed("media_id", id_col)
-
-
-def image_neardup_pairs(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    n_bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Content-aware image near-dup pairs: real dHash-64 per image
-    (the only Python step), then the generic sketch-granularity
-    Hamming joiner — 16-bit band equi-join with the pigeonhole recall
-    guarantee, ``bit_count`` popcount verify, everything after the
-    hash kernel JVM-side. Returns (id_a, id_b, hamming)."""
-    from financial_market_data_analysis_spark.operators.dedup import (
-        long_hash_neardup_pairs,
-    )
-
-    return long_hash_neardup_pairs(
-        image_dhash(media, id_col, payload_col),
-        hash_col="dhash",
-        id_col=id_col,
-        bits=64,
-        n_bands=n_bands,
-        max_hamming=max_hamming,
-    )
-
-
-def image_grid_embedding(
-    media: DataFrame,
-    grid: int = 8,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """REAL image embedding for in-container image payloads (netpbm/BMP): decode → integer luma
-    → ``grid×grid`` nearest resample (the same ``(i·src) div out``
-    grid as :func:`dhash64`, so it is exactly invariant under integer
-    nearest upscaling) → L2-normalized ``array<float>``. The output
-    plugs straight into the similarity tier
-    (``operators.similarity.brute_force_topk`` / IVF / hyperplane-LSH)
-    — the bridge from decoded media to ANN retrieval. A swapped-in
-    learned encoder keeps this exact kernel signature and schema.
-    Non-image, corrupt, and zero-dimension payloads are skipped (the
-    corpus-robust convention); an all-black image (zero norm) emits
-    the zero vector rather than NaNs."""
-    out_schema = StructType(
-        [
-            StructField("media_id", LongType()),
-            StructField("embedding", ArrayType(FloatType())),
-        ]
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                payload = b"" if p is None else bytes(p)
-                fmt = sniff_media_format(payload)
-                if fmt not in IMAGE_FORMATS:
-                    continue
-                try:
-                    g = _luma_grid(decode_image(payload, fmt), grid, grid)
-                except DECODE_ERRORS:
-                    continue  # undecodable tail (16-bit, truncated, 0-dim)
-                v = g.reshape(-1).astype(np.float64)
-                n = float(np.sqrt((v * v).sum()))
-                if n > 0.0:
-                    v = v / n
-                rows.append(
-                    {"media_id": mid, "embedding": v.astype(np.float32).tolist()}
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "embedding"])
-
-    out = media.select(F.col(id_col).alias("media_id"), payload_col).mapInPandas(
-        kernel, out_schema
-    )
-    return out if id_col == "media_id" else out.withColumnRenamed("media_id", id_col)
-
-
-AUDIO_FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("start_ms", IntegerType()),
-        StructField("n_in_frame", IntegerType()),
-        # LongType: a full-scale negative 32-bit PCM sample has
-        # |x| = 2^31, one past int32 max
-        StructField("peak", LongType()),
-        StructField("rms_milli", IntegerType()),
-        StructField("zero_crossings", IntegerType()),
-    ]
-)
-
-
-def audio_frame_features(
-    media: DataFrame,
-    frame_ms: int = 25,
-    hop_ms: int = 10,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """REAL per-frame audio features for WAV-PCM payloads: decode with
-    :func:`decode_wav_pcm` inside the Arrow kernel, frame channel 0 on
-    the SAME STFT-style grid as the declarative :func:`audio_frames`
-    plan (``n = (dur_ms − frame_ms) div hop_ms + 1``, all-integer), and
-    emit per-frame ``[peak |x|, rms‰ of int16 full-scale,
-    zero-crossings]`` — the feature row a downstream VAD / silence
-    filter consumes. Frame boundaries in samples are
-    ``start_ms·sr div 1000`` for ``frame_ms·sr div 1000`` samples, so
-    the grid is deterministic across hosts. Non-WAV, corrupt, and
-    unsupported-PCM-width payloads are skipped (the corpus-robust
-    convention of :func:`decode_media`); clips shorter than one frame
-    yield no rows, matching the plan."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, p in zip(pdf["media_id"], pdf[payload_col]):
-                payload = b"" if p is None else bytes(p)
-                if sniff_media_format(payload) != "wav":
-                    continue
-                try:
-                    x, sr = decode_wav_pcm(payload)
-                except DECODE_ERRORS:
-                    continue  # corrupt RIFF body / 24-bit PCM etc.
-                ch0 = x[:, 0].astype(np.int64)
-                dur_ms = len(ch0) * 1000 // sr if sr else 0
-                if dur_ms < frame_ms:
-                    continue
-                n_frames = (dur_ms - frame_ms) // hop_ms + 1
-                flen = frame_ms * sr // 1000
-                for i in range(n_frames):
-                    start_ms = i * hop_ms
-                    s0 = start_ms * sr // 1000
-                    fr = ch0[s0 : s0 + flen]
-                    n = len(fr)
-                    if n == 0:
-                        continue
-                    rows.append(
-                        {
-                            "media_id": mid,
-                            "frame_idx": i,
-                            "start_ms": start_ms,
-                            "n_in_frame": n,
-                            "peak": int(np.abs(fr).max()),
-                            "rms_milli": int(((fr**2).mean() ** 0.5) * 1000 // 32768),
-                            "zero_crossings": int(
-                                ((fr[:-1] >= 0) != (fr[1:] >= 0)).sum()
-                            )
-                            if n > 1
-                            else 0,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FRAME_SCHEMA])
-
-    out = media.select(F.col(id_col).alias("media_id"), payload_col).mapInPandas(
-        kernel, AUDIO_FRAME_SCHEMA
-    )
-    return out if id_col == "media_id" else out.withColumnRenamed("media_id", id_col)
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:

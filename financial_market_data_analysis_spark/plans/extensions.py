@@ -2246,10 +2246,9 @@ def audio_frames_oracle(frame_ms: int = 25, hop_ms: int = 10) -> str:
 def q_resize_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Aspect-preserving letterbox resize geometry for images.
 
-    The geometry published here is the CONTRACT for the real resample
-    kernel (``operators.multimodal.resize_images`` /
-    ``letterbox_resize``): both use the same all-integer ``div`` math,
-    and tests/test_ml_multimodal.py pins the two identical dim-for-dim.
+    The geometry published here is the contract a resample kernel
+    consumes. Its oracle shares the all-integer ``div`` formula, so
+    tests/test_properties.py checks the letterbox laws on it directly.
     """
     from financial_market_data_analysis_spark.operators.multimodal import (
         media_from_documents,

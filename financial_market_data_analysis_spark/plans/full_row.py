@@ -3,16 +3,16 @@
 assembled as one Spark plan, with every column family routed through
 the real schema registry:
 
-    28 order-book columns (7+7 sizes, 6+6 relative depth prices)
+    26 order-book columns (7+7 sizes, 6+6 relative depth prices)
   +  6 book-derived features (F2-F6)
-  +  9 candle columns (OHLCV + wick geometry, F1)
+  +  8 candle columns (OHLCV + wick geometry, F1)
   +  1 VIX
   + 12 COT columns           (COT_GROUPS × COT_MEASURES registry)
   + 39 indicator columns     (13 INDICATOR_EVENTS × 3 INDICATOR_VALUES)
   + 11 calendar columns      (F8 + F9 one-hots)
   +  9 window indicators     (W1-W7 views incl. delta_MA12)
   +  4 LEAD targets          (W8)
-  → 117 feature columns + the bucket key.
+  → 116 feature columns + ``bucket_start`` = 117 columns.
 
 The COT and indicator feeds are synthesized deterministically from the
 driver's ``events`` table (the same stand-in strategy as
@@ -167,10 +167,10 @@ N_SYMBOLS = 4  # synthetic series count for the partitioned-scale variant
 def full_row(
     spark: SparkSession, sf_dir: str, group_cols: tuple[str, ...] = ()
 ) -> DataFrame:
-    """The assembled full-width warehouse row (117 feature columns), as
-    one ``one_pass_sql`` text. F7's relative depth prices replace the
-    absolute ones the other book features read, so they are computed as
-    ``rel_*`` and renamed last.
+    """The assembled full-width warehouse row (117 columns: 116
+    features + ``bucket_start``), as one ``one_pass_sql`` text. F7's
+    relative depth prices replace the absolute ones the other book
+    features read, so they are computed as ``rel_*`` and renamed last.
 
     With ``group_cols`` (the partitioned-scale path, SURVEY.md §7.3)
     the aggregate keys on (series, bucket) and the W1-W8 window stage

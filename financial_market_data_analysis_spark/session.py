@@ -20,6 +20,12 @@ ROCKSDB_PROVIDER = (
 )
 
 
+def host_cpus() -> str:
+    """The core count a session is sized to: ``$SPARK_GRAFT_CPUS`` when
+    set, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "financial-market-data-analysis-spark",
     master: str | None = None,
@@ -33,7 +39,7 @@ def get_spark(
     broadcast dimension tables, Arrow for pandas UDFs, UTC session timezone
     so results compare bit-for-bit against naive-UTC oracles (DuckDB).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

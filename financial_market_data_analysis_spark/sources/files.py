@@ -33,12 +33,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
-    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 CORRUPT_COL = "_corrupt_record"
@@ -438,59 +435,3 @@ def schema_drift_report(old: DataFrame, new: DataFrame) -> DataFrame:
             )
         )
     return both.select(F.inline(F.array(*entries)))
-
-
-# --------------------------------------------------------------------
-# Streaming binary-file ingest (raw media drops)
-# --------------------------------------------------------------------
-
-#: the binaryFile source's fixed schema — streaming mode requires it
-#: to be passed EXPLICITLY (batch mode infers it; a streaming source
-#: refuses inference by design, same contract as the text loaders
-#: above)
-BINARY_FILE_SCHEMA = StructType(
-    [
-        StructField("path", StringType()),
-        StructField("modificationTime", TimestampType()),
-        StructField("length", LongType()),
-        StructField("content", BinaryType()),
-    ]
-)
-
-
-def stream_binary_files(
-    spark: SparkSession,
-    directory: str,
-    glob: str | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming ingest of raw media files (the bulk-drop twin of the
-    text loaders above, for image/audio payloads): Spark's
-    ``binaryFile`` source watched as a stream, emitting
-    ``(media_id, path, length, payload)`` rows ready for
-    ``operators.multimodal.decode_media`` — which is a stateless
-    ``mapInPandas``, so the whole decode pipeline runs as one
-    streaming query with exactly-once file tracking from the
-    checkpoint (each file is processed once across restarts; a
-    crashed batch replays the SAME file list).
-
-    ``media_id`` is ``xxhash64(path)`` — stable across runs, LongType
-    like every media id in the multimodal tier. A 64-bit hash of
-    distinct paths can collide (birthday bound ~n²/2⁶⁵ — about 1e-4
-    at 1e8 files), which would silently merge two files downstream;
-    ``path`` stays in the frame as the collision-proof key, so join
-    on it where exactness matters. At scale, set
-    ``max_files_per_trigger`` so one epoch's decode fan-out is bounded
-    (media payloads are large; an unbounded availableNow batch over a
-    deep drop directory would put every byte in flight at once)."""
-    reader = spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA)
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(directory).select(
-        F.xxhash64("path").alias("media_id"),
-        "path",
-        "length",
-        F.col("content").alias("payload"),
-    )

@@ -551,55 +551,6 @@ def snapshot_merge_sink(spark, snap_dir: str):
     return merge
 
 
-def compact_warehouse(
-    spark: SparkSession,
-    src_path: str,
-    dest_path: str,
-    partition_by: Sequence[str] = (),
-    target_files: int = 8,
-    predicate: str | Column | None = None,
-) -> int:
-    """Fold the per-epoch partition directories the idempotent sink
-    accumulates back into plain ``partition_by`` layout: read the
-    warehouse, drop the epoch column, rewrite coalesced to ``dest_path``
-    (must differ from ``src_path`` — Spark cannot safely overwrite a
-    path it is reading; the caller swaps directories after the job, the
-    same two-step every file-format compaction uses without a
-    transactional table layer). Returns the row count written.
-
-    ``predicate`` scopes the compaction — e.g.
-    ``F.col("date_bucket") < today`` — and is how the intended
-    workflow is actually expressed: compact ONLY buckets that are
-    closed (can no longer receive epochs), then swap ONLY those
-    buckets' directories. Compacting the whole warehouse while the
-    sink is live races with in-flight epochs: any epoch committed
-    between the snapshot read and the swap would exist only in the
-    replaced directory and the checkpoint will not replay it. The
-    epoch dirs are what makes retried epochs idempotent, but
-    thousands of small per-epoch files degrade listing and scan
-    startup — once a bucket is closed, its epochs are pure overhead.
-    """
-    if os.path.abspath(dest_path) == os.path.abspath(src_path):
-        raise ValueError("compact_warehouse needs dest_path != src_path")
-    df = spark.read.parquet(src_path)
-    if predicate is not None:
-        df = df.filter(predicate)  # partition-prunes on bucket columns
-    if EPOCH_COL in df.columns:
-        df = df.drop(EPOCH_COL)
-    # actually merge the small epoch files: bound output files to
-    # ``target_files`` per partition-key hash (keyed repartition keeps
-    # each output dir's rows in few tasks) or globally when unpartitioned
-    if partition_by:
-        df = df.repartition(target_files, *[F.col(c) for c in partition_by])
-    else:
-        df = df.coalesce(target_files)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(dest_path)
-    return spark.read.parquet(dest_path).count()
-
-
 # largest PRECEDING frame in the indicator suite: 19 rows (MA20 /
 # Bollinger); largest LEAD: 15 rows (up2/down2 targets)
 MAX_PRECEDING = 19
@@ -709,70 +660,6 @@ def incremental_indicators(
     return _hook
 
 
-def stateful_moving_average(
-    stream: DataFrame,
-    key_cols: Sequence[str] = ("symbol",),
-    ts_col: str = "ts",
-    value_col: str = "close",
-    period: int = 20,
-    out_col: str | None = None,
-) -> DataFrame:
-    """T9 option (b) — a TRUE single-pass streaming indicator: per-key
-    moving average via ``applyInPandasWithState``, keeping only the last
-    ``period − 1`` values as state. No warehouse re-read per batch (the
-    foreachBatch materialization path), no second engine (the
-    reference's MariaDB views): each row is emitted exactly once with
-    its MA, state is O(period) per key.
-
-    Semantics match the batch ``moving_average`` (growing head frames,
-    ``period``-row trailing window) for in-order arrival per key; rows
-    inside a micro-batch are sorted by event time before folding.
-    Arrow-batched pandas — the one place Python executes, and it is
-    per-group vectorized, not per-row.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        StructField,
-        StructType,
-    )
-
-    out_name = out_col or f"{value_col}_MA{period}"
-    key_fields = [stream.schema[k] for k in key_cols]
-    out_schema = StructType(
-        key_fields
-        + [
-            stream.schema[ts_col],
-            StructField(value_col, DoubleType()),
-            StructField(out_name, DoubleType()),
-        ]
-    )
-    state_schema = StructType([StructField("tail", ArrayType(DoubleType()))])
-    col_order = list(key_cols) + [ts_col, value_col, out_name]
-
-    def fn(key, pdf_iter, state):
-        tail = list(state.get[0]) if state.exists else []
-        rows = pd.concat(list(pdf_iter)).sort_values(ts_col)
-        vals = [float(v) for v in rows[value_col]]
-        hist = list(tail)
-        mas = []
-        for v in vals:
-            hist.append(v)
-            win = hist[-period:]
-            mas.append(sum(win) / len(win))
-        state.update((hist[-(period - 1):] if period > 1 else [],))
-        out = pd.DataFrame({ts_col: rows[ts_col].values, value_col: vals, out_name: mas})
-        for i, k in enumerate(key_cols):
-            out[k] = key[i]
-        yield out[col_order]
-
-    return stream.groupBy(*[F.col(k) for k in key_cols]).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
 def stateful_indicator_suite(
     stream: DataFrame,
     key_cols: Sequence[str] = ("symbol",),
@@ -782,8 +669,8 @@ def stateful_indicator_suite(
     low_col: str = "low",
     volume_col: str = "volume",
 ) -> DataFrame:
-    """T9 option (b), generalized from the single moving average to the
-    FULL W1-W8 suite: one ``applyInPandasWithState`` pass emits every
+    """T9 option (b), a true single-pass streaming indicator suite: one
+    ``applyInPandasWithState`` pass emits every
     indicator the batch ``indicator_suite`` computes — vol_MA6/20,
     price_MA20, Bollinger distances (stddev_pop), stochastic, price
     change, ATR, and the four LEAD targets — with O(period) state per

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import ast
 import json
+import os
 import subprocess
 import sys
 from pathlib import Path
@@ -152,3 +153,16 @@ def test_engine_reads_no_env_toggles():
         for k in keys:
             found.setdefault(k, []).append(rel)
     assert set(found) == ENV_READS, found
+
+
+def test_session_cpus_default_to_this_hosts_cores(monkeypatch):
+    """With ``SPARK_GRAFT_CPUS`` unset a session is sized to the cores
+    this process may run on, not a fixed count; when set, it wins.
+    ``get_spark`` itself is not called: it would retune the shared
+    session."""
+    from financial_market_data_analysis_spark.session import host_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert host_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert host_cpus() == "3"

@@ -12,7 +12,6 @@ from financial_market_data_analysis_spark.ml import (
 from financial_market_data_analysis_spark.operators.multimodal import (
     extract_features,
     fake_decode_features,
-    frame_sample,
     media_from_documents,
 )
 from financial_market_data_analysis_spark.operators.windows import indicator_suite
@@ -189,25 +188,6 @@ def test_extract_features_batch_contract(spark):
     rows = out.limit(5).collect()
     assert all(len(r.features) == 8 for r in rows)
     assert out.count() == media.count()
-
-
-def test_extract_features_real_decoder_stubbed(spark):
-    media = media_from_documents(load_table(spark, "documents", SF_SMOKE))
-    with pytest.raises(NotImplementedError):
-        extract_features(media, decoder="real")
-
-
-def test_frame_sample_grid(spark):
-    media = media_from_documents(load_table(spark, "documents", SF_SMOKE))
-    frames = frame_sample(media, every_ms=1000)
-    one = (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "duration_ms")
-        .limit(1)
-        .collect()[0]
-    )
-    n = frames.filter(F.col("media_id") == one.media_id).count()
-    assert n == one.duration_ms // 1000 + 1
 
 
 def test_kmeans_lloyd_converges_to_cluster_means(spark):
@@ -468,490 +448,3 @@ def test_pq_codes_are_argmin_assignments(spark):
     assert by_vec[0] == {0}                      # centroid codes itself
     assert by_vec[CENTROID_MOD] == {CENTROID_MOD}
     assert by_vec[7] == {CENTROID_MOD}           # 0.9 is nearer to 1.0
-
-
-# --------------------------------------------------------------------
-# REAL in-container decode tier: WAV-PCM + netpbm (no PIL/ffmpeg)
-# --------------------------------------------------------------------
-
-
-def _pnm_payload(w, h, c, value=None):
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import encode_pnm
-
-    if value is None:
-        arr = (np.arange(w * h * c, dtype=np.int64) % 251).astype(np.uint8)
-    else:
-        arr = np.full((h, w, c), value, dtype=np.uint8)
-    return encode_pnm(arr.reshape(h, w, c))
-
-
-def _wav_payload(n_frames=100, sr=8000, nch=2, amp=1000):
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        encode_wav_pcm16,
-    )
-
-    sq = np.tile(
-        np.array([[amp, -amp], [-amp, amp]], np.int16)[:, :nch], (n_frames // 2, 1)
-    )
-    return encode_wav_pcm16(sq, sr)
-
-
-def _media_df(spark, rows):
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [StructField("media_id", LongType()), StructField("payload", BinaryType())]
-    )
-    return spark.createDataFrame(rows, schema)
-
-
-def test_decode_media_real_wav_and_pnm(spark):
-    """Real decode end-to-end on Spark: stdlib-WAV and numpy-netpbm
-    payloads decode inside the mapInPandas kernel; metadata and the
-    all-integer feature vector are exact."""
-    from financial_market_data_analysis_spark.operators.multimodal import decode_media
-
-    media = _media_df(
-        spark,
-        [
-            (1, _pnm_payload(3, 2, 3)),
-            (2, _wav_payload(n_frames=100, sr=8000, nch=2, amp=1000)),
-            (3, _pnm_payload(5, 4, 1, value=200)),
-        ],
-    )
-    out = {r.media_id: r for r in decode_media(media).collect()}
-    assert out[1].format == "pnm" and (out[1].width, out[1].height, out[1].channels) == (3, 2, 3)
-    # constant-200 grayscale: mean-permille = 200*1000//255 = 784, all bright
-    assert out[3].features == [5, 4, 1, 784, 200, 200, 1000, 0]
-    w = out[2]
-    assert w.format == "wav" and w.sample_rate == 8000 and w.n_samples == 100
-    assert w.duration_ms == 12 and w.channels == 2
-    # alternating ±1000 square: peak 1000, rms-permille 1000*1000//32768=30,
-    # a sign flip between every adjacent frame pair (99), audio marker 1
-    assert w.features == [8000, 100, 2, 12, 1000, 30, 99, 1]
-
-
-def test_decode_media_mixed_corpus_accounts_boundary_formats(spark):
-    """strict=False (the 100 TB default): entropy-coded payloads emit a
-    typed null-metric row with the sniffed format instead of killing
-    the job — the corpus' undecodable tail is accounted, not fatal."""
-    from financial_market_data_analysis_spark.operators.multimodal import decode_media
-
-    media = _media_df(
-        spark,
-        [
-            (1, _pnm_payload(2, 2, 3)),
-            (2, b"\x89PNG\r\n\x1a\n" + b"\x00" * 32),
-            (3, b"\xff\xd8\xff\xe0" + b"\x00" * 32),
-            (4, b"not media at all"),
-        ],
-    )
-    rows = {r.media_id: r for r in decode_media(media, strict=False).collect()}
-    assert rows[1].format == "pnm" and rows[1].features is not None
-    assert rows[2].format == "png" and rows[2].features is None and rows[2].width is None
-    assert rows[3].format == "jpeg" and rows[3].features is None
-    assert rows[4].format == "unknown" and rows[4].features is None
-    by_fmt = (
-        decode_media(media, strict=False)
-        .groupBy("format")
-        .count()
-        .rdd.collectAsMap()
-    )
-    assert by_fmt == {"pnm": 1, "png": 1, "jpeg": 1, "unknown": 1}
-
-
-def test_decode_media_strict_raises_boundary_in_kernel(spark):
-    """strict=True surfaces the documented NotImplementedError boundary
-    from inside the Arrow kernel (Spark wraps it as a PythonException)."""
-    from financial_market_data_analysis_spark.operators.multimodal import decode_media
-
-    media = _media_df(spark, [(1, b"\x89PNG\r\n\x1a\n" + b"\x00" * 16)])
-    with pytest.raises(Exception, match="NotImplementedError|entropy-coded"):
-        decode_media(media, strict=True).collect()
-
-
-def test_resize_images_matches_resize_geometry_plan(spark):
-    """The real numpy letterbox kernel and the declarative
-    resize_geometry plan publish IDENTICAL integer geometry, and the
-    resampled raster has the promised shape with zero-valued pads."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        resize_geometry,
-        resize_images,
-    )
-
-    dims = [(6, 4), (4, 6), (224, 224), (17, 3), (1000, 10)]
-    media = _media_df(
-        spark,
-        [(i, _pnm_payload(w, h, 3, value=7)) for i, (w, h) in enumerate(dims)],
-    )
-    real = {r.media_id: r for r in resize_images(media, 224, 224).collect()}
-
-    geo_in = media.selectExpr("media_id", "'image' as kind").join(
-        spark.createDataFrame(
-            [(i, w, h) for i, (w, h) in enumerate(dims)],
-            ["media_id", "width", "height"],
-        ),
-        "media_id",
-    )
-    plan = {r.media_id: r for r in resize_geometry(geo_in, 224, 224).collect()}
-    assert set(real) == set(plan) == set(range(len(dims)))
-    for i in real:
-        assert (real[i].out_w, real[i].out_h, real[i].pad_x, real[i].pad_y) == (
-            plan[i].out_w,
-            plan[i].out_h,
-            plan[i].pad_x,
-            plan[i].pad_y,
-        ), f"geometry diverged for media {i}"
-        canvas = np.frombuffer(real[i].pixels, np.uint8).reshape(224, 224, 3)
-        r = real[i]
-        body = canvas[r.pad_y : r.pad_y + r.out_h, r.pad_x : r.pad_x + r.out_w]
-        assert (body == 7).all()
-        assert int((canvas == 7).all(axis=2).sum()) == r.out_w * r.out_h
-
-
-def test_audio_frame_features_real_decode_exact(spark):
-    """Per-frame features computed from REAL WAV decode: a clip whose
-    first half is an alternating ±1000 square and second half silence
-    yields exact per-frame peak/rms/zero-crossing rows on the standard
-    framing grid, and that grid matches the declarative audio_frames
-    plan frame-for-frame when the metadata duration equals the real
-    one."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        audio_frame_features,
-        audio_frames,
-        encode_wav_pcm16,
-    )
-
-    sr = 8000
-    loud = np.tile(np.array([1000, -1000], np.int16), 100)  # 200 samples = 25 ms
-    quiet = np.zeros(200, np.int16)
-    wav = encode_wav_pcm16(np.concatenate([loud, quiet]), sr)  # 50 ms total
-    media = _media_df(spark, [(1, wav), (2, b"not audio")])
-
-    out = audio_frame_features(media, frame_ms=25, hop_ms=25).collect()
-    rows = {r.frame_idx: r for r in out}
-    # 50 ms at frame=hop=25 → frames at 0 ms and 25 ms, only media 1
-    assert {r.media_id for r in out} == {1} and set(rows) == {0, 1}
-    f0, f1 = rows[0], rows[1]
-    assert (f0.start_ms, f0.n_in_frame) == (0, 200)
-    assert f0.peak == 1000 and f0.rms_milli == 1000 * 1000 // 32768
-    assert f0.zero_crossings == 199  # sign flips between every sample
-    assert (f1.peak, f1.rms_milli, f1.zero_crossings) == (0, 0, 0)
-
-    # grid parity with the declarative plan at matching metadata
-    meta = spark.createDataFrame(
-        [(1, "audio", 50)], ["media_id", "kind", "duration_ms"]
-    )
-    plan = {
-        (r.frame_idx, r.start_ms)
-        for r in audio_frames(meta, frame_ms=25, hop_ms=25).collect()
-    }
-    assert plan == {(r.frame_idx, r.start_ms) for r in out}
-
-
-def test_audio_frame_features_short_clip_yields_no_rows(spark):
-    """A clip shorter than one frame emits nothing — the same rule the
-    declarative audio_frames grid applies from metadata."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        audio_frame_features,
-        encode_wav_pcm16,
-    )
-
-    wav = encode_wav_pcm16(np.zeros(100, np.int16), 8000)  # 12 ms < 25 ms
-    media = _media_df(spark, [(1, wav)])
-    assert audio_frame_features(media, frame_ms=25, hop_ms=10).count() == 0
-
-
-def test_dhash64_deterministic_and_discriminative():
-    """Pure-kernel laws: equal images → equal hash; a horizontal
-    gradient and its mirror produce near-complementary difference bits
-    (large Hamming distance)."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import dhash64
-
-    grad = np.tile(np.arange(72, dtype=np.uint8) * 3, (64, 1))
-    img = np.stack([grad, grad, grad], axis=2)
-    a = dhash64(img)
-    assert a == dhash64(img.copy())
-    mirror = img[:, ::-1]
-    ham = bin((a ^ dhash64(mirror)) & ((1 << 64) - 1)).count("1")
-    assert ham >= 48  # every row's comparisons flip
-
-
-def test_dhash64_invariant_under_integer_nearest_upscale():
-    """The (i*src) div out grid makes dHash EXACTLY equal under an
-    integer-factor nearest upsample — the rescale robustness a
-    perceptual hash exists for, here deterministic rather than
-    approximate."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import dhash64
-
-    rng_vals = (np.arange(64 * 72 * 3, dtype=np.int64) * 37 % 256).astype(np.uint8)
-    img = rng_vals.reshape(64, 72, 3)
-    up = np.repeat(np.repeat(img, 2, axis=0), 2, axis=1)
-    assert dhash64(img) == dhash64(up)
-
-
-def test_image_neardup_pairs_end_to_end(spark):
-    """Content-aware image dedup on Spark: an upscaled re-encode pairs
-    with its source at hamming 0 (identical-fingerprint intra path), a
-    lightly-edited copy pairs within the Hamming budget (banded cross
-    path), and an unrelated image pairs with nothing."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        dhash64,
-        encode_pnm,
-        image_neardup_pairs,
-    )
-
-    grad = np.tile(np.arange(72, dtype=np.uint8) * 3, (64, 1))
-    base = np.stack([grad, grad, grad], axis=2)
-    upscaled = np.repeat(np.repeat(base, 2, axis=0), 2, axis=1)
-    edited = base.copy()
-    edited[:8, :9] = 255  # one corner cell of the 8x9 grid flips
-    ham_edit = bin(
-        (dhash64(base) ^ dhash64(edited)) & ((1 << 64) - 1)
-    ).count("1")
-    assert 1 <= ham_edit <= 3  # construction check: stays in budget
-    unrelated = base[:, ::-1]
-
-    media = _media_df(
-        spark,
-        [
-            (1, encode_pnm(base)),
-            (2, encode_pnm(upscaled)),
-            (3, encode_pnm(edited)),
-            (4, encode_pnm(unrelated)),
-            (5, b"\xff\xd8 not an image"),
-        ],
-    )
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in image_neardup_pairs(media, max_hamming=3).collect()
-    }
-    assert pairs[(1, 2)] == 0
-    assert pairs[(1, 3)] == ham_edit and pairs[(2, 3)] == ham_edit
-    assert not any(4 in p or 5 in p for p in pairs)
-
-
-def test_image_grid_embedding_feeds_ann_retrieval(spark):
-    """The real image embedding bridges decode → ANN: unit-norm
-    vectors, exact invariance under integer nearest upscaling, and
-    brute-force cosine top-k retrieves the rescaled copy of a query
-    image at score ~1.0 ahead of unrelated images; an all-black image
-    embeds as the zero vector (no NaNs)."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        encode_pnm,
-        image_grid_embedding,
-    )
-    from financial_market_data_analysis_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
-    grad = np.tile(np.arange(72, dtype=np.uint8) * 3, (64, 1))
-    base = np.stack([grad, grad, grad], axis=2)
-    upscaled = np.repeat(np.repeat(base, 2, axis=0), 2, axis=1)
-    mirror = base[:, ::-1]
-    black = np.zeros((16, 16, 3), np.uint8)
-
-    media = _media_df(
-        spark,
-        [
-            (1, encode_pnm(base)),
-            (2, encode_pnm(upscaled)),
-            (3, encode_pnm(mirror)),
-            (4, encode_pnm(black)),
-        ],
-    )
-    emb = image_grid_embedding(media)
-    rows = {r.media_id: np.array(r.embedding) for r in emb.collect()}
-    assert all(len(v) == 64 for v in rows.values())
-    assert np.allclose(rows[1], rows[2])  # exact grid invariance
-    for mid in (1, 2, 3):
-        assert abs(float((rows[mid] ** 2).sum()) - 1.0) < 1e-6
-    assert (rows[4] == 0).all()
-
-    corpus = emb.filter(F.col("media_id") != 1).withColumnRenamed(
-        "media_id", "vec_id"
-    )
-    queries = emb.filter(F.col("media_id") == 1).withColumnRenamed(
-        "media_id", "query_id"
-    )
-    top = brute_force_topk(corpus, queries, k=2).collect()
-    best = min(top, key=lambda r: r.rank)
-    assert best.vec_id == 2 and best.cosine > 0.999999
-
-
-def test_decode_media_corrupt_decodable_formats_are_accounted_not_fatal(spark):
-    """Corrupt payloads OF decodable formats (bad RIFF body, truncated
-    netpbm raster, zero-dim header, NULL payload) are part of the
-    undecodable tail under strict=False — typed null-metric rows, not
-    a dead job. strict=True fail-fast raises on the same inputs."""
-    from financial_market_data_analysis_spark.operators.multimodal import decode_media
-
-    bad_wav = b"RIFF" + b"\x00" * 4 + b"WAVE" + b"garbage body"
-    truncated_pnm = b"P6\n100 100\n255\n" + b"\x00" * 10
-    zero_dim_pnm = b"P6\n0 0\n255\n"
-    media = _media_df(
-        spark,
-        [
-            (1, bad_wav),
-            (2, truncated_pnm),
-            (3, zero_dim_pnm),
-            (4, None),
-            (5, _pnm_payload(2, 2, 3)),
-        ],
-    )
-    rows = {r.media_id: r for r in decode_media(media, strict=False).collect()}
-    assert rows[1].format == "wav" and rows[1].features is None
-    assert rows[2].format == "pnm" and rows[2].features is None
-    assert rows[3].format == "pnm" and rows[3].features is None
-    assert rows[4].format == "unknown" and rows[4].features is None
-    assert rows[5].features is not None
-    with pytest.raises(Exception):
-        decode_media(media, strict=True).collect()
-
-
-def test_image_and_audio_kernels_skip_in_format_bad_payloads(spark):
-    """image_dhash / resize_images / image_grid_embedding /
-    audio_frame_features SKIP corrupt, 16-bit, and zero-dim payloads
-    of their own format instead of failing the stage — one bad file in
-    a 100 TB corpus must not kill the job."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        audio_frame_features,
-        encode_pnm,
-        image_dhash,
-        image_grid_embedding,
-        resize_images,
-    )
-
-    sixteen_bit = b"P5\n2 2\n65535\n" + b"\x00" * 8
-    truncated = b"P6\n100 100\n255\n" + b"\x00" * 5
-    zero_dim = b"P6\n0 3\n255\n"
-    good = encode_pnm(np.full((4, 4, 3), 9, np.uint8))
-    bad_wav = b"RIFF" + b"\x00" * 4 + b"WAVE" + b"junk"
-    good_wav = _wav_payload(n_frames=400, sr=8000)  # 50 ms ≥ one frame
-    media = _media_df(
-        spark,
-        [
-            (1, sixteen_bit),
-            (2, truncated),
-            (3, zero_dim),
-            (4, good),
-            (5, bad_wav),
-            (6, good_wav),
-        ],
-    )
-    assert [r.media_id for r in image_dhash(media).collect()] == [4]
-    assert [r.media_id for r in resize_images(media).collect()] == [4]
-    assert [r.media_id for r in image_grid_embedding(media).collect()] == [4]
-    frames = audio_frame_features(media, frame_ms=25, hop_ms=25).collect()
-    assert {r.media_id for r in frames} == {6}
-
-
-def test_long_hash_joiner_ignores_null_fingerprints_and_rejects_one_band(spark):
-    """NULL fingerprints never pair (they are undecodable media, not
-    exact dups of each other), and n_bands=1 is rejected up front (a
-    64-bit band mask does not fit a LongType literal)."""
-    from financial_market_data_analysis_spark.operators.dedup import (
-        long_hash_neardup_pairs,
-    )
-
-    hashes = spark.createDataFrame(
-        [(1, None), (2, None), (3, 5), (4, 5)], "media_id long, dhash long"
-    )
-    pairs = {(r.id_a, r.id_b) for r in long_hash_neardup_pairs(hashes).collect()}
-    assert pairs == {(3, 4)}
-    with pytest.raises(ValueError, match="63-bit"):
-        long_hash_neardup_pairs(hashes, n_bands=1, max_hamming=0)
-
-
-def test_resize_images_replicates_plan_zero_dim_filter(spark):
-    """resize_geometry filters width>0 AND height>0; the real kernel
-    must drop the same rows so the row-for-row parity pin holds even
-    when degenerate headers reach it."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        encode_pnm,
-        letterbox_resize,
-        resize_images,
-    )
-
-    media = _media_df(
-        spark,
-        [(1, b"P6\n5 0\n255\n"), (2, encode_pnm(np.full((2, 2, 3), 1, np.uint8)))],
-    )
-    assert [r.media_id for r in resize_images(media).collect()] == [2]
-    with pytest.raises(ValueError, match="zero-dimension"):
-        letterbox_resize(np.zeros((0, 5, 3), np.uint8))
-
-
-def test_bmp_decode_and_format_invariant_content_hash(spark):
-    """24-bit BMP decodes for real (bottom-up padded rows, BGR→RGB) and
-    the SAME pixels produce the SAME dHash whether they arrive as
-    netpbm or BMP — content-aware dedup pairs a re-encoded copy across
-    container formats. Palettized/compressed BMPs are the accounted
-    boundary tail; zero-dim and truncated BMPs are skipped by the
-    image kernels."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        decode_media,
-        encode_bmp,
-        encode_pnm,
-        image_neardup_pairs,
-    )
-
-    img = (np.arange(6 * 9 * 3, dtype=np.int64) * 13 % 256).astype(np.uint8).reshape(6, 9, 3)
-    eight_bit_bmp = (
-        b"BM" + (54).to_bytes(4, "little") + b"\x00" * 4 + (54).to_bytes(4, "little")
-        + (40).to_bytes(4, "little") + (2).to_bytes(4, "little", signed=True)
-        + (2).to_bytes(4, "little", signed=True) + (1).to_bytes(2, "little")
-        + (8).to_bytes(2, "little") + b"\x00" * 24
-    )
-    media = _media_df(
-        spark,
-        [
-            (1, encode_pnm(img)),
-            (2, encode_bmp(img)),
-            (3, eight_bit_bmp),
-            (4, b"BM" + b"\x00" * 10),  # truncated header
-        ],
-    )
-    rows = {r.media_id: r for r in decode_media(media).collect()}
-    assert rows[1].format == "pnm" and rows[2].format == "bmp"
-    assert (rows[2].width, rows[2].height, rows[2].channels) == (9, 6, 3)
-    # identical pixels → identical image features regardless of container
-    assert rows[1].features == rows[2].features
-    assert rows[3].format == "bmp" and rows[3].features is None  # 8-bit boundary
-    # a 12-byte 'BM' blob is not structurally a BMP — the sniff demands
-    # a full header with a known DIB size, so it lands in 'unknown'
-    assert rows[4].format == "unknown" and rows[4].features is None
-
-    pairs = {
-        (r.id_a, r.id_b): r.hamming for r in image_neardup_pairs(media).collect()
-    }
-    assert pairs == {(1, 2): 0}  # cross-format exact dup, bad BMPs skipped

@@ -1680,32 +1680,3 @@ def test_x81_pack_boundary_cut_condition_cross_engine(spark, duck):
         assert by[(b, "zero_tokens_on_boundary")] == 0
         assert by[(b, "exactly_fills_pack")] == 0
         assert by[(b, "last_token_spills")] == 1
-
-
-def test_long_hash_joiner_collapses_identical_fingerprints(spark):
-    """Scale shape of the generic Hamming joiner: a large group sharing
-    ONE fingerprint contributes exactly its C(n,2) member pairs at
-    hamming 0 (the row-local intra expand — the band self-join runs at
-    DISTINCT-fingerprint granularity, so the hot group enters it as a
-    single row, not quadratically), and near/far fingerprints pair per
-    the Hamming budget. Output is the exact expected pair multiset."""
-    from pyspark.sql import functions as F
-
-    from financial_market_data_analysis_spark.operators.dedup import (
-        long_hash_neardup_pairs,
-    )
-
-    base = 0x0123456789ABCDEF
-    near = base ^ (1 << 7)  # hamming 1
-    far = base ^ ((1 << 40) - 1)  # hamming 40, banding may or may not
-    rows = [(i, base) for i in range(40)]
-    rows += [(100 + i, near) for i in range(3)]
-    rows += [(200, far)]
-    hashes = spark.createDataFrame(rows, "media_id long, dhash long")
-    out = long_hash_neardup_pairs(hashes, max_hamming=3)
-    by_ham = {
-        r.hamming: r.n for r in out.groupBy("hamming").agg(F.count("*").alias("n")).collect()
-    }
-    # 40 choose 2 + 3 choose 2 identical pairs; 40*3 cross pairs at hamming 1
-    assert by_ham == {0: 780 + 3, 1: 120}
-    assert out.filter((F.col("id_a") == 200) | (F.col("id_b") == 200)).count() == 0

@@ -10,10 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from financial_market_data_analysis_spark.functions.schemas import (
-    FEED_SCHEMAS,
-    warehouse_ddl,
-)
+from financial_market_data_analysis_spark.functions.schemas import FEED_SCHEMAS
 from financial_market_data_analysis_spark.sources.batch import load_table
 from financial_market_data_analysis_spark.sources.kafka import json_decode_flatten
 from financial_market_data_analysis_spark.streaming import pipeline as P
@@ -74,14 +71,6 @@ def test_json_decode_flatten(spark, feed):
         assert row["bid_0"] == 100.0 and row["ask_6_size"] == 26
     if feed == "cot":
         assert row["leveraged_short_open_int"] == pytest.approx(0.8)
-
-
-def test_warehouse_ddl_single_source():
-    schemas = {name: FEED_SCHEMAS[name]() for name in ("vix", "volume", "deep")}
-    ddl = warehouse_ddl("stock_data_joined", schemas)
-    assert "bid_6_size INT" in ddl
-    assert "vix FLOAT" in ddl
-    assert ddl.count("FLOAT") + ddl.count("INT") > 20
 
 
 def _two_feeds(spark):
@@ -645,38 +634,6 @@ def test_clean_quarantining_batch_writes_drift_but_no_quarantine_epoch(
     assert not os.path.isdir(quar_dir) or _epoch_dirs(quar_dir) == []
 
 
-def test_compact_warehouse_folds_epoch_dirs(spark, tmp_path):
-    """The compaction job collapses the idempotent sink's per-epoch
-    partitions into plain layout: identical rows, no epoch column,
-    fewer files."""
-    deep, _ = _two_feeds(spark)
-    bars = (
-        deep.select("deep_ts", F.col("deep_val").alias("close"))
-        .orderBy("deep_ts").limit(24).localCheckpoint(eager=True)
-    )
-    wh = str(tmp_path / "wh")
-    write = P.epoch_idempotent_writer(wh)
-    c0 = bars.orderBy("deep_ts").limit(8).localCheckpoint(eager=True)
-    c1 = bars.subtract(c0).orderBy("deep_ts").limit(8).localCheckpoint(eager=True)
-    c2 = bars.subtract(c0.union(c1))
-    for e, chunk in enumerate((c0, c1, c2)):
-        write(chunk, e)
-    assert spark.read.parquet(wh).select("epoch_id").distinct().count() == 3
-
-    dest = str(tmp_path / "wh_compact")
-    n = P.compact_warehouse(spark, wh, dest, target_files=1)
-    out = spark.read.parquet(dest)
-    assert n == 24 and out.count() == 24
-    assert "epoch_id" not in out.columns
-    assert len(out.inputFiles()) < len(spark.read.parquet(wh).inputFiles())
-    assert out.select("deep_ts").exceptAll(bars.select("deep_ts")).count() == 0
-
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="dest_path"):
-        P.compact_warehouse(spark, wh, wh)
-
-
 def test_sliding_window_agg_streaming_parity(spark, tmp_path):
     """T3 — the sliding-window aggregate run as an ACTUAL streaming
     query (watermark upstream, append mode): every finalized window the
@@ -914,48 +871,6 @@ def test_five_feed_pipeline_end_to_end(spark, tmp_path):
     row = out.orderBy("deep_ts").first()
     assert row["vix"] == pytest.approx(13.5)
     assert row["asset_long_pos"] == 1
-
-
-def test_stateful_moving_average_matches_batch(spark, tmp_path):
-    """T9 single-pass path: the applyInPandasWithState moving average,
-    fed two time-ordered micro-batches, must equal the batch
-    partitioned window MA row for row — state carries exactly the
-    period-1 tail across the batch boundary."""
-    from financial_market_data_analysis_spark.operators.windows import moving_average
-
-    ev = load_table(spark, "events", SF_SMOKE).select(
-        F.col("event_type").alias("symbol"), "ts",
-        F.col("value").alias("close"),
-    )
-    cut = ev.agg(F.percentile_approx("ts", 0.5)).first()[0]
-    src = str(tmp_path / "sma_src")
-    ev.filter(F.col("ts") <= cut).coalesce(1).write.mode("append").parquet(src)
-    ev.filter(F.col("ts") > cut).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out = P.stateful_moving_average(stream, ("symbol",), "ts", "close", period=6)
-    q = (
-        out.writeStream.format("memory").queryName("sma_out")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-
-    got = spark.sql("SELECT * FROM sma_out")
-    expected = moving_average(
-        ev, "close", (6,), ["ts"], partition_cols=["symbol"], prefix="close"
-    )
-    assert got.count() == ev.count()
-    j = got.alias("g").join(
-        expected.alias("e"), ["symbol", "ts"]
-    ).select("g.close_MA6", "e.close_MA6")
-    rows = j.collect()
-    assert len(rows) == ev.count()
-    for r in rows:
-        assert abs(r[0] - r[1]) < 1e-9
 
 
 def test_stateful_indicator_suite_matches_batch(spark, tmp_path):
@@ -1952,60 +1867,6 @@ def test_stateful_sessionize_merges_sessions_across_cut(spark, tmp_path):
         (1, 50 * m, 3, 20 * m),   # session B MERGED across the cut
         (2, 0, 1, 0),             # user 2's first session
     ]
-
-
-def test_stream_binary_files_decode_pipeline(spark, tmp_path):
-    """Streaming media ingest end-to-end: binaryFile stream →
-    decode_media (stateless mapInPandas inside the streaming query) →
-    parquet sink. The checkpoint gives exactly-once file tracking: a
-    second availableNow run over the same checkpoint picks up ONLY the
-    file added in between."""
-    import numpy as np
-
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        decode_media,
-        encode_pnm,
-        encode_wav_pcm16,
-    )
-    from financial_market_data_analysis_spark.sources.files import (
-        stream_binary_files,
-    )
-
-    drop = tmp_path / "drop"
-    drop.mkdir()
-    out = str(tmp_path / "out")
-    cp = str(tmp_path / "cp")
-    (drop / "a.ppm").write_bytes(encode_pnm(np.full((4, 6, 3), 7, np.uint8)))
-    (drop / "b.wav").write_bytes(
-        encode_wav_pcm16(np.zeros(800, np.int16), 8000)
-    )
-    (drop / "c.png").write_bytes(b"\x89PNG\r\n\x1a\n" + b"\x00" * 16)
-
-    def run_epoch():
-        q = (
-            decode_media(stream_binary_files(spark, str(drop)))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", cp)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-
-    run_epoch()
-    first = spark.read.parquet(out)
-    by_fmt = {r.format: r.cnt for r in first.groupBy("format").agg(F.count("*").alias("cnt")).collect()}
-    assert by_fmt == {"pnm": 1, "wav": 1, "png": 1}
-    pnm = first.filter(F.col("format") == "pnm").collect()[0]
-    assert (pnm.width, pnm.height, pnm.channels) == (6, 4, 3)
-    assert first.filter(F.col("format") == "png").collect()[0].features is None
-
-    # incremental pickup: only the new file is processed by epoch 2
-    (drop / "d.ppm").write_bytes(encode_pnm(np.full((2, 2, 1), 3, np.uint8)))
-    run_epoch()
-    second = spark.read.parquet(out)
-    assert second.count() == 4
-    assert second.filter(F.col("format") == "pnm").count() == 2
 
 
 # ---------------------------------------------------------------------------
