@@ -19,6 +19,7 @@ from pyspark.sql import Window as SW
 from pyspark.sql import functions as F
 
 from financial_market_data_analysis_spark.functions import features as FE
+from financial_market_data_analysis_spark.functions.core import with_sql
 from financial_market_data_analysis_spark.functions.text import (
     bigram_logprob_sql,
     bpe_encode_sql,
@@ -42,10 +43,7 @@ from financial_market_data_analysis_spark.operators import dedup as D
 from financial_market_data_analysis_spark.operators import sketches as SK
 from financial_market_data_analysis_spark.operators import windows as W
 from financial_market_data_analysis_spark.operators.joins import asof_band_join
-from financial_market_data_analysis_spark.plans.book import (
-    book_from_events,
-    book_oracle_cte,
-)
+from financial_market_data_analysis_spark.plans.book import book_oracle_cte, book_sql
 from financial_market_data_analysis_spark.plans.candles import (
     candles_from_events,
     candles_multires,
@@ -113,44 +111,46 @@ def _candles_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _w1_vol_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1 — volume moving averages MA6/MA20 (the vol_MA view)."""
-    df = W.moving_average(_candles(spark, sf_dir), "volume", (6, 20), _ORDER, prefix="vol")
+    ma = W.moving_average_sql("volume", (6, 20), _ORDER, prefix="vol")
+    df = with_sql(_candles(spark, sf_dir), ma)
     return df.select("bucket_start", "volume", "vol_MA6", "vol_MA20")
 
 
 def _w2_price_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 — close-price MA20 (the price_MA view)."""
-    df = W.moving_average(_candles(spark, sf_dir), "close", (20,), _ORDER, prefix="price")
+    ma = W.moving_average_sql("close", (20,), _ORDER, prefix="price")
+    df = with_sql(_candles(spark, sf_dir), ma)
     return df.select("bucket_start", "close", "price_MA20")
 
 
 def _w4_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W4 — Bollinger band distances via stddev_pop (bollinger_bands view)."""
-    df = W.bollinger_bands(_candles(spark, sf_dir), "close", _ORDER)
+    df = with_sql(_candles(spark, sf_dir), W.bollinger_bands_sql("close", _ORDER))
     return df.select("bucket_start", "close", "upper_BB_dist", "lower_BB_dist")
 
 
 def _w5_stochastic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W5 — stochastic oscillator over a 15-row frame (stochastic_oscillator view)."""
-    df = W.stochastic_oscillator(_candles(spark, sf_dir), "close", _ORDER)
+    df = with_sql(_candles(spark, sf_dir), {"stoch": W.stochastic_oscillator_sql("close", _ORDER)})
     return df.select("bucket_start", "close", "stoch")
 
 
 def _w6_price_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W6 — LAG-based price change percentage (price_change view)."""
-    df = W.price_change(_candles(spark, sf_dir), "close", _ORDER)
+    df = with_sql(_candles(spark, sf_dir), {"price_change": W.price_change_sql("close", _ORDER)})
     return df.select("bucket_start", "close", "price_change")
 
 
 def _w7_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W7 — average true range over a 15-row frame (ATR view)."""
-    df = W.average_true_range(_candles(spark, sf_dir), "high", "low", _ORDER)
+    df = with_sql(_candles(spark, sf_dir), {"ATR": W.average_true_range_sql("high", "low", _ORDER)})
     return df.select("bucket_start", "high", "low", "ATR")
 
 
 def _w8_targets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W8 — LEAD-derived binary prediction targets x4 (target view)."""
-    df = W.average_true_range(_candles(spark, sf_dir), "high", "low", _ORDER)
-    df = W.forward_targets(df, "close", "ATR", _ORDER)
+    df = with_sql(_candles(spark, sf_dir), {"ATR": W.average_true_range_sql("high", "low", _ORDER)})
+    df = with_sql(df, W.forward_targets_sql("close", "ATR", _ORDER))
     return df.select("bucket_start", "close", "up1", "down1", "up2", "down2")
 
 
@@ -158,12 +158,13 @@ def _w3_delta_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W3 — the ``delta_MA`` view (create_database.py:106-118, period 12
     from config.py:42): order-flow delta (F4) per 5-minute bucket, then
     its 12-row moving average."""
-    book = book_from_events(load_table(spark, "events", sf_dir))
+    ev = load_table(spark, "events", sf_dir).select("event_id", "ts", "ts_us", "user_id", "value")
+    book = with_sql(ev, book_sql())
     d = FE.delta_indicator(book)
     per_bucket = d.groupBy(
         time_bucket_us("ts_us").alias("bucket_start")
     ).agg(F.avg("delta").alias("delta"))
-    out = W.moving_average(per_bucket, "delta", (12,), _ORDER, prefix="delta")
+    out = with_sql(per_bucket, W.moving_average_sql("delta", (12,), _ORDER, prefix="delta"))
     return out.select("bucket_start", "delta", "delta_MA12")
 
 
@@ -215,13 +216,14 @@ def _t4_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _f1_wick(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 — candle wick percentage features."""
-    df = FE.wick_features(_candles(spark, sf_dir))
+    df = with_sql(_candles(spark, sf_dir), FE.wick_sql())
     return df.select("bucket_start", "open", "close", "candle_size", "wick_size", "wick_prct")
 
 
 def _f2_book_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2-F6 over the synthetic 7-level book, then fillna(0) (P4)."""
-    book = book_from_events(load_table(spark, "events", sf_dir))
+    ev = load_table(spark, "events", sf_dir).select("event_id", "ts", "ts_us", "user_id", "value")
+    book = with_sql(ev, book_sql())
     df = FE.book_weighted_average(book, "bid")
     df = FE.book_weighted_average(df, "ask")
     df = FE.order_volume_imbalance(df)
@@ -237,7 +239,8 @@ def _f2_book_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _f7_relative_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7 — order-book price levels relative to the best price."""
-    book = book_from_events(load_table(spark, "events", sf_dir))
+    ev = load_table(spark, "events", sf_dir).select("event_id", "ts", "ts_us", "user_id", "value")
+    book = with_sql(ev, book_sql())
     df = FE.relative_price_levels(book)
     return df.select(
         "event_id",
@@ -249,7 +252,7 @@ def _f7_relative_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _f8_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8/F9 — calendar features with manual one-hot encoding."""
     ev = load_table(spark, "events", sf_dir)
-    df = FE.one_hot_calendar(FE.calendar_features(ev))
+    df = with_sql(with_sql(ev, FE.calendar_sql()), FE.one_hot_calendar_sql())
     return df.select(
         "event_id", "day_of_week", "week_of_month", "session_start",
         "day_1", "day_2", "day_3", "day_4",
@@ -918,17 +921,16 @@ def _a14_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     story: ONE Expand (two projections per row) into a
     partial-aggregatable hash aggregate — one scan, one shuffle, not
     one query per marginal."""
-    d = load_table(spark, "documents", sf_dir)
-    d.createOrReplaceTempView("a14_docs")
     return spark.sql(
         """
         SELECT lang, source,
                count(*) AS n_docs,
                sum(n_chars) AS sum_chars,
                CAST(grouping_id() AS INT) AS gid
-        FROM a14_docs
+        FROM {docs}
         GROUP BY GROUPING SETS ((lang), (source))
-        """
+        """,
+        docs=load_table(spark, "documents", sf_dir),
     )
 
 
@@ -6833,7 +6835,7 @@ def _w19_keltner(spark: SparkSession, sf_dir: str) -> DataFrame:
     on both sides (the ATR frame, 15 rows, is already full there)."""
     c = _candles(spark, sf_dir)
     c = W.rolling_ewma(c, "close", _ORDER, period=20, out_col="kmid")
-    c = W.average_true_range(c, "high", "low", _ORDER, out_col="katr")
+    c = with_sql(c, {"katr": W.average_true_range_sql("high", "low", _ORDER)})
     return c.filter(F.col("kmid").isNotNull()).select(
         "bucket_start",
         "close",

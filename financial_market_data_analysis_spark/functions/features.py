@@ -23,43 +23,27 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from financial_market_data_analysis_spark.functions.core import safe_div, with_sql
+from financial_market_data_analysis_spark.functions.schemas import ASK_LEVELS, BID_LEVELS
 
 
 # ---------------------------------------------------------------------------
 # F1 — candle wick
 
 
-def wick_sql(
-    open_col: str = "open",
-    high_col: str = "high",
-    low_col: str = "low",
-    close_col: str = "close",
-) -> dict[str, str]:
+def wick_sql() -> dict[str, str]:
     """F1 — candle/wick geometry (spark_consumer.py:186-193).
 
     ``candle_size = high - low``; wick measured from close toward the
     extreme on the candle's direction; doji (high == low) → NULL ratio
     (division by zero), to be zero-filled downstream.
     """
-    o, h, lo, c = open_col, high_col, low_col, close_col
-    candle = f"{h} - {lo}"
-    wick = f"CASE WHEN {c} >= {o} THEN {h} - {c} ELSE {lo} - {c} END"
+    candle = "high - low"
+    wick = "CASE WHEN close >= open THEN high - close ELSE low - close END"
     return {
         "candle_size": candle,
         "wick_size": wick,
         "wick_prct": f"try_divide({wick}, {candle})",
     }
-
-
-def wick_features(
-    df: DataFrame,
-    open_col: str = "open",
-    high_col: str = "high",
-    low_col: str = "low",
-    close_col: str = "close",
-) -> DataFrame:
-    """F1 — ``wick_sql`` applied."""
-    return with_sql(df, wick_sql(open_col, high_col, low_col, close_col))
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +59,7 @@ def _guarded_sum(terms) -> str:
     return " + ".join(f"coalesce({t}, 0)" for t in terms)
 
 
-def book_weighted_average_sql(side: str, levels: int = 7) -> str:
+def book_weighted_average_sql(side: str) -> str:
     """F2 — size-weighted average distance from the best price for one
     book side: ``Σᵢ (best − pᵢ)·sizeᵢ / Σᵢ sizeᵢ`` with null-guarded
     terms (spark_consumer.py:320-340). ``side`` is ``"bid"``/``"ask"``;
@@ -92,19 +76,14 @@ def book_weighted_average_sql(side: str, levels: int = 7) -> str:
     reference behavior is a bug its synthetic feeds never hit), kept
     consistent with the oracle's ``COALESCE((best − pᵢ)·sizeᵢ, 0)``.
     """
-    num = _guarded_sum(f"({side}_0 - {side}_{i}) * {side}_{i}_size" for i in range(levels))
-    den = _guarded_sum(f"{side}_{i}_size" for i in range(levels))
+    num = _guarded_sum(f"({side}_0 - {side}_{i}) * {side}_{i}_size" for i in range(BID_LEVELS))
+    den = _guarded_sum(f"{side}_{i}_size" for i in range(BID_LEVELS))
     return f"try_divide({num}, {den})"
 
 
-def book_weighted_average(
-    df: DataFrame,
-    side: str,
-    levels: int = 7,
-    out_col: str | None = None,
-) -> DataFrame:
+def book_weighted_average(df: DataFrame, side: str) -> DataFrame:
     """F2 — ``book_weighted_average_sql`` applied as ``{side}s_ord_WA``."""
-    return with_sql(df, {out_col or f"{side}s_ord_WA": book_weighted_average_sql(side, levels)})
+    return with_sql(df, {f"{side}s_ord_WA": book_weighted_average_sql(side)})
 
 
 def order_volume_imbalance_sql() -> str:
@@ -113,24 +92,22 @@ def order_volume_imbalance_sql() -> str:
     return "try_divide(bid_0_size - ask_0_size, bid_0_size + ask_0_size)"
 
 
-def order_volume_imbalance(
-    df: DataFrame, out_col: str = "vol_imbalance"
-) -> DataFrame:
+def order_volume_imbalance(df: DataFrame) -> DataFrame:
     """F3 — ``order_volume_imbalance_sql`` applied."""
-    return with_sql(df, {out_col: order_volume_imbalance_sql()})
+    return with_sql(df, {"vol_imbalance": order_volume_imbalance_sql()})
 
 
-def delta_indicator_sql(levels: int = 7) -> str:
+def delta_indicator_sql() -> str:
     """F4 — ``Σ ask sizes − Σ bid sizes`` (orientation preserved,
     spark_consumer.py:349-353)."""
-    asks = _guarded_sum(f"ask_{i}_size" for i in range(levels))
-    bids = _guarded_sum(f"bid_{i}_size" for i in range(levels))
+    asks = _guarded_sum(f"ask_{i}_size" for i in range(ASK_LEVELS))
+    bids = _guarded_sum(f"bid_{i}_size" for i in range(BID_LEVELS))
     return f"({asks}) - ({bids})"
 
 
-def delta_indicator(df: DataFrame, levels: int = 7, out_col: str = "delta") -> DataFrame:
+def delta_indicator(df: DataFrame) -> DataFrame:
     """F4 — ``delta_indicator_sql`` applied."""
-    return with_sql(df, {out_col: delta_indicator_sql(levels)})
+    return with_sql(df, {"delta": delta_indicator_sql()})
 
 
 def micro_price_sql() -> str:
@@ -140,9 +117,9 @@ def micro_price_sql() -> str:
     return f"{imb} * ask_0 + (1 - {imb}) * bid_0"
 
 
-def micro_price(df: DataFrame, out_col: str = "micro_price") -> DataFrame:
+def micro_price(df: DataFrame) -> DataFrame:
     """F5 — ``micro_price_sql`` applied."""
-    return with_sql(df, {out_col: micro_price_sql()})
+    return with_sql(df, {"micro_price": micro_price_sql()})
 
 
 def bid_ask_spread_sql() -> str:
@@ -152,12 +129,12 @@ def bid_ask_spread_sql() -> str:
     return "CASE WHEN bid_0 <> 0 AND ask_0 <> 0 THEN bid_0 - ask_0 ELSE 0.0D END"
 
 
-def bid_ask_spread(df: DataFrame, out_col: str = "spread") -> DataFrame:
+def bid_ask_spread(df: DataFrame) -> DataFrame:
     """F6 — ``bid_ask_spread_sql`` applied."""
-    return with_sql(df, {out_col: bid_ask_spread_sql()})
+    return with_sql(df, {"spread": bid_ask_spread_sql()})
 
 
-def relative_price_levels_sql(levels: int = 7) -> dict[str, str]:
+def relative_price_levels_sql() -> dict[str, str]:
     """F7 — depth prices relative to the best level: ``ask_i ← ask₀ −
     ask_i`` (and bids), 0-guarded (spark_consumer.py:370-400). Each value
     replaces its own input column, so a caller that keeps the inputs
@@ -165,23 +142,23 @@ def relative_price_levels_sql(levels: int = 7) -> dict[str, str]:
     return {
         f"{side}_{i}": f"CASE WHEN {side}_{i} <> 0 THEN {side}_0 - {side}_{i} ELSE 0.0D END"
         for side in ("bid", "ask")
-        for i in range(1, levels)
+        for i in range(1, BID_LEVELS)
     }
 
 
-def relative_price_levels(df: DataFrame, levels: int = 7) -> DataFrame:
+def relative_price_levels(df: DataFrame) -> DataFrame:
     """F7 — ``relative_price_levels_sql`` applied in place; the level-0
     prices are dropped afterwards (always 0). The reference's
     temp-column/drop/rename dance collapses into one ``withColumns``
     map."""
-    return with_sql(df, relative_price_levels_sql(levels)).drop("bid_0", "ask_0")
+    return with_sql(df, relative_price_levels_sql()).drop("bid_0", "ask_0")
 
 
 # ---------------------------------------------------------------------------
 # F8/F9 — calendar features + manual one-hot
 
 
-def calendar_sql(ts: str = "ts", strict_reference_semantics: bool = True) -> dict[str, str]:
+def calendar_sql(ts: str = "ts") -> dict[str, str]:
     """F8 — day-of-week (Monday=1, the reference's ``date_format(u)``
     convention), week-of-month (``ceil(day/7)``), and the session-start
     flag (spark_consumer.py:402-415). ``ts`` is any timestamp-valued SQL
@@ -190,21 +167,11 @@ def calendar_sql(ts: str = "ts", strict_reference_semantics: bool = True) -> dic
     Spark 3+ rejects the legacy ``u``/``W`` datetime patterns; the same
     values come from ``weekday()+1`` and ``ceil(dayofmonth/7)``.
 
-    ``strict_reference_semantics`` (SURVEY.md §7.5 — the promised v2
-    toggle; default True because every oracle and the driver contract
-    compare against reference behavior):
-
-    * True — the reference's quirky session logic verbatim:
-      ``hour ≥ 11 AND minute ≥ 30 → 0 else 1``, which calls e.g. 12:15
-      a session start because its minute is below 30.
-    * False — the evidently intended comparison, *time-of-day ≥ 11:30*
-      (``hour > 11 OR (hour = 11 AND minute ≥ 30) → 0``): 12:15 is no
-      longer a session start; 11:00-11:29 still is.
+    The session logic is the reference's verbatim, because every oracle
+    compares against reference behaviour (SURVEY.md §7.5): ``hour ≥ 11 AND minute ≥ 30 → 0 else 1``, which
+    calls e.g. 12:15 a session start because its minute is below 30.
     """
-    if strict_reference_semantics:
-        late = f"hour({ts}) >= 11 AND minute({ts}) >= 30"
-    else:
-        late = f"hour({ts}) > 11 OR (hour({ts}) = 11 AND minute({ts}) >= 30)"
+    late = f"hour({ts}) >= 11 AND minute({ts}) >= 30"
     return {
         "day_of_week": f"CAST(weekday({ts}) + 1 AS INT)",
         "week_of_month": f"CAST(ceil(dayofmonth({ts}) / 7) AS INT)",
@@ -212,46 +179,22 @@ def calendar_sql(ts: str = "ts", strict_reference_semantics: bool = True) -> dic
     }
 
 
-def calendar_features(
-    df: DataFrame, ts_col: str = "ts", strict_reference_semantics: bool = True
-) -> DataFrame:
-    """F8 — ``calendar_sql`` applied to the ``ts_col`` column."""
-    return with_sql(df, calendar_sql(ts_col, strict_reference_semantics))
-
-
-def one_hot_calendar_sql(strict_reference_semantics: bool = True) -> dict[str, str]:
+def one_hot_calendar_sql() -> dict[str, str]:
     """F9 — manual one-hot of day (1-4; Friday = all-zeros baseline) and
-    week-of-month (spark_consumer.py:417-432).
-
-    ``strict_reference_semantics`` (SURVEY.md §7.5 v2 toggle):
-
-    * True — weeks one-hot as 1-4 only: a 5th calendar week collides
-      with the Friday-style all-zeros baseline (the reference quirk —
-      week 5 and week "none" are indistinguishable downstream).
-    * False — adds ``week_5``, so the all-zeros code means only the
-      deliberate dropped-category baseline.
-    """
+    week-of-month (spark_consumer.py:417-432). Weeks one-hot as 1-4
+    only, as in the reference: a 5th calendar week collides with the
+    Friday-style all-zeros baseline (SURVEY.md §7.5)."""
     cols = {f"day_{d}": f"CAST(day_of_week = {d} AS INT)" for d in range(1, 5)}
-    top_week = 5 if strict_reference_semantics else 6
-    for w in range(1, top_week):
+    for w in range(1, 5):
         cols[f"week_{w}"] = f"CAST(week_of_month = {w} AS INT)"
     return cols
-
-
-def one_hot_calendar(
-    df: DataFrame, strict_reference_semantics: bool = True
-) -> DataFrame:
-    """F9 — ``one_hot_calendar_sql`` applied."""
-    return with_sql(df, one_hot_calendar_sql(strict_reference_semantics))
 
 
 # ---------------------------------------------------------------------------
 # F13/A1 — min-max normalization
 
 
-def minmax_normalize(
-    df: DataFrame, cols: Sequence[str], suffix: str = "_norm"
-) -> DataFrame:
+def minmax_normalize(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """F13 + A1 — ``(x − min)/(max − min)`` with params computed over the
     frame (sql_pytorch_dataloader.py:93-144, 239).
 
@@ -267,7 +210,7 @@ def minmax_normalize(
     params = df.agg(*aggs)
     out = df.crossJoin(F.broadcast(params))
     norm = {
-        f"{c}{suffix}": safe_div(
+        f"{c}_norm": safe_div(
             F.col(c) - F.col(f"__min_{c}"), F.col(f"__max_{c}") - F.col(f"__min_{c}")
         )
         for c in cols

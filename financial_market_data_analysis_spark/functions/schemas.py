@@ -95,25 +95,25 @@ def cot_schema() -> StructType:
     return StructType(fields)
 
 
-def indicator_schema(events: tuple[str, ...] = INDICATOR_EVENTS) -> StructType:
+def indicator_schema() -> StructType:
     """spark_consumer.py:239-244 — one nested struct per calendar event."""
     fields = [StructField("ts", StringType())]
-    for ev in events:
+    for ev in INDICATOR_EVENTS:
         inner = [StructField(f"{ev}_{v}", FloatType()) for v in INDICATOR_VALUES]
         fields.append(StructField(ev, StructType(inner)))
     return StructType(fields)
 
 
-def deep_schema(bid_levels: int = BID_LEVELS, ask_levels: int = ASK_LEVELS) -> StructType:
+def deep_schema() -> StructType:
     """spark_consumer.py:281-291 — nested `bids_i.{bid_i, bid_i_size}`."""
     fields = [StructField("ts", StringType())]
-    for i in range(bid_levels):
+    for i in range(BID_LEVELS):
         inner = [
             StructField(f"bid_{i}", FloatType()),
             StructField(f"bid_{i}_size", IntegerType()),
         ]
         fields.append(StructField(f"bids_{i}", StructType(inner)))
-    for i in range(ask_levels):
+    for i in range(ASK_LEVELS):
         inner = [
             StructField(f"ask_{i}", FloatType()),
             StructField(f"ask_{i}_size", IntegerType()),
@@ -131,7 +131,7 @@ FEED_SCHEMAS = {
 }
 
 
-def flatten_projection(schema: StructType, ts_format: str = "yyyy-MM-dd HH:mm:ss") -> list[Column]:
+def flatten_projection(schema: StructType) -> list[Column]:
     """The post-parse flatten + timestamp parse the reference applies to
     every feed (spark_consumer.py:104-105, 175-176, ...): nested struct
     fields surface under their leaf names; the string ``ts`` becomes a
@@ -142,7 +142,7 @@ def flatten_projection(schema: StructType, ts_format: str = "yyyy-MM-dd HH:mm:ss
             for inner in f.dataType.fields:
                 cols.append(F.col(f"{f.name}.{inner.name}").alias(inner.name))
         elif f.name == "ts":
-            cols.append(F.to_timestamp(F.col("ts"), ts_format).alias("ts"))
+            cols.append(F.to_timestamp(F.col("ts"), "yyyy-MM-dd HH:mm:ss").alias("ts"))
         else:
             cols.append(F.col(f.name))
     return cols

@@ -37,8 +37,8 @@ def tokens(text_col: str | Column = "text") -> Column:
     return F.regexp_extract_all(F.lower(c), F.lit(TOKEN_PATTERN), 0)
 
 
-def token_count(text_col: str | Column = "text") -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
+def token_count() -> Column:
+    c = F.col("text")
     return F.regexp_count(F.lower(c), F.lit(TOKEN_PATTERN)).cast("int")
 
 
@@ -49,13 +49,13 @@ def _stopword_hits(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def text_stats(df: DataFrame) -> DataFrame:
     """Quality-scoring feature block: lengths, punctuation density,
     stopword ratio, mean token length."""
-    toks = tokens(text_col)
-    n_tok = token_count(text_col)
-    n_char = F.length(F.col(text_col)).cast("int")
-    punct = F.regexp_count(F.col(text_col), F.lit(PUNCT_PATTERN)).cast("int")
+    toks = tokens()
+    n_tok = token_count()
+    n_char = F.length(F.col("text")).cast("int")
+    punct = F.regexp_count(F.col("text"), F.lit(PUNCT_PATTERN)).cast("int")
     stop_en = _stopword_hits(toks, LANG_STOPWORDS["en"])
     return df.withColumns(
         {
@@ -84,7 +84,7 @@ QUALITY_MAX_MEAN_TOKEN_LEN = 8.0
 QUALITY_MAX_PUNCT_RATIO = 0.1
 
 
-def quality_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_filter(df: DataFrame) -> DataFrame:
     """The training-corpus cleaning step: compose the quality stats into
     keep/drop decisions with machine-readable reasons (the C4-style
     heuristic filter — too short, stopword-poor i.e. likely non-prose,
@@ -95,7 +95,7 @@ def quality_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
     passing rules), ``kept`` is its emptiness — both exactly
     reproducible in ANSI SQL for the oracle.
     """
-    s = text_stats(df, text_col)
+    s = text_stats(df)
     rules = [
         ("too_short", F.col("n_tokens") < QUALITY_MIN_TOKENS),
         ("low_stopword", F.col("stopword_ratio") < QUALITY_MIN_STOPWORD_RATIO),
@@ -147,10 +147,10 @@ def quality_filter_sql(src: str = "documents") -> str:
     """
 
 
-def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Stopword-hit language ID: argmax over per-language stopword
     occurrence counts, ties broken in LANG_STOPWORDS order."""
-    toks = tokens(text_col)
+    toks = tokens()
     counts = {lang: _stopword_hits(toks, words) for lang, words in LANG_STOPWORDS.items()}
     langs = list(counts)
     pred = F.lit(langs[-1])
@@ -162,17 +162,17 @@ def language_id(df: DataFrame, text_col: str = "text", out_col: str = "lang_pred
             c = counts[lang] >= lc
             cond = c if cond is None else (cond & c)
         pred = F.when(cond, F.lit(lang)).otherwise(pred)
-    return df.withColumn(out_col, pred)
+    return df.withColumn("lang_pred", pred)
 
 
-def fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Document fingerprints: ``fp_exact`` (md5 of raw text — exact-dup
     key) and ``fp_bag`` (md5 of the sorted distinct token bag —
     word-order-insensitive near-exact key)."""
-    toks = tokens(text_col)
+    toks = tokens()
     return df.withColumns(
         {
-            "fp_exact": F.md5(F.col(text_col).cast("binary")),
+            "fp_exact": F.md5(F.col("text").cast("binary")),
             "fp_bag": F.md5(
                 F.concat_ws(" ", F.array_sort(F.array_distinct(toks))).cast("binary")
             ),
@@ -194,7 +194,7 @@ def _char_codes(text_col: str | Column) -> Column:
     return F.transform(chars, lambda ch: F.ascii(ch).cast("bigint"))
 
 
-def rolling_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def rolling_fingerprint(df: DataFrame) -> DataFrame:
     """Rolling-hash document fingerprints (Rabin–Karp polynomial fold):
 
     - ``fp_roll`` — the whole-document rolling hash
@@ -212,7 +212,7 @@ def rolling_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     zero = F.lit(0).cast("bigint")
     # project codes once: the fold lambdas must reference a bound column,
     # not re-inline the split per element (same hazard as the shingle op)
-    tmp = df.withColumn("__codes", _char_codes(text_col))
+    tmp = df.withColumn("__codes", _char_codes("text"))
     codes_c = F.col("__codes")
     roll_c = F.aggregate(codes_c, zero, lambda a, x: (a * ROLL_BASE + x) % ROLL_MOD)
     ng_c = F.size(codes_c) - (WINNOW_K - 1)
@@ -227,13 +227,13 @@ def rolling_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return tmp.withColumns({"fp_roll": roll_c, "fp_winnow": winnow_c}).drop("__codes")
 
 
-def rolling_fp_sql(text_expr: str = "text") -> str:
+def rolling_fp_sql() -> str:
     """DuckDB twin of ``rolling_fingerprint`` — same integer recurrence
     via 2-arg ``list_reduce`` with a prepended 0 seed (DuckDB's reduce
     uses the first element as the accumulator seed)."""
     codes = (
-        f"list_transform(list_filter(string_split({text_expr}, ''), c -> c <> ''),"
-        f" c -> CAST(ascii(c) AS BIGINT))"
+        "list_transform(list_filter(string_split(text, ''), c -> c <> ''),"
+        " c -> CAST(ascii(c) AS BIGINT))"
     )
     fold = f"(a, b) -> (a * {ROLL_BASE} + b) % {ROLL_MOD}"
     roll = f"list_reduce(list_prepend(CAST(0 AS BIGINT), codes), {fold})"
@@ -323,15 +323,15 @@ def simhash32_long(
     return df.withColumn(out_col, sh)
 
 
-def simhash32(df: DataFrame, text_col: str = "text", out_col: str = "simhash") -> DataFrame:
+def simhash32(df: DataFrame) -> DataFrame:
     """32-bit SimHash as a bit string (the published x4 sketch form):
     the LONG sketch of :func:`simhash32_long` rendered once per doc —
     ``lpad(bin(v), 32)`` is exactly the MSB-first bit string the
     previous string fold produced, at the integer fold's cost."""
-    tmp = f"__{out_col}_long"
+    tmp = "__simhash_long"
     return (
-        simhash32_long(df, text_col, tmp)
-        .withColumn(out_col, F.lpad(F.bin(F.col(tmp)), 32, "0"))
+        simhash32_long(df, "text", tmp)
+        .withColumn("simhash", F.lpad(F.bin(F.col(tmp)), 32, "0"))
         .drop(tmp)
     )
 
@@ -395,9 +395,7 @@ SPLIT_VAL_BUCKETS = ("c", "d")
 SPLIT_TEST_BUCKETS = ("e", "f")
 
 
-def hash_split(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "split"
-) -> DataFrame:
+def hash_split(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Deterministic train/val/test assignment from a content-free hash
     of the document id: first hex digit of md5(id) → 16 buckets, split
     12/2/2 (75% train, 12.5% val, 12.5% test).
@@ -422,21 +420,21 @@ def hash_split(
         .when(bucket.isin(*SPLIT_TEST_BUCKETS), F.lit("test"))
         .otherwise(F.lit("train"))
     )
-    return df.withColumns({"bucket": bucket, out_col: split})
+    return df.withColumns({"bucket": bucket, "split": split})
 
 
-def hash_split_sql(id_expr: str = "doc_id", src: str = "documents") -> str:
+def hash_split_sql() -> str:
     val = ", ".join(f"'{b}'" for b in SPLIT_VAL_BUCKETS)
     test = ", ".join(f"'{b}'" for b in SPLIT_TEST_BUCKETS)
     return f"""
         SELECT doc_id,
-               substr(md5(CAST({id_expr} AS VARCHAR)), 1, 1) AS bucket,
-               CASE WHEN substr(md5(CAST({id_expr} AS VARCHAR)), 1, 1)
+               substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket,
+               CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
                          IN ({val}) THEN 'val'
-                    WHEN substr(md5(CAST({id_expr} AS VARCHAR)), 1, 1)
+                    WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)
                          IN ({test}) THEN 'test'
                     ELSE 'train' END AS split
-        FROM {src}
+        FROM documents
     """
 
 
@@ -447,7 +445,7 @@ EMAIL_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_PATTERN = r"\+[0-9]{2}-[0-9]{3}-[0-9]{4}"
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """PII detection + redaction: count email/phone matches and emit
     the md5 of the redacted text (emails → ``<EMAIL>``, phones →
     ``<PHONE>``). Returns (id, n_emails, n_phones, redacted_md5).
@@ -458,27 +456,27 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     a real pipeline would write the redacted text column itself
     (swap ``F.md5`` for the raw column), at identical cost shape.
     """
-    t = F.col(text_col)
+    t = F.col("text")
     redacted = F.regexp_replace(
         F.regexp_replace(t, EMAIL_PATTERN, "<EMAIL>"), PHONE_PATTERN, "<PHONE>"
     )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.regexp_count(t, F.lit(EMAIL_PATTERN)).cast("int").alias("n_emails"),
         F.regexp_count(t, F.lit(PHONE_PATTERN)).cast("int").alias("n_phones"),
         F.md5(redacted.cast("binary")).alias("redacted_md5"),
     )
 
 
-def pii_scrub_sql(src: str = "documents", text_expr: str = "text") -> str:
+def pii_scrub_sql(src: str = "documents") -> str:
     return f"""
         SELECT doc_id,
-            CAST(len(regexp_extract_all({text_expr}, '{EMAIL_PATTERN}')) AS INT)
+            CAST(len(regexp_extract_all(text, '{EMAIL_PATTERN}')) AS INT)
                 AS n_emails,
-            CAST(len(regexp_extract_all({text_expr}, '{PHONE_PATTERN}')) AS INT)
+            CAST(len(regexp_extract_all(text, '{PHONE_PATTERN}')) AS INT)
                 AS n_phones,
             md5(regexp_replace(
-                regexp_replace({text_expr}, '{EMAIL_PATTERN}', '<EMAIL>', 'g'),
+                regexp_replace(text, '{EMAIL_PATTERN}', '<EMAIL>', 'g'),
                 '{PHONE_PATTERN}', '<PHONE>', 'g')) AS redacted_md5
         FROM {src}
     """
@@ -514,13 +512,7 @@ def salted_id_key_sql(id_expr: str, salt: str) -> str:
     return f"md5(CAST({id_expr} AS VARCHAR) || '{salt}')"
 
 
-def stratified_hash_sample(
-    df: DataFrame,
-    strata_col: str = "lang",
-    id_col: str = "doc_id",
-    fractions: dict[str, float] | None = None,
-    default_fraction: float = SAMPLE_DEFAULT_FRACTION,
-) -> DataFrame:
+def stratified_hash_sample(df: DataFrame) -> DataFrame:
     """Deterministic per-stratum Bernoulli sampling by content-free id
     hash: a row survives iff the first 8 hex digits of md5(id) fall
     below its stratum's threshold. The canonical corpus-rebalancing op
@@ -540,34 +532,26 @@ def stratified_hash_sample(
     prefix is below f and thereby empty out the upper split buckets
     (val/test) entirely.
     """
-    fractions = SAMPLE_FRACTIONS if fractions is None else fractions
-    key = F.substring(salted_id_key(id_col, SAMPLE_SALT), 1, 8)
-    thr: Column = F.lit(_hex_threshold(default_fraction))
-    for stratum, frac in sorted(fractions.items()):
+    key = F.substring(salted_id_key("doc_id", SAMPLE_SALT), 1, 8)
+    thr: Column = F.lit(_hex_threshold(SAMPLE_DEFAULT_FRACTION))
+    for stratum, frac in sorted(SAMPLE_FRACTIONS.items()):
         thr = F.when(
-            F.col(strata_col) == stratum, F.lit(_hex_threshold(frac))
+            F.col("lang") == stratum, F.lit(_hex_threshold(frac))
         ).otherwise(thr)
     return df.withColumn("sample_key", key).filter(F.col("sample_key") < thr)
 
 
-def stratified_sample_sql(
-    strata_col: str = "lang",
-    id_expr: str = "doc_id",
-    src: str = "documents",
-    fractions: dict[str, float] | None = None,
-    default_fraction: float = SAMPLE_DEFAULT_FRACTION,
-) -> str:
-    fractions = SAMPLE_FRACTIONS if fractions is None else fractions
+def stratified_sample_sql() -> str:
     cases = " ".join(
         f"WHEN '{stratum}' THEN '{_hex_threshold(frac)}'"
-        for stratum, frac in sorted(fractions.items())
+        for stratum, frac in sorted(SAMPLE_FRACTIONS.items())
     )
-    thr = f"CASE {strata_col} {cases} ELSE '{_hex_threshold(default_fraction)}' END"
-    key = f"substr({salted_id_key_sql(id_expr, SAMPLE_SALT)}, 1, 8)"
+    thr = f"CASE lang {cases} ELSE '{_hex_threshold(SAMPLE_DEFAULT_FRACTION)}' END"
+    key = f"substr({salted_id_key_sql('doc_id', SAMPLE_SALT)}, 1, 8)"
     return f"""
-        SELECT {id_expr}, {strata_col},
+        SELECT doc_id, lang,
                {key} AS sample_key
-        FROM {src}
+        FROM documents
         WHERE {key} < {thr}
     """
 
@@ -605,16 +589,11 @@ def _apply_merge(syms: Column, a: str, b: str) -> Column:
     )
 
 
-def bpe_merges(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = BPE_MERGES,
-    top_k: int = BPE_TOP_K,
-) -> DataFrame:
-    """BPE tokenizer TRAINING in-engine: learn ``n_merges`` byte-pair
-    merges from the corpus and publish, per round, the ``top_k``
+def bpe_merges(df: DataFrame) -> DataFrame:
+    """BPE tokenizer TRAINING in-engine: learn ``BPE_MERGES`` byte-pair
+    merges from the corpus and publish, per round, the ``BPE_TOP_K``
     frequency-ranked adjacent-symbol pairs (rank 1 of rounds
-    1..n_merges are the chosen merges; round n_merges+1's table is
+    1..BPE_MERGES are the chosen merges; round BPE_MERGES+1's table is
     computed AFTER the last merge, so it hard-verifies that both merge
     applications actually rewrote the vocabulary).
 
@@ -634,14 +613,14 @@ def bpe_merges(
     merges with a relational gaps-and-islands formulation of the
     greedy apply — two independent expressions of the same semantics.
     """
-    toks = df.select(F.explode(tokens(text_col)).alias("tok"))
+    toks = df.select(F.explode(tokens()).alias("tok"))
     words = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select("tok", "freq", _char_symbols(F.col("tok")).alias("syms"))
         .localCheckpoint(eager=True)
     )
-    outs, _ = _bpe_train(words, n_merges, top_k, final_stats=True)
+    outs, _ = _bpe_train(words, BPE_MERGES, BPE_TOP_K, final_stats=True)
     out = outs[0]
     for t in outs[1:]:
         out = out.unionByName(t)
@@ -779,23 +758,18 @@ def _bpe_round_sql(r: int, top_k: int) -> str:
         )"""
 
 
-def bpe_merges_sql(
-    src: str = "documents",
-    text_expr: str = "text",
-    n_merges: int = BPE_MERGES,
-    top_k: int = BPE_TOP_K,
-) -> str:
-    rounds = ",".join(_bpe_round_sql(r, top_k) for r in range(1, n_merges + 1))
-    final = n_merges + 1
+def bpe_merges_sql() -> str:
+    rounds = ",".join(_bpe_round_sql(r, BPE_TOP_K) for r in range(1, BPE_MERGES + 1))
+    final = BPE_MERGES + 1
     unions = "\n        UNION ALL\n        ".join(
-        f"SELECT * FROM top{r}" for r in range(1, n_merges + 2)
+        f"SELECT * FROM top{r}" for r in range(1, BPE_MERGES + 2)
     )
     return f"""
         WITH words0 AS (
             SELECT tok, count(*) AS freq,
                    list_transform(generate_series(1, length(tok)),
                                   i -> substr(tok, i, 1)) AS syms
-            FROM (SELECT unnest({tokens_sql(text_expr)}) AS tok FROM {src})
+            FROM (SELECT unnest({tokens_sql()}) AS tok FROM documents)
             GROUP BY tok
         ),
         {rounds},
@@ -805,7 +779,7 @@ def bpe_merges_sql(
             FROM (
                 SELECT freq, syms,
                        unnest(generate_series(1, len(syms) - 1)) AS j
-                FROM words{n_merges}
+                FROM words{BPE_MERGES}
             )
             GROUP BY 1, 2
         ),
@@ -816,23 +790,18 @@ def bpe_merges_sql(
                 SELECT *, row_number() OVER (
                     ORDER BY pair_count DESC, left_sym, right_sym) AS rank
                 FROM pc{final}
-            ) WHERE rank <= {top_k}
+            ) WHERE rank <= {BPE_TOP_K}
         )
         {unions}
     """
 
 
-def bpe_encode(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_merges: int = BPE_MERGES,
-) -> DataFrame:
+def bpe_encode(df: DataFrame) -> DataFrame:
     """BPE tokenizer APPLICATION — the other half of the x40 trainer:
-    learn ``n_merges`` merges from the corpus, then encode every
+    learn ``BPE_MERGES`` merges from the corpus, then encode every
     document with them and report its BPE token count (the number a
     sequence-packing/token-budget stage actually consumes). Returns
-    (id_col, n_words, n_bpe_tokens, bpe_per_word) per document with at
+    (doc_id, n_words, n_bpe_tokens, bpe_per_word) per document with at
     least one token.
 
     Scale shape mirrors the trainer's: the merge folds run over the
@@ -848,24 +817,24 @@ def bpe_encode(
     but not assumed broadcastable — a web-scale corpus has ~10^8
     distinct tokens), and one partial-aggregatable groupBy per doc.
     """
-    toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
+    toks = df.select(F.col("doc_id"), F.explode(tokens()).alias("tok"))
     words0 = (
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select("tok", "freq", _char_symbols(F.col("tok")).alias("syms"))
         .localCheckpoint(eager=True)
     )
-    _, merged = _bpe_train(words0, n_merges, top_k=1, final_stats=False)
+    _, merged = _bpe_train(words0, BPE_MERGES, top_k=1, final_stats=False)
     vocab = merged.select("tok", F.size("syms").alias("__n_syms"))
     return (
         toks.join(vocab, "tok")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_words"),
             F.sum("__n_syms").alias("n_bpe_tokens"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_words",
             "n_bpe_tokens",
             F.round(F.col("n_bpe_tokens") / F.col("n_words"), 6).alias(
@@ -875,39 +844,31 @@ def bpe_encode(
     )
 
 
-def bpe_encode_sql(
-    src: str = "documents",
-    text_expr: str = "text",
-    n_merges: int = BPE_MERGES,
-    id_expr: str = "doc_id",
-) -> str:
+def bpe_encode_sql() -> str:
     """DuckDB twin of ``bpe_encode``: the trainer's unrolled round CTEs
-    produce words{n_merges} (token → merged symbol list), which the
-    per-doc token explode joins and sums. ``id_expr`` is aliased to
-    doc_id in the explode and reused by name downstream, so a
-    non-default id yields consistent SQL (the shuffle_shards_sql
-    convention). ``sum`` over the BIGINT lengths is cast back to
+    produce words{BPE_MERGES} (token → merged symbol list), which the
+    per-doc token explode joins and sums. ``sum`` over the BIGINT lengths is cast back to
     BIGINT (DuckDB sum → HUGEINT → float64 against Spark's long — the
     ml4 lesson)."""
-    rounds = ",".join(_bpe_round_sql(r, top_k=1) for r in range(1, n_merges + 1))
+    rounds = ",".join(_bpe_round_sql(r, top_k=1) for r in range(1, BPE_MERGES + 1))
     return f"""
         WITH words0 AS (
             SELECT tok, count(*) AS freq,
                    list_transform(generate_series(1, length(tok)),
                                   i -> substr(tok, i, 1)) AS syms
-            FROM (SELECT unnest({tokens_sql(text_expr)}) AS tok FROM {src})
+            FROM (SELECT unnest({tokens_sql()}) AS tok FROM documents)
             GROUP BY tok
         ),
         {rounds},
         doc_toks AS (
-            SELECT {id_expr} AS doc_id, unnest({tokens_sql(text_expr)}) AS tok
-            FROM {src}
+            SELECT doc_id AS doc_id, unnest({tokens_sql()}) AS tok
+            FROM documents
         )
         SELECT d.doc_id,
                CAST(count(*) AS BIGINT) AS n_words,
                CAST(sum(len(w.syms)) AS BIGINT) AS n_bpe_tokens,
                round(sum(len(w.syms)) * 1.0 / count(*), 6) AS bpe_per_word
-        FROM doc_toks d JOIN words{n_merges} w USING (tok)
+        FROM doc_toks d JOIN words{BPE_MERGES} w USING (tok)
         GROUP BY d.doc_id
     """
 
@@ -916,13 +877,7 @@ TEMP_ALPHA = 0.7  # temperature for source mixing (p_s ∝ n_s^alpha)
 MIX_SALT = "#mix"
 
 
-def temperature_mix(
-    df: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    alpha: float = TEMP_ALPHA,
-    salt: str = MIX_SALT,
-) -> DataFrame:
+def temperature_mix(df: DataFrame) -> DataFrame:
     """Temperature-based source rebalancing — the multilingual-corpus
     mixing rule (kept share of source s ∝ n_s^α): per-source Bernoulli
     keep-fraction ``f_s = (n_min/n_s)^(1−α)``, so the smallest source
@@ -942,12 +897,12 @@ def temperature_mix(
     Scale shape: one tiny per-source count aggregate, broadcast back
     onto the corpus; the keep decision itself is row-local. Returns
     kept rows as (id, source, keep_frac, sample_key)."""
-    counts = df.groupBy(source_col).agg(F.count(F.lit(1)).alias("src_n"))
+    counts = df.groupBy("source").agg(F.count(F.lit(1)).alias("src_n"))
     n_min = counts.agg(F.min("src_n").alias("n_min"))
     fr = counts.crossJoin(F.broadcast(n_min)).select(
-        source_col,
+        "source",
         F.round(
-            F.pow(F.col("n_min").cast("double") / F.col("src_n"), 1.0 - alpha), 6
+            F.pow(F.col("n_min").cast("double") / F.col("src_n"), 1.0 - TEMP_ALPHA), 6
         ).alias("keep_frac"),
     )
     thr = F.format_string(
@@ -957,48 +912,41 @@ def temperature_mix(
             F.lit(4294967295),
         ),
     )
-    key = F.substring(salted_id_key(id_col, salt), 1, 8)
+    key = F.substring(salted_id_key("doc_id", MIX_SALT), 1, 8)
     return (
-        df.join(F.broadcast(fr.withColumn("__thr", thr)), source_col)
+        df.join(F.broadcast(fr.withColumn("__thr", thr)), "source")
         .withColumn("sample_key", key)
         .filter(F.col("sample_key") <= F.col("__thr"))
-        .select(id_col, source_col, "keep_frac", "sample_key")
+        .select("doc_id", "source", "keep_frac", "sample_key")
     )
 
 
-def temperature_mix_sql(
-    source_col: str = "source",
-    id_expr: str = "doc_id",
-    alpha: float = TEMP_ALPHA,
-    salt: str = MIX_SALT,
-    src: str = "documents",
-    extra_ctes: str = "",
-) -> str:
+def temperature_mix_sql(src: str = "documents", extra_ctes: str = "") -> str:
     """``extra_ctes``: rendered verbatim before this query's own CTEs
     (e.g. ``"skew AS (...), "``) so a caller can feed an augmented
     corpus through ``src`` — the statement owns the single WITH."""
-    key = f"substr({salted_id_key_sql(id_expr, salt)}, 1, 8)"
+    key = f"substr({salted_id_key_sql('doc_id', MIX_SALT)}, 1, 8)"
     return f"""
         WITH {extra_ctes}counts AS (
-            SELECT {source_col}, count(*) AS src_n FROM {src} GROUP BY {source_col}
+            SELECT source, count(*) AS src_n FROM {src} GROUP BY source
         ),
         mn AS (SELECT min(src_n) AS n_min FROM counts),
         fr AS (
-            SELECT {source_col},
-                   round(pow(CAST(n_min AS DOUBLE) / src_n, {1.0 - alpha}), 6)
+            SELECT source,
+                   round(pow(CAST(n_min AS DOUBLE) / src_n, {1.0 - TEMP_ALPHA}), 6)
                        AS keep_frac
             FROM counts CROSS JOIN mn
         ),
         thr AS (
-            SELECT {source_col}, keep_frac,
+            SELECT source, keep_frac,
                    printf('%08x', least(
                        CAST(floor(keep_frac * 4294967296.0) AS BIGINT),
                        4294967295)) AS t
             FROM fr
         )
-        SELECT d.{id_expr}, d.{source_col}, f.keep_frac,
+        SELECT d.doc_id, d.source, f.keep_frac,
                {key} AS sample_key
-        FROM {src} d JOIN thr f USING ({source_col})
+        FROM {src} d JOIN thr f USING (source)
         WHERE {key} <= f.t
     """
 
@@ -1007,20 +955,14 @@ QUOTA_CAP = 15  # default per-source document quota
 QUOTA_SALT = "#qcap"
 
 
-def source_quota_cap(
-    df: DataFrame,
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    cap: int = QUOTA_CAP,
-    salt: str = QUOTA_SALT,
-) -> DataFrame:
+def source_quota_cap(df: DataFrame) -> DataFrame:
     """Per-source document quota — the Common-Crawl domain-cap pattern
     (bound any one domain's share of the training mix). Keeps at most
-    ``cap`` docs per source, selected by deterministic hash rank:
+    ``QUOTA_CAP`` docs per source, selected by deterministic hash rank:
     not arrival order (order-dependent caps are irreproducible across
     partitionings) and not random (re-runs must keep the SAME docs).
 
-    Scale shape: one shuffle on ``source_col`` for the per-source
+    Scale shape: one shuffle on ``source`` for the per-source
     ``row_number`` window. A mega-source bounds its window task at that
     source's row count; at web scale, pre-aggregate per-source counts
     and only window the over-cap sources (the under-cap majority
@@ -1028,32 +970,26 @@ def source_quota_cap(
     skew escape hatches, not needed at fixture scale. The md5 rank key
     is portable, so the oracle orders bit-identically.
     """
-    key = salted_id_key(id_col, salt)
-    w = Window.partitionBy(source_col).orderBy(key)
+    key = salted_id_key("doc_id", QUOTA_SALT)
+    w = Window.partitionBy("source").orderBy(key)
     return (
         df.withColumn("rank_key", key)
         .withColumn("qrank", F.row_number().over(w).cast("int"))
-        .filter(F.col("qrank") <= cap)
-        .select(id_col, source_col, "rank_key", "qrank")
+        .filter(F.col("qrank") <= QUOTA_CAP)
+        .select("doc_id", "source", "rank_key", "qrank")
     )
 
 
-def source_quota_cap_sql(
-    source_col: str = "source",
-    id_col: str = "doc_id",
-    cap: int = QUOTA_CAP,
-    salt: str = QUOTA_SALT,
-    src: str = "documents",
-) -> str:
-    key = salted_id_key_sql(id_col, salt)
+def source_quota_cap_sql() -> str:
+    key = salted_id_key_sql("doc_id", QUOTA_SALT)
     return f"""
-        SELECT {id_col}, {source_col}, rank_key, qrank FROM (
-            SELECT {id_col}, {source_col}, {key} AS rank_key,
+        SELECT doc_id, source, rank_key, qrank FROM (
+            SELECT doc_id, source, {key} AS rank_key,
                    CAST(row_number() OVER (
-                       PARTITION BY {source_col} ORDER BY {key}
+                       PARTITION BY source ORDER BY {key}
                    ) AS INT) AS qrank
-            FROM {src}
-        ) WHERE qrank <= {cap}
+            FROM documents
+        ) WHERE qrank <= {QUOTA_CAP}
     """
 
 
@@ -1077,9 +1013,7 @@ def all_grams(toks: Column, n: int) -> Column:
 REP_MAX_TOKENS = 512  # quadratic-cost cap per document
 
 
-def repetition_signals(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition quality signals:
     ``top_bigram_frac`` (fraction of all bigram occurrences taken by
     the single most frequent bigram) and ``dup_trigram_frac``
@@ -1096,9 +1030,9 @@ def repetition_signals(
     bounding the worst row at a constant. Short docs (< 3 tokens) yield
     NULL fractions via ``try_divide``.
     """
-    toks = F.slice(tokens(text_col), 1, REP_MAX_TOKENS)
+    toks = F.slice(tokens(), 1, REP_MAX_TOKENS)
     with_grams = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         all_grams(toks, 2).alias("__big"),
         all_grams(toks, 3).alias("__tri"),
     )
@@ -1110,7 +1044,7 @@ def repetition_signals(
         )
     )
     return with_grams.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.try_divide(top_count, F.size(big)).alias("top_bigram_frac"),
         F.try_divide(
             F.size(tri) - F.size(F.array_distinct(tri)), F.size(tri)
@@ -1126,7 +1060,7 @@ def _all_grams_sql(n: int) -> str:
     )
 
 
-def repetition_signals_sql(src: str = "documents", text_expr: str = "text") -> str:
+def repetition_signals_sql() -> str:
     return f"""
         SELECT doc_id,
             CASE WHEN len(big) > 0 THEN
@@ -1139,9 +1073,9 @@ def repetition_signals_sql(src: str = "documents", text_expr: str = "text") -> s
         FROM (
             SELECT doc_id, {_all_grams_sql(2)} AS big, {_all_grams_sql(3)} AS tri
             FROM (SELECT doc_id,
-                         list_slice({tokens_sql(text_expr)}, 1, {REP_MAX_TOKENS})
+                         list_slice({tokens_sql()}, 1, {REP_MAX_TOKENS})
                              AS toks
-                  FROM {src})
+                  FROM documents)
         )
     """
 
@@ -1150,14 +1084,7 @@ PACK_TARGET_TOKENS = 2048  # token budget per packed training sequence
 PACK_SHARDS = 64  # independent packing streams (scale = parallelism)
 
 
-def pack_sequences(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    target: int = PACK_TARGET_TOKENS,
-    shards: int = PACK_SHARDS,
-    partition_extra: tuple[str, ...] = (),
-) -> DataFrame:
+def pack_sequences(df: DataFrame, partition_extra: tuple[str, ...] = ()) -> DataFrame:
     """Greedy sequence packing for pre-training batches: concatenate
     documents in id order until the token budget is crossed, emitting
     (id, shard, n_tokens, pack_id) where ``pack_id`` is the bin whose
@@ -1166,9 +1093,9 @@ def pack_sequences(
 
     Scale shape: a SINGLE global packing order would serialize 100 TB
     through one window partition — instead docs are sharded by
-    ``id % shards`` and packed independently per shard, so the running
-    token sum is a per-shard window (shards-way parallel, one shuffle
-    on the shard key). Raising ``shards`` to O(cluster cores) keeps
+    ``id % PACK_SHARDS`` and packed independently per shard, so the running
+    token sum is a per-shard window (PACK_SHARDS-way parallel, one shuffle
+    on the shard key). Raising ``PACK_SHARDS`` to O(cluster cores) keeps
     every executor busy; determinism holds because shard assignment
     and intra-shard order are pure functions of the id.
 
@@ -1178,36 +1105,30 @@ def pack_sequences(
     output.
     """
     t = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *partition_extra,
-        (F.col(id_col) % shards).cast("int").alias("shard"),
-        token_count(text_col).alias("n_tokens"),
+        (F.col("doc_id") % PACK_SHARDS).cast("int").alias("shard"),
+        token_count().alias("n_tokens"),
     )
-    w = Window.partitionBy(*partition_extra, "shard").orderBy(id_col)
+    w = Window.partitionBy(*partition_extra, "shard").orderBy("doc_id")
     start = F.sum("n_tokens").over(w) - F.col("n_tokens")
     return t.withColumn(
-        "pack_id", F.floor(start / F.lit(target)).cast("int")
+        "pack_id", F.floor(start / F.lit(PACK_TARGET_TOKENS)).cast("int")
     )
 
 
-def pack_sequences_sql(
-    src: str = "documents",
-    text_expr: str = "text",
-    id_expr: str = "doc_id",
-    target: int = PACK_TARGET_TOKENS,
-    shards: int = PACK_SHARDS,
-) -> str:
+def pack_sequences_sql() -> str:
     return f"""
-        SELECT {id_expr}, shard, n_tokens,
-            CAST(floor((cum - n_tokens) / {target}) AS INT) AS pack_id
+        SELECT doc_id, shard, n_tokens,
+            CAST(floor((cum - n_tokens) / {PACK_TARGET_TOKENS}) AS INT) AS pack_id
         FROM (
-            SELECT {id_expr}, shard, n_tokens,
-                SUM(n_tokens) OVER (PARTITION BY shard ORDER BY {id_expr}) AS cum
+            SELECT doc_id, shard, n_tokens,
+                SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id) AS cum
             FROM (
-                SELECT {id_expr},
-                    CAST({id_expr} % {shards} AS INT) AS shard,
-                    CAST(len({tokens_sql(text_expr)}) AS INT) AS n_tokens
-                FROM {src}
+                SELECT doc_id,
+                    CAST(doc_id % {PACK_SHARDS} AS INT) AS shard,
+                    CAST(len({tokens_sql()}) AS INT) AS n_tokens
+                FROM documents
             )
         )
     """
@@ -1219,8 +1140,6 @@ CHUNK_STRIDE = 96  # start-to-start distance → 32-token overlap
 
 def chunk_documents(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     size: int = CHUNK_TOKENS,
     stride: int = CHUNK_STRIDE,
 ) -> DataFrame:
@@ -1235,7 +1154,7 @@ def chunk_documents(
     shuffle; output rows ≈ corpus_tokens / stride regardless of
     document skew.
     """
-    n = F.size(tokens(text_col))
+    n = F.size(tokens())
     n_chunks = F.when(n <= size, F.lit(1)).otherwise(
         F.floor((n - size + stride - 1) / F.lit(stride)) + 1
     )
@@ -1243,13 +1162,13 @@ def chunk_documents(
         F.sequence(F.lit(0), n_chunks - 1), lambda i: (i * stride + 1).cast("int")
     )
     t = df.select(
-        F.col(id_col),
-        tokens(text_col).alias("__toks"),
+        F.col("doc_id"),
+        tokens().alias("__toks"),
         F.posexplode(starts).alias("chunk_idx", "__start"),
     )
     chunk = F.slice(F.col("__toks"), F.col("__start"), size)
     return t.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_idx"),
         F.size(chunk).alias("chunk_tokens"),
         F.md5(F.concat_ws(" ", chunk).cast("binary")).alias("chunk_md5"),
@@ -1258,34 +1177,34 @@ def chunk_documents(
 
 def chunk_documents_sql(
     src: str = "documents",
-    text_expr: str = "text",
-    id_expr: str = "doc_id",
     size: int = CHUNK_TOKENS,
     stride: int = CHUNK_STRIDE,
 ) -> str:
     return f"""
-        SELECT {id_expr},
+        SELECT doc_id,
             CAST(i - 1 AS INT) AS chunk_idx,
             CAST(len(chunk) AS INT) AS chunk_tokens,
             md5(array_to_string(chunk, ' ')) AS chunk_md5
         FROM (
-            SELECT {id_expr}, i,
+            SELECT doc_id, i,
                 list_slice(toks, (i - 1) * {stride} + 1,
                            (i - 1) * {stride} + {size}) AS chunk
             FROM (
-                SELECT {id_expr}, toks, unnest(generate_series(1,
+                SELECT doc_id, toks, unnest(generate_series(1,
                     CASE WHEN len(toks) <= {size} THEN 1
                          ELSE (len(toks) - {size} + {stride} - 1) // {stride} + 1
                     END)) AS i
-                FROM (SELECT {id_expr}, {tokens_sql(text_expr)} AS toks FROM {src})
+                FROM (SELECT doc_id, {tokens_sql()} AS toks FROM {src})
             )
         )
     """
 
 
-def vocab_topk(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 25
-) -> DataFrame:
+VOCAB_TOP_K = 25  # corpus vocabulary rows published
+TFIDF_TOP_K = 3  # top terms per document
+
+
+def vocab_topk(df: DataFrame) -> DataFrame:
     """Top-k corpus vocabulary: per-token total term frequency (``tf``)
     and document frequency (``df``), ties broken by token text.
 
@@ -1296,20 +1215,15 @@ def vocab_topk(
     ``TakeOrderedAndProject`` — each partition ships only its k-row
     head to the driver merge, never a global sort of the vocabulary.
     """
-    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("token"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens()).alias("token"))
     agg = tok.groupBy("token").agg(
         F.count(F.lit(1)).alias("tf"),
-        F.countDistinct(id_col).alias("df"),
+        F.countDistinct("doc_id").alias("df"),
     )
-    return agg.orderBy(F.desc("tf"), "token").limit(k)
+    return agg.orderBy(F.desc("tf"), "token").limit(VOCAB_TOP_K)
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
     """Per-document TF-IDF top-k terms: the standard smooth variant
     ``tf · (ln((N+1)/(df+1)) + 1)``, ranked per doc with token-text
     tiebreak. Returns (id, token, tf, tfidf, rnk) for rnk ≤ k.
@@ -1325,8 +1239,8 @@ def tfidf_top_terms(
     decimals BEFORE ranking so engine/oracle rank identically even if
     ``ln`` differs in the last ULP.
     """
-    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("token"))
-    tf = tok.groupBy(id_col, "token").agg(F.count(F.lit(1)).alias("tf"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens()).alias("token"))
+    tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     total = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -1341,24 +1255,24 @@ def tfidf_top_terms(
             ),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("token"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("token"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(id_col, "token", "tf", "tfidf", "rnk")
+        .filter(F.col("rnk") <= TFIDF_TOP_K)
+        .select("doc_id", "token", "tf", "tfidf", "rnk")
     )
 
 
-def tfidf_topk_sql(text_expr: str = "text", src: str = "documents", k: int = 3) -> str:
+def tfidf_topk_sql() -> str:
     return f"""
         WITH tok AS (
-            SELECT doc_id, unnest({tokens_sql(text_expr)}) AS token FROM {src}
+            SELECT doc_id, unnest({tokens_sql()}) AS token FROM documents
         ),
         tf AS (
             SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY doc_id, token
         ),
         dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-        total AS (SELECT count(*) AS n_docs FROM {src}),
+        total AS (SELECT count(*) AS n_docs FROM documents),
         scored AS (
             SELECT doc_id, token, tf,
                    round(tf * (ln((n_docs + 1) / (df + 1)) + 1), 6) AS tfidf
@@ -1370,36 +1284,29 @@ def tfidf_topk_sql(text_expr: str = "text", src: str = "documents", k: int = 3) 
             ) AS INT) AS rnk
             FROM scored
         )
-        SELECT doc_id, token, tf, tfidf, rnk FROM ranked WHERE rnk <= {k}
+        SELECT doc_id, token, tf, tfidf, rnk FROM ranked WHERE rnk <= {TFIDF_TOP_K}
     """
 
 
-def vocab_topk_sql(
-    text_expr: str = "text", src: str = "documents", k: int = 25
-) -> str:
+def vocab_topk_sql() -> str:
     return f"""
         SELECT token, count(*) AS tf, count(DISTINCT doc_id) AS df
         FROM (
-            SELECT doc_id, unnest({tokens_sql(text_expr)}) AS token
-            FROM {src}
+            SELECT doc_id, unnest({tokens_sql()}) AS token
+            FROM documents
         )
         GROUP BY token
         ORDER BY tf DESC, token
-        LIMIT {k}
+        LIMIT {VOCAB_TOP_K}
     """
 
 
 BOILERPLATE_MIN_DOCS = 10  # a line shared by >= this many docs is boilerplate
 
 
-def remove_boilerplate(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_docs: int = BOILERPLATE_MIN_DOCS,
-) -> DataFrame:
+def remove_boilerplate(df: DataFrame) -> DataFrame:
     """Cross-document repeated-line removal — the CCNet/C4 boilerplate
-    pass: a line occurring in at least ``min_docs`` DISTINCT documents
+    pass: a line occurring in at least ``BOILERPLATE_MIN_DOCS`` DISTINCT documents
     (nav bars, cookie banners, footers) is stripped from every
     document; per-doc text is reassembled in original line order.
 
@@ -1408,8 +1315,8 @@ def remove_boilerplate(
     (digest, doc) pairs are de-duplicated per doc BEFORE the count so
     a doc repeating its own footer counts once, and the surviving
     boilerplate digest set — tiny by construction (it takes >=
-    ``min_docs`` copies to qualify, so there are at most
-    corpus_lines / min_docs of them) — is BROADCAST into a left-anti
+    ``BOILERPLATE_MIN_DOCS`` copies to qualify, so there are at most
+    corpus_lines / BOILERPLATE_MIN_DOCS of them) — is BROADCAST into a left-anti
     join; the corpus never shuffles on anything but (digest) for the
     count and (doc) for the ordered reassembly, both
     partial-aggregatable.
@@ -1418,19 +1325,19 @@ def remove_boilerplate(
     document, empty when every line was boilerplate.
     """
     lines = df.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("line_no", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("line_no", "line"),
     ).withColumn("h", F.md5(F.col("line").cast("binary")))
     counts = (
-        lines.select("h", id_col)
+        lines.select("h", "doc_id")
         .distinct()
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-    boiler = counts.filter(F.col("n_docs") >= min_docs).select("h")
+    boiler = counts.filter(F.col("n_docs") >= BOILERPLATE_MIN_DOCS).select("h")
     kept = lines.join(F.broadcast(boiler), "h", "left_anti")
-    totals = lines.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_lines"))
-    clean = kept.groupBy(id_col).agg(
+    totals = lines.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_lines"))
+    clean = kept.groupBy("doc_id").agg(
         F.array_join(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("line_no", "line"))),
@@ -1441,9 +1348,9 @@ def remove_boilerplate(
         F.count(F.lit(1)).alias("n_kept"),
     )
     return (
-        totals.join(clean, id_col, "left")
+        totals.join(clean, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.coalesce("text", F.lit("")).alias("text"),
             F.col("n_lines").cast("int").alias("n_lines"),
             (F.col("n_lines") - F.coalesce("n_kept", F.lit(0)))
@@ -1453,12 +1360,7 @@ def remove_boilerplate(
     )
 
 
-def remove_boilerplate_sql(
-    src: str = "documents",
-    text_expr: str = "text",
-    min_docs: int = BOILERPLATE_MIN_DOCS,
-    extra_ctes: str = "",
-) -> str:
+def remove_boilerplate_sql(src: str = "documents", extra_ctes: str = "") -> str:
     """DuckDB twin of ``remove_boilerplate`` (same digest keys, same
     ordered reassembly). ``extra_ctes`` splices caller CTEs (e.g. an
     injected-corpus twin) into the single WITH clause."""
@@ -1473,7 +1375,7 @@ def remove_boilerplate_sql(
                        unnest(generate_series(1, len(parts))) AS line_no,
                        unnest(parts) AS line
                 FROM (
-                    SELECT doc_id, string_split({text_expr}, chr(10)) AS parts
+                    SELECT doc_id, string_split(text, chr(10)) AS parts
                     FROM {src}
                 )
             )
@@ -1483,7 +1385,7 @@ def remove_boilerplate_sql(
             FROM (SELECT DISTINCT h, doc_id FROM lines)
             GROUP BY h
         ),
-        boiler AS (SELECT h FROM counts WHERE n_docs >= {min_docs}),
+        boiler AS (SELECT h FROM counts WHERE n_docs >= {BOILERPLATE_MIN_DOCS}),
         kept AS (
             SELECT * FROM lines WHERE h NOT IN (SELECT h FROM boiler)
         ),
@@ -1507,12 +1409,7 @@ def remove_boilerplate_sql(
 LM_LAMBDA = 0.7  # bigram weight in the interpolated LM score
 
 
-def bigram_logprob(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lam: float = LM_LAMBDA,
-) -> DataFrame:
+def bigram_logprob(df: DataFrame) -> DataFrame:
     """Interpolated bigram LM quality score — the next rung above x33's
     unigram stand-in for CCNet's perplexity filter: per bigram position
     ``p = λ·cnt(w1 w2)/cnt(w1) + (1−λ)·cnt(w2)/total`` (corpus-trained
@@ -1532,13 +1429,13 @@ def bigram_logprob(
     tokens have no bigram positions and drop out (both engines).
     Rounding per the x19/x33 float precedent.
     """
-    toks_arr = df.select(F.col(id_col), tokens(text_col).alias("toks"))
+    toks_arr = df.select(F.col("doc_id"), tokens().alias("toks"))
     # token-only projection: the unigram counts never need doc_id
     uni = toks_arr.select(F.explode("toks").alias("token"))
     ucnt = uni.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     total = ucnt.agg(F.sum("cnt").alias("total"))
     bigs = toks_arr.select(
-        F.col(id_col), F.explode(all_grams(F.col("toks"), 2)).alias("bigram")
+        F.col("doc_id"), F.explode(all_grams(F.col("toks"), 2)).alias("bigram")
     )
     bcnt = bigs.groupBy("bigram").agg(F.count(F.lit(1)).alias("bcnt"))
     parts = F.split("bigram", " ")
@@ -1550,27 +1447,25 @@ def bigram_logprob(
         .join(ucnt.select(F.col("token").alias("w"), F.col("cnt").alias("wcnt")), "w")
         .crossJoin(F.broadcast(total))
     )
-    p = F.lit(lam) * (F.col("bcnt") / F.col("ccnt")) + F.lit(1.0 - lam) * (
+    p = F.lit(LM_LAMBDA) * (F.col("bcnt") / F.col("ccnt")) + F.lit(1.0 - LM_LAMBDA) * (
         F.col("wcnt") / F.col("total")
     )
-    out = per.groupBy(id_col).agg(
+    out = per.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_big"),
         F.avg(F.log(p)).alias("__mean"),
     )
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_big").cast("int").alias("n_bigrams"),
         F.round("__mean", 6).alias("mean_logprob"),
         F.round(F.exp(-F.col("__mean")), 3).alias("ppl_proxy"),
     )
 
 
-def bigram_logprob_sql(
-    src: str = "documents", text_expr: str = "text", lam: float = LM_LAMBDA
-) -> str:
+def bigram_logprob_sql() -> str:
     return f"""
         WITH toks_arr AS MATERIALIZED (
-            SELECT doc_id, {tokens_sql(text_expr)} AS toks FROM {src}
+            SELECT doc_id, {tokens_sql()} AS toks FROM documents
         ),
         ucnt AS (
             SELECT token, count(*) AS cnt
@@ -1584,8 +1479,8 @@ def bigram_logprob_sql(
         bcnt AS (SELECT bigram, count(*) AS bcnt FROM bigs GROUP BY bigram),
         per AS (
             SELECT b.doc_id,
-                   {lam} * (bc.bcnt / uc.cnt)
-                       + {1.0 - lam} * (uw.cnt / total) AS p
+                   {LM_LAMBDA} * (bc.bcnt / uc.cnt)
+                       + {1.0 - LM_LAMBDA} * (uw.cnt / total) AS p
             FROM bigs b
             JOIN bcnt bc USING (bigram)
             JOIN ucnt uc ON uc.token = string_split(b.bigram, ' ')[1]
@@ -1604,9 +1499,7 @@ def bigram_logprob_sql(
     """
 
 
-def unigram_logprob(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def unigram_logprob(df: DataFrame) -> DataFrame:
     """Corpus-unigram log-probability quality score — the cheap
     in-engine stand-in for CCNet's LM-perplexity filter: documents full
     of corpus-rare tokens (mojibake, spam, wrong language) score low;
@@ -1626,31 +1519,31 @@ def unigram_logprob(
     rounded to 6 decimals in both engines (the x19 TF-IDF precedent)
     so summation-order ULP noise can't break hash parity.
     """
-    toks = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("token"))
+    toks = df.select(F.col("doc_id"), F.explode(tokens()).alias("token"))
     counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total"))
     per_doc = (
         toks.join(counts, "token")
         .crossJoin(F.broadcast(total))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tok"),
             F.avg(F.log(F.col("cnt") / F.col("total"))).alias("__mean"),
         )
     )
     return per_doc.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("n_tok").cast("int").alias("n_tokens"),
         F.round("__mean", 6).alias("mean_logprob"),
         F.round(F.exp(-F.col("__mean")), 3).alias("ppl_proxy"),
     )
 
 
-def unigram_logprob_sql(src: str = "documents", text_expr: str = "text") -> str:
+def unigram_logprob_sql() -> str:
     return f"""
         WITH toks AS MATERIALIZED (
-            SELECT doc_id, unnest({tokens_sql(text_expr)}) AS token
-            FROM {src}
+            SELECT doc_id, unnest({tokens_sql()}) AS token
+            FROM documents
         ),
         counts AS (SELECT token, count(*) AS cnt FROM toks GROUP BY token),
         total AS (SELECT sum(cnt) AS total FROM counts),
@@ -1674,7 +1567,7 @@ def unigram_logprob_sql(src: str = "documents", text_expr: str = "text") -> str:
 SHUFFLE_SALT = "shard"
 
 
-def shuffle_shards(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def shuffle_shards(df: DataFrame) -> DataFrame:
     """The global-shuffle-and-shard step a training-data export ends
     with: every document gets a SALTED content-free hash key, the
     first TWO hex digits are its shard (256 shards), and ``row_number`` over
@@ -1698,30 +1591,26 @@ def shuffle_shards(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     key = F.md5(
         F.concat(
-            F.lit(SHUFFLE_SALT + ":"), F.col(id_col).cast("string")
+            F.lit(SHUFFLE_SALT + ":"), F.col("doc_id").cast("string")
         ).cast("binary")
     )
     out = df.withColumn("shuffle_key", key).withColumn(
         "shard", F.substring("shuffle_key", 1, 2)
     )
-    w = Window.partitionBy("shard").orderBy("shuffle_key", id_col)
+    w = Window.partitionBy("shard").orderBy("shuffle_key", "doc_id")
     return out.withColumn("pos", F.row_number().over(w))
 
 
-def shuffle_shards_sql(id_expr: str = "doc_id", src: str = "documents") -> str:
-    # the id expression is aliased to doc_id in the inner projection
-    # and reused by name in the ORDER BY tie-break, so a non-default
-    # id_expr yields consistent SQL (r5 advice: it used to be
-    # parameterized in the hash input but hard-coded elsewhere)
-    key = f"md5('{SHUFFLE_SALT}:' || CAST({id_expr} AS VARCHAR))"
+def shuffle_shards_sql() -> str:
+    key = f"md5('{SHUFFLE_SALT}:' || CAST(doc_id AS VARCHAR))"
     return f"""
         SELECT doc_id, shuffle_key, shard,
                CAST(row_number() OVER (
                    PARTITION BY shard ORDER BY shuffle_key, doc_id
                ) AS INT) AS pos
         FROM (
-            SELECT {id_expr} AS doc_id, {key} AS shuffle_key,
+            SELECT doc_id AS doc_id, {key} AS shuffle_key,
                    substr({key}, 1, 2) AS shard
-            FROM {src}
+            FROM documents
         )
     """

@@ -27,8 +27,6 @@ def sliding_window_vectors(
     feature_cols: Sequence[str],
     window: int,
     order_cols: Sequence[str],
-    partition_cols: Sequence[str] = (),
-    out_col: str = "window_features",
 ) -> DataFrame:
     """The tensor window: ``window`` consecutive rows × features,
     flattened to one array<double> per row (shape documented in
@@ -38,27 +36,21 @@ def sliding_window_vectors(
     Warm-up rows whose window is short are dropped — the reference's
     chunk loader likewise only emits full windows.
     """
-    w = trailing_window(order_cols, window - 1, partition_cols)
+    w = trailing_window(order_cols, window - 1)
     per_t = F.array(*[F.col(c).cast("double") for c in feature_cols])
     collected = F.collect_list(per_t).over(w)
-    return df.withColumn(out_col, F.flatten(collected)).filter(
-        F.size(out_col) == window * len(feature_cols)
+    return df.withColumn("window_features", F.flatten(collected)).filter(
+        F.size("window_features") == window * len(feature_cols)
     )
 
 
-def lag_matrix(
-    df: DataFrame,
-    value_col: str,
-    window: int,
-    order_cols: Sequence[str],
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
+def lag_matrix(df: DataFrame, value_col: str, window: int, order_cols: Sequence[str]) -> DataFrame:
     """Scalar-column variant of the tensor window: ``{col}_lag{j}`` for
     j = 0..window-1 — the oracle-friendly (and MLlib-assembler-friendly)
     flat layout."""
     from financial_market_data_analysis_spark.operators.windows import ordered_window
 
-    w = ordered_window(order_cols, partition_cols)
+    w = ordered_window(order_cols)
     cols = {
         f"{value_col}_lag{j}": F.lag(value_col, j).over(w) for j in range(window)
     }
@@ -105,20 +97,10 @@ def corr_matrix(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     )
 
 
-def train_window_classifier(
-    df: DataFrame,
-    feature_cols: Sequence[str],
-    label_col: str = "up1",
-    window: int = 5,
-    hidden: Sequence[int] = (16,),
-    train_fraction: float = 0.8,
-    order_col: str = "bucket_start",
-    max_iter: int = 50,
-    seed: int = 42,
-):
+def train_window_classifier(df: DataFrame, feature_cols: Sequence[str]):
     """The engine's closest MLlib-native analog of the reference's
     biGRU sequence model (biGRU_model.py:1-286): a nonlinear classifier
-    over the SAME input tensor — ``window`` consecutive bars × features,
+    over the SAME input tensor — 5 consecutive bars × features,
     the sliding window sql_pytorch_dataloader.py:8-18 feeds the GRU —
     flattened time-major (``sliding_window_vectors``) into a
     MultilayerPerceptronClassifier (min-max scaled input, sigmoid-family
@@ -140,44 +122,37 @@ def train_window_classifier(
     from pyspark.ml.feature import MinMaxScaler
     from pyspark.ml.functions import array_to_vector
 
-    clean = df.dropna(subset=list(feature_cols) + [label_col])
+    clean = df.dropna(subset=list(feature_cols) + ["up1"])
     vec = sliding_window_vectors(
-        clean, feature_cols, window, [order_col]
+        clean, feature_cols, 5, ["bucket_start"]
     ).withColumn("raw_features", array_to_vector("window_features"))
-    cut = vec.approxQuantile(order_col, [train_fraction], 0.001)[0]
-    train = vec.filter(F.col(order_col) <= cut)
-    test = vec.filter(F.col(order_col) > cut)
+    cut = vec.approxQuantile("bucket_start", [0.8], 0.001)[0]
+    train = vec.filter(F.col("bucket_start") <= cut)
+    test = vec.filter(F.col("bucket_start") > cut)
 
-    layers = [window * len(feature_cols), *hidden, 2]
+    layers = [5 * len(feature_cols), 16, 2]
     pipe = Pipeline(
         stages=[
             MinMaxScaler(inputCol="raw_features", outputCol="features"),
             MultilayerPerceptronClassifier(
-                labelCol=label_col,
+                labelCol="up1",
                 featuresCol="features",
                 layers=layers,
-                maxIter=max_iter,
-                seed=seed,
+                maxIter=50,
+                seed=42,
             ),
         ]
     )
     model = pipe.fit(train)
     pred = model.transform(test)
     metrics = pred.agg(
-        F.avg((F.col("prediction") == F.col(label_col)).cast("double")).alias("accuracy"),
+        F.avg((F.col("prediction") == F.col("up1")).cast("double")).alias("accuracy"),
         F.count(F.lit(1)).alias("n_test"),
     )
     return model, train, test, metrics
 
 
-def train_target_classifier(
-    df: DataFrame,
-    feature_cols: Sequence[str],
-    label_col: str = "up1",
-    train_fraction: float = 0.8,
-    order_col: str = "bucket_start",
-    seed: int = 42,
-):
+def train_target_classifier(df: DataFrame, feature_cols: Sequence[str]):
     """Train a logistic-regression classifier on a forward-target label
     with a *time-based* split (the reference splits by chunk index —
     sql_pytorch_dataloader.py:251-320 — which leaks less than random
@@ -189,22 +164,22 @@ def train_target_classifier(
     from pyspark.ml.feature import MinMaxScaler, VectorAssembler
     from pyspark.ml import Pipeline
 
-    clean = df.dropna(subset=list(feature_cols) + [label_col])
-    cut = clean.approxQuantile(order_col, [train_fraction], 0.001)[0]
-    train = clean.filter(F.col(order_col) <= cut)
-    test = clean.filter(F.col(order_col) > cut)
+    clean = df.dropna(subset=list(feature_cols) + ["up1"])
+    cut = clean.approxQuantile("bucket_start", [0.8], 0.001)[0]
+    train = clean.filter(F.col("bucket_start") <= cut)
+    test = clean.filter(F.col("bucket_start") > cut)
 
     pipe = Pipeline(
         stages=[
             VectorAssembler(inputCols=list(feature_cols), outputCol="raw_features"),
             MinMaxScaler(inputCol="raw_features", outputCol="features"),
-            LogisticRegression(labelCol=label_col, featuresCol="features"),
+            LogisticRegression(labelCol="up1", featuresCol="features"),
         ]
     )
     model = pipe.fit(train)
     pred = model.transform(test)
     metrics = pred.agg(
-        F.avg((F.col("prediction") == F.col(label_col)).cast("double")).alias("accuracy"),
+        F.avg((F.col("prediction") == F.col("up1")).cast("double")).alias("accuracy"),
         F.count(F.lit(1)).alias("n_test"),
     )
     return model, train, test, metrics

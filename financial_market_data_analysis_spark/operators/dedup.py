@@ -34,25 +34,25 @@ from financial_market_data_analysis_spark.functions.core import safe_div
 from financial_market_data_analysis_spark.functions.text import (
     all_grams,
     tokens,
-    tokens_sql,
 )
 
 N_MINHASH = 8  # k signature rows
 BAND_SIZE = 2  # rows per band → b = 4 bands
 SHINGLE = 3  # token-level n-gram shingles
+SLICES_PER_DIGEST = 4  # 8-hex minhash slices per md5 digest (sliced minhash)
+EMBED_NEARDUP_COS = 0.95  # embedding near-dup cosine cut
+CC_MAX_ROUNDS = 25  # label-propagation rounds before connected components give up
 
 
-def exact_dedup(
-    df: DataFrame, key_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup: digest-groupBy keeping the smallest id as canonical.
 
     Output: one row per distinct key value — (fp, keeper id, copy count).
     """
     return (
-        df.select(F.md5(F.col(key_col).cast("binary")).alias("fp"), F.col(id_col))
+        df.select(F.md5(F.col("text").cast("binary")).alias("fp"), F.col("doc_id"))
         .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
@@ -73,25 +73,21 @@ def _shingles(toks: Column, n: int = SHINGLE) -> Column:
     return F.array_distinct(all_grams(toks, n))
 
 
-def shingle_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def shingle_table(df: DataFrame) -> DataFrame:
     """The (id, shingle) long table — one row per distinct shingle per
     document. ``_shingles`` is already per-doc distinct, so no global
     ``.distinct()`` shuffle is needed.
 
-    Precondition: ``id_col`` must be unique in ``df`` (one row per
+    Precondition: ``doc_id`` must be unique in ``df`` (one row per
     document). Duplicate doc_id rows would inflate ``n_sh``/``n_inter``
     in ``jaccard_verify``; dedupe upstream if the input can repeat."""
-    toks_df = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
+    toks_df = df.select(F.col("doc_id"), tokens().alias("__toks"))
     return toks_df.select(
-        F.col(id_col), F.explode(_shingles(F.col("__toks"))).alias("shingle")
+        F.col("doc_id"), F.explode(_shingles(F.col("__toks"))).alias("shingle")
     )
 
 
-def shingle_arrays(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def shingle_arrays(df: DataFrame) -> DataFrame:
     """(id, sh_arr) — the per-doc distinct-shingle ARRAY, row-local.
 
     Keeping shingles as an array column (instead of exploding) lets the
@@ -105,11 +101,11 @@ def shingle_arrays(
     # upstream repartition/scan and re-evaluates the whole shingle
     # expression per row on the (possibly 1-2 partition) source — the
     # pushed-down twin of this predicate costs one regexp per row.
-    toks_df = df.select(F.col(id_col), tokens(text_col).alias("__toks")).filter(
+    toks_df = df.select(F.col("doc_id"), tokens().alias("__toks")).filter(
         F.size("__toks") >= SHINGLE
     )
     return toks_df.select(
-        F.col(id_col), _shingles(F.col("__toks")).alias("sh_arr")
+        F.col("doc_id"), _shingles(F.col("__toks")).alias("sh_arr")
     )
 
 
@@ -211,27 +207,20 @@ def oph_filled_slot(slots_col: str, j: int, n_hashes: int) -> Column:
     )
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    n_hashes: int = N_MINHASH,
-    shingle_arr: DataFrame | None = None,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, shingle_arr: DataFrame | None = None) -> DataFrame:
     """(id, seed, minhash) — computed ROW-LOCALLY from the shingle
     array: no explode of (doc × shingle × seed) rows, no groupBy. The
     k-fold md5 work is inherent to MinHash; the shuffles the naive
     explode+re-aggregate plan pays are not. Output is identical to the
     exploded formulation (the DuckDB oracle keeps that shape).
     """
-    src = shingle_arr if shingle_arr is not None else shingle_arrays(df, id_col, text_col)
-    mhs = F.array(*[_minhash_expr(F.col("sh_arr"), p) for p in range(n_hashes)])
-    return src.select(F.col(id_col), F.posexplode(mhs).alias("seed", "mh"))
+    src = shingle_arr if shingle_arr is not None else shingle_arrays(df)
+    mhs = F.array(*[_minhash_expr(F.col("sh_arr"), p) for p in range(N_MINHASH)])
+    return src.select(F.col("doc_id"), F.posexplode(mhs).alias("seed", "mh"))
 
 
 def lsh_bands(
     src: DataFrame,
-    id_col: str = "doc_id",
-    n_hashes: int = N_MINHASH,
-    band_size: int = BAND_SIZE,
     hash_method: str = "md5",
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
@@ -256,34 +245,34 @@ def lsh_bands(
         )
         pre = (
             src.select(
-                F.col(id_col), *carry,
-                oph_bucketed(hashed, n_hashes).alias("__hb"),
+                F.col("doc_id"), *carry,
+                oph_bucketed(hashed, N_MINHASH).alias("__hb"),
             )
             .select(
-                F.col(id_col), *carry,
-                oph_slots("__hb", n_hashes).alias("__sl"),
+                F.col("doc_id"), *carry,
+                oph_slots("__hb", N_MINHASH).alias("__sl"),
             )
         )
         structs = []
-        for b in range(n_hashes // band_size):
+        for b in range(N_MINHASH // BAND_SIZE):
             cols = [
-                oph_filled_slot("__sl", j, n_hashes)
-                for j in range(b * band_size, (b + 1) * band_size)
+                oph_filled_slot("__sl", j, N_MINHASH)
+                for j in range(b * BAND_SIZE, (b + 1) * BAND_SIZE)
             ]
             bh = F.md5(F.concat_ws(",", *cols).cast("binary"))
             structs.append(
                 F.struct(F.lit(b).alias("band"), bh.alias("band_hash"))
             )
         return pre.select(
-            F.col(id_col), *carry, F.explode(F.array(*structs)).alias("bb")
+            F.col("doc_id"), *carry, F.explode(F.array(*structs)).alias("bb")
         ).select(
-            id_col, *carry_cols,
+            "doc_id", *carry_cols,
             F.col("bb.band").alias("band"),
             F.col("bb.band_hash").alias("band_hash"),
         )
     structs = []
-    for b in range(n_hashes // band_size):
-        seeds = range(b * band_size, (b + 1) * band_size)
+    for b in range(N_MINHASH // BAND_SIZE):
+        seeds = range(b * BAND_SIZE, (b + 1) * BAND_SIZE)
         mhs = [_minhash_expr(F.col("sh_arr"), p, hash_method) for p in seeds]
         if hash_method == "md5":
             bh = F.md5(F.concat_ws(",", *mhs).cast("binary"))
@@ -291,23 +280,23 @@ def lsh_bands(
             bh = F.xxhash64(*mhs).cast("string")
         structs.append(F.struct(F.lit(b).alias("band"), bh.alias("band_hash")))
     return src.select(
-        F.col(id_col), *carry, F.explode(F.array(*structs)).alias("bb")
+        F.col("doc_id"), *carry, F.explode(F.array(*structs)).alias("bb")
     ).select(
-        id_col, *carry_cols,
+        "doc_id", *carry_cols,
         F.col("bb.band").alias("band"),
         F.col("bb.band_hash").alias("band_hash"),
     )
 
 
-def band_candidate_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def band_candidate_pairs(bands: DataFrame) -> DataFrame:
     """Self-join band buckets → de-duplicated ordered candidate pairs.
     Equi-join on (band, band_hash): Spark hash-partitions buckets
     across executors — never an all-pairs comparison."""
     a = bands.select(
-        F.col(id_col).alias("doc_a"), F.col("band"), F.col("band_hash")
+        F.col("doc_id").alias("doc_a"), F.col("band"), F.col("band_hash")
     )
     b = bands.select(
-        F.col(id_col).alias("doc_b"), F.col("band"), F.col("band_hash")
+        F.col("doc_id").alias("doc_b"), F.col("band"), F.col("band_hash")
     )
     return (
         a.join(b, ["band", "band_hash"])
@@ -317,16 +306,14 @@ def band_candidate_pairs(bands: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str = "doc_id", band_size: int = BAND_SIZE
-) -> DataFrame:
+def lsh_candidate_pairs(sigs: DataFrame, band_size: int = BAND_SIZE) -> DataFrame:
     """Candidate pairs from (id, seed, mh) signature rows — the grouped
     formulation, kept for callers that materialize signatures. The
     fused pipeline (``minhash_lsh_dedup``) uses the row-local
     ``lsh_bands`` instead."""
     bands = (
         sigs.withColumn("band", (F.col("seed") / band_size).cast("int"))
-        .groupBy(id_col, "band")
+        .groupBy("doc_id", "band")
         .agg(
             F.md5(
                 F.concat_ws(
@@ -339,16 +326,10 @@ def lsh_candidate_pairs(
             ).alias("band_hash")
         )
     )
-    return band_candidate_pairs(bands, id_col)
+    return band_candidate_pairs(bands)
 
 
-def jaccard_verify(
-    pairs: DataFrame,
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingles: DataFrame | None = None,
-) -> DataFrame:
+def jaccard_verify(pairs: DataFrame, df: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
     """Exact token-shingle Jaccard for candidate pairs only.
 
     |A∩B| via an equi-join of the two shingle sets on the shingle value;
@@ -361,15 +342,15 @@ def jaccard_verify(
     intersection join), so callers should pass a persisted — or
     cheap-to-recompute, e.g. candidate-bounded — shingle table.
     """
-    sh = shingles if shingles is not None else shingle_table(df, id_col, text_col)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
+    sh = shingles if shingles is not None else shingle_table(df)
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     inter = (
         pairs.join(
-            sh.select(F.col(id_col).alias("doc_a"), F.col("shingle")), "doc_a"
+            sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle")), "doc_a"
         )
         .join(
-            sh.select(F.col(id_col).alias("doc_b"), F.col("shingle")),
+            sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle")),
             ["doc_b", "shingle"],
         )
         .groupBy("doc_a", "doc_b")
@@ -378,8 +359,8 @@ def jaccard_verify(
     out = (
         pairs.join(inter, ["doc_a", "doc_b"], "left")
         .na.fill({"n_inter": 0})
-        .join(sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
+        .join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a")
+        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
         .withColumn(
             "jaccard",
             safe_div(
@@ -433,12 +414,12 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def candidate_ids(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def candidate_ids(pairs: DataFrame) -> DataFrame:
     """Distinct doc ids appearing in candidate pairs — the semi-join key
     that bounds every verification cost to candidate docs only."""
     return (
-        pairs.select(F.col("doc_a").alias(id_col))
-        .union(pairs.select(F.col("doc_b").alias(id_col)))
+        pairs.select(F.col("doc_a").alias("doc_id"))
+        .union(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
 
@@ -446,15 +427,9 @@ def candidate_ids(pairs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 DECON_MIN_OVERLAP = 5  # shared shingles before a train doc is flagged
 
 
-def decontaminate(
-    train: DataFrame,
-    bench: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_overlap: int = DECON_MIN_OVERLAP,
-) -> DataFrame:
+def decontaminate(train: DataFrame, bench: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing at
-    least ``min_overlap`` distinct token shingles with ANY benchmark
+    least ``DECON_MIN_OVERLAP`` distinct token shingles with ANY benchmark
     document. Returns (id, n_overlap) for flagged docs.
 
     The canonical pre-training hygiene op (strip eval-set text from the
@@ -472,24 +447,18 @@ def decontaminate(
     ``shingle_table`` emits per-doc DISTINCT shingles, so the count is
     a distinct-overlap count without a count_distinct.
     """
-    bench_sh = shingle_table(bench, id_col, text_col).select("shingle").distinct()
-    hits = shingle_table(train, id_col, text_col).join(
+    bench_sh = shingle_table(bench).select("shingle").distinct()
+    hits = shingle_table(train).join(
         F.broadcast(bench_sh), "shingle"
     )
     return (
-        hits.groupBy(id_col)
+        hits.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_overlap"))
-        .filter(F.col("n_overlap") >= min_overlap)
+        .filter(F.col("n_overlap") >= DECON_MIN_OVERLAP)
     )
 
 
-def minhash_lsh_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    hash_method: str = "md5",
-) -> DataFrame:
+def minhash_lsh_dedup(df: DataFrame, threshold: float = 0.5, hash_method: str = "md5") -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH bands → candidate
     pairs → exact-Jaccard verify → threshold filter.
 
@@ -511,8 +480,8 @@ def minhash_lsh_dedup(
     Returns an eagerly materialized (checkpointed) result; no cached
     corpus-sized table outlives the call.
     """
-    shingled = shingle_arrays(ensure_parallelism(df), id_col, text_col).persist()
-    bands = lsh_bands(shingled, id_col, hash_method=hash_method).persist()
+    shingled = shingle_arrays(ensure_parallelism(df)).persist()
+    bands = lsh_bands(shingled, hash_method=hash_method).persist()
     # No pre-count: a cold .persist() is NOT raced by the band
     # self-join's concurrent stage subtrees — BlockManager's per-block
     # get-or-compute lock serializes the two readers of each partition,
@@ -524,26 +493,19 @@ def minhash_lsh_dedup(
     # holds only with one executor (``local[*]``): on a cluster the two
     # readers of a partition may run on different executors and each
     # compute it. ROADMAP item 7's two-executor run is what will test it.
-    pairs = band_candidate_pairs(bands, id_col).localCheckpoint(eager=True)
+    pairs = band_candidate_pairs(bands).localCheckpoint(eager=True)
     bands.unpersist()
-    cand = candidate_ids(pairs, id_col)
-    sh = shingled.join(F.broadcast(cand), id_col).select(
-        F.col(id_col), F.explode("sh_arr").alias("shingle")
+    cand = candidate_ids(pairs)
+    sh = shingled.join(F.broadcast(cand), "doc_id").select(
+        F.col("doc_id"), F.explode("sh_arr").alias("shingle")
     )
-    verified = jaccard_verify(pairs, df, id_col, text_col, shingles=sh)
+    verified = jaccard_verify(pairs, df, shingles=sh)
     out = verified.filter(F.col("jaccard") >= threshold).localCheckpoint(eager=True)
     shingled.unpersist()
     return out
 
 
-def embedding_neardup_pairs(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-    threshold: float = 0.95,
-    method: str = "gaussian",
-) -> DataFrame:
+def embedding_neardup_pairs(emb: DataFrame, method: str = "gaussian") -> DataFrame:
     """Embedding near-dup: random-hyperplane LSH bucket → within-bucket
     exact cosine → threshold.
 
@@ -562,17 +524,17 @@ def embedding_neardup_pairs(
     # bucket AND norm are projected once per vector — the within-bucket
     # pair cosine is then a single dot fold (not dot + 2 norm refolds)
     b = emb.select(
-        F.col(id_col),
-        F.col(vec_col),
-        bucket_expr(vec_col, n_planes, method).alias("bucket"),
-        norm_expr(vec_col).alias("__n"),
+        F.col("vec_id"),
+        F.col("embedding"),
+        bucket_expr("embedding", 8, method).alias("bucket"),
+        norm_expr("embedding").alias("__n"),
     )
     left = b.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"),
+        F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"),
         "bucket", F.col("__n").alias("__na"),
     )
     right = b.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"),
+        F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"),
         "bucket", F.col("__n").alias("__nb"),
     )
     pairs = left.join(right, "bucket").filter(F.col("id_a") < F.col("id_b"))
@@ -580,16 +542,10 @@ def embedding_neardup_pairs(
         "cosine",
         safe_div(dot_expr("vec_a", "vec_b"), F.col("__na") * F.col("__nb")),
     )
-    return out.filter(F.col("cosine") >= threshold).select("id_a", "id_b", "cosine")
+    return out.filter(F.col("cosine") >= EMBED_NEARDUP_COS).select("id_a", "id_b", "cosine")
 
 
-def simhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_bands: int = 4,
-    max_hamming: int = 3,
-) -> DataFrame:
+def simhash_neardup_pairs(df: DataFrame, n_bands: int = 4, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs: 32-bit SimHash → band equi-join →
     Hamming verify. Returns (id_a, id_b, hamming).
 
@@ -624,7 +580,7 @@ def simhash_neardup_pairs(
     huge.
     """
     _validate_bands(n_bands, max_hamming)
-    sketches = _simhash_sketches(df, id_col, text_col).persist()
+    sketches = _simhash_sketches(df, "doc_id", "text").persist()
     # No pre-count (r17): the block-level cache lock already serializes
     # the band join's concurrent readers of the cold persist — with one
     # executor (``local[*]``) only; see minhash_lsh_dedup, and ROADMAP
@@ -794,9 +750,7 @@ def _truncate(df: DataFrame, eager: bool, reliable: bool) -> DataFrame:
     return df.checkpoint(eager=eager) if reliable else df.localCheckpoint(eager=eager)
 
 
-def _min_label_propagation(
-    sym: DataFrame, max_iter: int = 25, reliable: bool = False
-) -> DataFrame:
+def _min_label_propagation(sym: DataFrame, reliable: bool = False) -> DataFrame:
     """Min-label propagation + pointer jumping over a symmetric,
     already-materialized (a, b) edge table. Returns (id, cluster_id)
     where cluster_id is the component's minimum node id.
@@ -860,7 +814,7 @@ def _min_label_propagation(
         eager=True,
         reliable=reliable,
     )
-    for it in range(max_iter):
+    for it in range(CC_MAX_ROUNDS):
         m = (
             sym2.join(labels, sym2["a"] == labels["id"])
             .groupBy(F.col("b").alias("id"))
@@ -898,9 +852,9 @@ def _min_label_propagation(
         # round's count materializes the accumulated plan in ONE job
         # (plan growth stays bounded: ≤4 rounds, not the unbounded
         # self-join doubling the checkpoint exists to prevent). The
-        # final round always checks, so a max_iter exit still reports
+        # final round always checks, so a CC_MAX_ROUNDS exit still reports
         # through ``labels`` the same frame shape either way.
-        if (it < 3 or it % 2 == 0) and it != max_iter - 1:
+        if (it < 3 or it % 2 == 0) and it != CC_MAX_ROUNDS - 1:
             continue
         changed = (
             labels.join(
@@ -919,7 +873,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Dedup-cluster resolution: connected components over a near-dup
@@ -951,17 +904,14 @@ def connected_components(
         eager=True,
         reliable=reliable,
     )
-    labels = _min_label_propagation(sym, max_iter, reliable=reliable)
+    labels = _min_label_propagation(sym, reliable=reliable)
     return labels.select(F.col("id").alias("doc_id"), "cluster_id")
 
 
 def simhash_dedup_clusters(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_bands: int = 4,
     max_hamming: int = 3,
-    max_iter: int = 25,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Transitive near-dup clusters straight from the corpus, fused at
@@ -979,7 +929,7 @@ def simhash_dedup_clusters(
     This is the scale path for pathological corpora: a sketch shared
     by a million documents costs ``simhash_neardup_pairs`` ~5·10^11
     emitted pairs, but costs this operator one node, one self-loop,
-    and a million output rows. Returns (id_col, cluster_id) for every
+    and a million output rows. Returns (doc_id, cluster_id) for every
     doc in some near-dup relation — identical rows to the pair-based
     composition.
 
@@ -991,7 +941,7 @@ def simhash_dedup_clusters(
     reliable = checkpoint_dir is not None
     if reliable:
         _set_checkpoint_dir(df, checkpoint_dir)
-    sketches = _simhash_sketches(df, id_col, text_col).persist()
+    sketches = _simhash_sketches(df, "doc_id", "text").persist()
     # No pre-count (r17): the block-level cache lock already serializes
     # the band join's concurrent readers of the cold persist — with one
     # executor (``local[*]``) only; see minhash_lsh_dedup, and ROADMAP
@@ -1018,21 +968,19 @@ def simhash_dedup_clusters(
         eager=True,
         reliable=reliable,
     )
-    comp = _min_label_propagation(sym, max_iter, reliable=reliable)
+    comp = _min_label_propagation(sym, reliable=reliable)
     members = _truncate(
         sketches.join(comp, sketches["simhash"] == comp["id"])
-        .select(F.explode("ids").alias(id_col), F.col("cluster_id").alias("comp")),
+        .select(F.explode("ids").alias("doc_id"), F.col("cluster_id").alias("comp")),
         eager=True,
         reliable=reliable,
     )
     sketches.unpersist()
-    comp_min = members.groupBy("comp").agg(F.min(id_col).alias("cluster_id"))
-    return members.join(comp_min, "comp").select(id_col, "cluster_id")
+    comp_min = members.groupBy("comp").agg(F.min("doc_id").alias("cluster_id"))
+    return members.join(comp_min, "comp").select("doc_id", "cluster_id")
 
 
-def dup_span_shingle_table(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 8
-) -> DataFrame:
+def dup_span_shingle_table(df: DataFrame, n: int = 8) -> DataFrame:
     """(id, shingle) long table at span width ``n`` — the wide-shingle
     sibling of ``shingle_table`` (SHINGLE=3 serves Jaccard; duplicated-
     SPAN detection wants a width where a hit means a verbatim n-token
@@ -1052,18 +1000,16 @@ def dup_span_shingle_table(
         tokens,
     )
 
-    toks_df = df.select(F.col(id_col), tokens(text_col).alias("__toks"))
+    toks_df = df.select(F.col("doc_id"), tokens().alias("__toks"))
     return ensure_parallelism(toks_df).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.array_distinct(all_grams(F.col("__toks"), n))
         ).alias("shingle"),
     )
 
 
-def dup_span_coverage(
-    sh: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def dup_span_coverage(sh: DataFrame) -> DataFrame:
     """Per-document duplicated-span coverage from a (id, shingle)
     table: the fraction of a doc's distinct spans that occur verbatim
     in at least one OTHER document — the shingle-granularity
@@ -1090,13 +1036,13 @@ def dup_span_coverage(
     # count(*) and sum(flag) fold totals and dup counts together — no
     # second doc-keyed groupBy and no doc-table join afterwards
     flagged = sh.join(shared.hint("shuffle_hash"), "shingle", "left")
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shingles"),
         F.coalesce(F.sum("__dup"), F.lit(0)).cast("long").alias(
             "n_dup_shingles"
         ),
     ).select(
-        id_col,
+        "doc_id",
         "n_shingles",
         "n_dup_shingles",
         F.round(
@@ -1105,12 +1051,7 @@ def dup_span_coverage(
     )
 
 
-def dup_span_removal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
+def dup_span_removal(df: DataFrame, n: int = 8) -> DataFrame:
     """Exact duplicated-SPAN removal — the REWRITE step on top of
     ``dup_span_coverage``'s detection (Lee et al. 2022, 'Deduplicating
     Training Data Makes Language Models Better': strip substrings that
@@ -1151,28 +1092,28 @@ def dup_span_removal(
     )
 
     toks_df = ensure_parallelism(
-        df.select(F.col(id_col), tokens(text_col).alias("__toks"))
+        df.select(F.col("doc_id"), tokens().alias("__toks"))
     )
     grams = toks_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(all_grams(F.col("__toks"), n)).alias("__p0", "shingle"),
-    ).select(F.col(id_col), (F.col("__p0") + 1).alias("start"), "shingle")
+    ).select(F.col("doc_id"), (F.col("__p0") + 1).alias("start"), "shingle")
     shared = (
-        grams.select(id_col, "shingle")
+        grams.select("doc_id", "shingle")
         .distinct()
         .groupBy("shingle")
         .agg(
             F.count(F.lit(1)).alias("__n_docs"),
-            F.min(id_col).alias("__keeper"),
+            F.min("doc_id").alias("__keeper"),
         )
         .filter(F.col("__n_docs") > 1)
         .select("shingle", "__keeper")
     )
     covered = (
         grams.join(shared.hint("shuffle_hash"), "shingle")
-        .filter(F.col(id_col) != F.col("__keeper"))
+        .filter(F.col("doc_id") != F.col("__keeper"))
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.sequence(F.col("start"), F.col("start") + F.lit(n - 1))
             ).alias("tokpos"),
@@ -1180,11 +1121,11 @@ def dup_span_removal(
         .distinct()
     )
     tokpos = toks_df.select(
-        F.col(id_col), F.posexplode("__toks").alias("__p0", "tok")
-    ).select(F.col(id_col), (F.col("__p0") + 1).alias("tokpos"), "tok")
+        F.col("doc_id"), F.posexplode("__toks").alias("__p0", "tok")
+    ).select(F.col("doc_id"), (F.col("__p0") + 1).alias("tokpos"), "tok")
     rebuilt = (
-        tokpos.join(covered, [id_col, "tokpos"], "left_anti")
-        .groupBy(id_col)
+        tokpos.join(covered, ["doc_id", "tokpos"], "left_anti")
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("__n_kept"),
             # collect_list order is nondeterministic; the sort on the
@@ -1199,10 +1140,10 @@ def dup_span_removal(
         )
     )
     return (
-        toks_df.select(F.col(id_col), F.size("__toks").alias("__n_toks"))
-        .join(rebuilt, id_col, "left")
+        toks_df.select(F.col("doc_id"), F.size("__toks").alias("__n_toks"))
+        .join(rebuilt, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("__n_toks").cast("long").alias("n_tokens"),
             (F.col("__n_toks") - F.coalesce("__n_kept", F.lit(0)))
             .cast("long")
@@ -1214,13 +1155,7 @@ def dup_span_removal(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    n_iters: int = 5,
-    damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def pagerank(edges: DataFrame, n_iters: int = 5, damping: float = 0.85) -> DataFrame:
     """Fixed-iteration PageRank over a SYMMETRIZED edge list (callers
     must provide both directions; symmetry guarantees no dangling
     nodes, so the classic ``(1−d)/N + d·Σ rank/deg`` update is exact
@@ -1251,25 +1186,25 @@ def pagerank(
     n_edges = edges.count()
     if n_edges == 0:
         return edges.select(
-            F.col(src_col).alias("doc_id"), F.lit(0.0).alias("rank")
+            F.col("src").alias("doc_id"), F.lit(0.0).alias("rank")
         ).limit(0)
     n_part = _graph_partitions(spark, n_edges)
-    sym = edges.repartition(n_part, F.col(src_col)).localCheckpoint(eager=True)
+    sym = edges.repartition(n_part, F.col("src")).localCheckpoint(eager=True)
     deg = (
-        sym.groupBy(src_col)
+        sym.groupBy("src")
         .agg(F.count(F.lit(1)).alias("deg"))
         .localCheckpoint(eager=True)
     )
-    out_edges = sym.join(deg, src_col).localCheckpoint(eager=True)
+    out_edges = sym.join(deg, "src").localCheckpoint(eager=True)
     n = deg.count()
     ranks = deg.select(
-        F.col(src_col).alias("doc_id"), F.lit(1.0 / n).alias("rank")
+        F.col("src").alias("doc_id"), F.lit(1.0 / n).alias("rank")
     )
     for _ in range(n_iters):
         ranks = (
-            ranks.join(out_edges, ranks.doc_id == out_edges[src_col])
+            ranks.join(out_edges, ranks.doc_id == out_edges["src"])
             .select(
-                F.col(dst_col).alias("doc_id"),
+                F.col("dst").alias("doc_id"),
                 (F.col("rank") / F.col("deg")).alias("c"),
             )
             .groupBy("doc_id")
@@ -1291,16 +1226,9 @@ def pagerank(
     return ranks
 
 
-def sliced_minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_hashes: int = 32,
-    slices_per_digest: int = 4,
-    shingle_arr: DataFrame | None = None,
-) -> DataFrame:
+def sliced_minhash_signatures(df: DataFrame, n_hashes: int = 32) -> DataFrame:
     """(id, seed, minhash) like :func:`minhash_signatures`, but each
-    md5 digest serves ``slices_per_digest`` seeds as disjoint 8-hex
+    md5 digest serves ``SLICES_PER_DIGEST`` seeds as disjoint 8-hex
     (32-bit) substrings: seed s hashes shingle x as
     ``substr(md5("{s // slices}:" x), (s % slices)*8, 8)``. For large
     signature sweeps (x80 prices k up to 32) this cuts the dominant
@@ -1320,12 +1248,8 @@ def sliced_minhash_signatures(
     re-evaluates its md5 and the slicing buys nothing (measured 4x).
     The barrier costs one digests-sized local materialization
     (~n_digests x 32 hex chars per shingle)."""
-    n_digests = (n_hashes + slices_per_digest - 1) // slices_per_digest
-    src = (
-        shingle_arr
-        if shingle_arr is not None
-        else shingle_arrays(df, id_col, text_col)
-    )
+    n_digests = (n_hashes + SLICES_PER_DIGEST - 1) // SLICES_PER_DIGEST
+    src = shingle_arrays(df)
     # closures keep the lambdas single-parameter: F.transform calls a
     # two-parameter lambda as (element, INDEX), silently replacing a
     # bound constant with the array position
@@ -1336,7 +1260,7 @@ def sliced_minhash_signatures(
         )
 
     hashed = src.select(
-        F.col(id_col), *[_digest(j).alias(f"__d{j}") for j in range(n_digests)]
+        F.col("doc_id"), *[_digest(j).alias(f"__d{j}") for j in range(n_digests)]
     ).localCheckpoint(eager=False)  # CSE barrier: hash once, slice 4x
 
     def _slice_min(j: int, off: int) -> Column:
@@ -1348,26 +1272,22 @@ def sliced_minhash_signatures(
 
     mhs = F.array(
         *[
-            _slice_min(s // slices_per_digest, (s % slices_per_digest) * 8)
+            _slice_min(s // SLICES_PER_DIGEST, (s % SLICES_PER_DIGEST) * 8)
             for s in range(n_hashes)
         ]
     )
     return hashed.select(
-        F.col(id_col), F.posexplode(mhs).alias("seed", "mh")
+        F.col("doc_id"), F.posexplode(mhs).alias("seed", "mh")
     )
 
 
-def sliced_minhash_sql(
-    sh: str = "sh",
-    n_hashes: int = 32,
-    slices_per_digest: int = 4,
-) -> str:
+def sliced_minhash_sql(sh: str = "sh", n_hashes: int = 32) -> str:
     """DuckDB twin of :func:`sliced_minhash_signatures` as a CTE body
     producing (doc_id, seed, mh)."""
     return f"""
         SELECT doc_id, seed,
-               min(substr(md5((seed // {slices_per_digest}) || ':' || shingle),
-                          (seed % {slices_per_digest}) * 8 + 1, 8)) AS mh
+               min(substr(md5((seed // {SLICES_PER_DIGEST}) || ':' || shingle),
+                          (seed % {SLICES_PER_DIGEST}) * 8 + 1, 8)) AS mh
         FROM {sh}, generate_series(0, {n_hashes - 1}) g(seed)
         GROUP BY doc_id, seed
     """

@@ -29,7 +29,6 @@ def asof_band_join(
     left_ts: str,
     right_ts: str,
     band_seconds: int = 180,
-    bucket_seconds: int = BUCKET_SECONDS,
     how: str = "inner",
     ts_unit: str = "us",
 ) -> DataFrame:
@@ -47,12 +46,12 @@ def asof_band_join(
     comparisons); ``"ts"`` expects TimestampType columns.
     """
     if ts_unit == "us":
-        lb = time_bucket_us(left_ts, bucket_seconds)
-        rb = time_bucket_us(right_ts, bucket_seconds)
+        lb = time_bucket_us(left_ts, BUCKET_SECONDS)
+        rb = time_bucket_us(right_ts, BUCKET_SECONDS)
         band = F.lit(band_seconds * 1_000_000)
     else:
-        lb = time_bucket(left_ts, bucket_seconds)
-        rb = time_bucket(right_ts, bucket_seconds)
+        lb = time_bucket(left_ts, BUCKET_SECONDS)
+        rb = time_bucket(right_ts, BUCKET_SECONDS)
         band = F.expr(f"INTERVAL {band_seconds} SECONDS")
 
     l = left.withColumn("__bucket", lb)
@@ -310,10 +309,10 @@ def assert_star_broadcast(
         )
 
 
-def assert_shuffle_free(df: DataFrame, max_shuffles: int = 0) -> None:
-    """Prove a plan moves no data between executors beyond
-    ``max_shuffles`` exchanges — the invariant bucketed layouts exist
-    to buy (j5: two tables bucketed on the join key must join
+def assert_shuffle_free(df: DataFrame) -> None:
+    """Prove a plan moves no data between executors: zero exchanges —
+    the invariant bucketed layouts exist to buy (j5: two tables
+    bucketed on the join key must join
     bucket-to-bucket with ZERO ShuffleExchangeExec; a lost bucket spec
     silently reintroduces the full fact shuffle while returning
     identical rows). Executes the plan once via
@@ -322,10 +321,10 @@ def assert_shuffle_free(df: DataFrame, max_shuffles: int = 0) -> None:
     :func:`_count_shuffles`)."""
     names = executed_plan_node_names(df)
     n_sh = _count_shuffles(names)
-    if n_sh > max_shuffles:
+    if n_sh > 0:
         raise RuntimeError(
             f"shuffle-free plan regressed: {n_sh} shuffle exchanges "
-            f"(max {max_shuffles}). Nodes: {sorted(set(names))}"
+            f"(max 0). Nodes: {sorted(set(names))}"
         )
 
 

@@ -21,52 +21,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", IntegerType()),
-    ]
-)
-
 N_FAKE_FEATURES = 8
+AUDIO_FRAME_MS, AUDIO_HOP_MS = 25, 10  # audio frame length and hop
+RESIZE_W, RESIZE_H = 224, 224  # letterbox canvas
 
 
-def fake_decode_features(payload: bytes, n: int = N_FAKE_FEATURES) -> list[int]:
+def fake_decode_features(payload: bytes) -> list[int]:
     """Deterministic stand-in for decode→embed: feature j = count of odd
     hex digits in md5(payload + b':' + j). Engine-portable (md5), so the
     pipeline is oracle-checkable end to end despite the stubbed codec."""
     out = []
-    for j in range(n):
+    for j in range(N_FAKE_FEATURES):
         h = hashlib.md5(payload + b":" + str(j).encode()).hexdigest()
         out.append(sum(1 for ch in h if ch in "13579bdf"))
     return out
 
 
-def extract_features(
-    media: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "media_id",
-    n_features: int = N_FAKE_FEATURES,
-) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Decode + feature-extract via ``mapInPandas`` — one Arrow batch of
     binary payloads in, one batch of fixed-width feature rows out. The
     UDF never sees row-at-a-time Python objects; payload bytes stay in
     Arrow buffers until the kernel touches them."""
     out_schema = StructType(
         [
-            StructField(id_col, LongType()),
+            StructField("media_id", LongType()),
             StructField("features", ArrayType(IntegerType())),
         ]
     )
@@ -75,72 +59,62 @@ def extract_features(
         for pdf in batches:
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "media_id": pdf["media_id"],
                     "features": [
-                        fake_decode_features(bytes(p), n_features)
-                        for p in pdf[payload_col]
+                        fake_decode_features(bytes(p))
+                        for p in pdf["payload"]
                     ],
                 }
             )
 
-    return media.select(id_col, payload_col).mapInPandas(kernel, out_schema)
+    return media.select("media_id", "payload").mapInPandas(kernel, out_schema)
 
 
-def audio_frames(
-    media: DataFrame,
-    frame_ms: int = 25,
-    hop_ms: int = 10,
-    id_col: str = "media_id",
-) -> DataFrame:
+def audio_frames(media: DataFrame) -> DataFrame:
     """Audio → STFT-style frame grid: one row per (frame_idx, start_ms)
     with the standard ``n = floor((duration - frame) / hop) + 1``
     frame count (clips shorter than one frame yield no rows). The grid
     is pure column math — the sample extraction inside each frame is
     the stubbed codec part."""
-    n_frames = F.expr(f"(duration_ms - {frame_ms}) div {hop_ms}").cast("int") + 1
+    n_frames = F.expr(f"(duration_ms - {AUDIO_FRAME_MS}) div {AUDIO_HOP_MS}").cast("int") + 1
     return (
-        media.filter((F.col("kind") == "audio") & (F.col("duration_ms") >= frame_ms))
+        media.filter((F.col("kind") == "audio") & (F.col("duration_ms") >= AUDIO_FRAME_MS))
         .select(
-            id_col,
+            "media_id",
             F.posexplode(
                 F.transform(
                     F.sequence(F.lit(0), n_frames - 1),
-                    lambda i: (i * hop_ms).cast("int"),
+                    lambda i: (i * AUDIO_HOP_MS).cast("int"),
                 )
             ).alias("frame_idx", "start_ms"),
         )
     )
 
 
-def resize_geometry(
-    media: DataFrame,
-    target_w: int = 224,
-    target_h: int = 224,
-    id_col: str = "media_id",
-) -> DataFrame:
+def resize_geometry(media: DataFrame) -> DataFrame:
     """Aspect-preserving letterbox resize plan for images: output dims
-    scaled by min(target_w/w, target_h/h) plus centering pad offsets.
+    scaled by min(RESIZE_W/w, RESIZE_H/h) plus centering pad offsets.
     All-integer math (``div``), so the geometry is bit-identical across
     engines; the pixel resample itself is the stubbed codec step. This
     is the metadata a batched GPU resize kernel consumes."""
     imgs = media.filter(
         (F.col("kind") == "image") & (F.col("width") > 0) & (F.col("height") > 0)
     )
-    wide = F.col("width") * target_h >= F.col("height") * target_w
-    out_w = F.when(wide, F.lit(target_w)).otherwise(
-        F.expr(f"(width * {target_h}) div height").cast("int")
+    wide = F.col("width") * RESIZE_H >= F.col("height") * RESIZE_W
+    out_w = F.when(wide, F.lit(RESIZE_W)).otherwise(
+        F.expr(f"(width * {RESIZE_H}) div height").cast("int")
     )
-    out_h = F.when(wide, F.expr(f"(height * {target_w}) div width").cast("int")).otherwise(
-        F.lit(target_h)
+    out_h = F.when(wide, F.expr(f"(height * {RESIZE_W}) div width").cast("int")).otherwise(
+        F.lit(RESIZE_H)
     )
     return imgs.select(
-        id_col,
+        "media_id",
         "width",
         "height",
         out_w.alias("out_w"),
         out_h.alias("out_h"),
-        ((F.lit(target_w) - out_w) / 2).cast("int").alias("pad_x"),
-        ((F.lit(target_h) - out_h) / 2).cast("int").alias("pad_y"),
+        ((F.lit(RESIZE_W) - out_w) / 2).cast("int").alias("pad_x"),
+        ((F.lit(RESIZE_H) - out_h) / 2).cast("int").alias("pad_y"),
     )
 
 

@@ -191,12 +191,11 @@ def bucket_expr(
     n_planes: int = N_PLANES,
     method: str = "gaussian",
     dim: int = 64,
-    seed: int = 7,
 ) -> Column:
     """Bucket dispatcher: ``method="gaussian"`` (production, codegen
     folds) or ``"md5"`` (engine-portable parity variant)."""
     if method == "gaussian":
-        return hyperplane_bucket_gaussian(vec_col, n_planes, dim, seed)
+        return hyperplane_bucket_gaussian(vec_col, n_planes, dim, 7)
     if method == "md5":
         return hyperplane_bucket(vec_col, n_planes)
     raise ValueError(f"unknown bucket method: {method}")
@@ -206,9 +205,7 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact cosine top-k per query vector.
 
@@ -217,7 +214,7 @@ def brute_force_topk(
     (query, candidate, score) triples — never the vectors.
     """
     q = queries.select(
-        F.col(query_id_col),
+        F.col("query_id"),
         F.col(vec_col).alias("__qvec"),
         norm_expr(vec_col).alias("__qnorm"),
     )
@@ -226,26 +223,24 @@ def brute_force_topk(
     # cosine_expr recomputes both norms per pair: 3x the FLOPs).
     c = corpus.withColumn("__norm", norm_expr(vec_col))
     scored = c.crossJoin(F.broadcast(q)).select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         safe_div(dot_expr(vec_col, "__qvec"), F.col("__norm") * F.col("__qnorm")).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col)
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.col("vec_id")
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
 def ivf_assignments(
     corpus: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
 ) -> DataFrame:
     """IVF coarse quantization: assign every vector to its
     nearest-centroid cell (max cosine, ties to the lowest centroid id).
@@ -261,7 +256,7 @@ def ivf_assignments(
     """
     carr = centroids.select(
         F.struct(
-            F.col(centroid_id).alias("cid"),
+            F.col("centroid_id").alias("cid"),
             F.col(vec_col).alias("cvec"),
             norm_expr(vec_col).alias("cnorm"),
         ).alias("__c")
@@ -281,10 +276,10 @@ def ivf_assignments(
         corpus.withColumn("__vnorm", norm_expr(vec_col))
         .crossJoin(F.broadcast(carr))
         .select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.col(vec_col),
             vnorm,
-            F.array_max(scored)["cid"].alias(centroid_id),
+            F.array_max(scored)["cid"].alias("centroid_id"),
         )
     )
 
@@ -295,48 +290,46 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 10,
     nprobe: int = 2,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF approximate top-k: score only corpus vectors whose coarse
     cell is among the query's ``nprobe`` nearest centroids — the
     inverted-file ANN layout next to the LSH variant (``lsh_topk``).
     Candidate volume shrinks ~K/nprobe-fold; recall is tunable via
     ``nprobe`` without touching the stored assignment."""
-    cells = ivf_assignments(corpus, centroids, id_col, vec_col)
+    cells = ivf_assignments(corpus, centroids, vec_col)
     qc = centroids.select(
         F.col("centroid_id"), F.col(vec_col).alias("__cvec")
     )
     qs = queries.select(
-        F.col(query_id_col), F.col(vec_col).alias("__qvec")
+        F.col("query_id"), F.col(vec_col).alias("__qvec")
     )
     q_scored = qs.crossJoin(F.broadcast(qc)).withColumn(
         "__qcos", cosine_expr("__qvec", "__cvec")  # queries × K: tiny
     )
-    wq = Window.partitionBy(query_id_col).orderBy(
+    wq = Window.partitionBy("query_id").orderBy(
         F.desc("__qcos"), F.col("centroid_id")
     )
     probes = (
         q_scored.withColumn("__rk", F.row_number().over(wq))
         .filter(F.col("__rk") <= nprobe)
-        .select(query_id_col, "__qvec", "centroid_id")
+        .select("query_id", "__qvec", "centroid_id")
     )
     probes = probes.withColumn("__qnorm", norm_expr("__qvec"))
     scored = cells.join(  # cells already carries __vnorm — no recompute
         F.broadcast(probes), "centroid_id"
     ).select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         safe_div(
             dot_expr(vec_col, "__qvec"), F.col("__vnorm") * F.col("__qnorm")
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
@@ -344,11 +337,7 @@ def kmeans_lloyd(
     corpus: DataFrame,
     init_centroids: DataFrame,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroid_id: str = "centroid_id",
     dim: int = 64,
-    round_decimals: int = 6,
 ) -> DataFrame:
     """Distributed Lloyd k-means refinement of an initial centroid set —
     the in-engine INDEX BUILD for the IVF path: ``ivf_topk`` (x12)
@@ -368,41 +357,41 @@ def kmeans_lloyd(
       shuffle), re-packed to one array column.
 
     Fixed ``n_iter`` (no convergence check) keeps the job count
-    deterministic; updated centroids are rounded to ``round_decimals``
+    deterministic; updated centroids are rounded to 6 decimals
     each iteration so distributed partial-sum ULP drift can't leak into
     the next assignment's argmax — the property that makes an
     ITERATIVE training loop exactly reproducible in ANSI SQL (the x34
     oracle unrolls the iterations as CTEs). Cells that lose all members
     drop out (standard Lloyd behavior; K can only shrink).
 
-    Returns (centroid_id, n_assigned, vec_col) — the trained
+    Returns (centroid_id, n_assigned, embedding) — the trained
     centroids, sized by their final assignment counts, directly
     consumable by ``ivf_topk``.
     """
-    cents = init_centroids.select(centroid_id, vec_col)
+    cents = init_centroids.select("centroid_id", "embedding")
     for _ in range(n_iter):
-        assigned = ivf_assignments(corpus, cents, id_col, vec_col, centroid_id)
+        assigned = ivf_assignments(corpus, cents, "embedding")
         # generated-SQL per-dimension aggregates: one F.expr per column
         # instead of ~4 Py4J calls per dim per iteration (r16; the
         # expression trees are identical)
         dims = [
             F.expr(
-                f"avg(cast(element_at({vec_col}, {j + 1}) as double))"
+                f"avg(cast(element_at(embedding, {j + 1}) as double))"
             ).alias(f"__d{j}")
             for j in range(dim)
         ]
-        upd = assigned.groupBy(centroid_id).agg(
+        upd = assigned.groupBy("centroid_id").agg(
             F.count(F.lit(1)).alias("n_assigned"), *dims
         )
         repack = (
             "array("
-            + ",".join(f"round(__d{j}, {round_decimals})" for j in range(dim))
+            + ",".join(f"round(__d{j}, 6)" for j in range(dim))
             + ")"
         )
         cents = upd.select(
-            centroid_id,
+            "centroid_id",
             "n_assigned",
-            F.expr(repack).alias(vec_col),
+            F.expr(repack).alias("embedding"),
         ).localCheckpoint(eager=True)  # K-row frame; truncates the
         # lineage so iteration N's plan doesn't embed (and re-run)
         # iterations 1..N-1 — matters once n_iter grows past the default
@@ -413,21 +402,18 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     n_planes: int = N_PLANES,
     method: str = "gaussian",
     n_tables: int = 1,
     dim: int = 64,
-    seed: int = 7,
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors sharing an LSH bucket with
     the query are scored — the candidate set shrinks ~2^n_planes-fold
     per table.
 
     ``n_tables`` is the standard LSH recall lever: L independent hash
-    tables (seeds ``seed .. seed+L-1``), candidates = the UNION of
+    tables (seeds 7 .. 7+L-1), candidates = the UNION of
     per-table bucket matches, deduplicated before scoring. Recall
     grows as 1-(1-p)^L per true neighbor at L× the candidate volume —
     tunable without touching stored data (x30 publishes the measured
@@ -442,10 +428,10 @@ def lsh_topk(
     bucket selectivity that removes ~1/5 of the full-scan arithmetic.
     """
     if n_tables == 1:
-        bucket = bucket_expr(vec_col, n_planes, method, dim, seed)
+        bucket = bucket_expr(vec_col, n_planes, method, dim)
         cb = corpus.withColumn("__bucket", bucket)
         qb = queries.select(
-            F.col(query_id_col),
+            F.col("query_id"),
             F.col(vec_col).alias("__qvec"),
             bucket.alias("__bucket"),
             norm_expr(vec_col).alias("__qnorm"),
@@ -457,7 +443,7 @@ def lsh_topk(
         tables = F.posexplode(
             F.array(
                 *[
-                    hyperplane_bucket_gaussian(vec_col, n_planes, dim, seed + t)
+                    hyperplane_bucket_gaussian(vec_col, n_planes, dim, 7 + t)
                     for t in range(n_tables)
                 ]
             )
@@ -467,7 +453,7 @@ def lsh_topk(
         # depend on the table count (r4 advice)
         cb = corpus.select("*", tables)
         qb = queries.select(
-            F.col(query_id_col),
+            F.col("query_id"),
             F.col(vec_col).alias("__qvec"),
             norm_expr(vec_col).alias("__qnorm"),
             tables,
@@ -476,18 +462,18 @@ def lsh_topk(
         # the pair key (vectors ride along — identical per id)
         cand = (
             cb.join(F.broadcast(qb), ["__t", "__bucket"])
-            .dropDuplicates([query_id_col, id_col])
+            .dropDuplicates(["query_id", "vec_id"])
         )
     scored = cand.select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         safe_div(
             dot_expr(vec_col, "__qvec"), norm_expr(vec_col) * F.col("__qnorm")
         ).alias("cosine"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine", "rank")
+        .select("query_id", "vec_id", "cosine", "rank")
     )

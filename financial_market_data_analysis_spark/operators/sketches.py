@@ -58,15 +58,8 @@ CMS_DEPTH = 4
 CMS_WIDTH = 256
 
 
-def countmin_sketch(
-    counts: DataFrame,
-    key_col: str,
-    cnt_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    salt: str = "cms",
-) -> DataFrame:
-    """Fold a per-key count table into a ``depth × width`` count-min
+def countmin_sketch(counts: DataFrame, key_col: str, cnt_col: str) -> DataFrame:
+    """Fold a per-key count table into a ``CMS_DEPTH × CMS_WIDTH`` count-min
     sketch: one row per non-empty cell, ``(r, b, cell)`` with
     ``cell = Σ counts of keys hashing to bucket b under hash row r``.
 
@@ -76,24 +69,17 @@ def countmin_sketch(
     partial sketches over corpus splits merge by cell-wise addition —
     so at 100 TB it is one map-side-combined shuffle of at most
     depth×width rows per partition, never a per-key state."""
-    rows = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("r")
+    rows = F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("r")
     e = counts.select(F.col(key_col), F.col(cnt_col), rows)
     e = e.withColumn(
         "b",
-        md5_long(_salted(salt, [F.col("r"), F.lit(":"), F.col(key_col)]))
-        % width,
+        md5_long(_salted("cms", [F.col("r"), F.lit(":"), F.col(key_col)]))
+        % CMS_WIDTH,
     )
     return e.groupBy("r", "b").agg(F.sum(cnt_col).alias("cell"))
 
 
-def countmin_estimate(
-    sketch: DataFrame,
-    keys: DataFrame,
-    key_col: str,
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    salt: str = "cms",
-) -> DataFrame:
+def countmin_estimate(sketch: DataFrame, keys: DataFrame, key_col: str) -> DataFrame:
     """Point-estimate each key in ``keys`` against the sketch:
     ``est = min over r of cell[r][h_r(key)]``. The sketch is tiny
     (≤ depth×width rows) and broadcast; probing is an equi-join on the
@@ -101,11 +87,11 @@ def countmin_estimate(
     per-key min."""
     probes = keys.select(
         F.col(key_col),
-        F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("r"),
+        F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1))).alias("r"),
     ).withColumn(
         "b",
-        md5_long(_salted(salt, [F.col("r"), F.lit(":"), F.col(key_col)]))
-        % width,
+        md5_long(_salted("cms", [F.col("r"), F.lit(":"), F.col(key_col)]))
+        % CMS_WIDTH,
     )
     joined = probes.join(F.broadcast(sketch), ["r", "b"], "left").na.fill(
         {"cell": 0}
@@ -113,23 +99,16 @@ def countmin_estimate(
     return joined.groupBy(key_col).agg(F.min("cell").alias("cms_est"))
 
 
-def countmin_cells_sql(
-    keyed_counts_cte: str,
-    key_expr: str = "tok",
-    cnt_expr: str = "cnt",
-    depth: int = CMS_DEPTH,
-    width: int = CMS_WIDTH,
-    salt: str = "cms",
-) -> str:
+def countmin_cells_sql(keyed_counts_cte: str) -> str:
     """Oracle twin of :func:`countmin_sketch` over a CTE named
     ``keyed_counts_cte`` exposing (key, cnt)."""
-    h = md5_long_sql(f"'{salt}:' || r || ':' || {key_expr}")
+    h = md5_long_sql("'cms:' || r || ':' || tok")
     # CAST: DuckDB sum over BIGINT returns HUGEINT (surfaces as float64
     # against Spark's long — the ml4 lesson)
     return f"""
-        SELECT r, {h} % {width} AS b,
-               CAST(sum({cnt_expr}) AS BIGINT) AS cell
-        FROM {keyed_counts_cte}, generate_series(0, {depth - 1}) AS g(r)
+        SELECT r, {h} % {CMS_WIDTH} AS b,
+               CAST(sum(cnt) AS BIGINT) AS cell
+        FROM {keyed_counts_cte}, generate_series(0, {CMS_DEPTH - 1}) AS g(r)
         GROUP BY 1, 2
     """
 
@@ -140,13 +119,7 @@ def countmin_cells_sql(
 KMV_K = 64
 
 
-def kmv_distinct(
-    df: DataFrame,
-    key_col: str,
-    group_cols: list[str],
-    k: int = KMV_K,
-    salt: str = "kmv",
-) -> DataFrame:
+def kmv_distinct(df: DataFrame, key_col: str, group_cols: list[str]) -> DataFrame:
     """Per-group distinct-count estimate from the k minimum hash values
     (Bar-Yossef et al. 2002 / the KMV-Θ sketch): hash each distinct key
     to u ∈ [0,1), keep the k smallest per group, estimate
@@ -161,7 +134,7 @@ def kmv_distinct(
     the exact column here exists to adjudicate the estimator."""
     distinct = df.select(*group_cols, key_col).distinct()
     hashed = distinct.withColumn(
-        "__u", md5_long(_salted(salt, [F.col(key_col)]), KMV_HEX) / KMV_SCALE
+        "__u", md5_long(_salted("kmv", [F.col(key_col)]), KMV_HEX) / KMV_SCALE
     )
     w = Window.partitionBy(*group_cols).orderBy("__u", key_col)
     ranked = hashed.select(
@@ -171,12 +144,12 @@ def kmv_distinct(
         F.count(F.lit(1)).over(Window.partitionBy(*group_cols)).alias("__n"),
     )
     kth = ranked.filter(
-        (F.col("__rn") == F.least(F.lit(k), F.col("__n")))
+        (F.col("__rn") == F.least(F.lit(KMV_K), F.col("__n")))
     ).select(
         *group_cols,
         F.col("__n").alias("n_distinct"),
-        F.when(F.col("__n") < k, F.col("__n").cast("double"))
-        .otherwise(F.lit(float(k - 1)) / F.col("__u"))
+        F.when(F.col("__n") < KMV_K, F.col("__n").cast("double"))
+        .otherwise(F.lit(float(KMV_K - 1)) / F.col("__u"))
         .alias("__est"),
     )
     return kth.select(
@@ -194,8 +167,6 @@ def kmv_distinct_sql(
     src_cte: str,
     key_expr: str,
     group_cols: list[str],
-    k: int = KMV_K,
-    salt: str = "kmv",
     extra_ctes: str = "",
 ) -> str:
     """Oracle twin of :func:`kmv_distinct` over a CTE exposing the
@@ -203,7 +174,7 @@ def kmv_distinct_sql(
     included) defines ``src_cte`` itself when needed."""
     g = ", ".join(group_cols)
     # hash the ALIASED key — dk renames key_expr to __k
-    h = md5_long_sql(f"'{salt}:' || __k", KMV_HEX)
+    h = md5_long_sql("'kmv:' || __k", KMV_HEX)
     return f"""
         WITH {extra_ctes}
         dk AS (SELECT DISTINCT {g}, {key_expr} AS __k FROM {src_cte}),
@@ -218,13 +189,13 @@ def kmv_distinct_sql(
             FROM hashed
         )
         SELECT {g}, CAST(n AS BIGINT) AS n_distinct,
-               round(CASE WHEN n < {k} THEN CAST(n AS DOUBLE)
-                          ELSE {float(k - 1)!r} / u END, 4) AS est_distinct,
-               round(abs(CASE WHEN n < {k} THEN CAST(n AS DOUBLE)
-                              ELSE {float(k - 1)!r} / u END - n) / n, 4)
+               round(CASE WHEN n < {KMV_K} THEN CAST(n AS DOUBLE)
+                          ELSE {float(KMV_K - 1)!r} / u END, 4) AS est_distinct,
+               round(abs(CASE WHEN n < {KMV_K} THEN CAST(n AS DOUBLE)
+                              ELSE {float(KMV_K - 1)!r} / u END - n) / n, 4)
                    AS rel_err
         FROM ranked
-        WHERE rn = least({k}, n)
+        WHERE rn = least({KMV_K}, n)
     """
 
 
@@ -235,42 +206,29 @@ BLOOM_M = 8192
 BLOOM_K = 2
 
 
-def bloom_bits(
-    keys: DataFrame,
-    key_col: str,
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-    salt: str = "bloom",
-) -> DataFrame:
+def bloom_bits(keys: DataFrame, key_col: str) -> DataFrame:
     """The set-bit table of a Bloom filter over ``keys``: one row per
     DISTINCT set bit position (≤ m rows total — the filter itself,
     in relational form). Partial filters over key splits merge by
     bit-union (DISTINCT), the classic mergeable-bitmap property."""
     e = keys.select(
         F.col(key_col),
-        F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("i"),
+        F.explode(F.sequence(F.lit(0), F.lit(BLOOM_K - 1))).alias("i"),
     )
     return (
         e.select(
             (
                 md5_long(
-                    _salted(salt, [F.col("i"), F.lit(":"), F.col(key_col)])
+                    _salted("bloom", [F.col("i"), F.lit(":"), F.col(key_col)])
                 )
-                % m
+                % BLOOM_M
             ).alias("bit")
         )
         .distinct()
     )
 
 
-def bloom_maybe_member(
-    probes: DataFrame,
-    bits: DataFrame,
-    key_col: str,
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-    salt: str = "bloom",
-) -> DataFrame:
+def bloom_maybe_member(probes: DataFrame, bits: DataFrame, key_col: str) -> DataFrame:
     """Probe each row's ``key_col`` against the bit table: a key is a
     *maybe-member* iff ALL k of its bit positions are set (Bloom
     semantics — no false negatives, quantifiable false positives).
@@ -280,11 +238,11 @@ def bloom_maybe_member(
     Returns the input rows (all columns) plus ``maybe_member`` (int).
     """
     probe_bits = probes.withColumn(
-        "__i", F.explode(F.sequence(F.lit(0), F.lit(k - 1)))
+        "__i", F.explode(F.sequence(F.lit(0), F.lit(BLOOM_K - 1)))
     ).withColumn(
         "__bit",
-        md5_long(_salted(salt, [F.col("__i"), F.lit(":"), F.col(key_col)]))
-        % m,
+        md5_long(_salted("bloom", [F.col("__i"), F.lit(":"), F.col(key_col)]))
+        % BLOOM_M,
     )
     bset = bits.withColumn("__set", F.lit(1))
     hit = probe_bits.join(
@@ -292,31 +250,19 @@ def bloom_maybe_member(
     )
     return (
         hit.groupBy(*[c for c in probes.columns])
-        .agg((F.count("__set") == k).cast("int").alias("maybe_member"))
+        .agg((F.count("__set") == BLOOM_K).cast("int").alias("maybe_member"))
     )
 
 
-def bloom_bits_sql(
-    keys_cte: str,
-    key_expr: str,
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
-    salt: str = "bloom",
-) -> str:
-    h = md5_long_sql(f"'{salt}:' || i || ':' || {key_expr}")
+def bloom_bits_sql(keys_cte: str, key_expr: str, m: int = BLOOM_M, k: int = BLOOM_K) -> str:
+    h = md5_long_sql(f"'bloom:' || i || ':' || {key_expr}")
     return f"""
         SELECT DISTINCT {h} % {m} AS bit
         FROM {keys_cte}, generate_series(0, {k - 1}) AS g(i)
     """
 
 
-def kmv_bottomk(
-    df: DataFrame,
-    key_col: str,
-    group_cols: list[str],
-    k: int = KMV_K,
-    salt: str = "kmv",
-) -> DataFrame:
+def kmv_bottomk(df: DataFrame, key_col: str, group_cols: list[str], k: int = KMV_K) -> DataFrame:
     """The raw bottom-k sketch ROWS per group — ``(group, __k, __u,
     __rn)`` for the k smallest hash values. This is the mergeable
     representation :func:`kmv_distinct` folds into an estimate:
@@ -326,7 +272,7 @@ def kmv_bottomk(
     intersection estimation (common keys under the merged threshold)."""
     distinct = df.select(*group_cols, key_col).distinct()
     hashed = distinct.withColumn(
-        "__u", md5_long(_salted(salt, [F.col(key_col)]), KMV_HEX) / KMV_SCALE
+        "__u", md5_long(_salted("kmv", [F.col(key_col)]), KMV_HEX) / KMV_SCALE
     )
     w = Window.partitionBy(*group_cols).orderBy("__u", key_col)
     return (
@@ -339,6 +285,7 @@ def kmv_bottomk(
 # histogram (mergeable) quantile estimation
 
 HIST_BINS = 64
+HIST_QS = (0.5, 0.95, 0.99)  # the published quantiles
 
 
 def histogram_bounds(
@@ -356,26 +303,20 @@ def histogram_bounds(
     )
 
 
-def histogram_bucket_idx(value_col: str, bins: int = HIST_BINS):
+def histogram_bucket_idx(value_col: str):
     """Bucket index of ``value_col`` given joined __mn/__mx bounds —
     the row-local pass-2 expression shared by the batch histogram and
     t16's per-micro-batch fold."""
-    width = (F.col("__mx") - F.col("__mn")) / F.lit(float(bins))
+    width = (F.col("__mx") - F.col("__mn")) / F.lit(float(HIST_BINS))
     return F.when(F.col("__mx") == F.col("__mn"), F.lit(0)).otherwise(
         F.least(
             F.floor((F.col(value_col) - F.col("__mn")) / width).cast("int"),
-            F.lit(bins - 1),
+            F.lit(HIST_BINS - 1),
         )
     )
 
 
-def histogram_quantiles(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    qs: tuple[float, ...] = (0.5, 0.95, 0.99),
-    bins: int = HIST_BINS,
-) -> DataFrame:
+def histogram_quantiles(df: DataFrame, value_col: str, group_cols: list[str]) -> DataFrame:
     """Per-group quantile ESTIMATES from an equi-width histogram —
     the mergeable answer to a8's exact rank selection (its docstring's
     "at 100 TB reach for a sketch"): the histogram is an additive
@@ -390,21 +331,16 @@ def histogram_quantiles(
     Degenerate groups (min == max) estimate the constant itself."""
     bounds = histogram_bounds(df, value_col, group_cols)
     j = df.join(F.broadcast(bounds), group_cols)
-    idx = histogram_bucket_idx(value_col, bins)
+    idx = histogram_bucket_idx(value_col)
     hist = (
         j.select(*group_cols, "__mn", "__mx", "__n", idx.alias("__b"))
         .groupBy(*group_cols, "__mn", "__mx", "__n", "__b")
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-    return histogram_quantiles_from_hist(hist, group_cols, qs, bins)
+    return histogram_quantiles_from_hist(hist, group_cols)
 
 
-def histogram_quantiles_from_hist(
-    hist: DataFrame,
-    group_cols: list[str],
-    qs: tuple[float, ...] = (0.5, 0.95, 0.99),
-    bins: int = HIST_BINS,
-) -> DataFrame:
+def histogram_quantiles_from_hist(hist: DataFrame, group_cols: list[str]) -> DataFrame:
     """The interpolation tail of :func:`histogram_quantiles`, split out
     so a STREAMED histogram state can reuse it (t16): input is the
     additive histogram relation (group cols, __mn, __mx, __n, __b,
@@ -418,7 +354,7 @@ def histogram_quantiles_from_hist(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     cum = hist.withColumn("__cum", F.sum("__c").over(wcum))
-    qcol = F.explode(F.array(*[F.lit(q) for q in qs])).alias("q")
+    qcol = F.explode(F.array(*[F.lit(q) for q in HIST_QS])).alias("q")
     probes = cum.select("*", qcol).withColumn(
         "__target",
         F.greatest(F.lit(1), F.ceil(F.col("q") * F.col("__n"))),
@@ -427,7 +363,7 @@ def histogram_quantiles_from_hist(
         (F.col("__cum") >= F.col("__target"))
         & (F.col("__cum") - F.col("__c") < F.col("__target"))
     )
-    width2 = (F.col("__mx") - F.col("__mn")) / F.lit(float(bins))
+    width2 = (F.col("__mx") - F.col("__mn")) / F.lit(float(HIST_BINS))
     frac = (
         F.col("__target") - (F.col("__cum") - F.col("__c"))
     ) / F.col("__c")
@@ -443,14 +379,12 @@ def histogram_quantiles_sql(
     src_cte: str,
     value_expr: str,
     group_cols: list[str],
-    qs: tuple[float, ...] = (0.5, 0.95, 0.99),
-    bins: int = HIST_BINS,
     extra_ctes: str = "",
 ) -> str:
     """Oracle twin of :func:`histogram_quantiles` (same float op
     order: (v-mn)/width bucket, mn + (b + frac)*width estimate)."""
     g = ", ".join(group_cols)
-    qvals = ", ".join(f"({q})" for q in qs)
+    qvals = ", ".join(f"({q})" for q in HIST_QS)
     return f"""
         WITH {extra_ctes}
         bounds AS (
@@ -462,8 +396,8 @@ def histogram_quantiles_sql(
             SELECT s.*, b.mn, b.mx, b.n,
                    CASE WHEN b.mx = b.mn THEN 0
                         ELSE least(CAST(floor(({value_expr} - b.mn)
-                                 / ((b.mx - b.mn) / {float(bins)!r})) AS INT),
-                                   {bins - 1})
+                                 / ((b.mx - b.mn) / {float(HIST_BINS)!r})) AS INT),
+                                   {HIST_BINS - 1})
                    END AS bkt
             FROM {src_cte} s JOIN bounds b USING ({g})
         ),
@@ -484,7 +418,7 @@ def histogram_quantiles_sql(
         SELECT {g}, q,
                round(CASE WHEN mx = mn THEN mn
                           ELSE mn + (bkt + (target - (cm - c)) * 1.0 / c)
-                               * ((mx - mn) / {float(bins)!r})
+                               * ((mx - mn) / {float(HIST_BINS)!r})
                      END, 6) AS est_q
         FROM probes
         WHERE cm >= target AND cm - c < target
@@ -495,7 +429,6 @@ def histogram_quantiles_sql(
 # HyperLogLog distinct counting
 
 HLL_P = 8  # 2^8 = 256 registers — the Flajolet et al. 2007 default tier
-HLL_M = 1 << HLL_P
 HLL_W_HEX = 15  # rank slice: 15 hex chars = 60 bits (fits signed 64 forever)
 HLL_MAX_RHO = 4 * HLL_W_HEX + 1  # an all-zero slice ranks maxbits + 1
 
@@ -515,11 +448,9 @@ def hll_registers(
     df: DataFrame,
     key_col: str,
     group_cols: list[str] | tuple[str, ...] = (),
-    p: int = HLL_P,
-    salt: str = "hll",
 ) -> DataFrame:
     """Per-group HyperLogLog register relation — ``(group cols,
-    register, rho)`` where ``register`` is the first ``p`` bits of the
+    register, rho)`` where ``register`` is the first ``HLL_P`` bits of the
     portable md5 hash and ``rho`` the 1-based leading-zero rank of the
     next 60 bits. This IS the sketch state: registers merge across any
     partitioning of the input by per-register ``max`` — an idempotent,
@@ -529,7 +460,7 @@ def hll_registers(
 
     Next to :func:`kmv_distinct` (bottom-k order statistic, min-union
     merge) this completes the two classic mergeable distinct-count
-    algebras; HLL's state is a fixed 2^p bytes per group regardless of
+    algebras; HLL's state is a fixed 2^HLL_P bytes per group regardless of
     cardinality — the one that survives a billion-key group.
 
     Rank extraction is INTEGER-ONLY string arithmetic (leading-zero
@@ -541,15 +472,10 @@ def hll_registers(
     Scale shape: one row-local projection, then ONE partial-aggregated
     groupBy on (group, register) whose output is at most 2^p rows per
     group — the shuffle carries the sketch, not the data."""
-    return hll_registers_fn(key_col, group_cols, p, salt)(df)
+    return hll_registers_fn(key_col, group_cols)(df)
 
 
-def hll_registers_fn(
-    key_col: str,
-    group_cols: list[str] | tuple[str, ...] = (),
-    p: int = HLL_P,
-    salt: str = "hll",
-):
+def hll_registers_fn(key_col: str, group_cols: list[str] | tuple[str, ...] = ()):
     """Prebuilt ``DataFrame -> registers`` closure behind
     :func:`hll_registers` — every Column is constructed ONCE here and
     reused on each call. Per-batch callers (the t27 incremental merge)
@@ -557,11 +483,9 @@ def hll_registers_fn(
     which is pure py4j/plan-construction chatter (r16, guide §4's
     boundary at plan-build time). Columns bind to a DataFrame only at
     use, so reuse across micro-batches is semantics-free."""
-    if p % 4 != 0:
-        raise ValueError("p must be a multiple of 4 (hex-slice registers)")
-    reg_hex = p // 4
+    reg_hex = HLL_P // 4
     key_ok = F.col(key_col).isNotNull()
-    hx = F.md5(_salted(salt, [F.col(key_col)]).cast("binary"))
+    hx = F.md5(_salted("hll", [F.col(key_col)]).cast("binary"))
     w = HLL_W_HEX
     j_col = F.conv(F.substring("__hx", 1, reg_hex), 16, 10).cast("int")
     sub_col = F.substring("__hx", reg_hex + 1, w)
@@ -606,7 +530,6 @@ def hll_registers_fn(
 def hll_estimate_from_registers(
     regs: DataFrame,
     group_cols: list[str] | tuple[str, ...] = (),
-    p: int = HLL_P,
 ) -> DataFrame:
     """The estimate tail over a register relation (batch-built or
     stream-merged — the split mirrors
@@ -625,7 +548,7 @@ def hll_estimate_from_registers(
     the shift count 61 - rho stays ≥ 0 even at the all-zero-slice cap
     rho = 61 (a negative shiftleft count silently wraps on the JVM —
     the one edge the integer fold must not hit)."""
-    m = 1 << p
+    m = 1 << HLL_P
     c_lit = _hll_alpha(m) * m * m * (2.0**HLL_MAX_RHO)
     term = F.expr(
         f"CAST(shiftleft(CAST(1 AS BIGINT), {HLL_MAX_RHO} - rho)"
@@ -651,22 +574,15 @@ def hll_estimate_from_registers(
     )
 
 
-def hll_sql(
-    src_cte: str,
-    key_expr: str,
-    group_cols: list[str],
-    p: int = HLL_P,
-    salt: str = "hll",
-    extra_ctes: str = "",
-) -> str:
+def hll_sql(src_cte: str, key_expr: str, group_cols: list[str]) -> str:
     """Oracle twin of ``hll_registers`` → ``hll_estimate_from_registers``
     over a CTE exposing the group columns and ``key_expr``: identical
     md5 slice, identical integer rank arithmetic, identical exact
     integer register sum (DuckDB's sum(BIGINT) is HUGEINT — exact),
     identical two-rounding estimate."""
     g = ", ".join(group_cols)
-    m = 1 << p
-    reg_hex = p // 4
+    m = 1 << HLL_P
+    reg_hex = HLL_P // 4
     w = HLL_W_HEX
     c_lit = _hll_alpha(m) * m * m * (2.0**HLL_MAX_RHO)
     z = f"({w} - length(trim(LEADING '0' FROM sub)))"
@@ -676,9 +592,9 @@ def hll_sql(
              WHEN '4' THEN 1 WHEN '5' THEN 1 WHEN '6' THEN 1
              WHEN '7' THEN 1 ELSE 0 END"""
     return f"""
-        WITH {extra_ctes}
+        WITH 
         hx AS (
-            SELECT {g}, md5('{salt}:' || {key_expr}) AS h FROM {src_cte}
+            SELECT {g}, md5('hll:' || {key_expr}) AS h FROM {src_cte}
             WHERE {key_expr} IS NOT NULL
         ),
         parts AS (

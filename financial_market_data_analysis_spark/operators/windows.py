@@ -16,11 +16,11 @@ Semantics preserved deliberately (SURVEY.md §7.4):
 - Windows grow from row 1 — no warm-up NULLs.
 
 Scale note: the reference's views are unpartitioned
-``OVER (ORDER BY Timestamp)`` — a single-task sort at 100 TB. Every
-function here takes ``partition_cols``; pass a symbol/day column on a
-real cluster so each partition's window evaluates independently. The
-default (no partitioning) reproduces reference semantics for parity
-tests.
+``OVER (ORDER BY Timestamp)`` — a single-task sort at 100 TB. The W1-W8
+suite (``indicator_suite``) takes ``partition_cols``; pass a symbol/day
+column on a real cluster so each partition's window evaluates
+independently. The default (no partitioning) reproduces reference
+semantics for parity tests; the other operators here run one series.
 """
 
 from __future__ import annotations
@@ -33,23 +33,14 @@ from pyspark.sql import functions as F
 from financial_market_data_analysis_spark.functions.core import with_sql
 
 
-def trailing_window(
-    order_cols: Sequence[str | Column],
-    n_preceding: int,
-    partition_cols: Sequence[str | Column] = (),
-) -> WindowSpec:
+def trailing_window(order_cols: Sequence[str | Column], n_preceding: int) -> WindowSpec:
     """``ROWS BETWEEN n PRECEDING AND CURRENT ROW`` over an event-time
-    order; partitioned when ``partition_cols`` is given."""
-    w = Window.partitionBy(*partition_cols) if partition_cols else Window.partitionBy()
-    return w.orderBy(*order_cols).rowsBetween(-n_preceding, 0)
+    order of one series."""
+    return Window.partitionBy().orderBy(*order_cols).rowsBetween(-n_preceding, 0)
 
 
-def ordered_window(
-    order_cols: Sequence[str | Column],
-    partition_cols: Sequence[str | Column] = (),
-) -> WindowSpec:
-    w = Window.partitionBy(*partition_cols) if partition_cols else Window.partitionBy()
-    return w.orderBy(*order_cols)
+def ordered_window(order_cols: Sequence[str | Column]) -> WindowSpec:
+    return Window.partitionBy().orderBy(*order_cols)
 
 
 def _over(
@@ -84,169 +75,84 @@ def moving_average_sql(
     }
 
 
-def moving_average(
-    df: DataFrame,
-    value_col: str,
-    periods: Sequence[int],
-    order_cols: Sequence[str],
-    partition_cols: Sequence[str] = (),
-    prefix: str | None = None,
-) -> DataFrame:
-    """W1/W2/W3 — ``moving_average_sql`` applied."""
-    return with_sql(df, moving_average_sql(value_col, periods, order_cols, partition_cols, prefix))
-
-
 def bollinger_bands_sql(
     close_col: str,
     order_cols: Sequence[str],
-    period: int = 20,
-    num_std: float = 2.0,
     partition_cols: Sequence[str] = (),
 ) -> dict[str, str]:
-    """W4 — Bollinger band *distances* (create_database.py:120-135).
+    """W4 — Bollinger band *distances* (create_database.py:120-135) over
+    a 20-row frame with k = 2.
 
     ``upper_BB_dist = (avg + k*std) - close``;
     ``lower_BB_dist = close - (avg - k*std)``.
     MySQL ``STD()`` is population stddev → ``stddev_pop``; that of a
     1-row frame is 0.0 in both MySQL and Spark.
     """
-    w = _over(order_cols, partition_cols, period - 1)
+    w = _over(order_cols, partition_cols, 19)
     avg, std, c = f"avg({close_col}) {w}", f"stddev_pop({close_col}) {w}", close_col
-    k = f"{float(num_std)!r}D"
+    k = "2.0D"
     return {
         "upper_BB_dist": f"({avg} + {k} * {std}) - {c}",
         "lower_BB_dist": f"{c} - ({avg} - {k} * {std})",
     }
 
 
-def bollinger_bands(
-    df: DataFrame,
-    close_col: str,
-    order_cols: Sequence[str],
-    period: int = 20,
-    num_std: float = 2.0,
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """W4 — ``bollinger_bands_sql`` applied."""
-    return with_sql(df, bollinger_bands_sql(close_col, order_cols, period, num_std, partition_cols))
-
-
 def stochastic_oscillator_sql(
     close_col: str,
     order_cols: Sequence[str],
-    n_preceding: int = 14,
     partition_cols: Sequence[str] = (),
 ) -> str:
     """W5 — ``(close - MIN(close)) / (MAX(close) - MIN(close))`` over a
     **15-row** frame (``14 PRECEDING`` hardcoded,
     create_database.py:137-148). Flat window → division by zero → NULL,
     matching MySQL."""
-    w = _over(order_cols, partition_cols, n_preceding)
+    w = _over(order_cols, partition_cols, 14)
     lo, hi = f"min({close_col}) {w}", f"max({close_col}) {w}"
     return f"try_divide({close_col} - {lo}, {hi} - {lo})"
-
-
-def stochastic_oscillator(
-    df: DataFrame,
-    close_col: str,
-    order_cols: Sequence[str],
-    n_preceding: int = 14,
-    out_col: str = "stoch",
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """W5 — ``stochastic_oscillator_sql`` applied."""
-    return with_sql(
-        df, {out_col: stochastic_oscillator_sql(close_col, order_cols, n_preceding, partition_cols)}
-    )
 
 
 def price_change_sql(
     close_col: str,
     order_cols: Sequence[str],
-    offset: int = 1,
     partition_cols: Sequence[str] = (),
 ) -> str:
     """W6 — ``close - LAG(close, 1)`` (create_database.py:150-155).
     First row: LAG is NULL → NULL, matching MySQL."""
-    return f"{close_col} - lag({close_col}, {offset}) {_over(order_cols, partition_cols)}"
-
-
-def price_change(
-    df: DataFrame,
-    close_col: str,
-    order_cols: Sequence[str],
-    offset: int = 1,
-    out_col: str = "price_change",
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """W6 — ``price_change_sql`` applied."""
-    return with_sql(df, {out_col: price_change_sql(close_col, order_cols, offset, partition_cols)})
+    return f"{close_col} - lag({close_col}, 1) {_over(order_cols, partition_cols)}"
 
 
 def average_true_range_sql(
     high_col: str,
     low_col: str,
     order_cols: Sequence[str],
-    n_preceding: int = 14,
     partition_cols: Sequence[str] = (),
 ) -> str:
     """W7 — ``AVG(high - low)`` over a **15-row** frame
     (create_database.py:157-164)."""
-    return f"avg({high_col} - {low_col}) {_over(order_cols, partition_cols, n_preceding)}"
-
-
-def average_true_range(
-    df: DataFrame,
-    high_col: str,
-    low_col: str,
-    order_cols: Sequence[str],
-    n_preceding: int = 14,
-    out_col: str = "ATR",
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """W7 — ``average_true_range_sql`` applied."""
-    return with_sql(
-        df, {out_col: average_true_range_sql(high_col, low_col, order_cols, n_preceding, partition_cols)}
-    )
+    return f"avg({high_col} - {low_col}) {_over(order_cols, partition_cols, 14)}"
 
 
 def forward_targets_sql(
     close_col: str,
     atr_col: str,
     order_cols: Sequence[str],
-    leads: Sequence[int] = (8, 15),
-    n_factors: Sequence[float] = (1.5, 3.0),
     partition_cols: Sequence[str] = (),
 ) -> dict[str, str]:
     """W8 — forward-looking binary targets (create_database.py:166-190).
 
     ``up{i} = CASE WHEN LEAD(close, lead_i) >= close + n_i * ATR THEN 1
-    ELSE 0 END`` and symmetric ``down{i}``. NULL LEAD at the tail →
+    ELSE 0 END`` and symmetric ``down{i}``, with leads (8, 15) and
+    factors (1.5, 3.0). NULL LEAD at the tail →
     condition false → 0, matching MySQL CASE semantics.
     """
     w = _over(order_cols, partition_cols)
     c = close_col
     cols: dict[str, str] = {}
-    for i, (lead, n) in enumerate(zip(leads, n_factors), start=1):
+    for i, (lead, n) in enumerate(zip((8, 15), (1.5, 3.0)), start=1):
         led, k = f"lead({c}, {lead}) {w}", f"{float(n)!r}D"
         cols[f"up{i}"] = f"CASE WHEN {led} >= {c} + {k} * {atr_col} THEN 1 ELSE 0 END"
         cols[f"down{i}"] = f"CASE WHEN {led} <= {c} - {k} * {atr_col} THEN 1 ELSE 0 END"
     return cols
-
-
-def forward_targets(
-    df: DataFrame,
-    close_col: str,
-    atr_col: str,
-    order_cols: Sequence[str],
-    leads: Sequence[int] = (8, 15),
-    n_factors: Sequence[float] = (1.5, 3.0),
-    partition_cols: Sequence[str] = (),
-) -> DataFrame:
-    """W8 — ``forward_targets_sql`` applied."""
-    return with_sql(
-        df, forward_targets_sql(close_col, atr_col, order_cols, leads, n_factors, partition_cols)
-    )
 
 
 def sliding_window_agg(
@@ -287,7 +193,6 @@ def session_windows(
     ts_col: str = "ts",
     key_cols: Sequence[str] = ("user_id",),
     gap: str = "30 minutes",
-    value_col: str = "value",
 ) -> DataFrame:
     """T4 — session windows (absent in the reference; an engine
     extension): per-key activity sessions that close after ``gap`` of
@@ -305,7 +210,7 @@ def session_windows(
         df.groupBy(*key_cols, w.alias("sw"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(value_col).alias("sum_value"),
+            F.sum("value").alias("sum_value"),
             F.min(ts_col).alias("first_ts"),
             F.max(ts_col).alias("last_ts"),
         )
@@ -325,23 +230,20 @@ def rolling_corr(
     y_col: str,
     order_cols: Sequence[str | Column],
     period: int = 20,
-    partition_cols: Sequence[str | Column] = (),
-    out_col: str = "corr",
 ) -> DataFrame:
     """W12 — trailing-window Pearson correlation between two aligned
     series (absent in the reference; the pairs-trading / lead-lag
     staple next to its single-series indicators). ``F.corr`` is a
     declarative aggregate over the same ROWS frame as the W1-W7
-    suite, so the whole computation stays in one window pass —
-    per-key with ``partition_cols`` (the scale path), reference-parity
-    global order without.
+    suite, so the whole computation stays in one window pass over
+    the reference-parity global order.
 
     Emits NULL until the frame holds ``period`` rows (partial-window
     correlations are statistically misleading and engines disagree on
     degenerate frames); callers filter on ``row_number >= period``
     like the t9 warm-up trim.
     """
-    w = trailing_window(order_cols, period - 1, partition_cols)
+    w = trailing_window(order_cols, period - 1)
     # gate on the count of complete (x, y) PAIRS in the frame — F.corr
     # silently skips null pairs, so a row-number gate would emit a
     # correlation over fewer than `period` pairs on gappy series (the
@@ -351,7 +253,7 @@ def rolling_corr(
         F.when(F.col(x_col).isNotNull() & F.col(y_col).isNotNull(), F.lit(1))
     ).over(w)
     c = F.corr(F.col(x_col), F.col(y_col)).over(w)
-    return df.withColumn(out_col, F.when(pair_cnt >= period, c))
+    return df.withColumn("corr", F.when(pair_cnt >= period, c))
 
 
 def rolling_beta(
@@ -360,7 +262,6 @@ def rolling_beta(
     x_col: str,
     order_cols: Sequence[str | Column],
     period: int = 20,
-    partition_cols: Sequence[str | Column] = (),
 ) -> DataFrame:
     """W25 — trailing-window OLS regression of ``y`` on ``x``: ``beta``
     = covar_pop(y,x)/var_pop(x) and ``alpha`` = mean(y) − beta·mean(x),
@@ -370,15 +271,14 @@ def rolling_beta(
     reference's single-series indicator views can't express). One
     window pass: all four aggregates (covar, var, two means) share the
     same ROWS frame, so Catalyst evaluates them in a single
-    WindowExec; per-key with ``partition_cols`` (the scale path),
-    reference-parity global order without.
+    WindowExec over the reference-parity global order.
 
     Emits NULL until the frame holds ``period`` complete (x, y) pairs
     (the rolling_corr gate — aggregates silently skip null pairs, so a
     row-number gate would regress over fewer points on gappy series)
     and NULL on a flat-x frame (var_pop = 0: beta is undefined; the
     guard keeps ANSI division from ever seeing the zero)."""
-    w = trailing_window(order_cols, period - 1, partition_cols)
+    w = trailing_window(order_cols, period - 1)
     y, x = F.col(y_col), F.col(x_col)
     pair_cnt = F.count(
         F.when(y.isNotNull() & x.isNotNull(), F.lit(1))
@@ -398,7 +298,6 @@ def rolling_beta_range(
     order_col: str,
     span: int,
     min_pairs: int = 5,
-    partition_cols: Sequence[str | Column] = (),
 ) -> DataFrame:
     """W26 — :func:`rolling_beta` on a time-RANGE frame: beta/alpha
     over all (x, y) pairs whose ``order_col`` (a numeric event-time
@@ -428,12 +327,7 @@ def rolling_beta_range(
     contain nulls must count non-null PAIRS
     (``count(CASE WHEN y IS NOT NULL AND x IS NOT NULL THEN 1 END)``)
     or the gate diverges cross-engine."""
-    base = (
-        Window.partitionBy(*partition_cols)
-        if partition_cols
-        else Window.partitionBy()
-    )
-    w = base.orderBy(order_col).rangeBetween(-span, 0)
+    w = Window.partitionBy().orderBy(order_col).rangeBetween(-span, 0)
     y, x = F.col(y_col), F.col(x_col)
     pair_cnt = F.count(
         F.when(y.isNotNull() & x.isNotNull(), F.lit(1))
@@ -451,8 +345,6 @@ def rolling_median(
     value_col: str,
     order_cols: Sequence[str | Column],
     period: int = 20,
-    partition_cols: Sequence[str | Column] = (),
-    out_col: str = "median",
 ) -> DataFrame:
     """W13 — trailing-window exact median (absent in the reference,
     whose views are all mean-based — create_database.py:76-190; the
@@ -473,12 +365,11 @@ def rolling_median(
     whole-partition collect), so state per window slot stays
     O(period) exactly as the other W-frames do.
 
-    Scale: per-key with ``partition_cols``; at 100 TB the sort cost is
-    period·log(period) per row — fine for indicator-sized periods; for
+    Scale: the sort cost is period·log(period) per row — fine for indicator-sized periods; for
     period ≫ 10³ reach for a sketch (approx_percentile per bucket)
     instead.
     """
-    w = trailing_window(order_cols, period - 1, partition_cols)
+    w = trailing_window(order_cols, period - 1)
     # gate on the NON-NULL count in the frame, not the row number:
     # collect_list drops nulls, so a row-count gate would misindex the
     # sorted array whenever the series has missing values and emit a
@@ -488,7 +379,7 @@ def rolling_median(
     lo = arr[(period - 1) // 2]
     hi = arr[period // 2]
     m = (lo + hi) / F.lit(2.0)
-    return df.withColumn(out_col, F.when(cnt >= period, m))
+    return df.withColumn("median", F.when(cnt >= period, m))
 
 
 def rolling_ewma(
@@ -496,7 +387,6 @@ def rolling_ewma(
     value_col: str,
     order_cols: Sequence[str | Column],
     period: int = 20,
-    partition_cols: Sequence[str | Column] = (),
     out_col: str = "ewma",
 ) -> DataFrame:
     """W14 — truncated exponentially-weighted moving average: the
@@ -519,7 +409,7 @@ def rolling_ewma(
     """
     alpha = 2.0 / (period + 1)
     decay = 1.0 - alpha
-    w = trailing_window(order_cols, period - 1, partition_cols)
+    w = trailing_window(order_cols, period - 1)
     # gate on the NON-NULL count in the frame: collect_list drops
     # nulls, so a row-number gate would misalign the (period-1-i)
     # weight exponents against a shortened array and emit a wrong
@@ -540,8 +430,6 @@ def rsi(
     value_col: str,
     order_cols: Sequence[str | Column],
     period: int = 14,
-    partition_cols: Sequence[str | Column] = (),
-    out_col: str = "rsi",
 ) -> DataFrame:
     """W15 — Relative Strength Index (Cutler's simple-average form):
     ``100 − 100/(1 + avgGain/avgLoss)`` over the trailing ``period``
@@ -556,8 +444,8 @@ def rsi(
     to cover the 0/0 case too); warm-up rows (fewer than ``period``
     deltas) are NULL.
     """
-    ow = ordered_window(order_cols, partition_cols)
-    w = trailing_window(order_cols, period - 1, partition_cols)
+    ow = ordered_window(order_cols)
+    w = trailing_window(order_cols, period - 1)
     delta = F.col(value_col) - F.lag(value_col).over(ow)
     # gains/losses stay NULL when the delta is NULL (first row, or a
     # null value making either side of the difference null) — the
@@ -578,31 +466,23 @@ def rsi(
         )
     )
     return (
-        d.withColumn(out_col, F.when(delta_cnt >= period, val))
+        d.withColumn("rsi", F.when(delta_cnt >= period, val))
         .drop("__gain", "__loss")
     )
 
 
-def macd(
-    df: DataFrame,
-    value_col: str,
-    order_cols: Sequence[str | Column],
-    fast: int = 12,
-    slow: int = 26,
-    signal: int = 9,
-    partition_cols: Sequence[str | Column] = (),
-) -> DataFrame:
-    """W17 — MACD from composed truncated EWMAs (``rolling_ewma``):
+def macd(df: DataFrame, value_col: str, order_cols: Sequence[str | Column]) -> DataFrame:
+    """W17 — MACD(12, 26, 9) from composed truncated EWMAs (``rolling_ewma``):
     ``macd_line = EWMA_fast − EWMA_slow``, ``macd_signal`` = EWMA of
     the macd line, ``macd_hist`` = line − signal. The classic pairing
     the reference's flat-MA views build toward but never reach
     (create_database.py stops at MA20/Bollinger).
 
     Composition keeps every stage frame-bounded: the line exists once
-    the slow frame is full, the signal once ``signal`` line rows
-    exist — total warm-up slow+signal−1 rows. NOTE the row contract
+    the slow frame is full, the signal once 9 line rows exist —
+    total warm-up 26+9−1 rows. NOTE the row contract
     differs from W12-W14 (which keep every input row and emit NULL):
-    this operator DROPS the first slow−1 rows — the filter is
+    this operator DROPS the first 25 rows — the filter is
     load-bearing, because the signal stage's frame must count line
     rows only. Callers annotating a bar table should join the result
     back on the order key if they need the warm-up rows. Three window
@@ -610,19 +490,12 @@ def macd(
     (partition, order) key — Catalyst collapses them into a single
     sort/Window pipeline per stage, no extra shuffles.
     """
-    d = rolling_ewma(
-        df, value_col, order_cols, fast, partition_cols, out_col="__ewma_fast"
-    )
-    d = rolling_ewma(
-        d, value_col, order_cols, slow, partition_cols, out_col="__ewma_slow"
-    )
+    d = rolling_ewma(df, value_col, order_cols, 12, out_col="__ewma_fast")
+    d = rolling_ewma(d, value_col, order_cols, 26, out_col="__ewma_slow")
     d = d.withColumn(
         "macd_line", F.col("__ewma_fast") - F.col("__ewma_slow")
     ).filter(F.col("macd_line").isNotNull())
-    d = rolling_ewma(
-        d, "macd_line", order_cols, signal, partition_cols,
-        out_col="macd_signal",
-    )
+    d = rolling_ewma(d, "macd_line", order_cols, 9, out_col="macd_signal")
     return (
         d.withColumn("macd_hist", F.col("macd_line") - F.col("macd_signal"))
         .drop("__ewma_fast", "__ewma_slow")
@@ -634,17 +507,14 @@ def on_balance_volume(
     close_col: str,
     volume_col: str,
     order_cols: Sequence[str | Column],
-    partition_cols: Sequence[str | Column] = (),
     out_col: str = "obv",
 ) -> DataFrame:
     """W16 — On-Balance Volume: running sum of volume signed by the
     bar-to-bar close direction (up bar adds, down bar subtracts, flat
     contributes zero; the first bar contributes zero — no prior
-    close). An UNBOUNDED PRECEDING running frame, which is exactly
-    when ``partition_cols`` matters at scale: per-symbol the running
-    sum is a per-partition scan; global it is reference-parity only.
+    close). An UNBOUNDED PRECEDING running frame over one series.
     """
-    ow = ordered_window(order_cols, partition_cols)
+    ow = ordered_window(order_cols)
     prev = F.lag(close_col).over(ow)
     # integer literals keep the branch TYPE-PRESERVING: a LongType
     # volume column yields a LongType running sum (exact integer
@@ -658,11 +528,7 @@ def on_balance_volume(
         .when(F.col(close_col) < prev, -F.col(volume_col))
         .otherwise(F.lit(0))
     )
-    run = (
-        Window.partitionBy(*partition_cols)
-        if partition_cols
-        else Window.partitionBy()
-    ).orderBy(*order_cols).rowsBetween(Window.unboundedPreceding, 0)
+    run = Window.partitionBy().orderBy(*order_cols).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn("__signed_vol", signed).withColumn(
         out_col, F.sum("__signed_vol").over(run)
     ).drop("__signed_vol")
@@ -675,7 +541,6 @@ def adx(
     close_col: str,
     order_cols: Sequence[str | Column],
     period: int = 14,
-    partition_cols: Sequence[str | Column] = (),
 ) -> DataFrame:
     """W21 — Average Directional Index (trend-strength oscillator), the
     directional-movement sibling of W15's RSI: ``+DM/−DM`` from
@@ -698,8 +563,8 @@ def adx(
     Catalyst evaluates them in a single sort pipeline — no extra
     shuffle for the second pass.
     """
-    ow = ordered_window(order_cols, partition_cols)
-    w = trailing_window(order_cols, period - 1, partition_cols)
+    ow = ordered_window(order_cols)
+    w = trailing_window(order_cols, period - 1)
     h, low, c = F.col(high_col), F.col(low_col), F.col(close_col)
     prev_c = F.lag(close_col).over(ow)
     up = h - F.lag(high_col).over(ow)
@@ -793,14 +658,7 @@ def sliding_join_back(
 
 def indicator_suite_sql(
     order_cols: Sequence[str],
-    close_col: str = "close",
-    high_col: str = "high",
-    low_col: str = "low",
-    volume_col: str = "volume",
-    vol_periods: Sequence[int] = (6, 20),
-    price_periods: Sequence[int] = (20,),
     delta_col: str | None = None,
-    delta_periods: Sequence[int] = (12,),
     partition_cols: Sequence[str] = (),
 ) -> list[dict[str, str]]:
     """The full W1-W8 view stack as two projection stages: W1-W7, then
@@ -813,38 +671,27 @@ def indicator_suite_sql(
     """
     o, p = order_cols, partition_cols
     w1_w7 = {
-        **moving_average_sql(volume_col, vol_periods, o, p, prefix="vol"),
-        **moving_average_sql(close_col, price_periods, o, p, prefix="price"),
-        **(moving_average_sql(delta_col, delta_periods, o, p, prefix="delta") if delta_col else {}),
-        **bollinger_bands_sql(close_col, o, partition_cols=p),
-        "stoch": stochastic_oscillator_sql(close_col, o, partition_cols=p),
-        "price_change": price_change_sql(close_col, o, partition_cols=p),
-        "ATR": average_true_range_sql(high_col, low_col, o, partition_cols=p),
+        **moving_average_sql("volume", (6, 20), o, p, prefix="vol"),
+        **moving_average_sql("close", (20,), o, p, prefix="price"),
+        **(moving_average_sql(delta_col, (12,), o, p, prefix="delta") if delta_col else {}),
+        **bollinger_bands_sql("close", o, partition_cols=p),
+        "stoch": stochastic_oscillator_sql("close", o, partition_cols=p),
+        "price_change": price_change_sql("close", o, partition_cols=p),
+        "ATR": average_true_range_sql("high", "low", o, partition_cols=p),
     }
-    return [w1_w7, forward_targets_sql(close_col, "ATR", o, partition_cols=p)]
+    return [w1_w7, forward_targets_sql("close", "ATR", o, partition_cols=p)]
 
 
 def indicator_suite(
     df: DataFrame,
     order_cols: Sequence[str],
-    close_col: str = "close",
-    high_col: str = "high",
-    low_col: str = "low",
-    volume_col: str = "volume",
-    vol_periods: Sequence[int] = (6, 20),
-    price_periods: Sequence[int] = (20,),
-    delta_col: str | None = None,
-    delta_periods: Sequence[int] = (12,),
     partition_cols: Sequence[str] = (),
 ) -> DataFrame:
     """The full W1-W8 view stack applied in one pass — the engine's
     replacement for the reference's ``join_statement`` assembly
     (create_database.py:240-258): ``indicator_suite_sql``'s stages in
     turn."""
-    for stage in indicator_suite_sql(
-        order_cols, close_col, high_col, low_col, volume_col, vol_periods,
-        price_periods, delta_col, delta_periods, partition_cols,
-    ):
+    for stage in indicator_suite_sql(order_cols, partition_cols=partition_cols):
         df = with_sql(df, stage)
     return df
 
@@ -856,7 +703,6 @@ def donchian_channel(
     close_col: str,
     order_cols: Sequence[str | Column],
     period: int = 20,
-    partition_cols: Sequence[str | Column] = (),
 ) -> DataFrame:
     """W18 — Donchian channel: trailing ``period``-bar highest high /
     lowest low, their midline, and a breakout flag against the PRIOR
@@ -869,10 +715,10 @@ def donchian_channel(
     state per frame slot. Warm-up rows (frame < period) are NULL like
     every trimmed W-operator; the breakout flag additionally needs the
     PREVIOUS row's full channel (LAG of the frame max), so it starts
-    one bar later. Partitionable per symbol via ``partition_cols``.
+    one bar later.
     """
-    w = trailing_window(order_cols, period - 1, partition_cols)
-    wo = ordered_window(order_cols, partition_cols)
+    w = trailing_window(order_cols, period - 1)
+    wo = ordered_window(order_cols)
     cnt = F.count(F.col(close_col)).over(w)
     upper = F.when(cnt >= period, F.max(F.col(high_col)).over(w))
     lower = F.when(cnt >= period, F.min(F.col(low_col)).over(w))
@@ -903,7 +749,6 @@ def williams_r(
     close_col: str,
     order_cols: Sequence[str | Column],
     period: int = 14,
-    partition_cols: Sequence[str | Column] = (),
 ) -> DataFrame:
     """W23 — Williams %R: (highest high − close) / (highest high −
     lowest low) × −100 over a trailing ``period`` frame — the
@@ -911,7 +756,7 @@ def williams_r(
     measured from the top of the range and scaled to [−100, 0]).
     Flat frames (max == min) yield NULL via ``try_divide``, matching
     W5's degenerate-window convention; warm-up rows are NULL."""
-    w = trailing_window(order_cols, period - 1, partition_cols)
+    w = trailing_window(order_cols, period - 1)
     hh = F.max(F.col(high_col)).over(w)
     ll = F.min(F.col(low_col)).over(w)
     cnt = F.count(F.col(close_col)).over(w)
@@ -932,7 +777,6 @@ def chaikin_money_flow(
     vol_col: str,
     order_cols: Sequence[str | Column],
     period: int = 20,
-    partition_cols: Sequence[str | Column] = (),
 ) -> DataFrame:
     """W22 — Chaikin Money Flow: the volume-weighted accumulation/
     distribution oscillator — multiplier ((close−low)−(high−close))/
@@ -942,9 +786,8 @@ def chaikin_money_flow(
     reference's view set (create_database.py:76-190 ends at stochastic
     /ATR). Flat bars (high == low) contribute zero flow (``try_divide``
     NULL coalesced), the standard convention. Same declarative ROWS
-    frame as W1-W7 — two windowed sums over one sort, partitionable
-    per symbol; warm-up rows (frame < period) are NULL."""
-    w = trailing_window(order_cols, period - 1, partition_cols)
+    frame as W1-W7 — two windowed sums over one sort; warm-up rows (frame < period) are NULL."""
+    w = trailing_window(order_cols, period - 1)
     h, l, c = F.col(high_col), F.col(low_col), F.col(close_col)
     mfm = F.try_divide((c - l) - (h - c), h - l)
     mfv = F.coalesce(mfm, F.lit(0.0)) * F.col(vol_col)
@@ -963,15 +806,12 @@ def ichimoku(
     high_col: str,
     low_col: str,
     order_cols: Sequence[str | Column],
-    tenkan: int = 9,
-    kijun: int = 26,
-    senkou: int = 52,
-    partition_cols: Sequence[str | Column] = (),
 ) -> DataFrame:
-    """W20 — Ichimoku overlay AS VISIBLE AT EACH BAR: tenkan-sen and
-    kijun-sen are (frame-max(high)+frame-min(low))/2 over their
-    respective trailing frames, and the two senkou (cloud) spans are
-    the values COMPUTED ``kijun`` bars ago (the chart's forward
+    """W20 — Ichimoku(9, 26, 52) overlay AS VISIBLE AT EACH BAR:
+    tenkan-sen and kijun-sen are (frame-max(high)+frame-min(low))/2
+    over their 9- and 26-bar trailing frames, the senkou-B midline
+    spans 52 bars, and the two senkou (cloud) spans are the values
+    COMPUTED 26 bars ago (the chart's forward
     displacement, expressed causally as a LAG so every output row
     contains exactly what a trader sees at that bar — no
     future-looking column). Completes the overlay family next to W4
@@ -981,10 +821,10 @@ def ichimoku(
     halving, deterministic to the bit; warm-up rows where any frame or
     displaced value is incomplete are NULL (frame-count gated like
     every trimmed W-operator). Partitionable per symbol."""
-    wo = ordered_window(order_cols, partition_cols)
+    wo = ordered_window(order_cols)
 
     def mid(period: int) -> Column:
-        w = trailing_window(order_cols, period - 1, partition_cols)
+        w = trailing_window(order_cols, period - 1)
         cnt = F.count(F.col(high_col)).over(w)
         return F.when(
             cnt >= period,
@@ -994,15 +834,15 @@ def ichimoku(
 
     df = df.withColumns(
         {
-            "tenkan_sen": mid(tenkan),
-            "kijun_sen": mid(kijun),
-            "__senkou_b_now": mid(senkou),
+            "tenkan_sen": mid(9),
+            "kijun_sen": mid(26),
+            "__senkou_b_now": mid(52),
         }
     )
     span_a_now = (F.col("tenkan_sen") + F.col("kijun_sen")) / F.lit(2.0)
     return (
-        df.withColumn("senkou_a", F.lag(span_a_now, kijun).over(wo))
-        .withColumn("senkou_b", F.lag("__senkou_b_now", kijun).over(wo))
+        df.withColumn("senkou_a", F.lag(span_a_now, 26).over(wo))
+        .withColumn("senkou_b", F.lag("__senkou_b_now", 26).over(wo))
         .drop("__senkou_b_now")
     )
 
@@ -1020,35 +860,33 @@ def gap_fill_locf(
     step: int,
     locf_cols: Sequence[str],
     zero_cols: Sequence[str] = (),
-    partition_cols: Sequence[str] = (),
 ) -> DataFrame:
     """Regularize a bar series onto its full bucket spine (the
     operation the reference's consumer implicitly needs and never
     does: AlphaVantage bars arrive with HOLES for no-trade intervals —
     getMarketData.py:139-248 — and every trailing-window indicator
     silently computes over a variable real-time span when rows are
-    missing). Emits one row per ``step``-spaced bucket between each
-    partition's min and max observed bucket, with two explicit fill
+    missing). Emits one row per ``step``-spaced bucket between the
+    series' min and max observed bucket, with two explicit fill
     policies: ``locf_cols`` carry the last observation forward
     (prices — the market convention) and ``zero_cols`` fill 0 (volume:
     no trades IS zero volume). ``is_gap`` (0/1) marks synthesized
     rows, so downstream consumers can weight or drop them.
 
-    Scale shape: the spine is one aggregate per partition exploded
+    Scale shape: the spine is one aggregate exploded
     through TWO bounded ``sequence`` levels — chunk indices first, then
     at most ``_SPINE_CHUNK`` buckets per chunk — so a sparse multi-year
     key can never materialize its whole range as one in-memory array
     (a year at step=300 is ~105k buckets; unchunked, a single row
     would hold it all). No driver-side range generation, no cross join
-    against a calendar table; the join back is co-keyed on (partition,
-    bucket); LOCF is one ``last(ignorenulls)`` pass over the
-    per-partition event-time window."""
-    lo_hi = bars.groupBy(*partition_cols).agg(
+    against a calendar table; the join back is keyed on the bucket;
+    LOCF is one ``last(ignorenulls)`` pass over the event-time
+    window."""
+    lo_hi = bars.groupBy().agg(
         F.min(bucket_col).alias("__lo"), F.max(bucket_col).alias("__hi")
     )
     chunk_span = F.lit(step * _SPINE_CHUNK).cast("long")
     chunks = lo_hi.select(
-        *partition_cols,
         "__lo",
         "__hi",
         F.explode(
@@ -1060,7 +898,6 @@ def gap_fill_locf(
     )
     chunk_lo = F.col("__lo") + F.col("__chunk") * chunk_span
     spine = chunks.select(
-        *partition_cols,
         F.explode(
             F.sequence(
                 chunk_lo,
@@ -1071,13 +908,13 @@ def gap_fill_locf(
     )
     marked = bars.withColumn("__present", F.lit(1))
     joined = spine.join(
-        marked, [*partition_cols, bucket_col], "left"
+        marked, [bucket_col], "left"
     ).withColumn(
         "is_gap",
         F.when(F.col("__present").isNull(), F.lit(1)).otherwise(F.lit(0)),
     )
     w = (
-        Window.partitionBy(*partition_cols)
+        Window.partitionBy()
         .orderBy(bucket_col)
         .rowsBetween(Window.unboundedPreceding, 0)
     )

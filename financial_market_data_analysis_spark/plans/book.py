@@ -16,15 +16,10 @@ spark_consumer.py:347).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-from financial_market_data_analysis_spark.functions.core import with_sql
-
 LEVELS = 7  # 7 bid + 7 ask levels, config.py:36-37
 
 
 def book_sql(
-    levels: int = LEVELS,
     event_id: str = "event_id",
     user_id: str = "user_id",
     value: str = "value",
@@ -40,7 +35,7 @@ def book_sql(
     bit-identical.
     """
     cols = {}
-    for i in range(levels):
+    for i in range(LEVELS):
         off = f"({i + 1}.0D / 100.0D)"
         cols[f"bid_{i}"] = f"{value} - {off}"
         cols[f"ask_{i}"] = f"{value} + {off}"
@@ -49,18 +44,11 @@ def book_sql(
     return cols
 
 
-def book_from_events(events: DataFrame, levels: int = LEVELS) -> DataFrame:
-    """events → 7-level order book (``book_sql`` per event)."""
-    return with_sql(
-        events.select("event_id", "ts", "ts_us", "user_id", "value"), book_sql(levels)
-    )
-
-
-def book_oracle_cte(levels: int = LEVELS) -> str:
-    """DuckDB CTE body mirroring ``book_from_events`` expression-for-
-    expression (same IEEE constant derivation → same rounding)."""
+def book_oracle_cte() -> str:
+    """DuckDB CTE body mirroring ``book_sql`` expression-for-expression
+    (same IEEE constant derivation → same rounding)."""
     parts = []
-    for i in range(levels):
+    for i in range(LEVELS):
         off = f"(CAST({i + 1} AS DOUBLE) / 100.0)"
         parts.append(f"value - {off} AS bid_{i}")
         parts.append(f"value + {off} AS ask_{i}")

@@ -50,14 +50,7 @@ def time_bucket_us(ts_us_col: str, seconds: int = BUCKET_SECONDS) -> Column:
     return F.expr(time_bucket_us_sql(ts_us_col, seconds))
 
 
-def candles_from_events(
-    events: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str = "event_id",
-    bucket_seconds: int = BUCKET_SECONDS,
-    group_cols: tuple[str, ...] = (),
-) -> DataFrame:
+def candles_from_events(events: DataFrame, group_cols: tuple[str, ...] = ()) -> DataFrame:
     """Aggregate a (seq, ts, value) stream into OHLCV bars per bucket.
 
     All six aggregates are partial-aggregatable (map-side combine), so
@@ -67,15 +60,15 @@ def candles_from_events(
     every downstream window can partition by symbol.
     """
     if "ts_us" in events.columns:
-        bucket = time_bucket_us("ts_us", bucket_seconds).alias("bucket_start")
+        bucket = time_bucket_us("ts_us", BUCKET_SECONDS).alias("bucket_start")
     else:
-        bucket = time_bucket(ts_col, bucket_seconds).alias("bucket_start")
+        bucket = time_bucket("ts", BUCKET_SECONDS).alias("bucket_start")
     return events.groupBy(*group_cols, bucket).agg(
-        F.min_by(value_col, seq_col).alias("open"),
-        F.max(value_col).alias("high"),
-        F.min(value_col).alias("low"),
-        F.max_by(value_col, seq_col).alias("close"),
-        F.sum(value_col).alias("volume"),
+        F.min_by("value", "event_id").alias("open"),
+        F.max("value").alias("high"),
+        F.min("value").alias("low"),
+        F.max_by("value", "event_id").alias("close"),
+        F.sum("value").alias("volume"),
         F.count(F.lit(1)).alias("n_events"),
     )
 
@@ -83,9 +76,6 @@ def candles_from_events(
 def candles_multires(
     events: DataFrame,
     granularities: tuple[int, ...] = (300, 900, 3600),
-    ts_col: str = "ts",
-    value_col: str = "value",
-    seq_col: str = "event_id",
 ) -> DataFrame:
     """Hierarchical multi-resolution OHLCV rollup (the hypertable
     continuous-aggregate pattern): the raw stream is scanned ONCE into
@@ -114,16 +104,16 @@ def candles_multires(
     if "ts_us" in events.columns:
         bucket = time_bucket_us("ts_us", g0)
     else:
-        bucket = time_bucket(ts_col, g0)
+        bucket = time_bucket("ts", g0)
     base = events.groupBy(bucket.alias("bucket_start")).agg(
-        F.min_by(value_col, seq_col).alias("open"),
-        F.max(value_col).alias("high"),
-        F.min(value_col).alias("low"),
-        F.max_by(value_col, seq_col).alias("close"),
-        F.sum(value_col).alias("volume"),
+        F.min_by("value", "event_id").alias("open"),
+        F.max("value").alias("high"),
+        F.min("value").alias("low"),
+        F.max_by("value", "event_id").alias("close"),
+        F.sum("value").alias("volume"),
         F.count(F.lit(1)).alias("n_events"),
-        F.min(seq_col).alias("open_seq"),
-        F.max(seq_col).alias("close_seq"),
+        F.min("event_id").alias("open_seq"),
+        F.max("event_id").alias("close_seq"),
     )
     # Each level re-reads the one below; localCheckpoint the base bars
     # so the raw-event scan is paid once, not once per level in the
@@ -196,12 +186,12 @@ def candles_multires_oracle_sql(
     return " UNION ALL ".join(parts)
 
 
-def candles_oracle_sql(bucket_seconds: int = BUCKET_SECONDS) -> str:
+def candles_oracle_sql() -> str:
     """DuckDB-equivalent CTE body for ``candles_from_events`` over the
     pre-registered ``events`` view; reused by every indicator oracle."""
     return f"""
     SELECT
-        CAST(epoch(time_bucket(INTERVAL '{bucket_seconds} seconds', ts)) AS BIGINT) AS bucket_start,
+        CAST(epoch(time_bucket(INTERVAL '{BUCKET_SECONDS} seconds', ts)) AS BIGINT) AS bucket_start,
         arg_min(value, event_id) AS open,
         max(value) AS high,
         min(value) AS low,

@@ -30,6 +30,7 @@ EMB_DUP_MOD = 100
 # session-width shuffle of them is mostly empty-task scheduling.
 GRAPH_SHUFFLE = {"spark.sql.shuffle.partitions": "8"}
 DUP_SUFFIX = " near duplicate suffix"
+NGRAM_JACCARD_MIN = 0.2  # x7: verified shingle-Jaccard cut
 N_QUERY_VECS = 5
 
 TOP_K = 10
@@ -331,18 +332,13 @@ def _oph_bands_cte() -> str:
     """
 
 
-def _seeded_bands_cte(
-    sh: str = "sh", mh: str = "mh", bands: str = "bands",
-    band_size: int | None = None,
-) -> str:
+def _seeded_bands_cte(sh: str = "sh", mh: str = "mh", bands: str = "bands") -> str:
     """Seeded MinHash band CTE pair over the shingle table ``sh``;
     CTE names are parameterized so one oracle can band TWO corpora
     side-by-side (the t13 ingest gate bands the incoming slice and
-    the corpus index independently), and ``band_size`` so the x69
-    tuning sweep can emit several band configurations over ONE shared
-    ``mh`` CTE."""
+    the corpus index independently)."""
     k = D.N_MINHASH
-    bs = D.BAND_SIZE if band_size is None else band_size
+    bs = D.BAND_SIZE
     return f"""
         {mh} AS (
             SELECT doc_id, seed, min(md5(seed || ':' || shingle)) AS mh
@@ -472,12 +468,12 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh = D.shingle_table(cand).persist()
     verified = D.jaccard_verify(pairs, d, shingles=sh)
-    out = verified.filter(F.col("jaccard") >= 0.2).localCheckpoint(eager=True)
+    out = verified.filter(F.col("jaccard") >= NGRAM_JACCARD_MIN).localCheckpoint(eager=True)
     sh.unpersist()
     return out
 
 
-def ngram_jaccard_oracle(threshold: float = 0.2) -> str:
+def ngram_jaccard_oracle() -> str:
     return f"""
         WITH aug AS ({DOCS_AUG_CTE}),
         keyed AS (
@@ -517,7 +513,7 @@ def ngram_jaccard_oracle(threshold: float = 0.2) -> str:
         JOIN sizes sb ON sb.doc_id = p.doc_b
         WHERE CAST(COALESCE(i.n_inter, 0) AS DOUBLE)
               / CAST(sa.n_sh + sb.n_sh - COALESCE(i.n_inter, 0) AS DOUBLE)
-              >= {threshold}
+              >= {NGRAM_JACCARD_MIN}
     """
 
 
@@ -926,15 +922,15 @@ def q_ann_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ann_lsh_multi_oracle(n_tables: int = LSH_TABLES) -> str:
+def ann_lsh_multi_oracle() -> str:
     buckets = [
         S.gaussian_bucket_sql("embedding", n_planes=LSH_MULTI_PLANES, seed=7 + t)
-        for t in range(n_tables)
+        for t in range(LSH_TABLES)
     ]
     qcols = ",\n                   ".join(
         f"{b} AS t{t}" for t, b in enumerate(buckets)
     )
-    ors = " OR ".join(f"e.t{t} = q.t{t}" for t in range(n_tables))
+    ors = " OR ".join(f"e.t{t} = q.t{t}" for t in range(LSH_TABLES))
     return f"""
         WITH q AS (
             SELECT vec_id AS query_id, embedding,
@@ -1123,7 +1119,7 @@ def q_pack_budget_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             (F.col("doc_id") % X81_SHARDS).cast("int").alias("shard"),
-            T.token_count("text").cast("long").alias("n_tokens"),
+            T.token_count().cast("long").alias("n_tokens"),
         )
         .withColumn(
             "st",
@@ -1200,7 +1196,7 @@ def pack_budget_sweep_oracle() -> str:
         WITH t0 AS (
             SELECT doc_id,
                    CAST(doc_id % {X81_SHARDS} AS INT) AS shard,
-                   CAST(len({T.tokens_sql("text")}) AS BIGINT) AS n_tokens
+                   CAST(len({T.tokens_sql()}) AS BIGINT) AS n_tokens
             FROM documents
         ),
         t AS (
@@ -1549,7 +1545,7 @@ def ml_feature_matrix_oracle(candles_cte: str) -> str:
     """
 
 
-def embed_neardup_oracle(threshold: float = 0.95) -> str:
+def embed_neardup_oracle() -> str:
     cos = _cos_sql("a", "b")
     return f"""
         WITH aug AS ({EMB_AUG_CTE}),
@@ -1560,7 +1556,7 @@ def embed_neardup_oracle(threshold: float = 0.95) -> str:
         SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine
         FROM bucketed a JOIN bucketed b
           ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        WHERE {cos} >= {threshold}
+        WHERE {cos} >= {D.EMBED_NEARDUP_COS}
     """
 
 
@@ -2065,7 +2061,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the x53 Bloom filter over the same gram stream (documented there),
     which this query's exact counts calibrate."""
     d = load_table(spark, "documents", sf_dir)
-    toks = d.select("doc_id", T.tokens("text").alias("__toks")).filter(
+    toks = d.select("doc_id", T.tokens().alias("__toks")).filter(
         F.size("__toks") >= X76_NGRAM
     )
     sh = toks.select(
@@ -2228,17 +2224,22 @@ def q_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     return audio_frames(media)
 
 
-def audio_frames_oracle(frame_ms: int = 25, hop_ms: int = 10) -> str:
+def audio_frames_oracle() -> str:
+    from financial_market_data_analysis_spark.operators.multimodal import (
+        AUDIO_FRAME_MS,
+        AUDIO_HOP_MS,
+    )
+
     return f"""
         SELECT media_id,
                CAST(i AS INT) AS frame_idx,
-               CAST(i * {hop_ms} AS INT) AS start_ms
+               CAST(i * {AUDIO_HOP_MS} AS INT) AS start_ms
         FROM (
             SELECT doc_id AS media_id,
                    unnest(generate_series(0,
-                       (n_chars * 10 - {frame_ms}) // {hop_ms})) AS i
+                       (n_chars * 10 - {AUDIO_FRAME_MS}) // {AUDIO_HOP_MS})) AS i
             FROM documents
-            WHERE doc_id % 3 = 1 AND n_chars * 10 >= {frame_ms}
+            WHERE doc_id % 3 = 1 AND n_chars * 10 >= {AUDIO_FRAME_MS}
         )
     """
 
@@ -2259,7 +2260,10 @@ def q_resize_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resize_geometry(media)
 
 
-def resize_geometry_oracle(tw: int = 224, th: int = 224) -> str:
+def resize_geometry_oracle() -> str:
+    from financial_market_data_analysis_spark.operators.multimodal import RESIZE_H, RESIZE_W
+
+    tw, th = RESIZE_W, RESIZE_H
     return f"""
         SELECT media_id, width, height,
                CAST(out_w AS INT) AS out_w, CAST(out_h AS INT) AS out_h,
@@ -2419,12 +2423,12 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.dup_span_coverage(sh)
 
 
-def _dup_span_shingles_sql(src: str, n: int = DUP_SPAN_N) -> str:
-    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(n))
+def _dup_span_shingles_sql(src: str) -> str:
+    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(DUP_SPAN_N))
     return f"""
         SELECT DISTINCT doc_id, s AS shingle FROM (
             SELECT doc_id, unnest(list_transform(
-                generate_series(1, greatest(len(toks) - {n - 1}, 0)),
+                generate_series(1, greatest(len(toks) - {DUP_SPAN_N - 1}, 0)),
                 i -> {gram})) AS s
             FROM (SELECT doc_id, {T.tokens_sql()} AS toks FROM {src})
         )
@@ -2523,8 +2527,8 @@ def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.dup_span_removal(docs_augmented(spark, sf_dir), n=DUP_SPAN_N)
 
 
-def dup_span_removal_oracle(n: int = DUP_SPAN_N) -> str:
-    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(n))
+def dup_span_removal_oracle() -> str:
+    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(DUP_SPAN_N))
     return f"""
         WITH aug AS ({DOCS_AUG_CTE}),
         tk AS (SELECT doc_id, {T.tokens_sql()} AS toks FROM aug),
@@ -2532,7 +2536,7 @@ def dup_span_removal_oracle(n: int = DUP_SPAN_N) -> str:
             SELECT doc_id, i AS start, {gram} AS shingle FROM (
                 SELECT doc_id, toks,
                        unnest(generate_series(1,
-                           greatest(len(toks) - {n - 1}, 0))) AS i
+                           greatest(len(toks) - {DUP_SPAN_N - 1}, 0))) AS i
                 FROM tk
             )
         ),
@@ -2544,7 +2548,7 @@ def dup_span_removal_oracle(n: int = DUP_SPAN_N) -> str:
         covered AS (
             SELECT DISTINCT doc_id, tokpos FROM (
                 SELECT g.doc_id,
-                       unnest(generate_series(g.start, g.start + {n - 1}))
+                       unnest(generate_series(g.start, g.start + {DUP_SPAN_N - 1}))
                            AS tokpos
                 FROM grams g JOIN shared s ON g.shingle = s.shingle
                 WHERE g.doc_id <> s.keeper
@@ -2783,7 +2787,7 @@ def q_countmin_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import financial_market_data_analysis_spark.operators.sketches as SK
 
     toks = load_table(spark, "documents", sf_dir).select(
-        F.explode(T.tokens("text")).alias("tok")
+        F.explode(T.tokens()).alias("tok")
     )
     counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     counts = counts.localCheckpoint(eager=False)  # feeds sketch + top
@@ -2851,7 +2855,7 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode (ensure_parallelism, the dedup-module convention)
     toks = D.ensure_parallelism(
         load_table(spark, "documents", sf_dir)
-    ).select("source", T.tokens("text").alias("__toks"))
+    ).select("source", T.tokens().alias("__toks"))
     grams = toks.select(
         "source", F.explode(T.all_grams(F.col("__toks"), 2)).alias("gram")
     )
@@ -2887,7 +2891,7 @@ def q_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     stats = d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(T.tokens("text"))).alias("n_tokens"),
+        F.sum(F.size(T.tokens())).alias("n_tokens"),
         F.round(F.avg("n_chars"), 6).alias("avg_chars"),
     )
     w = Window.partitionBy("source", "lang").orderBy("n_chars", "doc_id")
@@ -3123,7 +3127,7 @@ def q_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, "documents", sf_dir).filter(
             F.col("source").isin(*SETOPS_SOURCES)
         )
-    ).select("source", T.tokens("text").alias("__toks"))
+    ).select("source", T.tokens().alias("__toks"))
     grams = toks.select(
         "source", F.explode(T.all_grams(F.col("__toks"), 2)).alias("gram")
     )
@@ -3374,7 +3378,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = SK.KMV_K
     toks = D.ensure_parallelism(
         load_table(spark, "documents", sf_dir)
-    ).select("source", T.tokens("text").alias("__toks"))
+    ).select("source", T.tokens().alias("__toks"))
     grams = toks.select(
         "source", F.explode(T.all_grams(F.col("__toks"), 2)).alias("gram")
     ).localCheckpoint(eager=False)  # feeds sketches + exact truth
@@ -3668,17 +3672,11 @@ def q_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frame_fingerprint_pairs(media)
 
 
-def frame_fingerprint_pairs(
-    media: DataFrame,
-    frame_bytes: int = X59_FRAME_BYTES,
-    hop_bytes: int = X59_HOP_BYTES,
-    min_shared: int = X59_MIN_SHARED,
-    hot_cap: int = X59_HOT_FRAME_CAP,
-) -> DataFrame:
+def frame_fingerprint_pairs(media: DataFrame) -> DataFrame:
     """The x59 core over any (media_id, payload) table — parameterized
     so tests can exercise the hot-frame guard directly; see
     ``q_frame_dedup`` for semantics and the scale argument."""
-    fb, hop = frame_bytes, hop_bytes
+    fb, hop = X59_FRAME_BYTES, X59_HOP_BYTES
     m = D.ensure_parallelism(
         media.select("media_id", "payload").filter(
             F.length("payload") >= fb
@@ -3701,7 +3699,7 @@ def frame_fingerprint_pairs(
     hot = (
         fr.groupBy("digest")
         .agg(F.count(F.lit(1)).alias("n_assets"))
-        .filter(F.col("n_assets") > hot_cap)
+        .filter(F.col("n_assets") > X59_HOT_FRAME_CAP)
         .select("digest")
     )
     cold = fr.join(F.broadcast(hot), "digest", "left_anti")
@@ -3714,7 +3712,7 @@ def frame_fingerprint_pairs(
         .filter(F.col("media_a") < F.col("media_b"))
         .groupBy("media_a", "media_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= X59_MIN_SHARED)
     )
     return (
         pairs.join(
@@ -4366,7 +4364,7 @@ def q_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sp = T.hash_split(docs_lang_marked(spark, sf_dir))
     train = sp.filter(F.col("split") == "train")
-    trtok = train.select("lang", F.explode(T.tokens("text")).alias("token"))
+    trtok = train.select("lang", F.explode(T.tokens()).alias("token"))
     counts = (
         trtok.groupBy("lang", "token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -4388,7 +4386,7 @@ def q_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     test = sp.filter(F.col("split") == "test")
-    testtok = test.select("doc_id", F.explode(T.tokens("text")).alias("token"))
+    testtok = test.select("doc_id", F.explode(T.tokens()).alias("token"))
     tok_scores = (
         testtok.crossJoin(F.broadcast(classes))
         .join(counts, ["c_lang", "token"], "left")
@@ -4611,7 +4609,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigs = d.select(
         "doc_id",
         "lang",
-        F.explode(T.all_grams(T.tokens("text"), 2)).alias("bigram"),
+        F.explode(T.all_grams(T.tokens(), 2)).alias("bigram"),
     ).withColumn(
         "bucket", F.substring(F.md5(F.col("bigram").cast("binary")), 1, 2)
     )
@@ -5942,7 +5940,7 @@ def q_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the token key is co-partitionable end to end."""
     toks = D.ensure_parallelism(
         load_table(spark, "documents", sf_dir)
-    ).select("source", F.explode(T.tokens("text")).alias("tok"))
+    ).select("source", F.explode(T.tokens()).alias("tok"))
     sc = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("c"))
     sc = sc.localCheckpoint(eager=False)  # feeds totals, global, and the sum
     stot = sc.groupBy("source").agg(

@@ -16,7 +16,7 @@ the real schema registry:
 
 The COT and indicator feeds are synthesized deterministically from the
 driver's ``events`` table (the same stand-in strategy as
-``book_from_events``): trader groups split the signup feed by a
+``plans/book.py::book_sql``): trader groups split the signup feed by a
 ``user_id`` modulus; each of the 13 calendar events owns the
 ``user_id % 13`` residue slice of the error feed, with
 ``actual`` = latest value, ``prev_actual_diff`` = previous − actual

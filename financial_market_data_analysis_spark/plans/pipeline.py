@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from financial_market_data_analysis_spark.functions import features as FE
 from financial_market_data_analysis_spark.operators.windows import indicator_suite_sql
-from financial_market_data_analysis_spark.plans.book import book_oracle_cte, book_sql
+from financial_market_data_analysis_spark.plans.book import LEVELS, book_oracle_cte, book_sql
 from financial_market_data_analysis_spark.plans.candles import time_bucket_us_sql
 from financial_market_data_analysis_spark.sources.batch import load_table
 
@@ -323,9 +323,9 @@ def bars_joined_oracle() -> str:
     """
 
 
-def _wa_sql(side: str, levels: int = 7) -> str:
+def _wa_sql(side: str) -> str:
     num = " + ".join(
-        f"COALESCE(({side}_0 - {side}_{i}) * {side}_{i}_size, 0)" for i in range(levels)
+        f"COALESCE(({side}_0 - {side}_{i}) * {side}_{i}_size, 0)" for i in range(LEVELS)
     )
-    den = " + ".join(f"COALESCE({side}_{i}_size, 0)" for i in range(levels))
+    den = " + ".join(f"COALESCE({side}_{i}_size, 0)" for i in range(LEVELS))
     return f"(({num}) / ({den}))"

@@ -136,23 +136,11 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view so all operators are
-    SQL-addressable (SURVEY.md §3.2: the reference's view layer becomes
-    Spark temp views)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 Z_BITS = 16  # bits per dimension in the interleaved key
 
 
-def z_value(x: Column, y: Column, bits: int = Z_BITS) -> Column:
-    """Morton/Z-order key: interleave the low ``bits`` of two
+def z_value(x: Column, y: Column) -> Column:
+    """Morton/Z-order key: interleave the low ``Z_BITS`` of two
     non-negative int columns (x even positions, y odd). Sorting/range-
     partitioning data by this key before writing clusters rows that are
     close in BOTH dimensions into the same files, so parquet min/max
@@ -161,9 +149,9 @@ def z_value(x: Column, y: Column, bits: int = Z_BITS) -> Column:
     expressed as a plain deterministic column (pure integer shifts/
     masks, bit-identical in any engine).
     """
-    x, y = x.cast("long"), y.cast("long")  # 2*bits exceeds int32
+    x, y = x.cast("long"), y.cast("long")  # 2*Z_BITS exceeds int32
     terms = []
-    for b in range(bits):
+    for b in range(Z_BITS):
         xb = F.shiftright(x, b).bitwiseAND(F.lit(1).cast("long"))
         yb = F.shiftright(y, b).bitwiseAND(F.lit(1).cast("long"))
         terms.append(F.shiftleft(xb, 2 * b).bitwiseOR(F.shiftleft(yb, 2 * b + 1)))
@@ -173,11 +161,11 @@ def z_value(x: Column, y: Column, bits: int = Z_BITS) -> Column:
     return out
 
 
-def z_value_sql(x_expr: str, y_expr: str, bits: int = Z_BITS) -> str:
+def z_value_sql(x_expr: str, y_expr: str) -> str:
     xb, yb = f"CAST({x_expr} AS BIGINT)", f"CAST({y_expr} AS BIGINT)"
     terms = [
         f"((({xb} >> {b}) & 1) << {2 * b}) | ((({yb} >> {b}) & 1) << {2 * b + 1})"
-        for b in range(bits)
+        for b in range(Z_BITS)
     ]
     return "(" + " | ".join(f"({t})" for t in terms) + ")"
 

@@ -117,7 +117,6 @@ def release_split(*frames: DataFrame) -> None:
 # parquet mergeSchema.
 _WIDEN_ORDER = ["tinyint", "smallint", "int", "bigint", "float", "double"]
 _INTEGRALS = {"tinyint", "smallint", "int", "bigint"}
-_FRACTIONALS = {"float", "double"}
 
 
 def widen_type(a: str, b: str) -> str:
@@ -214,7 +213,6 @@ def load_csv_evolving(
     drops: list[tuple[str, StructType]],
     *,
     header: bool = True,
-    sep: str = ",",
 ) -> tuple[DataFrame, DataFrame]:
     """Schema-evolution-TOLERANT bulk load over N drops of the same
     feed, each with its own declared per-drop schema (the
@@ -239,7 +237,7 @@ def load_csv_evolving(
     the ``_split`` cache), casts are columnar metadata ops, the union
     is a no-shuffle concatenation. Release the parse caches with
     :func:`release_split` once materialized."""
-    return _load_evolving(load_csv, spark, drops, header=header, sep=sep)
+    return _load_evolving(load_csv, spark, drops, header=header)
 
 
 def load_jsonl_evolving(
@@ -265,7 +263,6 @@ def load_csv(
     *,
     mode: str = "PERMISSIVE",
     header: bool = True,
-    sep: str = ",",
 ) -> tuple[DataFrame, DataFrame]:
     """CSV scan under an explicit schema.
 
@@ -281,7 +278,7 @@ def load_csv(
             _with_corrupt_field(schema) if mode == "PERMISSIVE" else schema
         )
         .option("header", str(header).lower())
-        .option("sep", sep)
+        .option("sep", ",")
         .option("mode", mode)
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .csv(path)

@@ -17,19 +17,14 @@ from pyspark.sql.types import StructType
 from financial_market_data_analysis_spark.functions.schemas import flatten_projection
 
 
-def json_decode_flatten(
-    raw: DataFrame,
-    schema: StructType,
-    value_col: str = "value",
-    ts_format: str = "yyyy-MM-dd HH:mm:ss",
-) -> DataFrame:
+def json_decode_flatten(raw: DataFrame, schema: StructType) -> DataFrame:
     """S2 — ``from_json`` + struct flatten + event-time parse.
 
-    ``raw`` carries one JSON document per row in ``value_col`` (bytes or
+    ``raw`` carries one JSON document per row in ``value`` (bytes or
     string — Kafka's ``value`` works as-is). Identical for batch and
     streaming DataFrames.
     """
     parsed = raw.select(
-        F.from_json(F.col(value_col).cast("string"), schema).alias("j")
+        F.from_json(F.col("value").cast("string"), schema).alias("j")
     ).select("j.*")
-    return parsed.select(*flatten_projection(schema, ts_format))
+    return parsed.select(*flatten_projection(schema))

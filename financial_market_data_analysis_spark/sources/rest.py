@@ -42,11 +42,11 @@ MAX_DELAY_WARN_S = 240
 _RAW_SCHEMA = "value string, polled_at_us long"
 
 
-def fetch_json(url: str, timeout_s: float = 10.0) -> str:
+def fetch_json(url: str) -> str:
     """One HTTP GET returning the response body as text — the unit the
     reference wraps in requests.get (getMarketData.py:96, 186). Kept
     trivially small so tests (and air-gapped runs) can inject a fake."""
-    with urllib.request.urlopen(url, timeout=timeout_s) as resp:  # noqa: S310
+    with urllib.request.urlopen(url, timeout=10.0) as resp:  # noqa: S310
         return resp.read().decode("utf-8")
 
 

@@ -252,10 +252,10 @@ def test_vocab_topk_tiebreak_is_deterministic(spark):
         [(1, "zz aa zz aa mm"), (2, "aa zz mm qq")],
         "doc_id long, text string",
     )
-    rows = vocab_topk(docs, k=3).collect()
+    rows = vocab_topk(docs).collect()
     # tf: aa=3 zz=3 mm=2 qq=1 → ties break token-ascending
     assert [(r.token, r.tf, r.df) for r in rows] == [
-        ("aa", 3, 2), ("zz", 3, 2), ("mm", 2, 2)
+        ("aa", 3, 2), ("zz", 3, 2), ("mm", 2, 2), ("qq", 1, 1)
     ]
 
 
@@ -277,7 +277,7 @@ def test_decontaminate_flags_overlapping_docs(spark):
         ],
         "doc_id long, text string",
     )
-    rows = decontaminate(train, bench, min_overlap=5).collect()
+    rows = decontaminate(train, bench).collect()
     assert [(r.doc_id) for r in rows] == [1]
     assert rows[0].n_overlap >= 8
     plan = decontaminate(train, bench)._jdf.queryExecution().executedPlan().toString()
@@ -317,11 +317,16 @@ def test_chunk_documents_windows_and_overlap(spark):
     assert rows == {(1, 0): 128, (1, 1): 104, (2, 0): 2}
 
 
-def test_pack_sequences_budget_invariant(spark):
+def test_pack_sequences_budget_invariant(spark, monkeypatch):
     """Within every (shard, pack), total tokens minus the boundary doc
     stays under the target: a pack only overflows by the one document
-    that straddles its end."""
+    that straddles its end. A small budget over few shards makes packs
+    fill up at this corpus size."""
+    from financial_market_data_analysis_spark.functions import text as T
     from financial_market_data_analysis_spark.functions.text import pack_sequences
+
+    monkeypatch.setattr(T, "PACK_TARGET_TOKENS", 64)
+    monkeypatch.setattr(T, "PACK_SHARDS", 8)
 
     docs = spark.range(300).select(
         F.col("id").alias("doc_id"),
@@ -329,7 +334,7 @@ def test_pack_sequences_budget_invariant(spark):
             " ", F.array_repeat(F.lit("w"), (F.col("id") % 37 + 1).cast("int"))
         ).alias("text"),
     )
-    packed = pack_sequences(docs, target=64, shards=8)
+    packed = pack_sequences(docs)
     w = Window.partitionBy("shard", "pack_id").orderBy(F.desc("doc_id"))
     per_pack = (
         packed.withColumn("rn", F.row_number().over(w))
@@ -496,7 +501,7 @@ def test_sample_then_split_keeps_all_splits(spark):
         F.concat(F.lit("doc-"), F.col("id")).alias("doc_id"),
         F.lit("en").alias("lang"),
     )
-    kept = stratified_hash_sample(docs, fractions={"en": 0.5})
+    kept = stratified_hash_sample(docs)  # "en" keeps fraction 0.5
     splits = {r["split"] for r in hash_split(kept).select("split").distinct().collect()}
     assert splits == {"train", "val", "test"}
 
@@ -535,7 +540,7 @@ def test_bpe_merge_greedy_overlap_semantics(spark):
     docs = spark.createDataFrame(
         [(1, "aaa aaa aaa aaa bc bc bc")], ["doc_id", "text"]
     )
-    out = bpe_merges(docs, n_merges=1, top_k=3).collect()
+    out = bpe_merges(docs).collect()
     r1 = {(r.left_sym, r.right_sym): (r.rank, r.pair_count) for r in out if r.round == 1}
     assert r1[("a", "a")] == (1, 8)
     # after merging: each 'aaa' -> [aa, a]; round-2 pairs from 'aaa'
@@ -561,7 +566,7 @@ def test_bpe_encode_counts_match_trained_merges(spark):
         [(1, "aaa aaa aaa aaa bc bc bc"), (2, "bc aaa")],
         ["doc_id", "text"],
     )
-    got = {r.doc_id: r for r in bpe_encode(docs, n_merges=2).collect()}
+    got = {r.doc_id: r for r in bpe_encode(docs).collect()}
     assert got[1].n_words == 7
     assert got[1].n_bpe_tokens == 4 * 1 + 3 * 2  # 4×'aaa' + 3×'bc'
     assert got[2].n_words == 2
@@ -569,7 +574,7 @@ def test_bpe_encode_counts_match_trained_merges(spark):
     assert abs(got[2].bpe_per_word - 1.5) < 1e-9
     # a doc with zero tokens is absent, not a null row
     empty = spark.createDataFrame([(1, "aaa bc"), (2, "!!!")], ["doc_id", "text"])
-    ids = {r.doc_id for r in bpe_encode(empty, n_merges=1).collect()}
+    ids = {r.doc_id for r in bpe_encode(empty).collect()}
     assert ids == {1}
 
 
@@ -590,13 +595,6 @@ def test_rolling_corr_known_series(spark):
     anti = df.withColumn("y", -F.col("x"))
     out2 = rolling_corr(anti, "x", "y", ["t"], period=10).orderBy("t").collect()
     assert all(abs(r["corr"] + 1.0) < 1e-9 for r in out2[9:])
-    # per-key partitioning: each key warms up independently
-    two = df.withColumn("k", F.col("t") % 2)
-    outp = rolling_corr(
-        two, "x", "y", ["t"], period=10, partition_cols=["k"]
-    ).collect()
-    nn = [r for r in outp if r["corr"] is not None]
-    assert len(nn) == 2 * (15 - 9)
 
 
 def test_bpe_merges_degenerate_vocab_is_empty_not_crash(spark):

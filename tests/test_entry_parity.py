@@ -3,6 +3,9 @@ smoke-scale tables — a local mirror of the driver's sf0.01 gate."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -219,6 +222,28 @@ def test_bench_compare_flags_a_regression_with_documented_flags(tmp_path):
     assert "regressions: 1" in run.stdout
 
 
+def test_catalog_is_pinned():
+    """The 226 oracle texts and the ``queries()`` keys and order, pinned by
+    digest. A change that alters an oracle on purpose updates the digest
+    here and says why."""
+    import hashlib
+    import json
+
+    def digest(obj) -> str:
+        return hashlib.sha256(json.dumps(obj, sort_keys=True).encode()).hexdigest()
+
+    assert (len(ORACLES), len(QUERIES)) == (226, 229)
+    assert digest(ORACLES) == (
+        "c107fd309123b6dd1b22a48e09c5776c7553abc205c0b605582de0d8b615d721"
+    )
+    assert digest(list(QUERIES)) == (
+        "7b8922b787079fe0a1657fa31eaddf4348a43b27252f792ffed1508a0d8a131f"
+    )
+
+
+_ROOT = Path(__file__).resolve().parent.parent
+_PKG = _ROOT / "financial_market_data_analysis_spark"
+
 # Package functions that no production root reaches but that stay, each
 # with its reason. Their callees count as reached.
 _KEPT_UNREACHED = {
@@ -227,76 +252,156 @@ _KEPT_UNREACHED = {
 }
 
 
-def test_every_engine_function_is_reached_outside_tests():
-    """Guard: every top-level function in the package is reachable from a
-    production root: ``entry``, ``queries`` and ``oracle_sql`` in
-    ``__spark_entry__.py``, ``bench.py``, ``tools/*.py``, the non-test
-    files of ``perfbench/`` and module-level code in the package (names
-    exported in ``__all__`` and decorators included). Tests are not
-    roots, so a function only tests call fails here. Reachability is by
+def _names(node: ast.AST) -> set[str]:
+    return {
+        n.id if isinstance(n, ast.Name) else n.attr
+        for n in ast.walk(node)
+        if isinstance(n, (ast.Name, ast.Attribute))
+    }
+
+
+def _production_code():
+    """Names reached from the production roots: ``entry``, ``queries`` and
+    ``oracle_sql`` in ``__spark_entry__.py``, ``bench.py``, ``tools/*.py``,
+    the non-test files of ``perfbench/`` and module-level code in the
+    package (decorators included). Tests are not roots. Reachability is by
     name: a reached name walks every top-level def or class of that name
     (``conftest.py`` included, since ``perfbench/`` imports it), so the
-    walk over-approximates and cannot flag code that a root reaches."""
-    import ast
-    from pathlib import Path
+    walk over-approximates and cannot flag code that a root reaches.
 
-    root = Path(__file__).resolve().parent.parent
-    pkg = root / "financial_market_data_analysis_spark"
-
-    def names(node) -> set[str]:
-        out = set()
-        for n in ast.walk(node):
-            if isinstance(n, ast.Name):
-                out.add(n.id)
-            elif isinstance(n, ast.Attribute):
-                out.add(n.attr)
-            elif isinstance(n, ast.Assign) and any(
-                getattr(t, "id", None) == "__all__" for t in n.targets
-            ):
-                out.update(ast.literal_eval(n.value))
-        return out
-
+    Returns the package's top-level functions as ``(path, def)`` pairs,
+    the names the roots reach, and every node whose code a root runs:
+    module-level code, the defs of the root files and every reached def
+    (the callees of ``_KEPT_UNREACHED`` included)."""
     defs: dict[str, list[ast.AST]] = {}
-    funcs: list[tuple[str, str]] = []
+    funcs: list[tuple[str, ast.FunctionDef]] = []
     roots = {"entry", "queries", "oracle_sql"}
+    run: list[ast.AST] = []
     whole = [
-        root / "bench.py",
-        *sorted(root.glob("tools/*.py")),
-        *[p for p in sorted(root.glob("perfbench/*.py"))
+        _ROOT / "bench.py",
+        *sorted(_ROOT.glob("tools/*.py")),
+        *[p for p in sorted(_ROOT.glob("perfbench/*.py"))
           if not p.name.startswith("test_")],
     ]
-    for f in [*sorted(pkg.rglob("*.py")), root / "__spark_entry__.py",
-              root / "conftest.py", *whole]:
+    for f in [*sorted(_PKG.rglob("*.py")), _ROOT / "__spark_entry__.py",
+              _ROOT / "conftest.py", *whole]:
         for node in ast.parse(f.read_text()).body:
             if not isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 if f.name != "conftest.py":
-                    roots |= names(node)
+                    roots |= _names(node)
+                    run.append(node)
                 continue
             defs.setdefault(node.name, []).append(node)
             if f in whole:
-                roots |= names(node)
-            roots |= set().union(*map(names, node.decorator_list))
-            if f.is_relative_to(pkg) and not isinstance(node, ast.ClassDef):
-                funcs.append((f"{f.relative_to(root)}", node.name))
+                roots |= _names(node)
+            roots |= set().union(*map(_names, node.decorator_list))
+            if f.is_relative_to(_PKG) and isinstance(node, ast.FunctionDef):
+                funcs.append((f"{f.relative_to(_ROOT)}", node))
 
-    seen: set[str] = set()
+    reached: set[str] = set()
+    todo = set(roots)
+    while todo:
+        n = todo.pop()
+        if n not in reached:
+            reached.add(n)
+            for d in defs.get(n, ()):
+                todo |= _names(d) - reached
+    walked = set(reached)
+    todo = set(_KEPT_UNREACHED)
+    while todo:
+        n = todo.pop()
+        if n not in walked:
+            walked.add(n)
+            for d in defs.get(n, ()):
+                todo |= _names(d) - walked
+    run += [d for n in walked for d in defs.get(n, ())]
+    return funcs, reached, run
 
-    def walk(todo: set[str]) -> None:
-        todo = set(todo)
-        while todo:
-            n = todo.pop()
-            if n not in seen:
-                seen.add(n)
-                for d in defs.get(n, ()):
-                    todo |= names(d) - seen
 
-    walk(roots)
-    assert set(_KEPT_UNREACHED) <= {n for _, n in funcs} - seen, (
+def test_every_engine_function_is_reached_outside_tests():
+    """Guard: every top-level function in the package is reachable from a
+    production root (see ``_production_code``). A function only tests
+    call fails here. A name in a module's ``__all__`` is not a root: a
+    re-export that nothing imports keeps nothing alive."""
+    funcs, reached, run = _production_code()
+    kept = set(_KEPT_UNREACHED)
+    assert kept <= {fn.name for _, fn in funcs} - reached, (
         "a kept name is gone or now reached; drop it from _KEPT_UNREACHED"
     )
-    walk(set(_KEPT_UNREACHED))
-    dead = [f"{path}::{name}" for path, name in funcs if name not in seen]
+    walked = reached | {d.name for d in run if isinstance(d, ast.FunctionDef)}
+    dead = [f"{path}::{fn.name}" for path, fn in funcs if fn.name not in walked]
     assert len(funcs) > 300
     assert not dead, f"{len(dead)} functions only tests reach:\n" + "\n".join(dead)
+
+
+# Defaulted parameters that no production root sets but that stay, each
+# with its reason.
+_KEPT_OPTIONS = {
+    ("connected_components", "checkpoint_dir"): "reliable checkpointing: "
+    "the loop's lineage survives an executor loss (fault recovery)",
+    ("simhash_dedup_clusters", "checkpoint_dir"): "reliable checkpointing: "
+    "the loop's lineage survives an executor loss (fault recovery)",
+    ("load_csv", "mode"): "the policy for rejecting malformed outside input",
+    ("load_jsonl", "mode"): "the policy for rejecting malformed outside input",
+    ("streaming_predictions", "max_staleness_seconds"): "the staleness "
+    "check on stream input",
+    ("streaming_predictions", "now_ts"): "the staleness check's test clock",
+}
+
+
+def test_every_engine_option_is_set_outside_tests():
+    """Guard: every defaulted parameter of a top-level package function is
+    set by some call in production code (see ``_production_code``); with
+    one value in use, the value is a constant. Calls match by name. A
+    positional or keyword argument sets its parameter, and a call with
+    ``*args`` or ``**kwargs`` sets every parameter. An argument that only
+    forwards the caller's own unset parameter sets nothing, so the scan
+    repeats until nothing changes. The functions of ``_KEPT_UNREACHED``
+    are left to the reachability guard: no root calls them at all."""
+    funcs, _, run = _production_code()
+    positional: dict[str, list[list[str]]] = {}
+    options: dict[tuple[str, str], str] = {}
+    for path, fn in funcs:
+        a = fn.args
+        pos = [x.arg for x in a.posonlyargs + a.args]
+        positional.setdefault(fn.name, []).append(pos)
+        if fn.name in _KEPT_UNREACHED:
+            continue
+        dflt = pos[len(pos) - len(a.defaults):] if a.defaults else []
+        dflt += [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        for p in dflt:
+            options[(fn.name, p)] = path
+    calls = [
+        (getattr(node, "name", None), c)
+        for node in run
+        for c in ast.walk(node)
+        if isinstance(c, ast.Call)
+    ]
+    unset = set(options)
+    while True:
+        was = unset
+        setting: set[tuple[str, str]] = set()
+        for caller, c in calls:
+            name = getattr(c.func, "id", getattr(c.func, "attr", None))
+            if any(isinstance(a, ast.Starred) for a in c.args) or any(
+                k.arg is None for k in c.keywords
+            ):
+                setting |= {o for o in options if o[0] == name}
+                continue
+            args = [(p, v) for pos in positional.get(name, ()) for p, v in zip(pos, c.args)]
+            for p, v in [*args, *((k.arg, k.value) for k in c.keywords)]:
+                if not (isinstance(v, ast.Name) and (caller, v.id) in unset):
+                    setting.add((name, p))
+        unset = set(options) - setting
+        if unset == was:
+            break
+    assert len(options) > 150
+    assert set(_KEPT_OPTIONS) <= unset, (
+        "a kept option is gone or now set; drop it from _KEPT_OPTIONS"
+    )
+    flagged = sorted(f"{options[o]}::{o[0]}({o[1]}=)" for o in unset - set(_KEPT_OPTIONS))
+    assert not flagged, (
+        f"{len(flagged)} options no production root sets:\n" + "\n".join(flagged)
+    )

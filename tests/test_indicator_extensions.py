@@ -32,22 +32,7 @@ def test_rolling_median_even_frame_averages_middle_pair(spark):
     assert got[4] == 3.0
 
 
-def test_rolling_median_is_per_key_when_partitioned(spark):
-    rows = [("a", i, float(i)) for i in range(6)] + [
-        ("b", i, float(100 + i)) for i in range(6)
-    ]
-    df = spark.createDataFrame(rows, "k STRING, t INT, v DOUBLE")
-    out = rolling_median(df, "v", ["t"], period=3, partition_cols=["k"])
-    got = {
-        (r.k, r.t): r.median
-        for r in out.filter(F.col("median").isNotNull()).collect()
-    }
-    # each key's median sees ONLY its own rows
-    assert got[("a", 2)] == 1.0 and got[("b", 2)] == 101.0
-    assert got[("a", 5)] == 4.0 and got[("b", 5)] == 104.0
-
-
-def test_multires_rollup_composition_equals_direct(spark):
+def test_multires_rollup_composition_equals_direct(spark, monkeypatch):
     """The hierarchical 15-min/60-min bars must equal bars aggregated
     DIRECTLY from the events at that granularity — including open/close
     selected by global min/max event_id, the part naive composition
@@ -59,11 +44,10 @@ def test_multires_rollup_composition_equals_direct(spark):
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
     multi = candles_multires(ev, (300, 900)).filter(F.col("granularity") == 900)
-    from financial_market_data_analysis_spark.plans.candles import (
-        candles_from_events,
-    )
+    from financial_market_data_analysis_spark.plans import candles as C
 
-    direct = candles_from_events(ev, bucket_seconds=900)
+    monkeypatch.setattr(C, "BUCKET_SECONDS", 900)
+    direct = C.candles_from_events(ev)
     m = {r.bucket_start: r for r in multi.collect()}
     d = {r.bucket_start: r for r in direct.collect()}
     assert set(m) == set(d)
@@ -479,23 +463,6 @@ def test_adx_trends_flats_and_warmup(spark):
     )
 
 
-def test_adx_is_per_key_when_partitioned(spark):
-    from financial_market_data_analysis_spark.operators.windows import adx
-
-    rows = [("a", i, float(i) + 1, float(i) - 1, float(i)) for i in range(30)] + [
-        ("b", i, 100.0 - i + 1, 100.0 - i - 1, 100.0 - i) for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, "k STRING, t INT, high DOUBLE, low DOUBLE, close DOUBLE")
-    out = adx(df, "high", "low", "close", ["t"], period=5, partition_cols=["k"])
-    got = {
-        (r.k, r.t): (r.plus_di, r.minus_di)
-        for r in out.filter(F.col("adx").isNotNull()).collect()
-    }
-    # each key's trend direction is its own: a rises, b falls
-    assert all(p > m for (k, _), (p, m) in got.items() if k == "a")
-    assert all(m > p for (k, _), (p, m) in got.items() if k == "b")
-
-
 def test_chaikin_money_flow_bounds_and_flat_bars(spark):
     """w22: CMF is a volume-weighted average of multipliers in [-1, 1],
     so every emitted value must sit inside that band; a flat bar
@@ -580,94 +547,55 @@ def test_clustering_coef_on_known_graph(spark):
     assert tri[5] == 2 and abs(cc(5) - 2 * 2 / (4 * 3)) < 1e-12  # bridge
 
 
-def test_gap_fill_locf_per_partition_spines_and_policies(spark):
-    """gap_fill_locf must build each partition's spine from ITS OWN
-    min/max (no cross-partition bleed), carry prices forward per
-    partition, zero-fill volume, and flag exactly the synthesized
-    rows — including a bar whose LOCF column is genuinely NULL (the
-    fill skips it back to the last real observation)."""
-    from financial_market_data_analysis_spark.operators.windows import (
-        gap_fill_locf,
-    )
-
-    rows = [
-        # symbol A: buckets 0, 900 -> gaps at 300, 600
-        ("A", 0, 10.0, 5.0),
-        ("A", 900, 13.0, 7.0),
-        # symbol B: buckets 300..600 only -> one gap-free spine of 2
-        ("B", 300, 50.0, 1.0),
-        ("B", 600, None, 2.0),  # present bar with NULL close
-    ]
-    bars = spark.createDataFrame(
-        rows, "symbol string, bucket_start long, close double, volume double"
-    )
-    out = gap_fill_locf(
-        bars,
-        "bucket_start",
-        300,
-        ["close"],
-        zero_cols=["volume"],
-        partition_cols=["symbol"],
-    )
-    got = {
-        (r["symbol"], r["bucket_start"]): r
-        for r in out.collect()
-    }
-    assert set(got) == {
-        ("A", 0), ("A", 300), ("A", 600), ("A", 900),
-        ("B", 300), ("B", 600),
-    }
-    assert got[("A", 300)]["is_gap"] == 1
-    assert got[("A", 300)]["close"] == 10.0  # LOCF
-    assert got[("A", 300)]["volume"] == 0.0  # zero policy
-    assert got[("A", 900)]["is_gap"] == 0
-    assert got[("A", 900)]["close"] == 13.0
-    assert got[("B", 300)]["is_gap"] == 0
-    # present bar, NULL close: not a gap, LOCF reaches back to 50.0
-    assert got[("B", 600)]["is_gap"] == 0
-    assert got[("B", 600)]["close"] == 50.0
-    assert got[("B", 600)]["volume"] == 2.0
-
-
 def test_gap_fill_locf_chunked_spine_long_range(spark, monkeypatch):
     """Verdict #4: the spine must be built from BOUNDED chunks, so one
-    sparse long-lived key can never materialize its whole range as a
+    sparse long-lived series can never materialize its whole range as a
     single in-memory array. Pins (a) exact spine coverage across chunk
     boundaries at a tiny chunk size — including a range that is an
-    exact multiple of the chunk span and a single-bucket key — and
-    (b) a real sparse key whose spine exceeds the default chunk."""
+    exact multiple of the chunk span and a single-bucket series — with
+    both fill policies (LOCF, zero) and a present bar with a NULL close
+    (not a gap; LOCF reaches back), and (b) a real sparse series whose
+    spine exceeds the default chunk."""
     import financial_market_data_analysis_spark.operators.windows as W
 
     from financial_market_data_analysis_spark.operators.windows import (
         gap_fill_locf,
     )
 
-    # (a) chunk arithmetic at chunk=4, step=300: key A spans 13
-    # buckets (crosses 3 chunk edges), key B spans exactly 2 chunks
-    # (hi lands ON a chunk boundary), key C is a single bucket.
+    # (a) chunk arithmetic at chunk=4, step=300: series A spans 13
+    # buckets (crosses 3 chunk edges), series B spans exactly 2 chunks
+    # (hi lands ON a chunk boundary), series C is a single bucket.
     monkeypatch.setattr(W, "_SPINE_CHUNK", 4)
     rows = [
         ("A", 0, 1.0, 1.0), ("A", 3600, 2.0, 1.0),
-        ("B", 300, 3.0, 1.0), ("B", 2700, 4.0, 1.0),
+        ("B", 300, 3.0, 1.0), ("B", 2700, 4.0, 1.0), ("B", 3000, None, 2.0),
         ("C", 900, 5.0, 1.0),
     ]
     bars = spark.createDataFrame(
         rows, "symbol string, bucket_start long, close double, volume double"
     )
-    out = gap_fill_locf(
-        bars, "bucket_start", 300, ["close"],
-        zero_cols=["volume"], partition_cols=["symbol"],
-    ).collect()
+    out = [
+        r
+        for k in "ABC"
+        for r in gap_fill_locf(
+            bars.filter(F.col("symbol") == k).drop("symbol"),
+            "bucket_start", 300, ["close"], zero_cols=["volume"],
+        ).withColumn("symbol", F.lit(k)).collect()
+    ]
     got = {(r["symbol"], r["bucket_start"]) for r in out}
     assert len(out) == len(got), "chunk overlap produced duplicate buckets"
     assert got == (
         {("A", b) for b in range(0, 3601, 300)}
-        | {("B", b) for b in range(300, 2701, 300)}
+        | {("B", b) for b in range(300, 3001, 300)}
         | {("C", 900)}
     )
     by_key = {(r["symbol"], r["bucket_start"]): r for r in out}
     assert by_key[("A", 3300)]["close"] == 1.0  # LOCF across chunk edges
     assert by_key[("A", 3300)]["is_gap"] == 1
+    assert by_key[("A", 3300)]["volume"] == 0.0  # zero policy
+    assert by_key[("B", 3000)]["is_gap"] == 0  # present bar, NULL close
+    assert by_key[("B", 3000)]["close"] == 4.0
+    assert by_key[("B", 3000)]["volume"] == 2.0
     assert by_key[("C", 900)]["is_gap"] == 0
 
     # (b) default chunk (8192): a sparse key spanning 20001 buckets —
@@ -678,10 +606,7 @@ def test_gap_fill_locf_chunked_spine_long_range(spark, monkeypatch):
         [("S", 0, 7.0, 1.0), ("S", 20000 * 300, 9.0, 1.0)],
         "symbol string, bucket_start long, close double, volume double",
     )
-    filled = gap_fill_locf(
-        sparse, "bucket_start", 300, ["close"],
-        zero_cols=["volume"], partition_cols=["symbol"],
-    )
+    filled = gap_fill_locf(sparse, "bucket_start", 300, ["close"], zero_cols=["volume"])
     agg = filled.groupBy().agg(
         F.count("*").alias("n"),
         F.countDistinct("bucket_start").alias("nd"),

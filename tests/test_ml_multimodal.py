@@ -66,9 +66,7 @@ def test_train_window_classifier_runs(spark):
     c = candles_from_events(load_table(spark, "events", SF_SMOKE))
     bars = indicator_suite(c, ["bucket_start"])
     feats = ["close", "volume", "price_MA20", "ATR"]
-    model, train, test, metrics = train_window_classifier(
-        bars, feats, window=5, hidden=(8,), max_iter=20
-    )
+    model, train, test, metrics = train_window_classifier(bars, feats)
     m = metrics.collect()[0]
     assert 0.0 <= m.accuracy <= 1.0 and m.n_test > 0
     assert (
@@ -78,9 +76,7 @@ def test_train_window_classifier_runs(spark):
     mlp = model.stages[-1]
     assert mlp.getLayers()[0] == 5 * len(feats)
     # deterministic re-fit: same seed, same weights
-    model2, _, _, _ = train_window_classifier(
-        bars, feats, window=5, hidden=(8,), max_iter=20
-    )
+    model2, _, _, _ = train_window_classifier(bars, feats)
     import numpy as np
 
     assert np.allclose(
@@ -306,13 +302,16 @@ def test_model_save_load_round_trip(spark, tmp_path):
     assert orig.count() == redo.count() > 0
 
 
-def test_frame_fingerprint_pairs_finds_shared_segments(spark):
+def test_frame_fingerprint_pairs_finds_shared_segments(spark, monkeypatch):
     """x59 core: two payloads sharing a long byte run pair up; the
     overlap ratio is shared/min and a disjoint payload pairs with
     nothing."""
+    from financial_market_data_analysis_spark.plans import extensions as X
     from financial_market_data_analysis_spark.plans.extensions import (
         frame_fingerprint_pairs,
     )
+
+    monkeypatch.setattr(X, "X59_MIN_SHARED", 2)
 
     shared = b"A" * 31 + bytes(range(64)) + b"B" * 31
     rows = [
@@ -323,9 +322,7 @@ def test_frame_fingerprint_pairs_finds_shared_segments(spark):
     media = spark.createDataFrame(rows, "media_id long, payload binary")
     out = {
         (r.media_a, r.media_b): (r.n_shared, r.overlap_ratio)
-        for r in frame_fingerprint_pairs(
-            media, frame_bytes=32, hop_bytes=16, min_shared=2, hot_cap=50
-        ).collect()
+        for r in frame_fingerprint_pairs(media).collect()
     }
     assert (1, 2) in out
     n_shared, ratio = out[(1, 2)]
@@ -336,11 +333,12 @@ def test_frame_fingerprint_pairs_finds_shared_segments(spark):
     assert not any(3 in pair for pair in out)
 
 
-def test_frame_fingerprint_hot_frame_guard(spark):
+def test_frame_fingerprint_hot_frame_guard(spark, monkeypatch):
     """The hot-frame guard is the quadratic-blowup bound: a segment
-    present in MORE than hot_cap assets must mint no pairs (with the
-    cap raised, the same data pairs every asset against every other —
-    the explosion the guard exists to stop)."""
+    present in MORE than X59_HOT_FRAME_CAP assets must mint no pairs
+    (with the cap raised, the same data pairs every asset against every
+    other — the explosion the guard exists to stop)."""
+    from financial_market_data_analysis_spark.plans import extensions as X
     from financial_market_data_analysis_spark.plans.extensions import (
         frame_fingerprint_pairs,
     )
@@ -351,14 +349,11 @@ def test_frame_fingerprint_hot_frame_guard(spark):
         for i in range(12)
     ]
     media = spark.createDataFrame(rows, "media_id long, payload binary")
-    guarded = frame_fingerprint_pairs(
-        media, frame_bytes=32, hop_bytes=16, min_shared=1, hot_cap=10
-    )
-    assert guarded.count() == 0
-    unguarded = frame_fingerprint_pairs(
-        media, frame_bytes=32, hop_bytes=16, min_shared=1, hot_cap=1000
-    )
-    assert unguarded.count() == 12 * 11 // 2
+    monkeypatch.setattr(X, "X59_MIN_SHARED", 1)
+    monkeypatch.setattr(X, "X59_HOT_FRAME_CAP", 10)
+    assert frame_fingerprint_pairs(media).count() == 0
+    monkeypatch.setattr(X, "X59_HOT_FRAME_CAP", 1000)
+    assert frame_fingerprint_pairs(media).count() == 12 * 11 // 2
 
 
 def test_x59_oracle_ascii_assumption(spark):

@@ -13,8 +13,9 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from financial_market_data_analysis_spark.functions import features as FE
+from financial_market_data_analysis_spark.functions.core import with_sql
 from financial_market_data_analysis_spark.operators.windows import (
-    stochastic_oscillator,
+    stochastic_oscillator_sql,
 )
 
 _SETTINGS = dict(
@@ -94,7 +95,7 @@ def test_candle_wick_ratio_bounded(spark, closes):
         lo = min(c, closes[(i + 1) % len(closes)]) - 0.5
         rows.append((i, float(closes[(i + 1) % len(closes)]), float(h), float(lo), float(c)))
     df = spark.createDataFrame(rows, ["i", "open", "high", "low", "close"])
-    out = FE.wick_features(df).select("wick_prct").collect()
+    out = with_sql(df, FE.wick_sql()).select("wick_prct").collect()
     for r in out:
         assert r.wick_prct is None or -1.0 - 1e-9 <= r.wick_prct <= 1.0 + 1e-9
 
@@ -107,7 +108,7 @@ def test_stochastic_bounded_or_null_on_flat_window(spark, closes):
     df = spark.createDataFrame(
         [(i, float(c)) for i, c in enumerate(closes)], ["seq", "close"]
     )
-    out = stochastic_oscillator(df, "close", ["seq"]).select("stoch").collect()
+    out = with_sql(df, {"stoch": stochastic_oscillator_sql("close", ["seq"])}).collect()
     for r in out:
         assert r.stoch is None or -1e-9 <= r.stoch <= 1.0 + 1e-9
 
@@ -138,25 +139,28 @@ def test_hash_split_is_a_disjoint_total_cover(spark, texts):
     )
 )
 @settings(**_SETTINGS)
-def test_source_quota_cap_invariants(spark, pairs):
-    """x36: at most ``cap`` docs survive per source; survivors are a
-    subset of the input chosen purely by (doc_id, salt) — identical
-    across repartitionings (the determinism the domain-cap exists
-    for)."""
+def test_source_quota_cap_invariants(spark, monkeypatch, pairs):
+    """x36: at most ``QUOTA_CAP`` docs survive per source (3 here, so
+    the cap binds at this input size); survivors are a subset of the
+    input chosen purely by (doc_id, salt) — identical across
+    repartitionings (the determinism the domain-cap exists for)."""
+    from financial_market_data_analysis_spark.functions import text as T
     from financial_market_data_analysis_spark.functions.text import (
         source_quota_cap,
     )
 
+    monkeypatch.setattr(T, "QUOTA_CAP", 3)
+
     rows = [(doc_id, f"src{s}") for s, doc_id in pairs]
     df = spark.createDataFrame(rows, ["doc_id", "source"])
-    kept = source_quota_cap(df, cap=3).collect()
+    kept = source_quota_cap(df).collect()
     per_src: dict[str, list[int]] = {}
     for r in kept:
         per_src.setdefault(r.source, []).append(r.doc_id)
         assert 1 <= r.qrank <= 3
     for src, ids in per_src.items():
         assert len(ids) <= 3
-    again = source_quota_cap(df.repartition(7), cap=3).collect()
+    again = source_quota_cap(df.repartition(7)).collect()
     assert {(r.doc_id, r.source) for r in again} == {
         (r.doc_id, r.source) for r in kept
     }
@@ -266,7 +270,7 @@ def test_bpe_encode_token_count_invariants(spark, docs):
 
     rows = [(i, " ".join(toks)) for i, toks in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in bpe_encode(df, n_merges=2).collect()}
+    out = {r.doc_id: r for r in bpe_encode(df).collect()}
     assert set(out) == set(range(len(docs)))
     for i, toks in enumerate(docs):
         r = out[i]
@@ -316,19 +320,23 @@ key_lists = st.lists(
 
 @given(key_lists)
 @settings(**_SETTINGS)
-def test_countmin_overestimates_on_random_keys(spark, keys):
+def test_countmin_overestimates_on_random_keys(spark, monkeypatch, keys):
     """CMS one-sided error: for ANY multiset of keys, every point
-    estimate ≥ the true count (Cormode-Muthukrishnan invariant)."""
+    estimate ≥ the true count (Cormode-Muthukrishnan invariant). A
+    2 × 4 sketch forces bucket collisions."""
     from financial_market_data_analysis_spark.operators import sketches as SK
+
+    monkeypatch.setattr(SK, "CMS_DEPTH", 2)
+    monkeypatch.setattr(SK, "CMS_WIDTH", 4)
 
     counts = (
         spark.createDataFrame([(k,) for k in keys], "tok STRING")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    sketch = SK.countmin_sketch(counts, "tok", "cnt", depth=2, width=4)
+    sketch = SK.countmin_sketch(counts, "tok", "cnt")
     est = SK.countmin_estimate(
-        sketch, counts.select("tok"), "tok", depth=2, width=4
+        sketch, counts.select("tok"), "tok"
     )
     rows = counts.join(est, "tok").collect()
     assert rows and all(r.cms_est >= r.cnt for r in rows)
@@ -336,17 +344,20 @@ def test_countmin_overestimates_on_random_keys(spark, keys):
 
 @given(key_lists, key_lists)
 @settings(**_SETTINGS)
-def test_bloom_no_false_negatives_on_random_sets(spark, members, probes):
+def test_bloom_no_false_negatives_on_random_sets(spark, monkeypatch, members, probes):
     """Bloom guarantee on ANY member/probe sets: every member probes
-    as maybe-member (false negatives are structurally impossible)."""
+    as maybe-member (false negatives are structurally impossible). A
+    64-bit filter makes members share bits."""
     from financial_market_data_analysis_spark.operators import sketches as SK
 
+    monkeypatch.setattr(SK, "BLOOM_M", 64)
+
     mdf = spark.createDataFrame([(k,) for k in set(members)], "k STRING")
-    bits = SK.bloom_bits(mdf, "k", m=64, k=2)
+    bits = SK.bloom_bits(mdf, "k")
     probe = spark.createDataFrame(
         [(k,) for k in set(members) | set(probes)], "k STRING"
     )
-    out = SK.bloom_maybe_member(probe, bits, "k", m=64, k=2).collect()
+    out = SK.bloom_maybe_member(probe, bits, "k").collect()
     got = {r.k: r.maybe_member for r in out}
     assert all(got[m] == 1 for m in set(members))
 
@@ -423,8 +434,8 @@ def test_histogram_quantile_estimate_bounded_and_monotone(spark, vals):
     import financial_market_data_analysis_spark.operators.sketches as SK
 
     df = spark.createDataFrame([("g", float(v)) for v in vals], "g string, v double")
-    rows = SK.histogram_quantiles(df, "v", ["g"], qs=(0.25, 0.5, 0.75, 0.95)).collect()
-    assert len(rows) == 4
+    rows = SK.histogram_quantiles(df, "v", ["g"]).collect()
+    assert len(rows) == len(SK.HIST_QS)
     lo, hi = min(vals), max(vals)
     eps = 1e-6 + (hi - lo) * 1e-9
     by_q = {r.q: r.est_q for r in rows}
@@ -912,7 +923,7 @@ def test_widen_type_lattice_laws(a, b, c):
 # -- letterbox plan: geometry laws over a grid of source dims ---------
 
 
-def test_letterbox_geometry_laws(spark):
+def test_letterbox_geometry_laws(spark, monkeypatch):
     """``resize_geometry``'s integer plan obeys the letterbox laws for
     every source dim on the grid and every target: output fits the
     target, at least one axis is tight, aspect is preserved to
@@ -920,9 +931,7 @@ def test_letterbox_geometry_laws(spark):
     is exactly the canvas. Its SQL oracle shares the formula, so these
     laws are the independent check. Degenerate (zero-dim) sources get
     no plan row."""
-    from financial_market_data_analysis_spark.operators.multimodal import (
-        resize_geometry,
-    )
+    from financial_market_data_analysis_spark.operators import multimodal as MM
 
     dims = [0, 1, 2, 3, 7, 100, 223, 224, 225, 640, 1000, 2999, 3000]
     rows = [
@@ -933,7 +942,9 @@ def test_letterbox_geometry_laws(spark):
         rows, "media_id long, kind string, width int, height int"
     )
     for tw, th in [(224, 224), (8, 512), (512, 8), (300, 200)]:
-        out = resize_geometry(media, tw, th).collect()
+        monkeypatch.setattr(MM, "RESIZE_W", tw)
+        monkeypatch.setattr(MM, "RESIZE_H", th)
+        out = MM.resize_geometry(media).collect()
         assert sorted(r.media_id for r in out) == [
             i for i, _, w, h in rows if w > 0 and h > 0
         ]

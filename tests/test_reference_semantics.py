@@ -1,17 +1,14 @@
-"""SURVEY.md §7.5: reference quirks are preserved verbatim in strict
-mode (the default — every oracle compares against reference behavior)
-and consciously fixed in v2 mode (``strict_reference_semantics=False``),
-with the deviation documented at the call site."""
+"""SURVEY.md §7.5: reference quirks are preserved verbatim — every
+oracle compares against reference behaviour."""
 
 from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import functions as F
-
+from financial_market_data_analysis_spark.functions.core import with_sql
 from financial_market_data_analysis_spark.functions.features import (
-    calendar_features,
-    one_hot_calendar,
+    calendar_sql,
+    one_hot_calendar_sql,
 )
 
 
@@ -21,49 +18,27 @@ def _at(spark, *times):
     )
 
 
+def _calendar(df):
+    return with_sql(with_sql(df, calendar_sql()), one_hot_calendar_sql())
+
+
 def test_session_start_strict_reproduces_reference_quirk(spark):
     """hour >= 11 AND minute >= 30: 12:15 counts as session start
     (minute < 30) — the reference's bug-for-bug behavior."""
-    df = calendar_features(_at(spark, (6, 12, 15), (6, 11, 45), (6, 9, 0)))
+    df = _calendar(_at(spark, (6, 12, 15), (6, 11, 45), (6, 9, 0)))
     got = [r.session_start for r in df.orderBy("ts").collect()]
     #        9:00 → 1 (pre-11:30), 11:45 → 0, 12:15 → 1 (the quirk)
     assert got == [1, 0, 1]
 
 
-def test_session_start_v2_fixes_the_minute_logic(spark):
-    """v2: time-of-day >= 11:30 — 12:15 is no longer a session start,
-    11:00-11:29 still is."""
-    df = calendar_features(
-        _at(spark, (6, 12, 15), (6, 11, 45), (6, 11, 10), (6, 9, 0)),
-        strict_reference_semantics=False,
-    )
-    got = [r.session_start for r in df.orderBy("ts").collect()]
-    #        9:00 → 1, 11:10 → 1, 11:45 → 0, 12:15 → 0 (fixed)
-    assert got == [1, 1, 0, 0]
-
-
-def test_week5_one_hot_strict_vs_v2(spark):
-    """Strict: May 31 (week 5) one-hots to all-zeros — indistinguishable
-    from the dropped-category baseline. v2 adds week_5 so the all-zero
-    code is unambiguous."""
-    day31 = _at(spark, (31, 10, 0))
-    strict = one_hot_calendar(calendar_features(day31))
-    assert "week_5" not in strict.columns
-    r = strict.first()
-    assert [r[f"week_{w}"] for w in range(1, 5)] == [0, 0, 0, 0]
-
-    v2 = one_hot_calendar(calendar_features(day31), strict_reference_semantics=False)
-    r2 = v2.first()
-    assert r2["week_5"] == 1
-    assert [r2[f"week_{w}"] for w in range(1, 5)] == [0, 0, 0, 0]
-
-
 def test_strict_default_matches_oracle_shape(spark):
-    """The default keeps the driver-contract shape: same columns, same
-    values as before the toggle existed (f8_calendar's oracle relies on
-    it)."""
-    df = one_hot_calendar(calendar_features(_at(spark, (6, 12, 15))))
+    """The oracle shape: weeks one-hot as 1-4 only (f8_calendar's
+    oracle relies on it), so May 31 (week 5) one-hots to all-zeros —
+    indistinguishable from the dropped-category baseline."""
+    df = _calendar(_at(spark, (6, 12, 15), (31, 10, 0))).orderBy("ts")
     assert [c for c in df.columns if c.startswith("week_") and c[-1].isdigit()] == [
         "week_1", "week_2", "week_3", "week_4",
     ]
-    assert df.first().session_start == 1
+    first, day31 = df.collect()
+    assert first.session_start == 1
+    assert [day31[f"week_{w}"] for w in range(1, 5)] == [0, 0, 0, 0]

@@ -17,16 +17,19 @@ from financial_market_data_analysis_spark.operators.windows import (
 )
 
 
-def test_countmin_never_underestimates(spark):
+def test_countmin_never_underestimates(spark, monkeypatch):
+    # a 3 × 8 sketch: 13 keys must collide
+    monkeypatch.setattr(SK, "CMS_DEPTH", 3)
+    monkeypatch.setattr(SK, "CMS_WIDTH", 8)
     rows = [(f"k{i % 13}", 1) for i in range(400)]
     counts = (
         spark.createDataFrame(rows, "tok STRING, one INT")
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    sketch = SK.countmin_sketch(counts, "tok", "cnt", depth=3, width=8)
+    sketch = SK.countmin_sketch(counts, "tok", "cnt")
     est = SK.countmin_estimate(
-        sketch, counts.select("tok"), "tok", depth=3, width=8
+        sketch, counts.select("tok"), "tok"
     )
     joined = counts.join(est, "tok").collect()
     assert len(joined) == 13
@@ -39,9 +42,9 @@ def test_countmin_exact_when_width_exceeds_keys(spark):
     # unlikely → estimates equal truth for this fixed fixture
     rows = [("a", 5), ("b", 3), ("c", 11)]
     counts = spark.createDataFrame(rows, "tok STRING, cnt INT")
-    sketch = SK.countmin_sketch(counts, "tok", "cnt", depth=4, width=4096)
+    sketch = SK.countmin_sketch(counts, "tok", "cnt")
     est = SK.countmin_estimate(
-        sketch, counts.select("tok"), "tok", depth=4, width=4096
+        sketch, counts.select("tok"), "tok"
     )
     got = {r.tok: r.cms_est for r in est.collect()}
     assert got == {"a": 5, "b": 3, "c": 11}
@@ -51,14 +54,14 @@ def test_kmv_exact_below_k_and_estimates_above(spark):
     small = spark.createDataFrame(
         [("g1", f"v{i}") for i in range(10)], "g STRING, k STRING"
     )
-    out = SK.kmv_distinct(small, "k", ["g"], k=64).collect()[0]
+    out = SK.kmv_distinct(small, "k", ["g"]).collect()[0]
     assert out.n_distinct == 10
     assert out.est_distinct == 10.0 and out.rel_err == 0.0
 
     big = spark.createDataFrame(
         [("g1", f"v{i}") for i in range(2000)], "g STRING, k STRING"
     )
-    est = SK.kmv_distinct(big, "k", ["g"], k=64).collect()[0]
+    est = SK.kmv_distinct(big, "k", ["g"]).collect()[0]
     assert est.n_distinct == 2000
     # k=64 → expected relative error ~ 1/sqrt(k-2) ≈ 13%; assert a
     # loose 3σ envelope (deterministic fixture, so this is stable)
@@ -70,11 +73,11 @@ def test_bloom_has_no_false_negatives(spark):
     members = spark.createDataFrame(
         [(f"m{i}",) for i in range(50)], "k STRING"
     )
-    bits = SK.bloom_bits(members, "k", m=512, k=3)
+    bits = SK.bloom_bits(members, "k")
     probe = members.unionByName(
         spark.createDataFrame([(f"x{i}",) for i in range(50)], "k STRING")
     )
-    out = SK.bloom_maybe_member(probe, bits, "k", m=512, k=3).collect()
+    out = SK.bloom_maybe_member(probe, bits, "k").collect()
     got = {r.k: r.maybe_member for r in out}
     # every true member is a maybe-member — the Bloom guarantee
     assert all(got[f"m{i}"] == 1 for i in range(50))
@@ -152,22 +155,6 @@ def test_donchian_channel_and_breakouts(spark):
     assert out[1].donchian_mid == 10.0
 
 
-def test_donchian_partitioned_per_symbol(spark):
-    rows = [("a", i, float(i), float(i) - 1, float(i)) for i in range(4)] + [
-        ("b", i, 100.0 + i, 99.0 + i, 100.0 + i) for i in range(4)
-    ]
-    df = spark.createDataFrame(
-        rows, "sym STRING, t INT, high DOUBLE, low DOUBLE, close DOUBLE"
-    )
-    out = donchian_channel(
-        df, "high", "low", "close", ["t"], period=2, partition_cols=["sym"]
-    )
-    got = {(r.sym, r.t): r for r in out.collect()}
-    # symbol b's channel never sees symbol a's prices
-    assert got[("b", 1)].donchian_lower == 99.0
-    assert got[("a", 1)].donchian_upper == 1.0
-
-
 def test_kmv_bottomk_is_mergeable(spark):
     # the k-smallest of the union of two sketches == the sketch of the
     # union — the merge property x55's set-algebra estimate rests on
@@ -216,7 +203,7 @@ def test_histogram_quantiles_on_uniform_grid(spark):
     df = spark.createDataFrame(rows, "g STRING, v DOUBLE")
     out = {
         r.q: r.est_q
-        for r in SK.histogram_quantiles(df, "v", ["g"], bins=64).collect()
+        for r in SK.histogram_quantiles(df, "v", ["g"]).collect()
     }
     assert abs(out[0.5] - 32.0) <= 1.0
     assert abs(out[0.95] - 61.0) <= 1.0

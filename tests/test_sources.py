@@ -416,8 +416,8 @@ def test_streaming_quarantine_ingest_exactly_once(spark, tmp_path):
         .csv(str(src))
     )
     q = quarantining_ingest_sink(
-        stream, clean_dir, quar_dir, ckpt, trigger={"availableNow": True}
-    ).start()
+        stream, clean_dir, quar_dir, ckpt
+    ).trigger(availableNow=True).start()
     assert q.awaitTermination(300)
 
     clean = spark.read.parquet(clean_dir)
@@ -714,9 +714,8 @@ def test_streaming_ingest_drift_accounting_flags_contract_change(spark, tmp_path
         clean_dir,
         quar_dir,
         str(tmp_path / "ckpt"),
-        trigger={"availableNow": True},
         drift_dir=drift_dir,
-    ).start()
+    ).trigger(availableNow=True).start()
     assert q.awaitTermination(300)
 
     drift = spark.read.parquet(drift_dir)

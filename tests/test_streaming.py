@@ -240,7 +240,7 @@ def test_incremental_indicators_partition_pruned_and_frame_correct(spark, tmp_pa
         stream, wh, ckpt,
         post_batch=P.incremental_indicators(
             wh, tail_rows=tail_rows, order_col="deep_ts",
-            partition_col="date_bucket", partition_lookback=9,
+            partition_col="date_bucket",
         ),
         partition_by=["date_bucket"],
     )
@@ -617,9 +617,8 @@ def test_clean_quarantining_batch_writes_drift_but_no_quarantine_epoch(
         str(tmp_path / "clean"),
         quar_dir,
         str(tmp_path / "ckpt"),
-        trigger={"availableNow": True},
         drift_dir=drift_dir,
-    ).start()
+    ).trigger(availableNow=True).start()
     try:
         assert q.awaitTermination(300)
     finally:
@@ -986,7 +985,7 @@ def test_incremental_indicators_sparse_bucket_fallback(spark, tmp_path):
     from financial_market_data_analysis_spark.operators.windows import indicator_suite
 
     rows = []
-    for day, n in [(1, 40), (2, 40), (3, 5)]:  # newest bucket: 5 rows only
+    for day, n in [(1, 40), (2, 5), (3, 5)]:  # newest two buckets: 10 rows
         for m in range(n):
             ts = datetime.datetime(2024, 1, day, 10, m, 0)
             rows.append((ts, 100.0 + day * 60 + m, day))
@@ -1003,13 +1002,13 @@ def test_incremental_indicators_sparse_bucket_fallback(spark, tmp_path):
     bars.write.parquet(src)
     wh = str(tmp_path / "warehouse")
 
-    tail_rows = 20  # need = 20 + 19 = 39 > the 5 rows lookback=0 prunes to
+    tail_rows = 20  # need = 20 + 19 = 39 > the 10 rows the pruned read holds
     stream = spark.readStream.schema(bars.schema).parquet(src)
     sink = P.parquet_append_sink(
         stream, wh, str(tmp_path / "ckpt"),
         post_batch=P.incremental_indicators(
             wh, tail_rows=tail_rows, order_col="deep_ts",
-            partition_col="date_bucket", partition_lookback=0,
+            partition_col="date_bucket",
         ),
         partition_by=["date_bucket"],
     )
@@ -1520,8 +1519,7 @@ def test_stateful_gap_fill_fills_across_batch_boundary(spark, tmp_path):
     batch = {
         r["bucket_start"]: r
         for r in gap_fill_locf(
-            bars, "bucket_start", 300, ["close"],
-            zero_cols=["volume"], partition_cols=["symbol"],
+            bars, "bucket_start", 300, ["close"], zero_cols=["volume"]
         ).collect()
     }
     assert set(batch) == set(got)
@@ -1611,12 +1609,14 @@ def test_stateful_gap_fill_null_values_match_batch_across_cut(spark, tmp_path):
     # leading null: a TRUE null (not NaN), like the batch window
     assert got[("L", 0)]["close"] is None
     assert got[("L", 300)]["close"] == 20.0
-    # row-for-row equality with the batch operator on ALL columns
+    # row-for-row equality with the batch operator (one series per
+    # key) on ALL columns
     batch = {
-        (r["symbol"], r["bucket_start"]): r
+        (k, r["bucket_start"]): r
+        for k in ("S", "L")
         for r in gap_fill_locf(
-            bars, "bucket_start", 300, ["close"],
-            zero_cols=["volume"], partition_cols=["symbol"],
+            bars.filter(F.col("symbol") == k), "bucket_start", 300, ["close"],
+            zero_cols=["volume"],
         ).collect()
     }
     assert set(batch) == set(got)
@@ -1686,9 +1686,8 @@ def test_evolving_ingest_sink_accounting(spark, tmp_path):
         str(tmp_path / "clean"),
         str(tmp_path / "quar"),
         str(tmp_path / "ckpt"),
-        trigger={"availableNow": True},
         accounting_dir=str(tmp_path / "acct"),
-    ).start()
+    ).trigger(availableNow=True).start()
     assert q.awaitTermination(120)
 
     clean = {
@@ -1784,9 +1783,8 @@ def test_evolving_ingest_sink_replay_is_idempotent(spark, tmp_path):
             str(tmp_path / "clean"),
             str(tmp_path / "quar"),
             str(tmp_path / ckpt),
-            trigger={"availableNow": True},
             accounting_dir=str(tmp_path / "acct"),
-        ).start()
+        ).trigger(availableNow=True).start()
         assert q.awaitTermination(120)
 
     run("ckpt1")

@@ -89,7 +89,7 @@ def main() -> None:
             "<!-- bench-snapshot:begin -->\n"
             f"**Benchmark (from `BENCH_FULL.json`): {len(benched)} queries "
             f"benched at sf{b['sf']}, {b['value']:.1f} s total wall-clock** "
-            f"(per-query min over {b['passes']} passes on local[32]; "
+            f"(per-query min over {b['passes']} passes on local[{b['cpus']}]; "
             f"{len(t) - len(benched)} failed-in-run). Slowest five: "
             f"{slow_s}. Regenerated by `tools/gen_queries_md.py` after "
             "every `bench.py` run; round-over-round per-query deltas: "
