@@ -54,6 +54,7 @@ from financial_market_data_analysis_spark.plans.candles import (
 from financial_market_data_analysis_spark.plans.pipeline import _wa_sql
 from financial_market_data_analysis_spark.sources.batch import load_table
 from financial_market_data_analysis_spark.streaming.pipeline import (
+    QUARANTINE_ALERT,
     epoch_idempotent_writer,
     streaming_run,
 )
@@ -191,7 +192,7 @@ def _a5_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's disabled Spark-2.4 design (spark_consumer.py:129-149),
     working batch+stream on Spark 3.5."""
     ev = load_table(spark, "events", sf_dir)
-    return W.sliding_window_agg(ev, "ts", "value", "600 seconds", "300 seconds")
+    return W.sliding_window_agg(ev)
 
 
 def _a6_sliding_joinback(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -200,7 +201,7 @@ def _a6_sliding_joinback(spark: SparkSession, sf_dir: str) -> DataFrame:
     leftOuter design, spark_consumer.py:144-149), as an exploded
     equi-join on the window-start key (no range join)."""
     ev = load_table(spark, "events", sf_dir).select("event_id", "ts", "value")
-    out = W.sliding_join_back(ev, "ts", "value", 600, 300)
+    out = W.sliding_join_back(ev)
     return out.select(
         "event_id", "window_start", "window_end", "value", "avg_value", "n"
     )
@@ -211,7 +212,7 @@ def _t4_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     built-in session_window; oracle is the gaps-and-islands SQL, so the
     built-in's merge semantics are proven ANSI-equivalent."""
     ev = load_table(spark, "events", sf_dir).select("user_id", "ts", "value")
-    return W.session_windows(ev, "ts", ("user_id",), "30 minutes")
+    return W.session_windows(ev)
 
 
 def _f1_wick(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,7 +286,7 @@ def _j1_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts_us").alias("view_ts_us"),
         F.col("value").alias("view_val"),
     )
-    joined = asof_band_join(deep, quote, "deep_ts_us", "view_ts_us", band_seconds=180)
+    joined = asof_band_join(deep, quote, "deep_ts_us", "view_ts_us")
     return joined.select("deep_id", "view_id", "deep_val", "view_val")
 
 
@@ -322,7 +323,7 @@ def _j2_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("type_n"), F.avg("value").alias("type_avg")
     )
-    out = salted_skew_join(ev, dim, "event_type", n_salts=8)
+    out = salted_skew_join(ev, dim, "event_type")
     return out.select("event_id", "event_type", "type_n", "type_avg")
 
 
@@ -2437,9 +2438,7 @@ def _s11_schema_evolution_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         old_lines.write.mode("overwrite").text(old_dir)
         new_lines.write.mode("overwrite").text(new_dir)
         clean, quar = FS.load_csv_evolving(
-            spark,
-            [(old_dir, old_schema), (new_dir, new_schema)],
-            header=False,
+            spark, [(old_dir, old_schema), (new_dir, new_schema)]
         )
         out = clean.localCheckpoint(eager=True)
         FS.release_split(clean, quar)
@@ -2698,7 +2697,7 @@ def _j7_broadcast_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
-    assert_star_broadcast(out, n_dims=3, max_shuffles=1)
+    assert_star_broadcast(out, n_dims=3)
     return out
 
 
@@ -3037,7 +3036,7 @@ def _j9_aqe_skew_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.min("payload").alias("payload_min"),
             )
         )
-        assert_skew_join_split(out, min_splits=2)
+        assert_skew_join_split(out)
         # freeze the audited result: after the confs restore, a
         # re-plan would broadcast the dim and collect a DIFFERENT
         # (unaudited) plan
@@ -4351,7 +4350,7 @@ def _w12_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     j = series("purchase", "pa").join(series("view", "pv"), "bucket")
-    out = W.rolling_corr(j, "pa", "pv", ["bucket"], period=20)
+    out = W.rolling_corr(j, "pa", "pv", ["bucket"])
     return out.filter(F.col("corr").isNotNull()).select(
         "bucket", F.round("corr", 6).alias("corr20")
     )
@@ -4374,7 +4373,7 @@ def _w25_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = _bucket_returns(ev, "purchase", "ry").join(
         _bucket_returns(ev, "view", "rx"), "bucket"
     )
-    out = W.rolling_beta(j, "ry", "rx", ["bucket"], period=20)
+    out = W.rolling_beta(j, "ry", "rx", ["bucket"])
     return out.filter(F.col("beta").isNotNull()).select(
         "bucket",
         F.round("beta", 6).alias("beta20"),
@@ -4401,7 +4400,6 @@ def _bucket_returns(ev: DataFrame, event_type: str, alias: str) -> DataFrame:
 
 
 _W26_SPAN_S = 86400  # trailing 1 day of EVENT TIME, however many rows
-_W26_MIN_PAIRS = 5
 
 
 def _w26_range_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4427,7 +4425,7 @@ def _w26_range_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bucket_returns(ev, "view", "rx"), "bucket"
     )
     out = W.rolling_beta_range(
-        j, "ry", "rx", "bucket", span=_W26_SPAN_S, min_pairs=_W26_MIN_PAIRS
+        j, "ry", "rx", "bucket", span=_W26_SPAN_S
     )
     return out.filter(F.col("beta").isNotNull()).select(
         "bucket",
@@ -4474,7 +4472,7 @@ _W26_ORACLE = f"""
     )
     SELECT bucket, round(cv / vx, 6) AS beta_1d,
            round(my - (cv / vx) * mx, 6) AS alpha_1d
-    FROM c WHERE cnt >= {_W26_MIN_PAIRS} AND vx > 0
+    FROM c WHERE cnt >= {W.BETA_RANGE_MIN_PAIRS} AND vx > 0
 """
 
 
@@ -4742,7 +4740,7 @@ def _t9_stateful_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two time-ordered files → two micro-batches; per-key in-order
         # arrival, the operator's documented contract
         stream = sr.stream(bars, (F.col("ts") <= cut, F.col("ts") > cut))
-        rows = sr.memory(stateful_indicator_suite(stream, ("symbol",), "ts"))
+        rows = sr.memory(stateful_indicator_suite(stream))
     # derived indicators are rounded to 6 decimals on BOTH sides (the
     # x19/x33 precedent): the op's in-Python two-pass variance agrees
     # with SQL stddev_pop only to ULPs, and the driver's check is an
@@ -4785,7 +4783,7 @@ def _t11_stateful_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = bars.agg(F.percentile_approx("ts", 0.5)).first()[0]
     with streaming_run(spark) as sr:
         stream = sr.stream(bars, (F.col("ts") <= cut, F.col("ts") > cut))
-        rows = sr.memory(stateful_momentum_suite(stream, ("symbol",), "ts"))
+        rows = sr.memory(stateful_momentum_suite(stream))
     return rows.select(
         "symbol",
         F.unix_micros(F.col("ts")).alias("ts_us"),
@@ -4913,8 +4911,7 @@ def _t6_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             for df, ts in ((deep, "deep_ts"), (quote, "view_ts"))
         )
         joined = asof_band_join(
-            deep_s, quote_s, "deep_ts", "view_ts",
-            band_seconds=180, ts_unit="ts",
+            deep_s, quote_s, "deep_ts", "view_ts", ts_unit="ts",
         ).select("deep_id", "view_id", "deep_val", "view_val")
         return sr.memory(joined)
 
@@ -4988,7 +4985,7 @@ def _t6b_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         joined = asof_band_join(
             deep_s, quote_s, "deep_ts", "view_ts",
-            band_seconds=180, ts_unit="ts", how="leftOuter",
+            ts_unit="ts", how="leftOuter",
         ).select("deep_id", "deep_ts", "view_id", "deep_val", "view_val")
         rows = sr.memory(joined)
     # final-watermark trim: identical expression in the oracle SQL
@@ -5172,9 +5169,6 @@ def _t22_stream_five_feed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_T23_QUAR_ALERT = 0.3
-
-
 def _t23_stream_drift_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5/S7 — the per-batch CONTRACT-DRIFT accounting of the
     streaming quarantine ingest (streaming/pipeline.py
@@ -5262,7 +5256,6 @@ def _t23_stream_drift_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sr.path("quar"),
                 sr.path("ckpt"),
                 drift_dir=sr.path("drift"),
-                quarantine_alert=_T23_QUAR_ALERT,
             )
         )
         return (
@@ -5313,7 +5306,7 @@ def _t24_stream_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = sr.stream(
             bars, (F.col("bucket_start") <= cut, F.col("bucket_start") > cut)
         )
-        rows = sr.memory(P.stateful_gap_fill(stream, key_cols=("symbol",)))
+        rows = sr.memory(P.stateful_gap_fill(stream))
     return rows.select(
         "bucket_start",
         "is_gap",
@@ -5746,7 +5739,7 @@ _T23_ORACLE = f"""
     FROM (VALUES ('doc_id'), ('lang'), ('n_chars')) t(c)
     UNION ALL
     SELECT 1, c, 0.0, round(n_bad / n, 6),
-           round(n_bad / n, 6) >= {_T23_QUAR_ALERT}
+           round(n_bad / n, 6) >= {QUARANTINE_ALERT}
     FROM b1, (VALUES ('doc_id'), ('lang'), ('n_chars')) t(c)
     UNION ALL
     SELECT 2, 'doc_id', 0.0, 0.0, false FROM b2
@@ -5776,9 +5769,7 @@ def _t4b_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream = sr.stream(
             ev, (F.col("ts") <= cut, F.col("ts") > cut)
         ).withWatermark("ts", "5 minutes")
-        rows = sr.memory(
-            W.session_windows(stream, "ts", ("user_id",), "30 minutes")
-        )
+        rows = sr.memory(W.session_windows(stream))
     max_s = ev.agg(F.floor(F.max(F.unix_micros("ts")) / 1_000_000)).first()[0]
     return rows.filter(
         F.col("session_last") <= F.lit(int(max_s) - 300 - 1800 - 2)
@@ -6922,9 +6913,6 @@ def _w20_oracle(tenkan: int = 9, kijun: int = 26, senkou: int = 52) -> str:
     """
 
 
-ADX_PERIOD = 14
-
-
 def _w21_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W21 — Average Directional Index (operators/windows.py ``adx``):
     trend STRENGTH alongside the w15/w17 momentum oscillators —
@@ -6934,10 +6922,7 @@ def _w21_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursion-vs-frame trade documented on ``rsi``); warm-up rows
     (fewer than 2·period real deltas) are trimmed; all published
     columns rounded to 6."""
-    out = W.adx(
-        _candles(spark, sf_dir), "high", "low", "close", _ORDER,
-        period=ADX_PERIOD,
-    )
+    out = W.adx(_candles(spark, sf_dir), "high", "low", "close", _ORDER)
     return out.filter(F.col("adx").isNotNull()).select(
         "bucket_start",
         F.round("plus_di", 6).alias("plus_di"),
@@ -6947,7 +6932,8 @@ def _w21_adx(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _w21_oracle(period: int = ADX_PERIOD) -> str:
+def _w21_oracle() -> str:
+    period = W.OSCILLATOR_PERIOD
     frame = (
         f"OVER (ORDER BY bucket_start "
         f"ROWS BETWEEN {period - 1} PRECEDING AND CURRENT ROW)"
@@ -7454,8 +7440,8 @@ def _j5_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     base = tempfile.mkdtemp(prefix="spark_graft_j5_")
     _os.makedirs(base, exist_ok=True)
-    write_bucketed(purch, "j5_purch", "user_id", 8, path=f"{base}/purch")
-    write_bucketed(views, "j5_views", "user_id", 8, path=f"{base}/views")
+    write_bucketed(purch, "j5_purch", "user_id", f"{base}/purch")
+    write_bucketed(views, "j5_views", "user_id", f"{base}/views")
     out = spark.table("j5_purch").join(spark.table("j5_views"), "user_id").select(
         "user_id", "n_purch", "purch_sum", "n_views", "view_avg"
     )
@@ -7474,7 +7460,7 @@ def _w13_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical full ROWS frame (warm-up rows trimmed, value rounded to
     6 decimals — even-count frames interpolate the two middle values,
     a float blend)."""
-    out = W.rolling_median(_candles(spark, sf_dir), "close", _ORDER, period=20)
+    out = W.rolling_median(_candles(spark, sf_dir), "close", _ORDER)
     return out.filter(F.col("median").isNotNull()).select(
         "bucket_start", "close", F.round("median", 6).alias("median20")
     )
@@ -7520,7 +7506,7 @@ def _w15_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     short of. Frame-bounded (LAG + two 14-row averages), all-gain
     frames clamp to 100 explicitly, fully flat frames are neutral 50;
     rounded to 6 decimals."""
-    out = W.rsi(_candles(spark, sf_dir), "close", _ORDER, period=14)
+    out = W.rsi(_candles(spark, sf_dir), "close", _ORDER)
     return out.filter(F.col("rsi").isNotNull()).select(
         "bucket_start", "close", F.round("rsi", 6).alias("rsi14")
     )
@@ -7573,9 +7559,8 @@ def _w16_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "close",
         "vol_micro",
         _ORDER,
-        out_col="obv_micro",
     )
-    return out.select("bucket_start", "close", "obv_micro")
+    return out.select("bucket_start", "close", F.col("obv").alias("obv_micro"))
 
 
 def _w16_oracle() -> str:
@@ -7751,9 +7736,7 @@ def _w23_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ``==`` but distinct under the driver's exact value-hash.
     The oracle adds ``+ 0.0`` (IEEE: ``-0.0 + 0.0 == +0.0``, identity
     elsewhere) so both engines emit the same zero."""
-    out = W.williams_r(
-        _candles(spark, sf_dir), "high", "low", "close", _ORDER, period=14
-    )
+    out = W.williams_r(_candles(spark, sf_dir), "high", "low", "close", _ORDER)
     return out.filter(F.col("williams_r").isNotNull()).select(
         "bucket_start",
         "close",
@@ -7789,8 +7772,7 @@ def _w22_cmf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (try_divide/NULLIF + coalesce); warm-up rows are trimmed; the one
     computed float is rounded to 6 (the EWMA-family precedent)."""
     out = W.chaikin_money_flow(
-        _candles(spark, sf_dir), "high", "low", "close", "volume", _ORDER,
-        period=20,
+        _candles(spark, sf_dir), "high", "low", "close", "volume", _ORDER
     )
     return out.filter(F.col("cmf").isNotNull()).select(
         "bucket_start",
@@ -7835,7 +7817,7 @@ def _w18_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
     one computed float — is rounded; warm-up rows where the previous
     channel doesn't exist yet are trimmed on both sides."""
     out = W.donchian_channel(
-        _candles(spark, sf_dir), "high", "low", "close", _ORDER, period=20
+        _candles(spark, sf_dir), "high", "low", "close", _ORDER
     )
     return out.filter(F.col("donchian_break").isNotNull()).select(
         "bucket_start",
@@ -7971,7 +7953,7 @@ def _a10_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     not an approximation. Volume rounded to 6 on both sides (sum
     grouping differs by construction)."""
     ev = load_table(spark, "events", sf_dir)
-    out = candles_multires(ev, (300, 900, 3600))
+    out = candles_multires(ev)
     return out.select(
         "granularity", "bucket_start", "open", "high", "low", "close",
         F.round("volume", 6).alias("volume"), "n_events",
@@ -9613,7 +9595,7 @@ def oracle_sql() -> dict[str, str]:
                 for b in ["open", "high", "low", "close", "volume"][i + 1:]
             )}
         """,
-        "a10_multires_rollup": candles_multires_oracle_sql((300, 900, 3600)),
+        "a10_multires_rollup": candles_multires_oracle_sql(),
         "t10_stream_static_join": """
             WITH params AS (
                 SELECT event_type, min(value) AS min_v, max(value) AS max_v

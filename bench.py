@@ -2,11 +2,13 @@
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...},
+     "n_queries": N, "n_failed": N, "failed": [...], "sf": ...}
 
-``value`` is the total wall-clock of all benchmark queries (excluding
-session startup and a warm-up pass that triggers JVM/codegen warm-up and
-parquet footer caching).
+``value`` is the total wall-clock of the benchmark queries that ran
+(excluding session startup and a warm-up pass that triggers JVM/codegen
+warm-up and parquet footer caching); the queries that failed are named
+in ``failed``, out of ``n_queries`` attempted.
 """
 
 from __future__ import annotations
@@ -19,6 +21,47 @@ import time
 
 from financial_market_data_analysis_spark import get_spark
 from financial_market_data_analysis_spark.session import host_cpus
+
+
+def summarize(
+    timings: dict[str, float], passes, cpus: int, sf
+) -> tuple[dict, dict]:
+    """The ``BENCH_FULL.json`` record and the one-line stdout summary.
+
+    ``value`` sums the timings of the queries that ran; a failed query
+    (timing -1) is named in ``failed`` and counted in ``n_failed`` on
+    both, against the ``n_queries`` attempted, so a failure never just
+    shrinks the total."""
+    failed = sorted(n for n, t in timings.items() if t < 0)
+    head = {
+        "metric": "total_query_wall_clock",
+        "value": round(sum(t for t in timings.values() if t >= 0), 4),
+        "unit": "sec",
+        "n_queries": len(timings),
+        "n_failed": len(failed),
+        "failed": failed,
+        "passes": passes,
+        "sf": sf,
+    }
+    # Provenance stamp (r16 verdict #8): the driver also runs the bench
+    # at a lower core count for the scaling block and BENCH_FULL.json is
+    # overwritten each run, so without the cpu count an 8-core scaling
+    # record is indistinguishable from the 32-core one.
+    full = {**head, "queries": timings, "cpus": cpus}
+
+    # Inline map: slowest queries first (the ones regression review
+    # cares about), truncated so the whole line stays under the
+    # driver's 2,000-char tail. The full map is in BENCH_FULL.json.
+    line = {**head, "queries": {}, "queries_full_file": "BENCH_FULL.json"}
+    budget = 1900 - len(json.dumps(line, separators=(",", ":")))
+    used = 0
+    for name, secs in sorted(timings.items(), key=lambda kv: -kv[1]):
+        cost = len(name) + len(json.dumps(secs)) + 4  # "name":val,
+        if used + cost > budget:
+            break
+        line["queries"][name] = secs
+        used += cost
+    return full, line
 
 
 def main() -> None:
@@ -95,8 +138,8 @@ def main() -> None:
         time_one(name, qs[name])
     eff_passes = f"{passes}+1x<1s" if noisy else passes
 
-    total = round(sum(t for t in timings.values() if t >= 0), 4)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    full, line = summarize(timings, eff_passes, host_cpus(), sf_val)
 
     # Persist the COMPLETE per-query map as a first-class artifact. The
     # driver's BENCH_r{N}.json keeps only the last 2,000 chars of
@@ -105,21 +148,6 @@ def main() -> None:
     # parsed=null). BENCH_FULL.json in the repo is the source of truth
     # for per-query regression adjudication; the stdout line below is
     # sized to fit the driver's tail so its parsed summary works again.
-    full = {
-        "metric": "total_query_wall_clock",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "n_queries": len(timings),
-        "passes": eff_passes,
-        # Provenance stamp (r16 verdict #8): the driver also runs the
-        # bench at a lower core count for the scaling block and this
-        # file is overwritten each run, so without the cpu count an
-        # 8-core scaling record is indistinguishable from the 32-core
-        # one.
-        "cpus": host_cpus(),
-        "sf": sf_val,
-    }
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH_FULL.json")
     try:
@@ -128,38 +156,7 @@ def main() -> None:
             fh.write("\n")
     except OSError as exc:
         print(f"bench: could not write {full_path}: {exc}", file=sys.stderr)
-
-    # Inline map: slowest queries first (the ones regression review
-    # cares about), truncated so the whole line stays under the
-    # driver's 2,000-char tail. The full map is in BENCH_FULL.json.
-    ranked = sorted(timings.items(), key=lambda kv: -kv[1])
-    line_queries: dict[str, float] = {}
-    budget = 1900 - len(json.dumps(
-        {**{k: v for k, v in full.items() if k != "queries"},
-         "queries": {}, "queries_full_file": "BENCH_FULL.json"},
-        separators=(",", ":")))
-    used = 0
-    for name, secs in ranked:
-        cost = len(name) + len(json.dumps(secs)) + 4  # "name":val,
-        if used + cost > budget:
-            break
-        line_queries[name] = secs
-        used += cost
-    print(
-        json.dumps(
-            {
-                "metric": "total_query_wall_clock",
-                "value": total,
-                "unit": "sec",
-                "queries": line_queries,
-                "n_queries": len(timings),
-                "queries_full_file": "BENCH_FULL.json",
-                "passes": eff_passes,
-                "sf": sf_val,
-            },
-            separators=(",", ":"),
-        )
-    )
+    print(json.dumps(line, separators=(",", ":")))
     spark.stop()
 
 

@@ -340,8 +340,8 @@ def simhash32(df: DataFrame) -> DataFrame:
 # DuckDB oracle SQL fragments (generated from the same constants)
 
 
-def tokens_sql(text_expr: str = "text") -> str:
-    return f"regexp_extract_all(lower({text_expr}), '{TOKEN_PATTERN}')"
+def tokens_sql() -> str:
+    return f"regexp_extract_all(lower(text), '{TOKEN_PATTERN}')"
 
 
 def stopword_hits_sql(toks_expr: str, words: tuple[str, ...]) -> str:
@@ -362,7 +362,7 @@ def language_id_sql(toks_expr: str) -> str:
     return "CASE " + " ".join(cases) + f" ELSE '{langs[-1]}' END"
 
 
-def simhash32_sql(text_expr: str = "text", src: str = "documents") -> str:
+def simhash32_sql(src: str = "documents") -> str:
     """Mirror of ``simhash32`` via explode/group (oracle-side only; the
     engine side stays row-local). ``src`` names the table/CTE holding
     (doc_id, text) so callers can hash an augmented corpus."""
@@ -375,7 +375,7 @@ def simhash32_sql(text_expr: str = "text", src: str = "documents") -> str:
                 SELECT doc_id, pos, sum(CASE WHEN list_contains({odd},
                            substr(md5(tok), pos, 1)) THEN 1 ELSE -1 END) AS vote
                 FROM (
-                    SELECT doc_id, unnest({tokens_sql(text_expr)}) AS tok
+                    SELECT doc_id, unnest({tokens_sql()}) AS tok
                     FROM {src}
                 ), generate_series(1, 32) AS g(pos)
                 GROUP BY doc_id, pos
@@ -468,7 +468,8 @@ def pii_scrub(df: DataFrame) -> DataFrame:
     )
 
 
-def pii_scrub_sql(src: str = "documents") -> str:
+def pii_scrub_sql() -> str:
+    """DuckDB twin of the PII scrub over the ``pii_aug`` CTE."""
     return f"""
         SELECT doc_id,
             CAST(len(regexp_extract_all(text, '{EMAIL_PATTERN}')) AS INT)
@@ -478,7 +479,7 @@ def pii_scrub_sql(src: str = "documents") -> str:
             md5(regexp_replace(
                 regexp_replace(text, '{EMAIL_PATTERN}', '<EMAIL>', 'g'),
                 '{PHONE_PATTERN}', '<PHONE>', 'g')) AS redacted_md5
-        FROM {src}
+        FROM pii_aug
     """
 
 
@@ -921,14 +922,14 @@ def temperature_mix(df: DataFrame) -> DataFrame:
     )
 
 
-def temperature_mix_sql(src: str = "documents", extra_ctes: str = "") -> str:
-    """``extra_ctes``: rendered verbatim before this query's own CTEs
-    (e.g. ``"skew AS (...), "``) so a caller can feed an augmented
-    corpus through ``src`` — the statement owns the single WITH."""
+def temperature_mix_sql(extra_ctes: str) -> str:
+    """``extra_ctes``: rendered verbatim before this query's own CTEs;
+    it defines the ``skew`` corpus (``"skew AS (...), "``) — the
+    statement owns the single WITH."""
     key = f"substr({salted_id_key_sql('doc_id', MIX_SALT)}, 1, 8)"
     return f"""
         WITH {extra_ctes}counts AS (
-            SELECT source, count(*) AS src_n FROM {src} GROUP BY source
+            SELECT source, count(*) AS src_n FROM skew GROUP BY source
         ),
         mn AS (SELECT min(src_n) AS n_min FROM counts),
         fr AS (
@@ -946,7 +947,7 @@ def temperature_mix_sql(src: str = "documents", extra_ctes: str = "") -> str:
         )
         SELECT d.doc_id, d.source, f.keep_frac,
                {key} AS sample_key
-        FROM {src} d JOIN thr f USING (source)
+        FROM skew d JOIN thr f USING (source)
         WHERE {key} <= f.t
     """
 
@@ -1360,13 +1361,12 @@ def remove_boilerplate(df: DataFrame) -> DataFrame:
     )
 
 
-def remove_boilerplate_sql(src: str = "documents", extra_ctes: str = "") -> str:
+def remove_boilerplate_sql(extra_ctes: str) -> str:
     """DuckDB twin of ``remove_boilerplate`` (same digest keys, same
-    ordered reassembly). ``extra_ctes`` splices caller CTEs (e.g. an
-    injected-corpus twin) into the single WITH clause."""
-    pre = f"{extra_ctes}," if extra_ctes else ""
+    ordered reassembly) over the ``boiler_docs`` corpus, which
+    ``extra_ctes`` defines inside the single WITH clause."""
     return f"""
-        WITH {pre}
+        WITH {extra_ctes},
         lines AS MATERIALIZED (
             SELECT doc_id, line_no, line, md5(line) AS h
             FROM (
@@ -1376,7 +1376,7 @@ def remove_boilerplate_sql(src: str = "documents", extra_ctes: str = "") -> str:
                        unnest(parts) AS line
                 FROM (
                     SELECT doc_id, string_split(text, chr(10)) AS parts
-                    FROM {src}
+                    FROM boiler_docs
                 )
             )
         ),

@@ -42,6 +42,19 @@ SHINGLE = 3  # token-level n-gram shingles
 SLICES_PER_DIGEST = 4  # 8-hex minhash slices per md5 digest (sliced minhash)
 EMBED_NEARDUP_COS = 0.95  # embedding near-dup cosine cut
 CC_MAX_ROUNDS = 25  # label-propagation rounds before connected components give up
+# 4 bands with max_hamming=2 keeps the pigeonhole recall guarantee
+# (bands > max_hamming) while staying selective on the synthetic
+# corpus: at sf0.01, <=2 finds 119 pairs / 51 clusters (vs 440 pairs
+# collapsing into one giant component at <=3 — the fixture vocabulary
+# is small, so random docs sit unusually close in simhash space).
+SIMHASH_BANDS = 4  # 8-bit bands of the 32-bit SimHash
+SIMHASH_MAX_HAMMING = 2
+# token-level span width; wider than the Jaccard SHINGLE so a hit means
+# a verbatim 8-token run shared across documents, not a common trigram
+DUP_SPAN_N = 8
+PAGERANK_ITERS = 5
+PAGERANK_DAMPING = 0.85
+SLICED_MINHASH_K = 32  # seeds of the sliced signature (x80's largest k)
 
 
 def exact_dedup(df: DataFrame) -> DataFrame:
@@ -207,16 +220,15 @@ def oph_filled_slot(slots_col: str, j: int, n_hashes: int) -> Column:
     )
 
 
-def minhash_signatures(df: DataFrame, shingle_arr: DataFrame | None = None) -> DataFrame:
-    """(id, seed, minhash) — computed ROW-LOCALLY from the shingle
-    array: no explode of (doc × shingle × seed) rows, no groupBy. The
-    k-fold md5 work is inherent to MinHash; the shuffles the naive
-    explode+re-aggregate plan pays are not. Output is identical to the
+def minhash_signatures(shingle_arr: DataFrame) -> DataFrame:
+    """(id, seed, minhash) — computed ROW-LOCALLY from the
+    ``shingle_arrays`` table: no explode of (doc × shingle × seed) rows,
+    no groupBy. The k-fold md5 work is inherent to MinHash; the shuffles
+    the naive explode+re-aggregate plan pays are not. Output is identical to the
     exploded formulation (the DuckDB oracle keeps that shape).
     """
-    src = shingle_arr if shingle_arr is not None else shingle_arrays(df)
     mhs = F.array(*[_minhash_expr(F.col("sh_arr"), p) for p in range(N_MINHASH)])
-    return src.select(F.col("doc_id"), F.posexplode(mhs).alias("seed", "mh"))
+    return shingle_arr.select(F.col("doc_id"), F.posexplode(mhs).alias("seed", "mh"))
 
 
 def lsh_bands(
@@ -329,20 +341,18 @@ def lsh_candidate_pairs(sigs: DataFrame, band_size: int = BAND_SIZE) -> DataFram
     return band_candidate_pairs(bands)
 
 
-def jaccard_verify(pairs: DataFrame, df: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
-    """Exact token-shingle Jaccard for candidate pairs only.
+def jaccard_verify(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+    """Exact token-shingle Jaccard for candidate pairs only, over an
+    (id, shingle) table such as ``shingle_table``'s.
 
     |A∩B| via an equi-join of the two shingle sets on the shingle value;
     |A|,|B| precomputed per document — no full cross-product anywhere.
-    Pass a precomputed (id, shingle) table to avoid re-deriving
-    shingles when an upstream stage already built them.
 
     Caching is the CALLER's job (the r2 leak finding): ``sh`` is
     referenced three times below (sizes + both sides of the
     intersection join), so callers should pass a persisted — or
     cheap-to-recompute, e.g. candidate-bounded — shingle table.
     """
-    sh = shingles if shingles is not None else shingle_table(df)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     inter = (
@@ -499,25 +509,23 @@ def minhash_lsh_dedup(df: DataFrame, threshold: float = 0.5, hash_method: str = 
     sh = shingled.join(F.broadcast(cand), "doc_id").select(
         F.col("doc_id"), F.explode("sh_arr").alias("shingle")
     )
-    verified = jaccard_verify(pairs, df, shingles=sh)
+    verified = jaccard_verify(pairs, sh)
     out = verified.filter(F.col("jaccard") >= threshold).localCheckpoint(eager=True)
     shingled.unpersist()
     return out
 
 
-def embedding_neardup_pairs(emb: DataFrame, method: str = "gaussian") -> DataFrame:
+def embedding_neardup_pairs(emb: DataFrame) -> DataFrame:
     """Embedding near-dup: random-hyperplane LSH bucket → within-bucket
     exact cosine → threshold.
 
-    ``method="gaussian"`` (default) uses the seeded-Gaussian plane
-    matrix inlined as codegen literals — the production path;
-    ``"md5"`` keeps the hex-parity ±1 planes (engine-portable hashes).
-    Either way the bucket is an n-bit sign pattern and only same-bucket
+    The planes are the seeded-Gaussian matrix inlined as codegen
+    literals; the bucket is an 8-bit sign pattern and only same-bucket
     pairs pay the exact-cosine cost — an equi-join on the bucket key.
     """
     from financial_market_data_analysis_spark.operators.similarity import (
-        bucket_expr,
         dot_expr,
+        hyperplane_bucket_gaussian,
         norm_expr,
     )
 
@@ -526,7 +534,7 @@ def embedding_neardup_pairs(emb: DataFrame, method: str = "gaussian") -> DataFra
     b = emb.select(
         F.col("vec_id"),
         F.col("embedding"),
-        bucket_expr("embedding", 8, method).alias("bucket"),
+        hyperplane_bucket_gaussian("embedding").alias("bucket"),
         norm_expr("embedding").alias("__n"),
     )
     left = b.select(
@@ -545,15 +553,15 @@ def embedding_neardup_pairs(emb: DataFrame, method: str = "gaussian") -> DataFra
     return out.filter(F.col("cosine") >= EMBED_NEARDUP_COS).select("id_a", "id_b", "cosine")
 
 
-def simhash_neardup_pairs(df: DataFrame, n_bands: int = 4, max_hamming: int = 3) -> DataFrame:
+def simhash_neardup_pairs(df: DataFrame) -> DataFrame:
     """SimHash near-dup pairs: 32-bit SimHash → band equi-join →
     Hamming verify. Returns (id_a, id_b, hamming).
 
     Banding recall is EXACT here, not probabilistic: two 32-bit
-    sketches within ``max_hamming`` bit flips must agree on at least
-    one of ``n_bands`` disjoint bands whenever n_bands > max_hamming
-    (pigeonhole) — so unlike MinHash-LSH there are no false-negative
-    candidates to tune away.
+    sketches within ``SIMHASH_MAX_HAMMING`` bit flips must agree on at
+    least one of ``SIMHASH_BANDS`` disjoint bands, since
+    SIMHASH_BANDS > SIMHASH_MAX_HAMMING (pigeonhole) — so unlike
+    MinHash-LSH there are no false-negative candidates to tune away.
 
     Scale shape — the join runs at SKETCH granularity, not doc
     granularity. A 32-bit sketch space is tiny compared to any real
@@ -579,7 +587,6 @@ def simhash_neardup_pairs(df: DataFrame, n_bands: int = 4, max_hamming: int = 3)
     by clustering instead (``connected_components``) when groups are
     huge.
     """
-    _validate_bands(n_bands, max_hamming)
     sketches = _simhash_sketches(df, "doc_id", "text").persist()
     # No pre-count (r17): the block-level cache lock already serializes
     # the band join's concurrent readers of the cold persist — with one
@@ -606,7 +613,7 @@ def simhash_neardup_pairs(df: DataFrame, n_bands: int = 4, max_hamming: int = 3)
     )
 
     # (3) cross-sketch candidates via banding, verified per sketch pair.
-    cand = _sketch_band_edges(sketches, n_bands, max_hamming)
+    cand = _sketch_band_edges(sketches)
     cross = (
         cand.join(
             sketches.select(F.col("simhash").alias("sh_a"), F.col("ids").alias("ids_a")),
@@ -627,16 +634,6 @@ def simhash_neardup_pairs(df: DataFrame, n_bands: int = 4, max_hamming: int = 3)
     out = intra.unionByName(cross).localCheckpoint(eager=True)
     sketches.unpersist()
     return out
-
-
-def _validate_bands(n_bands: int, max_hamming: int) -> None:
-    if 32 % n_bands != 0:
-        raise ValueError(f"n_bands={n_bands} must divide 32")
-    if n_bands <= max_hamming:
-        raise ValueError(
-            f"n_bands={n_bands} <= max_hamming={max_hamming}: banding "
-            "would drop true near-dups (needs n_bands > max_hamming)"
-        )
 
 
 def _simhash_sketches(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -661,20 +658,17 @@ def _simhash_sketches(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _sketch_band_edges(
-    sketches: DataFrame, n_bands: int, max_hamming: int
-) -> DataFrame:
+def _sketch_band_edges(sketches: DataFrame) -> DataFrame:
     """Verified near-dup edges between DISTINCT sketches: band
-    equi-join (pigeonhole-exact for max_hamming < n_bands) then a
-    ``bit_count`` Hamming popcount over ≤ 2^32 sketch pairs — never
-    over doc pairs. Returns (sh_a, sh_b, hamming).
+    equi-join (pigeonhole-exact) then a ``bit_count`` Hamming popcount
+    over ≤ 2^32 sketch pairs — never over doc pairs. Returns (sh_a, sh_b, hamming).
 
     Sketches are LONGs: band *i* is ``(sh >> (32-(i+1)·w)) & (2^w − 1)``
     (the same bits as the old ``substring`` band of the bit string, so
     the emitted pair set is identical), and the Hamming distance is the
     codegen'd ``bit_count(a XOR b)`` instead of splitting two 32-char
     strings and zip_with-comparing 32 char pairs per candidate."""
-    width = 32 // n_bands
+    width = 32 // SIMHASH_BANDS
     mask = (1 << width) - 1
     bands = sketches.select(
         "simhash",
@@ -687,7 +681,7 @@ def _sketch_band_edges(
                         .bitwiseAND(F.lit(mask))
                         .alias("band"),
                     )
-                    for i in range(n_bands)
+                    for i in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("b"),
@@ -703,7 +697,7 @@ def _sketch_band_edges(
         .select("sh_a", "sh_b")
         .distinct()
         .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
@@ -909,10 +903,7 @@ def connected_components(
 
 
 def simhash_dedup_clusters(
-    df: DataFrame,
-    n_bands: int = 4,
-    max_hamming: int = 3,
-    checkpoint_dir: str | None = None,
+    df: DataFrame, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """Transitive near-dup clusters straight from the corpus, fused at
     SKETCH granularity. Equivalent to
@@ -937,7 +928,6 @@ def simhash_dedup_clusters(
     ``checkpoint()`` under that directory instead of executor-local
     blocks, for clusters where mid-loop executor loss must not restart
     the iteration."""
-    _validate_bands(n_bands, max_hamming)
     reliable = checkpoint_dir is not None
     if reliable:
         _set_checkpoint_dir(df, checkpoint_dir)
@@ -951,7 +941,7 @@ def simhash_dedup_clusters(
     # the band self-join + Hamming verify once per branch (the r2 x6
     # lesson at sketch granularity).
     edges = _truncate(
-        _sketch_band_edges(sketches, n_bands, max_hamming),
+        _sketch_band_edges(sketches),
         eager=True,
         reliable=reliable,
     )
@@ -980,11 +970,11 @@ def simhash_dedup_clusters(
     return members.join(comp_min, "comp").select("doc_id", "cluster_id")
 
 
-def dup_span_shingle_table(df: DataFrame, n: int = 8) -> DataFrame:
-    """(id, shingle) long table at span width ``n`` — the wide-shingle
-    sibling of ``shingle_table`` (SHINGLE=3 serves Jaccard; duplicated-
-    SPAN detection wants a width where a hit means a verbatim n-token
-    run, not a common trigram). Row-local: tokenize → indexed gram
+def dup_span_shingle_table(df: DataFrame) -> DataFrame:
+    """(id, shingle) long table at span width ``DUP_SPAN_N`` — the
+    wide-shingle sibling of ``shingle_table`` (SHINGLE=3 serves Jaccard;
+    duplicated-SPAN detection wants a width where a hit means a verbatim
+    n-token run, not a common trigram). Row-local: tokenize → indexed gram
     build → per-doc distinct → explode.
 
     ``dup_span_coverage`` references this twice and deliberately does
@@ -1004,7 +994,7 @@ def dup_span_shingle_table(df: DataFrame, n: int = 8) -> DataFrame:
     return ensure_parallelism(toks_df).select(
         F.col("doc_id"),
         F.explode(
-            F.array_distinct(all_grams(F.col("__toks"), n))
+            F.array_distinct(all_grams(F.col("__toks"), DUP_SPAN_N))
         ).alias("shingle"),
     )
 
@@ -1051,13 +1041,13 @@ def dup_span_coverage(sh: DataFrame) -> DataFrame:
     )
 
 
-def dup_span_removal(df: DataFrame, n: int = 8) -> DataFrame:
+def dup_span_removal(df: DataFrame) -> DataFrame:
     """Exact duplicated-SPAN removal — the REWRITE step on top of
     ``dup_span_coverage``'s detection (Lee et al. 2022, 'Deduplicating
     Training Data Makes Language Models Better': strip substrings that
     occur verbatim elsewhere in the corpus, keeping ONE occurrence).
-    A token position is removed when some width-``n`` span covering it
-    occurs verbatim in MORE THAN ONE document and this document is not
+    A token position is removed when some width-``DUP_SPAN_N`` span
+    covering it occurs verbatim in MORE THAN ONE document and this document is not
     the span's keeper (the minimum doc id containing it) — the keeper
     retains its copy, every other occurrence is cut, at shingle
     granularity instead of the paper's suffix array (the same
@@ -1096,7 +1086,7 @@ def dup_span_removal(df: DataFrame, n: int = 8) -> DataFrame:
     )
     grams = toks_df.select(
         F.col("doc_id"),
-        F.posexplode(all_grams(F.col("__toks"), n)).alias("__p0", "shingle"),
+        F.posexplode(all_grams(F.col("__toks"), DUP_SPAN_N)).alias("__p0", "shingle"),
     ).select(F.col("doc_id"), (F.col("__p0") + 1).alias("start"), "shingle")
     shared = (
         grams.select("doc_id", "shingle")
@@ -1115,7 +1105,7 @@ def dup_span_removal(df: DataFrame, n: int = 8) -> DataFrame:
         .select(
             F.col("doc_id"),
             F.explode(
-                F.sequence(F.col("start"), F.col("start") + F.lit(n - 1))
+                F.sequence(F.col("start"), F.col("start") + F.lit(DUP_SPAN_N - 1))
             ).alias("tokpos"),
         )
         .distinct()
@@ -1155,7 +1145,7 @@ def dup_span_removal(df: DataFrame, n: int = 8) -> DataFrame:
     )
 
 
-def pagerank(edges: DataFrame, n_iters: int = 5, damping: float = 0.85) -> DataFrame:
+def pagerank(edges: DataFrame) -> DataFrame:
     """Fixed-iteration PageRank over a SYMMETRIZED edge list (callers
     must provide both directions; symmetry guarantees no dangling
     nodes, so the classic ``(1−d)/N + d·Σ rank/deg`` update is exact
@@ -1200,7 +1190,7 @@ def pagerank(edges: DataFrame, n_iters: int = 5, damping: float = 0.85) -> DataF
     ranks = deg.select(
         F.col("src").alias("doc_id"), F.lit(1.0 / n).alias("rank")
     )
-    for _ in range(n_iters):
+    for _ in range(PAGERANK_ITERS):
         ranks = (
             ranks.join(out_edges, ranks.doc_id == out_edges["src"])
             .select(
@@ -1210,8 +1200,8 @@ def pagerank(edges: DataFrame, n_iters: int = 5, damping: float = 0.85) -> DataF
             .groupBy("doc_id")
             .agg(
                 (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.sum("c")
+                    F.lit((1.0 - PAGERANK_DAMPING) / n)
+                    + F.lit(PAGERANK_DAMPING) * F.sum("c")
                 ).alias("rank")
             )
             # truncate the lineage every iteration: without the cut,
@@ -1226,7 +1216,7 @@ def pagerank(edges: DataFrame, n_iters: int = 5, damping: float = 0.85) -> DataF
     return ranks
 
 
-def sliced_minhash_signatures(df: DataFrame, n_hashes: int = 32) -> DataFrame:
+def sliced_minhash_signatures(df: DataFrame) -> DataFrame:
     """(id, seed, minhash) like :func:`minhash_signatures`, but each
     md5 digest serves ``SLICES_PER_DIGEST`` seeds as disjoint 8-hex
     (32-bit) substrings: seed s hashes shingle x as
@@ -1248,7 +1238,7 @@ def sliced_minhash_signatures(df: DataFrame, n_hashes: int = 32) -> DataFrame:
     re-evaluates its md5 and the slicing buys nothing (measured 4x).
     The barrier costs one digests-sized local materialization
     (~n_digests x 32 hex chars per shingle)."""
-    n_digests = (n_hashes + SLICES_PER_DIGEST - 1) // SLICES_PER_DIGEST
+    n_digests = (SLICED_MINHASH_K + SLICES_PER_DIGEST - 1) // SLICES_PER_DIGEST
     src = shingle_arrays(df)
     # closures keep the lambdas single-parameter: F.transform calls a
     # two-parameter lambda as (element, INDEX), silently replacing a
@@ -1273,7 +1263,7 @@ def sliced_minhash_signatures(df: DataFrame, n_hashes: int = 32) -> DataFrame:
     mhs = F.array(
         *[
             _slice_min(s // SLICES_PER_DIGEST, (s % SLICES_PER_DIGEST) * 8)
-            for s in range(n_hashes)
+            for s in range(SLICED_MINHASH_K)
         ]
     )
     return hashed.select(
@@ -1281,13 +1271,13 @@ def sliced_minhash_signatures(df: DataFrame, n_hashes: int = 32) -> DataFrame:
     )
 
 
-def sliced_minhash_sql(sh: str = "sh", n_hashes: int = 32) -> str:
+def sliced_minhash_sql() -> str:
     """DuckDB twin of :func:`sliced_minhash_signatures` as a CTE body
-    producing (doc_id, seed, mh)."""
+    over an (id, shingle) relation ``sh``, producing (doc_id, seed, mh)."""
     return f"""
         SELECT doc_id, seed,
                min(substr(md5((seed // {SLICES_PER_DIGEST}) || ':' || shingle),
                           (seed % {SLICES_PER_DIGEST}) * 8 + 1, 8)) AS mh
-        FROM {sh}, generate_series(0, {n_hashes - 1}) g(seed)
+        FROM sh, generate_series(0, {SLICED_MINHASH_K - 1}) g(seed)
         GROUP BY doc_id, seed
     """

@@ -22,20 +22,22 @@ from financial_market_data_analysis_spark.plans.candles import (
     time_bucket_us,
 )
 
+BAND_SECONDS = 180  # 3-minute join tolerance, spark_consumer.py:440-442
+N_SALTS = 8  # salt values per key of a salted skew join
+
 
 def asof_band_join(
     left: DataFrame,
     right: DataFrame,
     left_ts: str,
     right_ts: str,
-    band_seconds: int = 180,
     how: str = "inner",
     ts_unit: str = "us",
 ) -> DataFrame:
     """J1 — bucketed interval join.
 
     ``left ⋈ right ON bucket(left.ts) = bucket(right.ts) AND
-    right.ts BETWEEN left.ts AND left.ts + band``.
+    right.ts BETWEEN left.ts AND left.ts + BAND_SECONDS``.
 
     This reproduces the reference exactly: pairs whose band straddles a
     bucket boundary are dropped because the equi-key differs
@@ -48,11 +50,11 @@ def asof_band_join(
     if ts_unit == "us":
         lb = time_bucket_us(left_ts, BUCKET_SECONDS)
         rb = time_bucket_us(right_ts, BUCKET_SECONDS)
-        band = F.lit(band_seconds * 1_000_000)
+        band = F.lit(BAND_SECONDS * 1_000_000)
     else:
         lb = time_bucket(left_ts, BUCKET_SECONDS)
         rb = time_bucket(right_ts, BUCKET_SECONDS)
-        band = F.expr(f"INTERVAL {band_seconds} SECONDS")
+        band = F.expr(f"INTERVAL {BAND_SECONDS} SECONDS")
 
     l = left.withColumn("__bucket", lb)
     r = right.withColumn("__bucket", rb)
@@ -121,26 +123,21 @@ def asof_join_last(
     )
 
 
-def salted_skew_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    n_salts: int = 8,
-) -> DataFrame:
+def salted_skew_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     """Skew-mitigated equi-join: the LEFT (skewed) side gets a random-
     free deterministic salt (``hash(row) pmod n``), the RIGHT side is
     replicated once per salt value, and the join key becomes
-    (key, salt) — a hot key's rows now spread over ``n_salts`` tasks
+    (key, salt) — a hot key's rows now spread over ``N_SALTS`` tasks
     instead of hammering one reducer.
 
     Results are identical to ``left.join(right, on)`` (oracle-checked);
     use when AQE's runtime skew splitting isn't available or the skew
-    is known up front. Cost: right side shuffled ``n_salts`` ×.
+    is known up front. Cost: right side shuffled ``N_SALTS`` ×.
     """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(n_salts))
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(N_SALTS))
     l = left.withColumn("__salt", salt.cast("int"))
     r = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(N_SALTS)]))
     )
     return l.join(r, [on, "__salt"]).drop("__salt")
 
@@ -153,7 +150,7 @@ def interval_lookup_join(
     start_col: str,
     end_col: str,
     value_cols: list[str],
-    tie_col: str | None = None,
+    tie_col: str,
 ) -> DataFrame:
     """Point-in-interval (temporal-table / SCD2) lookup: each probe row
     takes the interval row whose validity range contains its timestamp
@@ -183,12 +180,11 @@ def interval_lookup_join(
     semantics); the matched interval's ``value_cols``/``start``/``end``
     must not collide with probe column names — rename upstream.
     """
-    tie = F.col(tie_col) if tie_col else F.lit(0)
     iv = intervals.select(
         *key_cols,
         F.col(start_col).alias("__pos"),
         F.lit(0).alias("__side"),
-        tie.alias("__tie"),
+        F.col(tie_col).alias("__tie"),
         F.struct(
             F.col(start_col), F.col(end_col), *[F.col(v) for v in value_cols]
         ).alias("__iv"),
@@ -280,15 +276,13 @@ def _count_shuffles(names: list[str]) -> int:
     )
 
 
-def assert_star_broadcast(
-    df: DataFrame, n_dims: int, max_shuffles: int = 1
-) -> None:
+def assert_star_broadcast(df: DataFrame, n_dims: int) -> None:
     """Prove a star/snowflake assembly actually planned as broadcast
     joins (the s13/s14 proof discipline applied to the JOIN tier): the
     executed plan must contain at least ``n_dims``
     ``BroadcastHashJoinExec`` nodes, NO sort-merge or shuffled-hash
-    join, and at most ``max_shuffles`` shuffle exchanges (the final
-    aggregation's — the fact table must never shuffle FOR a dim join).
+    join, and at most one shuffle exchange (the final aggregation's —
+    the fact table must never shuffle FOR a dim join).
     A silent regression here — a dropped hint, a dim crossing the
     broadcast threshold, a stats change flipping AQE's choice —
     returns identical rows while shuffling the fact table once per
@@ -300,11 +294,11 @@ def assert_star_broadcast(
         "ShuffledHashJoinExec"
     )
     n_sh = _count_shuffles(names)
-    if n_bhj < n_dims or n_smj > 0 or n_sh > max_shuffles:
+    if n_bhj < n_dims or n_smj > 0 or n_sh > 1:
         raise RuntimeError(
             f"star-join plan regressed: {n_bhj} broadcast joins "
             f"(need >= {n_dims}), {n_smj} shuffle joins (need 0), "
-            f"{n_sh} shuffle exchanges (max {max_shuffles}). Nodes: "
+            f"{n_sh} shuffle exchanges (max 1). Nodes: "
             f"{sorted(set(names))}"
         )
 
@@ -383,7 +377,7 @@ def assert_runtime_broadcast_demotion(df: DataFrame) -> None:
         )
 
 
-def assert_skew_join_split(df: DataFrame, min_splits: int = 2) -> None:
+def assert_skew_join_split(df: DataFrame) -> None:
     """Prove Spark's OWN skew-join handling actually fired (r14
     verdict #5 — the one planner lever in the skew tier asserted by
     nothing: d8 measures key skew, j2 salts by hand, d9 measures the
@@ -396,7 +390,7 @@ def assert_skew_join_split(df: DataFrame, min_splits: int = 2) -> None:
        ``isSkewJoin = true`` — AQE's OptimizeSkewedJoin rewrote the
        join; and
     2. the join's ``AQEShuffleReadExec`` sides report a summed
-       ``numSkewedSplits`` of at least ``min_splits`` — the hot
+       ``numSkewedSplits`` of at least 2 — the hot
        partition was actually cut into pieces, not merely flagged.
 
     Without this a conf typo, a threshold drift, or a rule regression
@@ -434,11 +428,11 @@ def assert_skew_join_split(df: DataFrame, min_splits: int = 2) -> None:
     plan = df._jdf.queryExecution().executedPlan()
     plan.execute().count()  # run exactly this plan so AQE finalizes
     walk(plan)
-    if skew_joins < 1 or skewed_splits < min_splits:
+    if skew_joins < 1 or skewed_splits < 2:
         raise RuntimeError(
             f"AQE skew handling did not fire: {skew_joins} skew-marked "
             f"sort-merge joins (need >= 1), {skewed_partitions} skewed "
-            f"partitions, {skewed_splits} skew splits (need >= "
-            f"{min_splits}). The hot key would ride one straggler "
+            f"partitions, {skewed_splits} skew splits (need >= 2). "
+            f"The hot key would ride one straggler "
             f"task. Plan:\n{plan.toString()}"
         )

@@ -7,21 +7,15 @@ Two tiers, per the 100 TB design brief:
   JVM-side higher-order-function fold (no Python, no UDF); top-k is a
   per-query window.
 - **Hyperplane-LSH ANN** — scale path. Each vector gets an n-bit
-  sign-pattern bucket from deterministic ±1 hyperplanes; search only
+  sign-pattern bucket from deterministic hyperplanes; search only
   compares query and corpus vectors in the same bucket (equi-join on
   the bucket key), trading recall for a ~2^n candidate reduction.
 
-Two bucket constructions, same topology (bucket, equi-join, re-rank):
-
-- ``hyperplane_bucket`` — ±1 planes from md5 hex-digit parities:
-  bit-portable to ANSI SQL, but costs one md5 per (plane × element)
-  — keep for oracle-exact parity tests.
-- ``hyperplane_bucket_gaussian`` — the production path: a seeded
-  Gaussian plane matrix inlined as literal arrays; each plane dot is
-  one JVM ``zip_with``/``aggregate`` fold inside whole-stage codegen
-  (no md5, no Python, no Arrow). ~n_planes×dim fewer hash calls per
-  row. The same float literals are embedded in the DuckDB oracle, so
-  it stays hash-checkable.
+The bucket (``hyperplane_bucket_gaussian``) uses a seeded Gaussian
+plane matrix inlined as literal arrays; each plane dot is one JVM
+``zip_with``/``aggregate`` fold inside whole-stage codegen (no hashing,
+no Python, no Arrow). The same float literals are embedded in the
+DuckDB oracle (``gaussian_bucket_sql``), so it stays hash-checkable.
 """
 
 from __future__ import annotations
@@ -32,6 +26,10 @@ from pyspark.sql import functions as F
 from financial_market_data_analysis_spark.functions.core import safe_div
 
 N_PLANES = 8
+EMB_DIM = 64  # embedding dimensionality (matches the driver's table)
+TOP_K = 10  # neighbours returned per query
+IVF_NPROBE = 2  # coarse cells an IVF query probes
+KMEANS_ITERS = 2  # fixed Lloyd iterations for the IVF index build
 
 
 def dot_expr(a: str | Column, b: str | Column) -> Column:
@@ -59,36 +57,6 @@ def cosine_expr(a: str | Column, b: str | Column) -> Column:
     return safe_div(dot_expr(a, b), norm_expr(a) * norm_expr(b))
 
 
-def hyperplane_bucket(vec_col: str | Column, n_planes: int = N_PLANES) -> Column:
-    """n-bit LSH bucket: bit p = sign(Σ_d r_{p,d}·v_d) where
-    r_{p,d} ∈ {−1, +1} comes from the parity of hex digit
-    ``(d mod 32)+1`` of ``md5('p:d')`` — deterministic, engine-portable."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    odd = F.array(*[F.lit(ch) for ch in "13579bdf"])
-
-    def plane_dot(p: int) -> Column:
-        def term(x: Column, i: Column) -> Column:
-            h = F.md5(F.concat(F.lit(f"{p}:"), i.cast("string")).cast("binary"))
-            digit = F.substring(h, (i % 32 + 1).cast("int"), 1)
-            sign = F.when(F.array_contains(odd, digit), F.lit(1.0)).otherwise(F.lit(-1.0))
-            return sign * x.cast("double")
-
-        # F.transform's lambda index is 0-based — matching the oracle's
-        # (i - 1) convention (DuckDB lists are 1-based, hence i-1 there)
-        idx = F.transform(c, lambda _, i: i)
-        return F.aggregate(
-            F.zip_with(c, idx, lambda x, i: term(x, i)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    bits = [
-        F.when(plane_dot(p) > 0, F.lit("1")).otherwise(F.lit("0"))
-        for p in range(n_planes)
-    ]
-    return F.concat(*bits)
-
-
 def gaussian_planes(n_planes: int, dim: int, seed: int = 7):
     """Seeded Gaussian plane matrix (n_planes × dim) — the standard
     random-projection LSH construction. Deterministic per seed, so the
@@ -111,12 +79,12 @@ def _dlit(v: float) -> str:
 def hyperplane_bucket_gaussian(
     vec_col: str | Column,
     n_planes: int = N_PLANES,
-    dim: int = 64,
+    dim: int = EMB_DIM,
     seed: int = 7,
 ) -> Column:
     """Production bucket: bit p = sign(planes[p] · v) with the plane
     matrix inlined as literal arrays. Each dot is one codegen'd
-    ``zip_with`` + ``aggregate`` fold — no md5, no Python workers.
+    ``zip_with`` + ``aggregate`` fold — no hashing, no Python workers.
 
     On a cluster the literals ship once inside the serialized plan
     (the broadcast-plane-matrix pattern without a pandas UDF).
@@ -172,7 +140,7 @@ def hyperplane_bucket_gaussian(
 
 
 def gaussian_bucket_sql(
-    vec: str, n_planes: int = N_PLANES, dim: int = 64, seed: int = 7
+    vec: str, n_planes: int = N_PLANES, dim: int = EMB_DIM, seed: int = 7
 ) -> str:
     """DuckDB twin of ``hyperplane_bucket_gaussian`` — the same seeded
     plane literals (full ``repr`` round-trip precision), dot via
@@ -186,28 +154,12 @@ def gaussian_bucket_sql(
     return " || ".join(bits)
 
 
-def bucket_expr(
-    vec_col: str | Column,
-    n_planes: int = N_PLANES,
-    method: str = "gaussian",
-    dim: int = 64,
-) -> Column:
-    """Bucket dispatcher: ``method="gaussian"`` (production, codegen
-    folds) or ``"md5"`` (engine-portable parity variant)."""
-    if method == "gaussian":
-        return hyperplane_bucket_gaussian(vec_col, n_planes, dim, 7)
-    if method == "md5":
-        return hyperplane_bucket(vec_col, n_planes)
-    raise ValueError(f"unknown bucket method: {method}")
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k per query vector.
+    """Exact cosine top-``TOP_K`` per query vector.
 
     ``queries`` is broadcast (tiny); the corpus is scanned once; the
     top-k window partitions by query id, so ranking shuffles only
@@ -232,7 +184,7 @@ def brute_force_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "cosine", "rank")
     )
 
@@ -288,15 +240,13 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     centroids: DataFrame,
-    k: int = 10,
-    nprobe: int = 2,
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF approximate top-k: score only corpus vectors whose coarse
-    cell is among the query's ``nprobe`` nearest centroids — the
+    cell is among the query's ``IVF_NPROBE`` nearest centroids — the
     inverted-file ANN layout next to the LSH variant (``lsh_topk``).
     Candidate volume shrinks ~K/nprobe-fold; recall is tunable via
-    ``nprobe`` without touching the stored assignment."""
+    the probe count without touching the stored assignment."""
     cells = ivf_assignments(corpus, centroids, vec_col)
     qc = centroids.select(
         F.col("centroid_id"), F.col(vec_col).alias("__cvec")
@@ -312,7 +262,7 @@ def ivf_topk(
     )
     probes = (
         q_scored.withColumn("__rk", F.row_number().over(wq))
-        .filter(F.col("__rk") <= nprobe)
+        .filter(F.col("__rk") <= IVF_NPROBE)
         .select("query_id", "__qvec", "centroid_id")
     )
     probes = probes.withColumn("__qnorm", norm_expr("__qvec"))
@@ -328,17 +278,12 @@ def ivf_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "cosine", "rank")
     )
 
 
-def kmeans_lloyd(
-    corpus: DataFrame,
-    init_centroids: DataFrame,
-    n_iter: int = 2,
-    dim: int = 64,
-) -> DataFrame:
+def kmeans_lloyd(corpus: DataFrame, init_centroids: DataFrame) -> DataFrame:
     """Distributed Lloyd k-means refinement of an initial centroid set —
     the in-engine INDEX BUILD for the IVF path: ``ivf_topk`` (x12)
     probes cells, this trains them, closing the loop x30's measured
@@ -351,12 +296,12 @@ def kmeans_lloyd(
       (K centroids collapse to one broadcast struct-array row; the
       nearest-centroid fold is row-local, cosine metric, ties to the
       lowest centroid id);
-    * update — the element-wise mean as ``dim`` scalar ``avg``
+    * update — the element-wise mean as ``EMB_DIM`` scalar ``avg``
       aggregates over one partial-aggregatable ``groupBy(centroid)``
       (map-side combine; no N×dim row explosion, no array-keyed
       shuffle), re-packed to one array column.
 
-    Fixed ``n_iter`` (no convergence check) keeps the job count
+    Fixed ``KMEANS_ITERS`` (no convergence check) keeps the job count
     deterministic; updated centroids are rounded to 6 decimals
     each iteration so distributed partial-sum ULP drift can't leak into
     the next assignment's argmax — the property that makes an
@@ -369,7 +314,7 @@ def kmeans_lloyd(
     consumable by ``ivf_topk``.
     """
     cents = init_centroids.select("centroid_id", "embedding")
-    for _ in range(n_iter):
+    for _ in range(KMEANS_ITERS):
         assigned = ivf_assignments(corpus, cents, "embedding")
         # generated-SQL per-dimension aggregates: one F.expr per column
         # instead of ~4 Py4J calls per dim per iteration (r16; the
@@ -378,14 +323,14 @@ def kmeans_lloyd(
             F.expr(
                 f"avg(cast(element_at(embedding, {j + 1}) as double))"
             ).alias(f"__d{j}")
-            for j in range(dim)
+            for j in range(EMB_DIM)
         ]
         upd = assigned.groupBy("centroid_id").agg(
             F.count(F.lit(1)).alias("n_assigned"), *dims
         )
         repack = (
             "array("
-            + ",".join(f"round(__d{j}, 6)" for j in range(dim))
+            + ",".join(f"round(__d{j}, 6)" for j in range(EMB_DIM))
             + ")"
         )
         cents = upd.select(
@@ -394,19 +339,17 @@ def kmeans_lloyd(
             F.expr(repack).alias("embedding"),
         ).localCheckpoint(eager=True)  # K-row frame; truncates the
         # lineage so iteration N's plan doesn't embed (and re-run)
-        # iterations 1..N-1 — matters once n_iter grows past the default
+        # iterations 1..N-1 — matters once KMEANS_ITERS grows
     return cents
 
 
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 10,
     vec_col: str = "embedding",
     n_planes: int = N_PLANES,
-    method: str = "gaussian",
     n_tables: int = 1,
-    dim: int = 64,
+    dim: int = EMB_DIM,
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors sharing an LSH bucket with
     the query are scored — the candidate set shrinks ~2^n_planes-fold
@@ -420,15 +363,14 @@ def lsh_topk(
     recall per method so the trade-off is a number, not a guess). The
     corpus still scans ONCE: the L bucket keys are computed in one
     projection and exploded, so the scan cost is L bucket folds, not L
-    passes. Multi-table requires the Gaussian construction (the md5
-    variant has no seed parameter).
+    passes.
 
     Norms are deferred to after the bucket equi-join, so the O(dim)
     norm fold runs per *candidate* row, not per corpus row — at 2^8
     bucket selectivity that removes ~1/5 of the full-scan arithmetic.
     """
     if n_tables == 1:
-        bucket = bucket_expr(vec_col, n_planes, method, dim)
+        bucket = hyperplane_bucket_gaussian(vec_col, n_planes, dim, 7)
         cb = corpus.withColumn("__bucket", bucket)
         qb = queries.select(
             F.col("query_id"),
@@ -438,8 +380,6 @@ def lsh_topk(
         )
         cand = cb.join(F.broadcast(qb), "__bucket")
     else:
-        if method != "gaussian":
-            raise ValueError("n_tables > 1 requires method='gaussian'")
         tables = F.posexplode(
             F.array(
                 *[
@@ -474,6 +414,6 @@ def lsh_topk(
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("query_id", "vec_id", "cosine", "rank")
     )

@@ -379,10 +379,11 @@ def histogram_quantiles_sql(
     src_cte: str,
     value_expr: str,
     group_cols: list[str],
-    extra_ctes: str = "",
+    extra_ctes: str,
 ) -> str:
     """Oracle twin of :func:`histogram_quantiles` (same float op
-    order: (v-mn)/width bucket, mn + (b + frac)*width estimate)."""
+    order: (v-mn)/width bucket, mn + (b + frac)*width estimate);
+    ``extra_ctes`` (trailing comma included) defines ``src_cte``."""
     g = ", ".join(group_cols)
     qvals = ", ".join(f"({q})" for q in HIST_QS)
     return f"""
@@ -447,7 +448,7 @@ def _hll_alpha(m: int) -> float:
 def hll_registers(
     df: DataFrame,
     key_col: str,
-    group_cols: list[str] | tuple[str, ...] = (),
+    group_cols: list[str] | tuple[str, ...],
 ) -> DataFrame:
     """Per-group HyperLogLog register relation — ``(group cols,
     register, rho)`` where ``register`` is the first ``HLL_P`` bits of the
@@ -475,7 +476,7 @@ def hll_registers(
     return hll_registers_fn(key_col, group_cols)(df)
 
 
-def hll_registers_fn(key_col: str, group_cols: list[str] | tuple[str, ...] = ()):
+def hll_registers_fn(key_col: str, group_cols: list[str] | tuple[str, ...]):
     """Prebuilt ``DataFrame -> registers`` closure behind
     :func:`hll_registers` — every Column is constructed ONCE here and
     reused on each call. Per-batch callers (the t27 incremental merge)
@@ -529,7 +530,7 @@ def hll_registers_fn(key_col: str, group_cols: list[str] | tuple[str, ...] = ())
 
 def hll_estimate_from_registers(
     regs: DataFrame,
-    group_cols: list[str] | tuple[str, ...] = (),
+    group_cols: list[str] | tuple[str, ...],
 ) -> DataFrame:
     """The estimate tail over a register relation (batch-built or
     stream-merged — the split mirrors

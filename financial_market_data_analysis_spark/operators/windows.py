@@ -32,6 +32,13 @@ from pyspark.sql import functions as F
 
 from financial_market_data_analysis_spark.functions.core import with_sql
 
+ROLLING_PERIOD = 20  # rolling corr/beta/median, Donchian, CMF: the MA20 frame
+OSCILLATOR_PERIOD = 14  # RSI, Williams %R and ADX: the classic 14-bar frame
+BETA_RANGE_MIN_PAIRS = 5  # W26's warm-up gate: (x, y) pairs in the RANGE frame
+SLIDE_LENGTH_SECONDS = 600  # A5/T3 sliding window: 10-minute length ...
+SLIDE_SECONDS = 300  # ... sliding every 5 minutes
+SESSION_GAP = "30 minutes"  # T4 inactivity gap that closes a session
+
 
 def trailing_window(order_cols: Sequence[str | Column], n_preceding: int) -> WindowSpec:
     """``ROWS BETWEEN n PRECEDING AND CURRENT ROW`` over an event-time
@@ -60,7 +67,8 @@ def moving_average_sql(
     periods: Sequence[int],
     order_cols: Sequence[str],
     partition_cols: Sequence[str] = (),
-    prefix: str | None = None,
+    *,
+    prefix: str,
 ) -> dict[str, str]:
     """W1/W2/W3 — ``AVG(x) OVER (... ROWS period-1 PRECEDING)`` per period.
 
@@ -68,7 +76,6 @@ def moving_average_sql(
     ``delta_MA`` views); periods from config.py:40-42.
     Column naming matches the views: ``{prefix}_MA{period}``.
     """
-    prefix = prefix if prefix is not None else value_col
     return {
         f"{prefix}_MA{p}": f"avg({value_col}) {_over(order_cols, partition_cols, p - 1)}"
         for p in periods
@@ -155,28 +162,26 @@ def forward_targets_sql(
     return cols
 
 
-def sliding_window_agg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    length: str = "600 seconds",
-    slide: str = "300 seconds",
-) -> DataFrame:
+def sliding_window_agg(df: DataFrame) -> DataFrame:
     """A5/T3 — sliding-window aggregation: the reference's abandoned
     ``groupBy(F.window(ts, len, slide)).avg("VIX")`` design
     (spark_consumer.py:129-149, disabled for the Spark 2.4 multi-agg
     limitation; works directly on Spark 3.5+).
 
     Identical code runs batch (tests/oracle) and streaming (with a
-    watermark upstream). Each row lands in ``len/slide`` windows; the
-    groupBy is partial-aggregatable, one shuffle on the window key.
-    Output keys are epoch seconds (timezone-proof, cheap to hash).
+    watermark upstream). Windows over ``ts`` are
+    ``SLIDE_LENGTH_SECONDS`` long and start every ``SLIDE_SECONDS``;
+    each row lands in ``length/slide`` windows; the groupBy is
+    partial-aggregatable, one shuffle on the window key. Output keys
+    are epoch seconds (timezone-proof, cheap to hash).
     """
-    w = F.window(F.col(ts_col), length, slide)
+    w = F.window(
+        F.col("ts"), f"{SLIDE_LENGTH_SECONDS} seconds", f"{SLIDE_SECONDS} seconds"
+    )
     return (
         df.groupBy(w.alias("w"))
         .agg(
-            F.avg(value_col).alias("avg_value"),
+            F.avg("value").alias("avg_value"),
             F.count(F.lit(1)).alias("n"),
         )
         .select(
@@ -188,15 +193,11 @@ def sliding_window_agg(
     )
 
 
-def session_windows(
-    df: DataFrame,
-    ts_col: str = "ts",
-    key_cols: Sequence[str] = ("user_id",),
-    gap: str = "30 minutes",
-) -> DataFrame:
+def session_windows(df: DataFrame) -> DataFrame:
     """T4 — session windows (absent in the reference; an engine
-    extension): per-key activity sessions that close after ``gap`` of
-    silence, via the built-in ``F.session_window`` (streaming-capable
+    extension): per-``user_id`` activity sessions over ``ts`` that close
+    after ``SESSION_GAP`` of silence, via the built-in
+    ``F.session_window`` (streaming-capable
     with a watermark upstream — state closes as the watermark passes
     each session's end).
 
@@ -205,17 +206,17 @@ def session_windows(
     sum of gap breaks), proving the semantics match ANSI SQL exactly.
     Output keys are epoch seconds for cross-engine hashing.
     """
-    w = F.session_window(F.col(ts_col), gap)
+    w = F.session_window(F.col("ts"), SESSION_GAP)
     return (
-        df.groupBy(*key_cols, w.alias("sw"))
+        df.groupBy("user_id", w.alias("sw"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sum_value"),
-            F.min(ts_col).alias("first_ts"),
-            F.max(ts_col).alias("last_ts"),
+            F.min("ts").alias("first_ts"),
+            F.max("ts").alias("last_ts"),
         )
         .select(
-            *key_cols,
+            "user_id",
             F.unix_timestamp("first_ts").alias("session_start"),
             F.unix_timestamp("last_ts").alias("session_last"),
             "n_events",
@@ -229,7 +230,6 @@ def rolling_corr(
     x_col: str,
     y_col: str,
     order_cols: Sequence[str | Column],
-    period: int = 20,
 ) -> DataFrame:
     """W12 — trailing-window Pearson correlation between two aligned
     series (absent in the reference; the pairs-trading / lead-lag
@@ -238,11 +238,12 @@ def rolling_corr(
     suite, so the whole computation stays in one window pass over
     the reference-parity global order.
 
-    Emits NULL until the frame holds ``period`` rows (partial-window
-    correlations are statistically misleading and engines disagree on
-    degenerate frames); callers filter on ``row_number >= period``
-    like the t9 warm-up trim.
+    Emits NULL until the frame holds ``ROLLING_PERIOD`` rows
+    (partial-window correlations are statistically misleading and
+    engines disagree on degenerate frames); callers filter on
+    ``row_number >= ROLLING_PERIOD`` like the t9 warm-up trim.
     """
+    period = ROLLING_PERIOD
     w = trailing_window(order_cols, period - 1)
     # gate on the count of complete (x, y) PAIRS in the frame — F.corr
     # silently skips null pairs, so a row-number gate would emit a
@@ -261,7 +262,6 @@ def rolling_beta(
     y_col: str,
     x_col: str,
     order_cols: Sequence[str | Column],
-    period: int = 20,
 ) -> DataFrame:
     """W25 — trailing-window OLS regression of ``y`` on ``x``: ``beta``
     = covar_pop(y,x)/var_pop(x) and ``alpha`` = mean(y) − beta·mean(x),
@@ -273,11 +273,12 @@ def rolling_beta(
     same ROWS frame, so Catalyst evaluates them in a single
     WindowExec over the reference-parity global order.
 
-    Emits NULL until the frame holds ``period`` complete (x, y) pairs
-    (the rolling_corr gate — aggregates silently skip null pairs, so a
+    Emits NULL until the frame holds ``ROLLING_PERIOD`` complete (x, y)
+    pairs (the rolling_corr gate — aggregates silently skip null pairs, so a
     row-number gate would regress over fewer points on gappy series)
     and NULL on a flat-x frame (var_pop = 0: beta is undefined; the
     guard keeps ANSI division from ever seeing the zero)."""
+    period = ROLLING_PERIOD
     w = trailing_window(order_cols, period - 1)
     y, x = F.col(y_col), F.col(x_col)
     pair_cnt = F.count(
@@ -297,7 +298,6 @@ def rolling_beta_range(
     x_col: str,
     order_col: str,
     span: int,
-    min_pairs: int = 5,
 ) -> DataFrame:
     """W26 — :func:`rolling_beta` on a time-RANGE frame: beta/alpha
     over all (x, y) pairs whose ``order_col`` (a numeric event-time
@@ -313,8 +313,8 @@ def rolling_beta_range(
     One shared RANGE frame evaluates all four moment aggregates in a
     single WindowExec, exactly like the ROWS twin. Because the frame's
     pair count is data-dependent by design, the warm-up gate is a
-    MINIMUM pair count (``min_pairs``) rather than w25's exact-period
-    gate; the flat-x guard (var_pop = 0 → NULL) is identical. The
+    MINIMUM pair count (``BETA_RANGE_MIN_PAIRS``) rather than w25's
+    exact-period gate; the flat-x guard (var_pop = 0 → NULL) is identical. The
     frame key must be numeric — engines agree exactly on integer
     range bounds, where interval/timestamp frames invite boundary
     drift.
@@ -334,7 +334,7 @@ def rolling_beta_range(
     ).over(w)
     cov = F.covar_pop(y, x).over(w)
     var = F.var_pop(x).over(w)
-    ok = (pair_cnt >= min_pairs) & (var > 0)
+    ok = (pair_cnt >= BETA_RANGE_MIN_PAIRS) & (var > 0)
     beta = F.when(ok, cov / var)
     alpha = F.when(ok, F.avg(y).over(w) - (cov / var) * F.avg(x).over(w))
     return df.withColumns({"beta": beta, "alpha": alpha})
@@ -344,7 +344,6 @@ def rolling_median(
     df: DataFrame,
     value_col: str,
     order_cols: Sequence[str | Column],
-    period: int = 20,
 ) -> DataFrame:
     """W13 — trailing-window exact median (absent in the reference,
     whose views are all mean-based — create_database.py:76-190; the
@@ -352,10 +351,11 @@ def rolling_median(
     needs). ``F.median`` is a declarative aggregate over the same ROWS
     frame as W1-W7, so the pass stays JVM-side in the window exec.
 
-    Emits NULL until the frame holds ``period`` rows — engines agree on
-    full-frame medians (even-count frames average the two middle
-    values) but differ on how they treat warm-up frames, so the
-    short-frame rows are trimmed exactly like ``rolling_corr``.
+    Emits NULL until the frame holds ``period`` (``ROLLING_PERIOD``)
+    rows — engines agree on full-frame medians (even-count frames
+    average the two middle values) but differ on how they treat warm-up
+    frames, so the short-frame rows are trimmed exactly like
+    ``rolling_corr``.
 
     Catalyst refuses ``median``/``percentile`` aggregates over a
     bounded window frame, so the frame is materialized with
@@ -369,6 +369,7 @@ def rolling_median(
     period ≫ 10³ reach for a sketch (approx_percentile per bucket)
     instead.
     """
+    period = ROLLING_PERIOD
     w = trailing_window(order_cols, period - 1)
     # gate on the NON-NULL count in the frame, not the row number:
     # collect_list drops nulls, so a row-count gate would misindex the
@@ -429,21 +430,21 @@ def rsi(
     df: DataFrame,
     value_col: str,
     order_cols: Sequence[str | Column],
-    period: int = 14,
 ) -> DataFrame:
     """W15 — Relative Strength Index (Cutler's simple-average form):
     ``100 − 100/(1 + avgGain/avgLoss)`` over the trailing ``period``
-    deltas. The simple-MA variant is used instead of Wilder's
-    recursive smoothing deliberately — recursion is unbounded-history
-    (the same reason W14 truncates the EMA), while this form is a LAG
-    plus two windowed averages: frame-bounded, partitionable,
-    oracle-checkable. All-gain frames clamp to 100 (avgLoss = 0 —
+    (``OSCILLATOR_PERIOD``) deltas. The simple-MA variant is used
+    instead of Wilder's recursive smoothing deliberately — recursion is
+    unbounded-history (the same reason W14 truncates the EMA), while
+    this form is a LAG plus two windowed averages: frame-bounded,
+    partitionable, oracle-checkable. All-gain frames clamp to 100 (avgLoss = 0 —
     engines disagree on x/0, so the clamp is explicit); a completely
     FLAT frame (avgGain = avgLoss = 0, a dead series) is neutral 50,
     not maximal momentum (r5 advice — the bare avgLoss=0 clamp used
     to cover the 0/0 case too); warm-up rows (fewer than ``period``
     deltas) are NULL.
     """
+    period = OSCILLATOR_PERIOD
     ow = ordered_window(order_cols)
     w = trailing_window(order_cols, period - 1)
     delta = F.col(value_col) - F.lag(value_col).over(ow)
@@ -507,7 +508,6 @@ def on_balance_volume(
     close_col: str,
     volume_col: str,
     order_cols: Sequence[str | Column],
-    out_col: str = "obv",
 ) -> DataFrame:
     """W16 — On-Balance Volume: running sum of volume signed by the
     bar-to-bar close direction (up bar adds, down bar subtracts, flat
@@ -530,7 +530,7 @@ def on_balance_volume(
     )
     run = Window.partitionBy().orderBy(*order_cols).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn("__signed_vol", signed).withColumn(
-        out_col, F.sum("__signed_vol").over(run)
+        "obv", F.sum("__signed_vol").over(run)
     ).drop("__signed_vol")
 
 
@@ -540,7 +540,6 @@ def adx(
     low_col: str,
     close_col: str,
     order_cols: Sequence[str | Column],
-    period: int = 14,
 ) -> DataFrame:
     """W21 — Average Directional Index (trend-strength oscillator), the
     directional-movement sibling of W15's RSI: ``+DM/−DM`` from
@@ -563,6 +562,7 @@ def adx(
     Catalyst evaluates them in a single sort pipeline — no extra
     shuffle for the second pass.
     """
+    period = OSCILLATOR_PERIOD
     ow = ordered_window(order_cols)
     w = trailing_window(order_cols, period - 1)
     h, low, c = F.col(high_col), F.col(low_col), F.col(close_col)
@@ -609,13 +609,7 @@ def adx(
     )
 
 
-def sliding_join_back(
-    df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    length_seconds: int = 600,
-    slide_seconds: int = 300,
-) -> DataFrame:
+def sliding_join_back(df: DataFrame) -> DataFrame:
     """A5/T3's second half — join the sliding-window aggregate BACK to
     the row stream, so every event carries the moving average of each
     window it falls in (the reference's abandoned leftOuter design,
@@ -634,24 +628,21 @@ def sliding_join_back(
     since aggregate-then-join remains a restricted chain for live
     stream-stream topologies.
     """
-    agg = sliding_window_agg(
-        df, ts_col, value_col,
-        f"{length_seconds} seconds", f"{slide_seconds} seconds",
-    )
-    n = -(-length_seconds // slide_seconds)  # ceil
+    agg = sliding_window_agg(df)
+    n = -(-SLIDE_LENGTH_SECONDS // SLIDE_SECONDS)  # ceil
     starts = F.array(
         *[
             F.expr(
-                f"(unix_timestamp({ts_col}) div {slide_seconds}) * {slide_seconds}"
-                f" - {k * slide_seconds}"
+                f"(unix_timestamp(ts) div {SLIDE_SECONDS}) * {SLIDE_SECONDS}"
+                f" - {k * SLIDE_SECONDS}"
             )
             for k in range(n)
         ]
     )
-    t = F.unix_timestamp(ts_col)
+    t = F.unix_timestamp("ts")
     ev = df.withColumn("window_start", F.explode(starts)).filter(
         (t >= F.col("window_start"))
-        & (t < F.col("window_start") + F.lit(length_seconds))
+        & (t < F.col("window_start") + F.lit(SLIDE_LENGTH_SECONDS))
     )
     return ev.join(agg, "window_start")
 
@@ -702,9 +693,8 @@ def donchian_channel(
     low_col: str,
     close_col: str,
     order_cols: Sequence[str | Column],
-    period: int = 20,
 ) -> DataFrame:
-    """W18 — Donchian channel: trailing ``period``-bar highest high /
+    """W18 — Donchian channel: trailing ``ROLLING_PERIOD``-bar highest high /
     lowest low, their midline, and a breakout flag against the PRIOR
     bar's channel (the turtle-trading entry signal). The range-extreme
     sibling of W4's deviation bands, absent from the reference's view
@@ -717,6 +707,7 @@ def donchian_channel(
     PREVIOUS row's full channel (LAG of the frame max), so it starts
     one bar later.
     """
+    period = ROLLING_PERIOD
     w = trailing_window(order_cols, period - 1)
     wo = ordered_window(order_cols)
     cnt = F.count(F.col(close_col)).over(w)
@@ -748,14 +739,14 @@ def williams_r(
     low_col: str,
     close_col: str,
     order_cols: Sequence[str | Column],
-    period: int = 14,
 ) -> DataFrame:
     """W23 — Williams %R: (highest high − close) / (highest high −
-    lowest low) × −100 over a trailing ``period`` frame — the
+    lowest low) × −100 over a trailing ``OSCILLATOR_PERIOD`` frame — the
     inverted-scale sibling of W5's stochastic %K (same frame extrema,
     measured from the top of the range and scaled to [−100, 0]).
     Flat frames (max == min) yield NULL via ``try_divide``, matching
     W5's degenerate-window convention; warm-up rows are NULL."""
+    period = OSCILLATOR_PERIOD
     w = trailing_window(order_cols, period - 1)
     hh = F.max(F.col(high_col)).over(w)
     ll = F.min(F.col(low_col)).over(w)
@@ -776,17 +767,17 @@ def chaikin_money_flow(
     close_col: str,
     vol_col: str,
     order_cols: Sequence[str | Column],
-    period: int = 20,
 ) -> DataFrame:
     """W22 — Chaikin Money Flow: the volume-weighted accumulation/
     distribution oscillator — multiplier ((close−low)−(high−close))/
     (high−low) per bar, CMF = Σ(multiplier·volume) / Σ(volume) over a
-    trailing ``period`` frame. The volume-flow sibling of W16's OBV
+    trailing ``ROLLING_PERIOD`` frame. The volume-flow sibling of W16's OBV
     (which only signs volume by close direction); absent from the
     reference's view set (create_database.py:76-190 ends at stochastic
     /ATR). Flat bars (high == low) contribute zero flow (``try_divide``
     NULL coalesced), the standard convention. Same declarative ROWS
     frame as W1-W7 — two windowed sums over one sort; warm-up rows (frame < period) are NULL."""
+    period = ROLLING_PERIOD
     w = trailing_window(order_cols, period - 1)
     h, l, c = F.col(high_col), F.col(low_col), F.col(close_col)
     mfm = F.try_divide((c - l) - (h - c), h - l)
@@ -859,7 +850,7 @@ def gap_fill_locf(
     bucket_col: str,
     step: int,
     locf_cols: Sequence[str],
-    zero_cols: Sequence[str] = (),
+    zero_cols: Sequence[str],
 ) -> DataFrame:
     """Regularize a bar series onto its full bucket spine (the
     operation the reference's consumer implicitly needs and never

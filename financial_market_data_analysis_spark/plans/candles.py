@@ -18,6 +18,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 BUCKET_SECONDS = 300  # 5-minute tumbling key, spark_consumer.py:110-111
+# multi-resolution levels (a10); each divides the next, so a coarse
+# bucket never splits a fine bar
+MULTIRES_GRANULARITIES = (300, 900, 3600)
 
 
 def time_bucket(ts_col: str | Column, seconds: int = BUCKET_SECONDS) -> Column:
@@ -73,10 +76,7 @@ def candles_from_events(events: DataFrame, group_cols: tuple[str, ...] = ()) -> 
     )
 
 
-def candles_multires(
-    events: DataFrame,
-    granularities: tuple[int, ...] = (300, 900, 3600),
-) -> DataFrame:
+def candles_multires(events: DataFrame) -> DataFrame:
     """Hierarchical multi-resolution OHLCV rollup (the hypertable
     continuous-aggregate pattern): the raw stream is scanned ONCE into
     base-granularity bars, and every coarser level re-aggregates the
@@ -89,18 +89,13 @@ def candles_multires(
     so a coarse bar's open is ``min_by(open, open_seq)`` — the value at
     the globally smallest sequence number in the coarse bucket, exactly
     what a direct aggregation of the raw stream would select. high/low/
-    volume/n_events compose as max/min/sum. Each granularity must divide
-    the next (validated), or a coarse bucket would split fine bars.
+    volume/n_events compose as max/min/sum over the levels of
+    ``MULTIRES_GRANULARITIES``.
 
     Returns the union of all levels: (granularity, bucket_start, open,
     high, low, close, volume, n_events).
     """
-    for a, b in zip(granularities, granularities[1:]):
-        if b % a != 0:
-            raise ValueError(
-                f"granularity {b} is not a multiple of the previous level {a}"
-            )
-    g0 = granularities[0]
+    g0, *coarser = MULTIRES_GRANULARITIES
     if "ts_us" in events.columns:
         bucket = time_bucket_us("ts_us", g0)
     else:
@@ -125,7 +120,7 @@ def candles_multires(
     ]
     levels = [base.withColumn("granularity", F.lit(g0)).select(out_cols)]
     prev = base
-    for g in granularities[1:]:
+    for g in coarser:
         prev = prev.groupBy(
             # FLOOR division, not `div` (truncation toward zero): a
             # pre-1970 negative bucket_start must floor-align the same
@@ -156,9 +151,7 @@ def candles_multires(
     return out
 
 
-def candles_multires_oracle_sql(
-    granularities: tuple[int, ...] = (300, 900, 3600),
-) -> str:
+def candles_multires_oracle_sql() -> str:
     """DuckDB twin of ``candles_multires``: each level aggregated
     DIRECTLY from the raw events (arg_min/arg_max on event_id) — so the
     oracle checks that the hierarchical composition equals the
@@ -168,7 +161,7 @@ def candles_multires_oracle_sql(
     float precedent); the OHLC columns are selections and stay exact.
     """
     parts = []
-    for g in granularities:
+    for g in MULTIRES_GRANULARITIES:
         parts.append(f"""
         SELECT
             {g} AS granularity,

@@ -33,8 +33,6 @@ DUP_SUFFIX = " near duplicate suffix"
 NGRAM_JACCARD_MIN = 0.2  # x7: verified shingle-Jaccard cut
 N_QUERY_VECS = 5
 
-TOP_K = 10
-
 
 def _ckpt_concurrently(*dfs: DataFrame) -> list[DataFrame]:
     """Materialize several INDEPENDENT frames as eager localCheckpoints
@@ -467,7 +465,7 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.join(F.broadcast(D.candidate_ids(pairs)), "doc_id")
     )
     sh = D.shingle_table(cand).persist()
-    verified = D.jaccard_verify(pairs, d, shingles=sh)
+    verified = D.jaccard_verify(pairs, sh)
     out = verified.filter(F.col("jaccard") >= NGRAM_JACCARD_MIN).localCheckpoint(eager=True)
     sh.unpersist()
     return out
@@ -531,7 +529,7 @@ def _query_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k over embeddings (broadcast query side)."""
     corpus = load_table(spark, "embeddings", sf_dir)
-    return S.brute_force_topk(corpus, _query_vecs(spark, sf_dir), k=TOP_K)
+    return S.brute_force_topk(corpus, _query_vecs(spark, sf_dir))
 
 
 def _cos_sql(x: str, y: str) -> str:
@@ -563,14 +561,13 @@ def ann_brute_oracle() -> str:
             SELECT *, row_number() OVER (
                 PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
             FROM scored
-        ) WHERE rank <= {TOP_K}
+        ) WHERE rank <= {S.TOP_K}
     """
 
 
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaussian-plane LSH buckets (production path; the md5-parity
-    variant stays available via method="md5" for portability tests)."""
-    return D.embedding_neardup_pairs(emb_augmented(spark, sf_dir), method="gaussian")
+    """Gaussian-plane LSH buckets, then exact cosine within a bucket."""
+    return D.embedding_neardup_pairs(emb_augmented(spark, sf_dir))
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -578,13 +575,10 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale path next to x8's exact baseline. With 8 planes the
     candidate set shrinks ~2^8× before any cosine is computed."""
     corpus = load_table(spark, "embeddings", sf_dir)
-    return S.lsh_topk(
-        corpus, _query_vecs(spark, sf_dir), k=TOP_K, method="gaussian"
-    )
+    return S.lsh_topk(corpus, _query_vecs(spark, sf_dir))
 
 
 CENTROID_MOD = 101  # deterministic coarse-centroid sample: vec_id % 101 = 0
-IVF_NPROBE = 2
 
 
 def _centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -600,8 +594,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the inverted-file scale path next to x11's LSH gate."""
     corpus = load_table(spark, "embeddings", sf_dir)
     return S.ivf_topk(
-        corpus, _query_vecs(spark, sf_dir), _centroids(spark, sf_dir),
-        k=TOP_K, nprobe=IVF_NPROBE,
+        corpus, _query_vecs(spark, sf_dir), _centroids(spark, sf_dir)
     )
 
 
@@ -645,7 +638,7 @@ def ann_ivf_oracle() -> str:
                            ORDER BY {_COS_AC} DESC, c.centroid_id) AS rk
                 FROM embeddings e CROSS JOIN cent c
                 WHERE e.vec_id < {N_QUERY_VECS}
-            ) WHERE rk <= {IVF_NPROBE}
+            ) WHERE rk <= {S.IVF_NPROBE}
         ),
         scored AS (
             SELECT q.query_id, e.vec_id, {_COS_SQL} AS cosine
@@ -655,7 +648,7 @@ def ann_ivf_oracle() -> str:
             SELECT *, row_number() OVER (
                 PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
             FROM scored
-        ) WHERE rank <= {TOP_K}
+        ) WHERE rank <= {S.TOP_K}
     """
 
 
@@ -677,12 +670,8 @@ def ann_lsh_oracle() -> str:
             SELECT *, row_number() OVER (
                 PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
             FROM scored
-        ) WHERE rank <= {TOP_K}
+        ) WHERE rank <= {S.TOP_K}
     """
-
-
-KMEANS_ITERS = 2  # fixed Lloyd iterations for the x34 index build
-EMB_DIM_K = 64  # embedding dimensionality (matches the driver's table)
 
 
 def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -695,9 +684,7 @@ def q_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the trained centroids compare exactly. Output: the trained
     centroids flattened to (centroid_id, n_assigned, dim_idx, val)."""
     corpus = load_table(spark, "embeddings", sf_dir)
-    cents = S.kmeans_lloyd(
-        corpus, _centroids(spark, sf_dir), n_iter=KMEANS_ITERS, dim=EMB_DIM_K
-    )
+    cents = S.kmeans_lloyd(corpus, _centroids(spark, sf_dir))
     return cents.select(
         "centroid_id",
         F.col("n_assigned").cast("int").alias("n_assigned"),
@@ -733,9 +720,9 @@ def _kmeans_ctes() -> str:
             WHERE vec_id % {CENTROID_MOD} = 0
         ),
         assign1 AS ({assign.format(cos=_COS_AC, cents="cent0")}),
-        cent1 AS ({update.format(assign="assign1", dim=EMB_DIM_K)}),
+        cent1 AS ({update.format(assign="assign1", dim=S.EMB_DIM)}),
         assign2 AS ({assign.format(cos=_COS_AC, cents="cent1")}),
-        cent2 AS ({update.format(assign="assign2", dim=EMB_DIM_K)})"""
+        cent2 AS ({update.format(assign="assign2", dim=S.EMB_DIM)})"""
 
 
 def kmeans_train_oracle() -> str:
@@ -749,7 +736,7 @@ def kmeans_train_oracle() -> str:
                CAST(n_members AS INT) AS n_assigned,
                CAST(g.j - 1 AS INT) AS dim_idx,
                embedding[g.j] AS val
-        FROM cent2, generate_series(1, {EMB_DIM_K}) g(j)
+        FROM cent2, generate_series(1, {S.EMB_DIM}) g(j)
     """
 
 
@@ -766,7 +753,7 @@ def ann_ivf_trained_oracle() -> str:
                            ORDER BY {_COS_AC} DESC, c.centroid_id) AS rk
                 FROM embeddings e CROSS JOIN cent2 c
                 WHERE e.vec_id < {N_QUERY_VECS}
-            ) WHERE rk <= {IVF_NPROBE}
+            ) WHERE rk <= {S.IVF_NPROBE}
         ),
         scored AS (
             SELECT q.query_id, e.vec_id, {_COS_SQL} AS cosine
@@ -776,7 +763,7 @@ def ann_ivf_trained_oracle() -> str:
             SELECT *, row_number() OVER (
                 PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
             FROM scored
-        ) WHERE rank <= {TOP_K}
+        ) WHERE rank <= {S.TOP_K}
     """
 
 
@@ -805,9 +792,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     number of higher-priority in-cell near-dups, and the strongest
     such cosine (NULL when kept)."""
     corpus = load_table(spark, "embeddings", sf_dir)
-    cents = S.kmeans_lloyd(
-        corpus, _centroids(spark, sf_dir), n_iter=KMEANS_ITERS, dim=EMB_DIM_K
-    )
+    cents = S.kmeans_lloyd(corpus, _centroids(spark, sf_dir))
     aug = emb_augmented(spark, sf_dir)
     # the assignment feeds BOTH pair sides and the final keep/drop
     # projection; the lazy checkpoint runs the broadcast-argmax fold
@@ -917,8 +902,8 @@ def q_ann_lsh_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     x30 publishes the number that triggers that retune."""
     corpus = load_table(spark, "embeddings", sf_dir)
     return S.lsh_topk(
-        corpus, _query_vecs(spark, sf_dir), k=TOP_K,
-        method="gaussian", n_planes=LSH_MULTI_PLANES, n_tables=LSH_TABLES,
+        corpus, _query_vecs(spark, sf_dir),
+        n_planes=LSH_MULTI_PLANES, n_tables=LSH_TABLES,
     )
 
 
@@ -956,7 +941,7 @@ def ann_lsh_multi_oracle() -> str:
             SELECT *, row_number() OVER (
                 PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rank
             FROM scored
-        ) WHERE rank <= {TOP_K}
+        ) WHERE rank <= {S.TOP_K}
     """
 
 
@@ -990,7 +975,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # before, just concurrent.
     exact, trained = _run_concurrently(
         lambda: (
-            S.brute_force_topk(corpus, qv, k=TOP_K)
+            S.brute_force_topk(corpus, qv)
             .select("query_id", "vec_id")
             .localCheckpoint(eager=True)
         ),
@@ -998,23 +983,17 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # value of the index BUILD (raw sample 0.40 → trained 0.58 at
         # sf0.1)
         lambda: S.kmeans_lloyd(
-            corpus,
-            _centroids(spark, sf_dir),
-            n_iter=KMEANS_ITERS,
-            dim=EMB_DIM_K,
+            corpus, _centroids(spark, sf_dir)
         ).localCheckpoint(eager=True),
     )
-    lsh = S.lsh_topk(corpus, qv, k=TOP_K).select("query_id", "vec_id")
+    lsh = S.lsh_topk(corpus, qv).select("query_id", "vec_id")
     lsh_multi = S.lsh_topk(
-        corpus, qv, k=TOP_K, method="gaussian",
-        n_planes=LSH_MULTI_PLANES, n_tables=LSH_TABLES,
+        corpus, qv, n_planes=LSH_MULTI_PLANES, n_tables=LSH_TABLES,
     ).select("query_id", "vec_id")
-    ivf = S.ivf_topk(
-        corpus, qv, _centroids(spark, sf_dir), k=TOP_K, nprobe=IVF_NPROBE
-    ).select("query_id", "vec_id")
-    ivf_trained = S.ivf_topk(
-        corpus, qv, trained, k=TOP_K, nprobe=IVF_NPROBE
-    ).select("query_id", "vec_id")
+    ivf = S.ivf_topk(corpus, qv, _centroids(spark, sf_dir)).select(
+        "query_id", "vec_id"
+    )
+    ivf_trained = S.ivf_topk(corpus, qv, trained).select("query_id", "vec_id")
     spine = exact.select("query_id").distinct()
 
     def one(method: str, approx: DataFrame) -> DataFrame:
@@ -1030,7 +1009,7 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(method).alias("method"),
                 "query_id",
                 F.col("n_hits").cast("int").alias("n_hits"),
-                (F.col("n_hits") / F.lit(float(TOP_K))).alias("recall_at_k"),
+                (F.col("n_hits") / F.lit(float(S.TOP_K))).alias("recall_at_k"),
             )
         )
 
@@ -1067,7 +1046,7 @@ def ann_recall_oracle() -> str:
     selects = "\n        UNION ALL\n        ".join(
         f"""SELECT '{name}' AS method, q.query_id,
                CAST(COALESCE(h.n_hits, 0) AS INT) AS n_hits,
-               COALESCE(h.n_hits, 0) / CAST({TOP_K} AS DOUBLE) AS recall_at_k
+               COALESCE(h.n_hits, 0) / CAST({S.TOP_K} AS DOUBLE) AS recall_at_k
         FROM qs q LEFT JOIN hits_{name} h USING (query_id)"""
         for name in methods
     )
@@ -1563,35 +1542,23 @@ def embed_neardup_oracle() -> str:
 # ---------------------------------------------------------------------------
 # SimHash near-dup, dedup clusters, deterministic splits, vocabulary
 
-# 4 bands with max_hamming=2 keeps the pigeonhole recall guarantee
-# (n_bands > max_hamming) while staying selective on the synthetic
-# corpus: at sf0.01, <=2 finds 119 pairs / 51 clusters (vs 440 pairs
-# collapsing into one giant component at <=3 — the fixture vocabulary
-# is small, so random docs sit unusually close in simhash space).
-SIMHASH_BANDS = 4
-SIMHASH_MAX_HAMMING = 2
-
 
 def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash band-join near-dup pairs at sketch granularity."""
-    return D.simhash_neardup_pairs(
-        docs_augmented(spark, sf_dir),
-        n_bands=SIMHASH_BANDS,
-        max_hamming=SIMHASH_MAX_HAMMING,
-    )
+    return D.simhash_neardup_pairs(docs_augmented(spark, sf_dir))
 
 
 def _simhash_pairs_cte() -> str:
     """Oracle CTE chain aug → sim → bands → neardup, shared by the
     x15 pair query and the x16 cluster query."""
-    width = 32 // SIMHASH_BANDS
+    width = 32 // D.SIMHASH_BANDS
     return f"""
         aug AS ({DOCS_AUG_CTE}),
-        sim AS ({T.simhash32_sql('text', 'aug')}),
+        sim AS ({T.simhash32_sql('aug')}),
         bands AS (
             SELECT doc_id, simhash, b AS band_idx,
                    substr(simhash, CAST(b * {width} + 1 AS INT), {width}) AS band
-            FROM sim, generate_series(0, {SIMHASH_BANDS - 1}) AS g(b)
+            FROM sim, generate_series(0, {D.SIMHASH_BANDS - 1}) AS g(b)
         ),
         cand AS (
             SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b,
@@ -1614,7 +1581,7 @@ def simhash_neardup_oracle() -> str:
     return f"""
         WITH {_simhash_pairs_cte()}
         SELECT id_a, id_b, hamming FROM neardup
-        WHERE hamming <= {SIMHASH_MAX_HAMMING}
+        WHERE hamming <= {D.SIMHASH_MAX_HAMMING}
     """
 
 
@@ -1626,11 +1593,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator, which never expands doc-level pairs; the pair-based
     composition ``connected_components(simhash_neardup_pairs(...))``
     is row-identical (asserted in tests/test_corpus_ops.py)."""
-    return D.simhash_dedup_clusters(
-        docs_augmented(spark, sf_dir),
-        n_bands=SIMHASH_BANDS,
-        max_hamming=SIMHASH_MAX_HAMMING,
-    )
+    return D.simhash_dedup_clusters(docs_augmented(spark, sf_dir))
 
 
 def dedup_clusters_oracle() -> str:
@@ -1642,10 +1605,10 @@ def dedup_clusters_oracle() -> str:
         WITH RECURSIVE {_simhash_pairs_cte()},
         edges AS MATERIALIZED (
             SELECT id_a AS a, id_b AS b FROM neardup
-            WHERE hamming <= {SIMHASH_MAX_HAMMING}
+            WHERE hamming <= {D.SIMHASH_MAX_HAMMING}
             UNION
             SELECT id_b, id_a FROM neardup
-            WHERE hamming <= {SIMHASH_MAX_HAMMING}
+            WHERE hamming <= {D.SIMHASH_MAX_HAMMING}
         ),
         reach(id, r) AS (
             SELECT a, a FROM edges
@@ -1675,9 +1638,7 @@ def q_cluster_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent. The 10^7 stride exceeds every doc id (fixture
     ids top out at DUP_OFFSET + corpus size ≈ 10^6)."""
     aug = docs_augmented(spark, sf_dir)
-    clusters = D.simhash_dedup_clusters(
-        aug, n_bands=SIMHASH_BANDS, max_hamming=SIMHASH_MAX_HAMMING
-    )
+    clusters = D.simhash_dedup_clusters(aug)
     # Eager checkpoint: ``scored`` feeds BOTH the keeper aggregate and
     # the final join, and the two consumers do not share a reusable
     # exchange — without the cut the whole subtree (cluster exchange +
@@ -1754,9 +1715,7 @@ def q_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local hash projection. The no-leakage property costs nothing
     at assignment time — it is structural, not a post-hoc repair."""
     aug = docs_augmented(spark, sf_dir)
-    clusters = D.simhash_dedup_clusters(
-        aug, n_bands=SIMHASH_BANDS, max_hamming=SIMHASH_MAX_HAMMING
-    )
+    clusters = D.simhash_dedup_clusters(aug)
     anch = aug.select("doc_id").join(clusters, "doc_id", "left").select(
         "doc_id",
         "cluster_id",
@@ -1861,9 +1820,7 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def temperature_mix_oracle() -> str:
-    return T.temperature_mix_sql(
-        src="skew", extra_ctes=f"skew AS ({DOCS_SKEW_CTE}), "
-    )
+    return T.temperature_mix_sql(f"skew AS ({DOCS_SKEW_CTE}), ")
 
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1930,7 +1887,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pii_scrub_oracle() -> str:
-    return f"WITH pii_aug AS ({PII_DOCS_CTE}) " + T.pii_scrub_sql(src="pii_aug")
+    return f"WITH pii_aug AS ({PII_DOCS_CTE}) " + T.pii_scrub_sql()
 
 
 def docs_with_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1990,10 +1947,7 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def boilerplate_oracle() -> str:
-    return T.remove_boilerplate_sql(
-        src="boiler_docs",
-        extra_ctes=f"boiler_docs AS ({BOILER_DOCS_CTE})",
-    )
+    return T.remove_boilerplate_sql(f"boiler_docs AS ({BOILER_DOCS_CTE})")
 
 
 # Every 25th doc plays the "benchmark set"; the training side is the
@@ -2396,10 +2350,6 @@ def zorder_key_oracle() -> str:
 # ---------------------------------------------------------------------------
 # x43 — cross-document duplicated-span coverage
 
-DUP_SPAN_N = 8  # token-level span width; wider than the Jaccard SHINGLE
-# so a hit means a verbatim 8-token run shared across documents, not a
-# common trigram
-
 
 def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicated-span coverage per document: the fraction of a
@@ -2419,16 +2369,16 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     odds at 2^64 are the standard accepted trade).
     """
     d = docs_augmented(spark, sf_dir)
-    sh = D.dup_span_shingle_table(d, n=DUP_SPAN_N)
+    sh = D.dup_span_shingle_table(d)
     return D.dup_span_coverage(sh)
 
 
 def _dup_span_shingles_sql(src: str) -> str:
-    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(DUP_SPAN_N))
+    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(D.DUP_SPAN_N))
     return f"""
         SELECT DISTINCT doc_id, s AS shingle FROM (
             SELECT doc_id, unnest(list_transform(
-                generate_series(1, greatest(len(toks) - {DUP_SPAN_N - 1}, 0)),
+                generate_series(1, greatest(len(toks) - {D.DUP_SPAN_N - 1}, 0)),
                 i -> {gram})) AS s
             FROM (SELECT doc_id, {T.tokens_sql()} AS toks FROM {src})
         )
@@ -2524,11 +2474,11 @@ def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine (see operators.dedup.dup_span_removal for the
     linear keyed-shuffle shape). Runs over the augmented corpus so
     the injected near-dup copies give the remover real work."""
-    return D.dup_span_removal(docs_augmented(spark, sf_dir), n=DUP_SPAN_N)
+    return D.dup_span_removal(docs_augmented(spark, sf_dir))
 
 
 def dup_span_removal_oracle() -> str:
-    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(DUP_SPAN_N))
+    gram = " || ' ' || ".join(f"toks[i + {j}]" for j in range(D.DUP_SPAN_N))
     return f"""
         WITH aug AS ({DOCS_AUG_CTE}),
         tk AS (SELECT doc_id, {T.tokens_sql()} AS toks FROM aug),
@@ -2536,7 +2486,7 @@ def dup_span_removal_oracle() -> str:
             SELECT doc_id, i AS start, {gram} AS shingle FROM (
                 SELECT doc_id, toks,
                        unnest(generate_series(1,
-                           greatest(len(toks) - {DUP_SPAN_N - 1}, 0))) AS i
+                           greatest(len(toks) - {D.DUP_SPAN_N - 1}, 0))) AS i
                 FROM tk
             )
         ),
@@ -2548,7 +2498,7 @@ def dup_span_removal_oracle() -> str:
         covered AS (
             SELECT DISTINCT doc_id, tokpos FROM (
                 SELECT g.doc_id,
-                       unnest(generate_series(g.start, g.start + {DUP_SPAN_N - 1}))
+                       unnest(generate_series(g.start, g.start + {D.DUP_SPAN_N - 1}))
                            AS tokpos
                 FROM grams g JOIN shared s ON g.shingle = s.shingle
                 WHERE g.doc_id <> s.keeper
@@ -2697,9 +2647,6 @@ def shuffle_shards_oracle() -> str:
 # ---------------------------------------------------------------------------
 # x47 — PageRank over the near-dup similarity graph
 
-PAGERANK_ITERS = 5
-PAGERANK_DAMPING = 0.85
-
 
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """x47 — PageRank (5 fixed power iterations, d=0.85) over the
@@ -2714,11 +2661,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage per iteration. The DuckDB twin unrolls the same five
     iterations as CTEs.
     """
-    pairs = D.simhash_neardup_pairs(
-        docs_augmented(spark, sf_dir),
-        n_bands=SIMHASH_BANDS,
-        max_hamming=SIMHASH_MAX_HAMMING,
-    ).select("id_a", "id_b")
+    pairs = D.simhash_neardup_pairs(docs_augmented(spark, sf_dir)).select("id_a", "id_b")
     # symmetrize with a row-local explode, not a union: a union doubles
     # the map partition count, and every setup job downstream pays a
     # task overhead per (mostly empty) partition of this tiny table
@@ -2727,21 +2670,19 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
     )
     edges = pairs.select(F.explode(both).alias("e")).select("e.src", "e.dst")
-    pr = D.pagerank(
-        edges, n_iters=PAGERANK_ITERS, damping=PAGERANK_DAMPING
-    )
+    pr = D.pagerank(edges)
     return pr.select("doc_id", F.round("rank", 6).alias("pagerank"))
 
 
 def pagerank_oracle() -> str:
-    d = PAGERANK_DAMPING
+    d = D.PAGERANK_DAMPING
     its = [f"""
         r0 AS (
             SELECT src AS doc_id,
                    CAST(1.0 AS DOUBLE) / (SELECT n FROM nn) AS rank
             FROM deg
         )"""]
-    for k in range(1, PAGERANK_ITERS + 1):
+    for k in range(1, D.PAGERANK_ITERS + 1):
         its.append(f"""
         r{k} AS (
             SELECT e.dst AS doc_id,
@@ -2756,15 +2697,15 @@ def pagerank_oracle() -> str:
         WITH {_simhash_pairs_cte()},
         pr_edges AS MATERIALIZED (
             SELECT id_a AS src, id_b AS dst FROM neardup
-            WHERE hamming <= {SIMHASH_MAX_HAMMING}
+            WHERE hamming <= {D.SIMHASH_MAX_HAMMING}
             UNION ALL
             SELECT id_b, id_a FROM neardup
-            WHERE hamming <= {SIMHASH_MAX_HAMMING}
+            WHERE hamming <= {D.SIMHASH_MAX_HAMMING}
         ),
         deg AS (SELECT src, count(*) AS deg FROM pr_edges GROUP BY src),
         nn AS (SELECT count(*) AS n FROM deg),
         {",".join(its)}
-        SELECT doc_id, round(rank, 6) AS pagerank FROM r{PAGERANK_ITERS}
+        SELECT doc_id, round(rank, 6) AS pagerank FROM r{D.PAGERANK_ITERS}
     """
 
 
@@ -3295,7 +3236,7 @@ def q_doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         aug.join(F.broadcast(D.candidate_ids(cand)), "doc_id")
     )
     sh = D.shingle_table(cand_docs).persist()
-    scored = D.jaccard_verify(cand, aug, shingles=sh)
+    scored = D.jaccard_verify(cand, sh)
     w = Window.partitionBy("doc_a").orderBy(F.desc("jaccard"), "doc_b")
     out = (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -3865,7 +3806,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         both.join(F.broadcast(D.candidate_ids(cand)), "doc_id")
     )
     sh = D.shingle_table(cand_docs).persist()
-    scored = D.jaccard_verify(cand, both, shingles=sh)
+    scored = D.jaccard_verify(cand, sh)
     out = (
         scored.filter(F.col("jaccard") >= X60_THRESHOLD)
         .select(
@@ -4124,11 +4065,9 @@ def q_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured 5.5 s → ~2.5 s at sf0.1 from this one scope). The small
     final frame is checkpointed eagerly inside the scope so the
     returned plan does not depend on the restored session conf."""
-    pairs = D.simhash_neardup_pairs(
-        docs_augmented(spark, sf_dir),
-        n_bands=SIMHASH_BANDS,
-        max_hamming=SIMHASH_MAX_HAMMING,
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    pairs = D.simhash_neardup_pairs(docs_augmented(spark, sf_dir)).select(
+        "id_a", "id_b"
+    ).localCheckpoint(eager=True)
     with scoped_confs(spark, GRAPH_SHUFFLE):
         return _triangle_counts(pairs).localCheckpoint(eager=True)
 
@@ -4195,7 +4134,7 @@ def triangle_counts_oracle() -> str:
         WITH {_simhash_pairs_cte()},
         e AS (
             SELECT id_a AS a, id_b AS b FROM neardup
-            WHERE hamming <= {SIMHASH_MAX_HAMMING}
+            WHERE hamming <= {D.SIMHASH_MAX_HAMMING}
         ),
         tri AS (
             SELECT e1.a AS u, e1.b AS v, e2.b AS w
@@ -4236,11 +4175,9 @@ def q_clustering_coef(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(√E) under any skew) plus one degree aggregation and one keyed
     join — all graph-sized, run under the same graph-scoped shuffle
     partition count."""
-    pairs = D.simhash_neardup_pairs(
-        docs_augmented(spark, sf_dir),
-        n_bands=SIMHASH_BANDS,
-        max_hamming=SIMHASH_MAX_HAMMING,
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    pairs = D.simhash_neardup_pairs(docs_augmented(spark, sf_dir)).select(
+        "id_a", "id_b"
+    ).localCheckpoint(eager=True)
     with scoped_confs(spark, GRAPH_SHUFFLE):
         tri = _triangle_counts(pairs)
         deg = (
@@ -4270,7 +4207,7 @@ def clustering_coef_oracle() -> str:
         WITH {_simhash_pairs_cte()},
         e AS (
             SELECT id_a AS a, id_b AS b FROM neardup
-            WHERE hamming <= {SIMHASH_MAX_HAMMING}
+            WHERE hamming <= {D.SIMHASH_MAX_HAMMING}
         ),
         tri AS (
             SELECT e1.a AS u, e1.b AS v, e2.b AS w
@@ -4552,7 +4489,7 @@ def embed_quantize_oracle() -> str:
         WITH ex AS MATERIALIZED (
             SELECT vec_id, g.j AS pos,
                    CAST(embedding[g.j] AS DOUBLE) AS x
-            FROM embeddings, generate_series(1, {EMB_DIM_K}) g(j)
+            FROM embeddings, generate_series(1, {S.EMB_DIM}) g(j)
         ),
         stats AS (SELECT pos, min(x) AS lo, max(x) AS hi FROM ex GROUP BY pos),
         per AS (
@@ -4718,7 +4655,7 @@ def _rp_signs_k(k: int) -> list[list[int]]:
             1
             if int(hashlib.md5(f"rp_{i}_{j}".encode()).hexdigest()[0], 16) % 2
             else -1
-            for i in range(EMB_DIM_K)
+            for i in range(S.EMB_DIM)
         ]
         for j in range(k)
     ]
@@ -4766,7 +4703,7 @@ def _rp_proj_sql_k(tbl: str, k: int) -> str:
     def one(j: int) -> str:
         terms = " + ".join(
             f"CAST({tbl}.embedding[{i + 1}] AS DOUBLE) * {signs[j][i]}.0"
-            for i in range(EMB_DIM_K)
+            for i in range(S.EMB_DIM)
         )
         return f"round(({terms}) / {scale!r}, 6)"
 
@@ -4837,7 +4774,7 @@ def random_projection_oracle() -> str:
     d_orig = " + ".join(
         f"(CAST(a.embedding[{i + 1}] AS DOUBLE) - CAST(b.embedding[{i + 1}] AS DOUBLE))"
         f" * (CAST(a.embedding[{i + 1}] AS DOUBLE) - CAST(b.embedding[{i + 1}] AS DOUBLE))"
-        for i in range(EMB_DIM_K)
+        for i in range(S.EMB_DIM)
     )
     d_proj = " + ".join(
         f"(ya[{j + 1}] - yb[{j + 1}]) * (ya[{j + 1}] - yb[{j + 1}])"
@@ -4886,7 +4823,7 @@ def q_projected_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern: it feeds every method join plus the query spine)."""
     corpus = load_table(spark, "embeddings", sf_dir)
     exact = (
-        S.brute_force_topk(corpus, _query_vecs(spark, sf_dir), k=TOP_K)
+        S.brute_force_topk(corpus, _query_vecs(spark, sf_dir))
         .select("query_id", "vec_id")
         .localCheckpoint(eager=True)
     )
@@ -4901,14 +4838,11 @@ def q_projected_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("centroid_id"), "y"
     )
     methods = {
-        "proj_brute": S.brute_force_topk(proj, pq, k=TOP_K, vec_col="y"),
+        "proj_brute": S.brute_force_topk(proj, pq, vec_col="y"),
         "proj_lsh": S.lsh_topk(
-            proj, pq, k=TOP_K, vec_col="y", method="gaussian",
-            n_planes=S.N_PLANES, dim=RP_OUT_DIMS,
+            proj, pq, vec_col="y", n_planes=S.N_PLANES, dim=RP_OUT_DIMS,
         ),
-        "proj_ivf": S.ivf_topk(
-            proj, pq, cent, k=TOP_K, nprobe=IVF_NPROBE, vec_col="y"
-        ),
+        "proj_ivf": S.ivf_topk(proj, pq, cent, vec_col="y"),
     }
     spine = exact.select("query_id").distinct()
 
@@ -4925,7 +4859,7 @@ def q_projected_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(method).alias("method"),
                 "query_id",
                 F.col("n_hits").cast("int").alias("n_hits"),
-                (F.col("n_hits") / F.lit(float(TOP_K))).alias("recall_at_k"),
+                (F.col("n_hits") / F.lit(float(S.TOP_K))).alias("recall_at_k"),
             )
         )
 
@@ -4949,21 +4883,21 @@ def projected_recall_oracle() -> str:
                 SELECT q.query_id, e.vec_id, row_number() OVER (
                     PARTITION BY q.query_id ORDER BY {cos} DESC, e.vec_id) AS rk
                 FROM proj e, qp q
-            ) WHERE rk <= {TOP_K}
+            ) WHERE rk <= {S.TOP_K}
         """,
         "proj_lsh": f"""
             SELECT query_id, vec_id FROM (
                 SELECT q.query_id, e.vec_id, row_number() OVER (
                     PARTITION BY q.query_id ORDER BY {cos} DESC, e.vec_id) AS rk
                 FROM buck e JOIN qbuck q ON e.bucket = q.bucket
-            ) WHERE rk <= {TOP_K}
+            ) WHERE rk <= {S.TOP_K}
         """,
         "proj_ivf": f"""
             SELECT query_id, vec_id FROM (
                 SELECT q.query_id, e.vec_id, row_number() OVER (
                     PARTITION BY q.query_id ORDER BY {cos} DESC, e.vec_id) AS rk
                 FROM assign e JOIN probes q ON e.centroid_id = q.centroid_id
-            ) WHERE rk <= {TOP_K}
+            ) WHERE rk <= {S.TOP_K}
         """,
     }
     hits = ",\n        ".join(
@@ -4978,7 +4912,7 @@ def projected_recall_oracle() -> str:
     selects = "\n        UNION ALL\n        ".join(
         f"""SELECT '{name}' AS method, s.query_id,
                CAST(COALESCE(h.n_hits, 0) AS INT) AS n_hits,
-               COALESCE(h.n_hits, 0) / CAST({TOP_K} AS DOUBLE) AS recall_at_k
+               COALESCE(h.n_hits, 0) / CAST({S.TOP_K} AS DOUBLE) AS recall_at_k
         FROM qs s LEFT JOIN hits_{name} h USING (query_id)"""
         for name in methods
     )
@@ -5012,7 +4946,7 @@ def projected_recall_oracle() -> str:
                        row_number() OVER (PARTITION BY e.query_id
                            ORDER BY {cos_ec} DESC, c.centroid_id) AS rk
                 FROM qp e CROSS JOIN cent c
-            ) WHERE rk <= {IVF_NPROBE}
+            ) WHERE rk <= {S.IVF_NPROBE}
         ),
         {mats},
         qs AS (SELECT DISTINCT query_id FROM exact),
@@ -5093,9 +5027,7 @@ def _lsh_tuning_body(spark: SparkSession, sh_arr: DataFrame, sh: DataFrame) -> D
     # ONCE (docs x k rows, eagerly checkpointed) and derive every band
     # configuration from the materialized rows — without this the four
     # configs would each re-run the dominant-cost k-fold hash pass
-    sigs = D.minhash_signatures(None, shingle_arr=sh_arr).localCheckpoint(
-        eager=True
-    )
+    sigs = D.minhash_signatures(sh_arr).localCheckpoint(eager=True)
 
     # ONE tagged candidate frame for all four configs (r16, guide §1.2):
     # the four band self-joins run inside one job over the materialized
@@ -5136,7 +5068,7 @@ def _lsh_tuning_body(spark: SparkSession, sh_arr: DataFrame, sh: DataFrame) -> D
         .distinct()
     )
     jac = (
-        D.jaccard_verify(need, None, shingles=sh)
+        D.jaccard_verify(need, sh)
         .filter(F.col("jaccard") >= X69_THRESHOLD)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)  # feeds truth AND per-config verify
@@ -5193,13 +5125,13 @@ def _lsh_tuning_body(spark: SparkSession, sh_arr: DataFrame, sh: DataFrame) -> D
     ).localCheckpoint(eager=True)
 
 
-def lsh_tuning_oracle() -> str:
-    thr = X69_THRESHOLD
+def _verified_pairs_cte(pairs: str, out: str) -> str:
+    """Oracle CTE ``out``: the pairs of CTE ``pairs`` whose exact
+    shingle Jaccard (over the ``sh`` and ``sizes`` CTEs) reaches
+    ``X69_THRESHOLD`` — shared by the x69 and x78 oracles."""
     jacc = """CAST(i.n_inter AS DOUBLE)
                    / CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE)"""
-
-    def ver_cte(pairs: str, out: str) -> str:
-        return f"""
+    return f"""
         {out} AS (
             SELECT p.doc_a, p.doc_b
             FROM {pairs} p
@@ -5212,9 +5144,11 @@ def lsh_tuning_oracle() -> str:
             ) i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
             JOIN sizes sa ON sa.doc_id = p.doc_a
             JOIN sizes sb ON sb.doc_id = p.doc_b
-            WHERE {jacc} >= {thr}
+            WHERE {jacc} >= {X69_THRESHOLD}
         )"""
 
+
+def lsh_tuning_oracle() -> str:
     blocks, selects = [], []
     for bs in X69_BAND_SIZES:
         nb = D.N_MINHASH // bs
@@ -5233,7 +5167,7 @@ def lsh_tuning_oracle() -> str:
         samp_{bs} AS (
             SELECT * FROM pairs_{bs}
             WHERE (doc_a + doc_b) % {X69_SAMPLE_MOD} = 0
-        ),{ver_cte(f"samp_{bs}", f"ver_{bs}")}""")
+        ),{_verified_pairs_cte(f"samp_{bs}", f"ver_{bs}")}""")
         selects.append(f"""
         SELECT {bs} AS band_size, {nb} AS n_bands,
                (SELECT count(*) FROM pairs_{bs}) AS n_candidates,
@@ -5269,7 +5203,7 @@ def lsh_tuning_oracle() -> str:
             SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
             FROM present a JOIN present b ON b.doc_id = a.doc_id + {DUP_OFFSET}
             WHERE a.doc_id % {DOC_DUP_MOD} = 0 AND a.doc_id < {DUP_OFFSET}
-        ),{ver_cte("inj", "truth")},{body}
+        ),{_verified_pairs_cte("inj", "truth")},{body}
         {union}
     """
 
@@ -5328,15 +5262,11 @@ def q_neardup_method_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_a",
             )
         )
-        sigs = D.minhash_signatures(None, shingle_arr=sh_arr)
+        sigs = D.minhash_signatures(sh_arr)
         pairs_mh = D.lsh_candidate_pairs(
             sigs, band_size=X78_MINHASH_BAND_SIZE
         )
-        pairs_sh = D.simhash_neardup_pairs(
-            aug,
-            n_bands=SIMHASH_BANDS,
-            max_hamming=SIMHASH_MAX_HAMMING,
-        ).select(
+        pairs_sh = D.simhash_neardup_pairs(aug).select(
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
         )
         # ONE tagged candidate frame for both methods (r16, guide §1.2):
@@ -5372,7 +5302,7 @@ def q_neardup_method_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         jac = (
-            D.jaccard_verify(need, None, shingles=sh)
+            D.jaccard_verify(need, sh)
             .filter(F.col("jaccard") >= X69_THRESHOLD)
             .select("doc_a", "doc_b")
             .localCheckpoint(eager=True)  # feeds truth AND verify counts
@@ -5435,28 +5365,8 @@ def q_neardup_method_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def neardup_method_table_oracle() -> str:
-    thr = X69_THRESHOLD
     bs = X78_MINHASH_BAND_SIZE
-    width = 32 // SIMHASH_BANDS
-    jacc = """CAST(i.n_inter AS DOUBLE)
-                   / CAST(sa.n_sh + sb.n_sh - i.n_inter AS DOUBLE)"""
-
-    def ver_cte(pairs: str, out: str) -> str:
-        return f"""
-        {out} AS (
-            SELECT p.doc_a, p.doc_b
-            FROM {pairs} p
-            JOIN (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       count(*) AS n_inter
-                FROM sh a JOIN sh b ON b.shingle = a.shingle
-                JOIN {pairs} q ON q.doc_a = a.doc_id AND q.doc_b = b.doc_id
-                GROUP BY a.doc_id, b.doc_id
-            ) i ON i.doc_a = p.doc_a AND i.doc_b = p.doc_b
-            JOIN sizes sa ON sa.doc_id = p.doc_a
-            JOIN sizes sb ON sb.doc_id = p.doc_b
-            WHERE {jacc} >= {thr}
-        )"""
+    width = 32 // D.SIMHASH_BANDS
 
     def method_select(method: str, pairs: str, samp: str, ver: str) -> str:
         return f"""
@@ -5492,7 +5402,7 @@ def neardup_method_table_oracle() -> str:
             SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
             FROM present a JOIN present b ON b.doc_id = a.doc_id + {DUP_OFFSET}
             WHERE a.doc_id % {DOC_DUP_MOD} = 0 AND a.doc_id < {DUP_OFFSET}
-        ),{ver_cte("inj", "truth")},
+        ),{_verified_pairs_cte("inj", "truth")},
         bands_mh AS (
             SELECT doc_id, CAST(seed // {bs} AS INT) AS band,
                    md5(string_agg(mh, ',' ORDER BY seed)) AS band_hash
@@ -5507,12 +5417,12 @@ def neardup_method_table_oracle() -> str:
         samp_mh AS (
             SELECT * FROM pairs_mh
             WHERE (doc_a + doc_b) % {X69_SAMPLE_MOD} = 0
-        ),{ver_cte("samp_mh", "ver_mh")},
-        sim AS ({T.simhash32_sql('text', 'aug')}),
+        ),{_verified_pairs_cte("samp_mh", "ver_mh")},
+        sim AS ({T.simhash32_sql('aug')}),
         sbands AS (
             SELECT doc_id, simhash, b AS band_idx,
                    substr(simhash, CAST(b * {width} + 1 AS INT), {width}) AS band
-            FROM sim, generate_series(0, {SIMHASH_BANDS - 1}) AS g(b)
+            FROM sim, generate_series(0, {D.SIMHASH_BANDS - 1}) AS g(b)
         ),
         scand AS (
             SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b,
@@ -5526,12 +5436,12 @@ def neardup_method_table_oracle() -> str:
                         i -> CASE WHEN substr(sh_a, CAST(i AS INT), 1)
                                     <> substr(sh_b, CAST(i AS INT), 1)
                              THEN 1 ELSE 0 END)) AS INT)
-                  <= {SIMHASH_MAX_HAMMING}
+                  <= {D.SIMHASH_MAX_HAMMING}
         ),
         samp_sh AS (
             SELECT * FROM pairs_sh
             WHERE (doc_a + doc_b) % {X69_SAMPLE_MOD} = 0
-        ),{ver_cte("samp_sh", "ver_sh")}
+        ),{_verified_pairs_cte("samp_sh", "ver_sh")}
         {method_select("minhash_b4_r2", "pairs_mh", "samp_mh", "ver_mh")}
         UNION ALL
         {method_select("simhash_b4_h2", "pairs_sh", "samp_sh", "ver_sh")}
@@ -5542,7 +5452,7 @@ def neardup_method_table_oracle() -> str:
 # x70 — product quantization (PQ) codes + ADC search with measured recall
 
 PQ_M = 8            # subquantizers: 64 dims → 8 subvectors of 8 dims
-PQ_SUBDIM = EMB_DIM_K // PQ_M
+PQ_SUBDIM = S.EMB_DIM // PQ_M
 
 
 def _l2_fold(a: str, b: str) -> Column:
@@ -5659,7 +5569,7 @@ def _l2_exact_topk(e: DataFrame, checkpoint: bool = True) -> DataFrame:
     w_ex = Window.partitionBy("query_id").orderBy("d", "vec_id")
     out = (
         scored.withColumn("rk", F.row_number().over(w_ex))
-        .filter(F.col("rk") <= TOP_K)
+        .filter(F.col("rk") <= S.TOP_K)
         .select("query_id", "vec_id")
     )
     return out.localCheckpoint(eager=True) if checkpoint else out
@@ -5696,7 +5606,7 @@ def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_rank = Window.partitionBy("query_id").orderBy("adist", "vec_id")
     approx = (
         adc.withColumn("rk", F.row_number().over(w_rank))
-        .filter(F.col("rk") <= TOP_K)
+        .filter(F.col("rk") <= S.TOP_K)
         .select("query_id", "vec_id")
     )
     # exact L2 ground truth (the metric ADC approximates)
@@ -5714,7 +5624,7 @@ def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("n_hits").cast("int").alias("n_hits"),
-            (F.col("n_hits") / F.lit(float(TOP_K))).alias("recall_at_k"),
+            (F.col("n_hits") / F.lit(float(S.TOP_K))).alias("recall_at_k"),
         )
     )
 
@@ -5736,7 +5646,7 @@ def _l2_exact_sql() -> str:
     full = " + ".join(
         f"(CAST(a.embedding[{i + 1}] AS DOUBLE) - CAST(b.embedding[{i + 1}] AS DOUBLE))"
         f" * (CAST(a.embedding[{i + 1}] AS DOUBLE) - CAST(b.embedding[{i + 1}] AS DOUBLE))"
-        for i in range(EMB_DIM_K)
+        for i in range(S.EMB_DIM)
     )
     return f"""
             SELECT query_id, vec_id FROM (
@@ -5745,7 +5655,7 @@ def _l2_exact_sql() -> str:
                            ORDER BY {full}, a.vec_id) AS rk
                 FROM embeddings a, embeddings b
                 WHERE b.vec_id < {N_QUERY_VECS}
-            ) WHERE rk <= {TOP_K}
+            ) WHERE rk <= {S.TOP_K}
     """
 
 
@@ -5812,7 +5722,7 @@ def pq_adc_recall_oracle() -> str:
                        row_number() OVER (PARTITION BY query_id
                            ORDER BY adist, vec_id) AS rk
                 FROM adc
-            ) WHERE rk <= {TOP_K}
+            ) WHERE rk <= {S.TOP_K}
         ),
         exact AS ({_l2_exact_sql()}),
         hits AS (
@@ -5823,7 +5733,7 @@ def pq_adc_recall_oracle() -> str:
         )
         SELECT q.query_id,
                CAST(COALESCE(h.n_hits, 0) AS INT) AS n_hits,
-               COALESCE(h.n_hits, 0) / CAST({TOP_K} AS DOUBLE) AS recall_at_k
+               COALESCE(h.n_hits, 0) / CAST({S.TOP_K} AS DOUBLE) AS recall_at_k
         FROM (SELECT DISTINCT query_id FROM exact) q
         LEFT JOIN hits h USING (query_id)
     """
@@ -5899,7 +5809,7 @@ def centroid_matrix_oracle() -> str:
     return f"""
         WITH m AS (
             SELECT label, d.pos, avg(CAST(embedding[d.pos] AS DOUBLE)) AS mv
-            FROM embeddings, (SELECT unnest(generate_series(1, {EMB_DIM_K}))
+            FROM embeddings, (SELECT unnest(generate_series(1, {S.EMB_DIM}))
                               AS pos) d
             GROUP BY label, d.pos
         ),
@@ -6092,11 +6002,11 @@ def filter_funnel_oracle() -> str:
 
 RP_SWEEP_DIMS = 48          # one 64→48 projection; 16/32 are PREFIX slices
 X75_BYTES = {               # storage bytes per vector per representation
-    "raw_f32": EMB_DIM_K * 4,       # 256 — the uncompressed anchor
+    "raw_f32": S.EMB_DIM * 4,       # 256 — the uncompressed anchor
     "jl48": RP_SWEEP_DIMS * 4,      # 192 — 1.33× cut
     "jl32": 32 * 4,                 # 128 — 2× cut
     "jl16": RP_OUT_DIMS * 4,        # 64  — x65/x66's 4× cut
-    "int8": EMB_DIM_K * 1,          # 64  — x63's scalar quantization
+    "int8": S.EMB_DIM * 1,          # 64  — x63's scalar quantization
     "pq8": PQ_M * 1,                # 8   — x70's product quantization
 }
 
@@ -6110,7 +6020,7 @@ def _x75_int8_recon_expr(emb: Column) -> Column:
     is a deterministic sequential fold (a shuffled groupBy SUM's
     addition order is partition-dependent — fine for x63's rounded
     error report, not for a rank cutoff)."""
-    idx = F.sequence(F.lit(0), F.lit(EMB_DIM_K - 1))
+    idx = F.sequence(F.lit(0), F.lit(S.EMB_DIM - 1))
 
     def xr(i):
         x = F.element_at(emb, i + 1)
@@ -6192,7 +6102,7 @@ def q_compression_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         w = Window.partitionBy("query_id").orderBy("d", "vec_id")
         return (
             scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= TOP_K)
+            .filter(F.col("rk") <= S.TOP_K)
             .select("query_id", "vec_id")
         )
 
@@ -6203,14 +6113,14 @@ def q_compression_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             "array("
             + ",".join(
-                f"min(cast(embedding[{i}] as double))" for i in range(EMB_DIM_K)
+                f"min(cast(embedding[{i}] as double))" for i in range(S.EMB_DIM)
             )
             + ")"
         ).alias("lo"),
         F.expr(
             "array("
             + ",".join(
-                f"max(cast(embedding[{i}] as double))" for i in range(EMB_DIM_K)
+                f"max(cast(embedding[{i}] as double))" for i in range(S.EMB_DIM)
             )
             + ")"
         ).alias("hi"),
@@ -6227,7 +6137,7 @@ def q_compression_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_i8 = Window.partitionBy("query_id").orderBy("d", "vec_id")
     int8_approx = (
         int8_scored.withColumn("rk", F.row_number().over(w_i8))
-        .filter(F.col("rk") <= TOP_K)
+        .filter(F.col("rk") <= S.TOP_K)
         .select("query_id", "vec_id")
     )
 
@@ -6236,7 +6146,7 @@ def q_compression_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_pq = Window.partitionBy("query_id").orderBy("adist", "vec_id")
     pq_approx = (
         adc.withColumn("rk", F.row_number().over(w_pq))
-        .filter(F.col("rk") <= TOP_K)
+        .filter(F.col("rk") <= S.TOP_K)
         .select("query_id", "vec_id")
     )
 
@@ -6263,7 +6173,7 @@ def q_compression_table(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(X75_BYTES[name]).cast("int").alias("bytes_per_vec"),
                 "query_id",
                 F.col("n_hits").cast("int").alias("n_hits"),
-                (F.col("n_hits") / F.lit(float(TOP_K))).alias("recall_at_k"),
+                (F.col("n_hits") / F.lit(float(S.TOP_K))).alias("recall_at_k"),
             )
         )
 
@@ -6294,22 +6204,22 @@ def compression_table_oracle() -> str:
     int8_l2 = " + ".join(
         f"(r.xr[{i + 1}] - CAST(q.embedding[{i + 1}] AS DOUBLE))"
         f" * (r.xr[{i + 1}] - CAST(q.embedding[{i + 1}] AS DOUBLE))"
-        for i in range(EMB_DIM_K)
+        for i in range(S.EMB_DIM)
     )
     lo_arr = ", ".join(
-        f"min(CAST(embedding[{i + 1}] AS DOUBLE))" for i in range(EMB_DIM_K)
+        f"min(CAST(embedding[{i + 1}] AS DOUBLE))" for i in range(S.EMB_DIM)
     )
     hi_arr = ", ".join(
-        f"max(CAST(embedding[{i + 1}] AS DOUBLE))" for i in range(EMB_DIM_K)
+        f"max(CAST(embedding[{i + 1}] AS DOUBLE))" for i in range(S.EMB_DIM)
     )
-    xr_arr = ", ".join(xr_sql(i) for i in range(EMB_DIM_K))
+    xr_arr = ", ".join(xr_sql(i) for i in range(S.EMB_DIM))
     jl_methods = ",\n        ".join(
         f"""m_jl{k} AS MATERIALIZED (
             SELECT query_id, vec_id FROM (
                 SELECT q.query_id, e.vec_id, row_number() OVER (
                     PARTITION BY q.query_id ORDER BY {jl_l2(k)}, e.vec_id) AS rk
                 FROM proj e, qproj q
-            ) WHERE rk <= {TOP_K}
+            ) WHERE rk <= {S.TOP_K}
         )"""
         for k in (48, 32, RP_OUT_DIMS)
     )
@@ -6334,7 +6244,7 @@ def compression_table_oracle() -> str:
         f"""SELECT '{name}' AS method,
                CAST({X75_BYTES[name]} AS INT) AS bytes_per_vec, s.query_id,
                CAST(COALESCE(h.n_hits, 0) AS INT) AS n_hits,
-               COALESCE(h.n_hits, 0) / CAST({TOP_K} AS DOUBLE) AS recall_at_k
+               COALESCE(h.n_hits, 0) / CAST({S.TOP_K} AS DOUBLE) AS recall_at_k
         FROM qs s LEFT JOIN hits_{name} h USING (query_id)"""
         for name, _ in named
     )
@@ -6359,7 +6269,7 @@ def compression_table_oracle() -> str:
                     PARTITION BY q.vec_id ORDER BY {int8_l2}, r.vec_id) AS rk
                 FROM recon r, embeddings q
                 WHERE q.vec_id < {N_QUERY_VECS}
-            ) WHERE rk <= {TOP_K}
+            ) WHERE rk <= {S.TOP_K}
         ),
         m_pq8 AS MATERIALIZED (
             SELECT query_id, vec_id FROM (
@@ -6367,7 +6277,7 @@ def compression_table_oracle() -> str:
                        row_number() OVER (PARTITION BY query_id
                            ORDER BY adist, vec_id) AS rk
                 FROM adc
-            ) WHERE rk <= {TOP_K}
+            ) WHERE rk <= {S.TOP_K}
         ),
         {hits}
         {selects}
@@ -6411,7 +6321,7 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _query_vecs(spark, sf_dir)
     cents = _centroids(spark, sf_dir)
     exact = (
-        S.brute_force_topk(corpus, qv, k=TOP_K)
+        S.brute_force_topk(corpus, qv)
         .select("query_id", "vec_id")
         .localCheckpoint(eager=True)
     )
@@ -6452,7 +6362,7 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         topk = (
             sub.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") <= TOP_K)
+            .filter(F.col("__rk") <= S.TOP_K)
             .select("query_id", "vec_id")
         )
         hits = (
@@ -6472,7 +6382,7 @@ def q_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "query_id",
                 F.col("n_candidates").cast("int").alias("n_candidates"),
                 F.col("n_hits").cast("int").alias("n_hits"),
-                (F.col("n_hits") / F.lit(float(TOP_K))).alias("recall_at_k"),
+                (F.col("n_hits") / F.lit(float(S.TOP_K))).alias("recall_at_k"),
             )
         )
         out = part if out is None else out.unionByName(part)
@@ -6492,7 +6402,7 @@ def ivf_nprobe_sweep_oracle() -> str:
                 SELECT query_id, vec_id, row_number() OVER (
                     PARTITION BY query_id ORDER BY cosine DESC, vec_id) AS rk
                 FROM cand WHERE admit_rank <= {np_}
-            ) WHERE rk <= {TOP_K}
+            ) WHERE rk <= {S.TOP_K}
         ),
         hits_{np_} AS (
             SELECT e.query_id, count(*) AS n_hits
@@ -6510,7 +6420,7 @@ def ivf_nprobe_sweep_oracle() -> str:
         f"""SELECT CAST({np_} AS INT) AS nprobe, s.query_id,
                CAST(COALESCE(nc.n_candidates, 0) AS INT) AS n_candidates,
                CAST(COALESCE(h.n_hits, 0) AS INT) AS n_hits,
-               COALESCE(h.n_hits, 0) / CAST({TOP_K} AS DOUBLE) AS recall_at_k
+               COALESCE(h.n_hits, 0) / CAST({S.TOP_K} AS DOUBLE) AS recall_at_k
         FROM qs s
         LEFT JOIN hits_{np_} h USING (query_id)
         LEFT JOIN nc_{np_} nc USING (query_id)"""
@@ -6559,7 +6469,7 @@ def ivf_nprobe_sweep_oracle() -> str:
 # verbatim into both engines' expressions, so normalization cannot
 # introduce a cross-engine float divergence (gains are TOP_K+1-rank).
 _X79_IDCG = sum(
-    (TOP_K + 1 - i) / math.log2(i + 1) for i in range(1, TOP_K + 1)
+    (S.TOP_K + 1 - i) / math.log2(i + 1) for i in range(1, S.TOP_K + 1)
 )
 
 
@@ -6570,7 +6480,7 @@ def q_ann_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     index can hold recall 1.0 while serving the best hit last, which
     is a real failure when the consumer takes top-1 (the dedup keeper,
     the RAG context slot #1). NDCG grades the approximate ORDERING
-    with exact-rank gains (TOP_K+1−rank, zero for non-members); MRR is
+    with exact-rank gains (S.TOP_K+1−rank, zero for non-members); MRR is
     1/position of the exact #1 hit (0 if the method missed it
     entirely). Together with x30's recall and x75/x77's cost columns,
     the ANN tier now publishes set quality, order quality, AND scan
@@ -6587,23 +6497,23 @@ def q_ann_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = load_table(spark, "embeddings", sf_dir)
     qv = _query_vecs(spark, sf_dir)
     exact = (
-        S.brute_force_topk(corpus, qv, k=TOP_K)
+        S.brute_force_topk(corpus, qv)
         .select("query_id", "vec_id", F.col("rank").alias("erank"))
         .localCheckpoint(eager=True)
     )
-    lsh = S.lsh_topk(
-        corpus, qv, k=TOP_K, method="gaussian"
-    ).select("query_id", "vec_id", F.col("rank").alias("arank"))
-    ivf = S.ivf_topk(
-        corpus, qv, _centroids(spark, sf_dir), k=TOP_K, nprobe=IVF_NPROBE
-    ).select("query_id", "vec_id", F.col("rank").alias("arank"))
+    lsh = S.lsh_topk(corpus, qv).select(
+        "query_id", "vec_id", F.col("rank").alias("arank")
+    )
+    ivf = S.ivf_topk(corpus, qv, _centroids(spark, sf_dir)).select(
+        "query_id", "vec_id", F.col("rank").alias("arank")
+    )
     spine = exact.select("query_id").distinct()
 
     def one(method: str, approx: DataFrame) -> DataFrame:
         j = approx.join(exact, ["query_id", "vec_id"], "left")
         gain = F.when(
             F.col("erank").isNotNull(),
-            (F.lit(TOP_K + 1) - F.col("erank")).cast("double"),
+            (F.lit(S.TOP_K + 1) - F.col("erank")).cast("double"),
         ).otherwise(F.lit(0.0))
         per = j.groupBy("query_id").agg(
             F.sum(gain / F.log2(F.col("arank") + 1)).alias("dcg"),
@@ -6638,7 +6548,7 @@ def ann_ranking_quality_oracle() -> str:
         f"""per_{name} AS (
             SELECT a.query_id,
                    sum(CASE WHEN e.rank IS NOT NULL
-                            THEN ({TOP_K} + 1 - e.rank) / log2(a.rank + 1)
+                            THEN ({S.TOP_K} + 1 - e.rank) / log2(a.rank + 1)
                             ELSE 0.0 END) AS dcg,
                    max(CASE WHEN e.rank = 1 THEN 1.0 / a.rank
                             ELSE 0.0 END) AS mrr
@@ -6674,7 +6584,6 @@ def ann_ranking_quality_oracle() -> str:
 # x80 — MinHash sketch-size vs Jaccard-estimate-error trade-off
 
 X80_KS = (4, 8, 16, 32)
-_X80_MAX_K = 32
 
 
 def q_minhash_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6714,7 +6623,7 @@ def q_minhash_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file corpus scan's 2 partitions — profiled at 6.0 s on 2
     # tasks while 30 cores idled. Row-local hashing; results identical.
     sigs = D.sliced_minhash_signatures(
-        D.ensure_parallelism(aug), n_hashes=_X80_MAX_K
+        D.ensure_parallelism(aug)
     ).localCheckpoint(eager=False)  # feeds banding AND the match counts
     pairs = D.lsh_candidate_pairs(
         sigs.filter(F.col("seed") < D.N_MINHASH)
@@ -6813,7 +6722,6 @@ def q_minhash_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_size_sweep_oracle() -> str:
-    k_max = _X80_MAX_K
     selects = "\n        UNION ALL\n        ".join(
         f"""SELECT {k} AS n_hashes,
                count(*) AS n_pairs,
@@ -6837,7 +6745,7 @@ def minhash_size_sweep_oracle() -> str:
         WITH aug AS ({DOCS_AUG_CTE}),
         sh AS MATERIALIZED ({_shingles_sql("aug")}),
         mh AS MATERIALIZED (
-            {D.sliced_minhash_sql("sh", n_hashes=k_max)}
+            {D.sliced_minhash_sql()}
         ),
         bands AS (
             SELECT doc_id, CAST(seed // {D.BAND_SIZE} AS INT) AS band,

@@ -114,26 +114,26 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    n_buckets: int = 32,
-    path: str | None = None,
-) -> None:
-    """Persist a table hash-bucketed (and sorted) on its join key.
+N_BUCKETS = 8  # buckets per table written by write_bucketed
+
+
+def write_bucketed(df: DataFrame, table: str, key: str, path: str) -> None:
+    """Persist a table hash-bucketed (``N_BUCKETS``) and sorted on its
+    join key.
 
     Two tables bucketed on the same key with the same bucket count join
     WITHOUT an Exchange — the co-located join the reference's MariaDB
     side can't express and the single biggest shuffle eliminator for a
     repeatedly-joined 100 TB fact table (asserted shuffle-free in
-    tests). ``path`` makes it an external table (files land there, only
-    metadata in the session catalog).
+    tests). The table is external: files land under ``path``, only
+    metadata in the session catalog.
     """
-    w = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key).sortBy(key)
-    if path is not None:
-        w = w.option("path", path)
-    w.saveAsTable(table)
+    (
+        df.write.mode("overwrite").format("parquet")
+        .bucketBy(N_BUCKETS, key).sortBy(key)
+        .option("path", path)
+        .saveAsTable(table)
+    )
 
 
 Z_BITS = 16  # bits per dimension in the interleaved key

@@ -209,13 +209,10 @@ def _load_evolving(
 
 
 def load_csv_evolving(
-    spark: SparkSession,
-    drops: list[tuple[str, StructType]],
-    *,
-    header: bool = True,
+    spark: SparkSession, drops: list[tuple[str, StructType]]
 ) -> tuple[DataFrame, DataFrame]:
-    """Schema-evolution-TOLERANT bulk load over N drops of the same
-    feed, each with its own declared per-drop schema (the
+    """Schema-evolution-TOLERANT bulk load over N header-less CSV drops
+    of the same feed, each with its own declared per-drop schema (the
     mergeSchema-style contract a multi-producer drop folder needs,
     r11 verdict #4):
 
@@ -237,7 +234,7 @@ def load_csv_evolving(
     the ``_split`` cache), casts are columnar metadata ops, the union
     is a no-shuffle concatenation. Release the parse caches with
     :func:`release_split` once materialized."""
-    return _load_evolving(load_csv, spark, drops, header=header)
+    return _load_evolving(load_csv, spark, drops, header=False)
 
 
 def load_jsonl_evolving(

@@ -38,8 +38,9 @@ from financial_market_data_analysis_spark.functions.core import scoped_confs
 from financial_market_data_analysis_spark.operators.joins import asof_band_join
 
 WATERMARK = "5 minutes"  # spark_consumer.py:114 etc.
-BAND_SECONDS = 180  # 3-minute join tolerance, spark_consumer.py:440-442
 EPOCH_COL = "epoch_id"  # the per-epoch partition column every epoch sink writes
+KEY_COLS = ("symbol",)  # the series key of the stateful indicator operators
+QUARANTINE_ALERT = 0.3  # batch quarantine fraction that flags contract drift
 
 
 def watermarked(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -65,7 +66,6 @@ def join_feeds(deep: DataFrame, others: dict[str, DataFrame]) -> DataFrame:
             feed.withColumnRenamed("ts", feed_ts),
             "deep_ts",
             feed_ts,
-            band_seconds=BAND_SECONDS,
             ts_unit="ts",
         ).drop(feed_ts)
     return out
@@ -173,8 +173,7 @@ def quarantining_ingest_sink(
     clean_dir: str,
     quarantine_dir: str,
     checkpoint_dir: str,
-    drift_dir: str | None = None,
-    quarantine_alert: float = 0.5,
+    drift_dir: str,
 ):
     """Streaming twin of ``sources.files``' quarantining loaders: a
     file stream parsed under a PERMISSIVE schema (with the
@@ -192,7 +191,7 @@ def quarantining_ingest_sink(
     evaluated on the materialized rows — clean + quarantined == parsed,
     structurally.
 
-    ``drift_dir`` (r11 verdict #5) arms the per-batch CONTRACT check
+    ``drift_dir`` (r11 verdict #5) takes the per-batch CONTRACT check
     s10's batch-side report runs between drops: a FileStreamSource
     parses every batch under the frozen declared schema, so a
     producer-side contract change mid-stream can never surface as a
@@ -203,7 +202,7 @@ def quarantining_ingest_sink(
     same epoch-idempotent writer; ``drifted`` fires when the clean
     side's null fraction reaches 1.0 (fully null,
     while rows exist) or the batch's quarantine fraction reaches
-    ``quarantine_alert``. One extra partial-aggregatable pass over the
+    ``QUARANTINE_ALERT``. One extra partial-aggregatable pass over the
     already-materialized batch; per-column rows via ``inline`` over a
     single array-of-structs (the s10 shape — no per-column
     re-planning)."""
@@ -211,7 +210,7 @@ def quarantining_ingest_sink(
 
     write_clean = epoch_idempotent_writer(clean_dir)
     write_quar = epoch_idempotent_writer(quarantine_dir)
-    write_drift = epoch_idempotent_writer(drift_dir) if drift_dir else None
+    write_drift = epoch_idempotent_writer(drift_dir)
 
     # Every Column below is STATIC across batches (the micro-batch frame
     # always carries the stream's frozen schema), so build the whole
@@ -251,7 +250,7 @@ def quarantining_ingest_sink(
                         null_frac >= F.lit(1.0),
                         F.lit(True),  # all rows quarantined
                     )
-                    | (quar_frac >= F.lit(quarantine_alert))
+                    | (quar_frac >= F.lit(QUARANTINE_ALERT))
                 ).alias("drifted"),
             )
         )
@@ -267,8 +266,7 @@ def quarantining_ingest_sink(
         quar = batch.filter(quar_flt)
         write_clean(clean, epoch_id)
         write_quar(quar, epoch_id)
-        if write_drift is not None:
-            write_drift(batch.agg(*agg_cols).select(drift_proj), epoch_id)
+        write_drift(batch.agg(*agg_cols).select(drift_proj), epoch_id)
 
     return (
         stream.writeStream.foreachBatch(_write)
@@ -283,7 +281,7 @@ def evolving_ingest_sink(
     clean_dir: str,
     quarantine_dir: str,
     checkpoint_dir: str,
-    accounting_dir: str | None = None,
+    accounting_dir: str,
 ):
     """Streaming twin of ``sources.files.load_csv_evolving`` (r12
     verdict #5): schema-evolution-TOLERANT ingest. The frozen-schema
@@ -327,9 +325,7 @@ def evolving_ingest_sink(
     target = evolved_schema([schemas[v] for v in versions])
     write_clean = epoch_idempotent_writer(clean_dir)
     write_quar = epoch_idempotent_writer(quarantine_dir)
-    write_acct = (
-        epoch_idempotent_writer(accounting_dir) if accounting_dir else None
-    )
+    write_acct = epoch_idempotent_writer(accounting_dir)
     # driver-side cast metadata per version (static across batches)
     cast_meta = {}
     for v in versions:
@@ -451,11 +447,9 @@ def evolving_ingest_sink(
         quar = union.filter(quar_flt).select(*quar_cols)
         write_clean(clean, epoch_id)
         write_quar(quar, epoch_id)
-        if write_acct is not None:
-            acct = (
-                union.groupBy(acct_key).agg(*acct_aggs).select(*acct_cols)
-            )
-            write_acct(acct, epoch_id)
+        write_acct(
+            union.groupBy(acct_key).agg(*acct_aggs).select(*acct_cols), epoch_id
+        )
 
     return (
         stream.writeStream.foreachBatch(_write)
@@ -647,11 +641,7 @@ def incremental_indicators(
     return _hook
 
 
-def stateful_indicator_suite(
-    stream: DataFrame,
-    key_cols: Sequence[str] = ("symbol",),
-    ts_col: str = "ts",
-) -> DataFrame:
+def stateful_indicator_suite(stream: DataFrame) -> DataFrame:
     """T9 option (b), a true single-pass streaming indicator suite: one
     ``applyInPandasWithState`` pass emits every
     indicator the batch ``indicator_suite`` computes — vol_MA6/20,
@@ -697,10 +687,10 @@ def stateful_indicator_suite(
         "vol_MA6", "vol_MA20", "price_MA20",
         "upper_BB_dist", "lower_BB_dist", "stoch", "price_change", "ATR",
     ]
-    key_fields = [stream.schema[k] for k in key_cols]
+    key_fields = [stream.schema[k] for k in KEY_COLS]
     out_schema = StructType(
         key_fields
-        + [stream.schema[ts_col]]
+        + [stream.schema["ts"]]
         + [StructField(c, DoubleType()) for c in ("close", "high", "low", "volume")]
         + [StructField(c, DoubleType()) for c in ind_cols]
         + [StructField(c, IntegerType()) for c in ("up1", "down1", "up2", "down2")]
@@ -714,8 +704,8 @@ def stateful_indicator_suite(
         ]
     )
     col_order = (
-        list(key_cols)
-        + [ts_col, "close", "high", "low", "volume"]
+        list(KEY_COLS)
+        + ["ts", "close", "high", "low", "volume"]
         + ind_cols
         + ["up1", "down1", "up2", "down2"]
     )
@@ -725,8 +715,8 @@ def stateful_indicator_suite(
             tail, pending = [list(r) for r in state.get[0]], [list(r) for r in state.get[1]]
         else:
             tail, pending = [], []
-        rows = pd.concat(list(pdf_iter)).sort_values(ts_col)
-        ts_us = (rows[ts_col].astype("datetime64[us]").astype("int64")).tolist()
+        rows = pd.concat(list(pdf_iter)).sort_values("ts")
+        ts_us = (rows["ts"].astype("datetime64[us]").astype("int64")).tolist()
         closes = [float(v) for v in rows["close"]]
         highs = [float(v) for v in rows["high"]]
         lows = [float(v) for v in rows["low"]]
@@ -777,11 +767,11 @@ def stateful_indicator_suite(
         state.update((tail[-MAX_TAIL:], pending))
         out = pd.DataFrame(
             emitted,
-            columns=[ts_col, "close", "high", "low", "volume"]
+            columns=["ts", "close", "high", "low", "volume"]
             + ind_cols
             + ["up1", "down1", "up2", "down2"],
         )
-        out[ts_col] = pd.to_datetime(out[ts_col], unit="us")
+        out["ts"] = pd.to_datetime(out["ts"], unit="us")
         for c in ("up1", "down1", "up2", "down2"):
             out[c] = out[c].astype("int32")
         # None folds to NaN in float columns; emit true NULLs (object
@@ -789,20 +779,16 @@ def stateful_indicator_suite(
         # suite's NULL stoch/price_change exactly, not NaN-vs-NULL
         for c in ("stoch", "price_change"):
             out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        for i, k in enumerate(key_cols):
+        for i, k in enumerate(KEY_COLS):
             out[k] = key[i]
         yield out[col_order]
 
-    return stream.groupBy(*[F.col(k) for k in key_cols]).applyInPandasWithState(
+    return stream.groupBy(*[F.col(k) for k in KEY_COLS]).applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 
-def stateful_momentum_suite(
-    stream: DataFrame,
-    key_cols: Sequence[str] = ("symbol",),
-    ts_col: str = "ts",
-) -> DataFrame:
+def stateful_momentum_suite(stream: DataFrame) -> DataFrame:
     """The W15-W17 momentum family as ONE stateful streaming pass —
     the t9 design applied to the round's indicators: RSI (Cutler's
     simple-average form), fixed-point OBV, and MACD(12,26,9) from
@@ -876,10 +862,10 @@ def stateful_momentum_suite(
         x = v * 1_000_000.0
         return int(math.copysign(math.floor(abs(x) + 0.5), x))
 
-    key_fields = [stream.schema[k] for k in key_cols]
+    key_fields = [stream.schema[k] for k in KEY_COLS]
     out_schema = StructType(
         key_fields
-        + [stream.schema[ts_col]]
+        + [stream.schema["ts"]]
         + [
             StructField("close", DoubleType()),
             StructField("rsi14", DoubleType()),
@@ -896,8 +882,8 @@ def stateful_momentum_suite(
             StructField("n_seen", LongType()),
         ]
     )
-    col_order = list(key_cols) + [
-        ts_col, "close", "rsi14", "obv_micro",
+    col_order = list(KEY_COLS) + [
+        "ts", "close", "rsi14", "obv_micro",
         "macd_line", "macd_signal", "macd_hist",
     ]
 
@@ -922,8 +908,8 @@ def stateful_momentum_suite(
             line_hist.append(
                 ewma(seg, fast, w_f, den_f) - ewma(seg, slow, w_s, den_s)
             )
-        rows = pd.concat(list(pdf_iter)).sort_values(ts_col)
-        ts_us = (rows[ts_col].astype("datetime64[us]").astype("int64")).tolist()
+        rows = pd.concat(list(pdf_iter)).sort_values("ts")
+        ts_us = (rows["ts"].astype("datetime64[us]").astype("int64")).tolist()
         emitted = []
         for t, c, v in zip(
             ts_us,
@@ -982,18 +968,18 @@ def stateful_momentum_suite(
         state.update((tail, obv, n_seen))
         out = pd.DataFrame(
             emitted,
-            columns=[ts_col, "close", "rsi14", "obv_micro",
+            columns=["ts", "close", "rsi14", "obv_micro",
                      "macd_line", "macd_signal", "macd_hist"],
         )
-        out[ts_col] = pd.to_datetime(out[ts_col], unit="us")
+        out["ts"] = pd.to_datetime(out["ts"], unit="us")
         out["obv_micro"] = out["obv_micro"].astype("int64")
         for c in ("rsi14", "macd_line", "macd_signal", "macd_hist"):
             out[c] = out[c].astype(object).where(pd.notna(out[c]), None)
-        for i, k in enumerate(key_cols):
+        for i, k in enumerate(KEY_COLS):
             out[k] = key[i]
         yield out[col_order]
 
-    return stream.groupBy(*[F.col(k) for k in key_cols]).applyInPandasWithState(
+    return stream.groupBy(*[F.col(k) for k in KEY_COLS]).applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
@@ -1086,7 +1072,7 @@ def streaming_predictions(
 _GAP_FILL_CHUNK = 8192
 
 
-def stateful_gap_fill(stream: DataFrame, key_cols: Sequence[str] = ("symbol",)) -> DataFrame:
+def stateful_gap_fill(stream: DataFrame) -> DataFrame:
     """Streaming twin of ``operators.windows.gap_fill_locf`` — bar-
     series regularization as a TRUE single-pass stateful operator:
     per-key state is just ``(last_bucket, last_locf_value)``; when a
@@ -1124,7 +1110,7 @@ def stateful_gap_fill(stream: DataFrame, key_cols: Sequence[str] = ("symbol",)) 
         StructType,
     )
 
-    key_fields = [stream.schema[k] for k in key_cols]
+    key_fields = [stream.schema[k] for k in KEY_COLS]
     out_schema = StructType(
         key_fields
         + [
@@ -1140,7 +1126,7 @@ def stateful_gap_fill(stream: DataFrame, key_cols: Sequence[str] = ("symbol",)) 
             StructField("last_val", DoubleType()),
         ]
     )
-    col_order = list(key_cols) + ["bucket_start", "close", "volume", "is_gap"]
+    col_order = list(KEY_COLS) + ["bucket_start", "close", "volume", "is_gap"]
 
     def _is_null(v) -> bool:
         return v is None or v != v  # None, pd.NA-free NaN, or NaN
@@ -1161,7 +1147,7 @@ def stateful_gap_fill(stream: DataFrame, key_cols: Sequence[str] = ("symbol",)) 
                     "is_gap": out_g,
                 }
             )
-            for i, k in enumerate(key_cols):
+            for i, k in enumerate(KEY_COLS):
                 out[k] = key[i]
             out_b.clear(), out_l.clear(), out_z.clear(), out_g.clear()
             return out[col_order]
@@ -1196,7 +1182,7 @@ def stateful_gap_fill(stream: DataFrame, key_cols: Sequence[str] = ("symbol",)) 
         if out_b:
             yield _flush()
 
-    return stream.groupBy(*[F.col(k) for k in key_cols]).applyInPandasWithState(
+    return stream.groupBy(*[F.col(k) for k in KEY_COLS]).applyInPandasWithState(
         fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 

@@ -93,7 +93,7 @@ def test_dup_span_removal_keeps_one_occurrence(spark):
         ],
         "doc_id long, text string",
     )
-    got = {r.doc_id: r for r in dup_span_removal(docs, n=8).collect()}
+    got = {r.doc_id: r for r in dup_span_removal(docs).collect()}
     # doc 1 is the keeper: nothing removed
     assert got[1].n_removed == 0
     assert got[1].clean_digest == hashlib.md5(
@@ -143,7 +143,7 @@ def test_simhash_banding_recall_is_exact(spark):
     )
     banded = {
         (r.id_a, r.id_b)
-        for r in simhash_neardup_pairs(docs, n_bands=4, max_hamming=2).collect()
+        for r in simhash_neardup_pairs(docs).collect()
     }
     sim = simhash32(docs).select("doc_id", "simhash")
     a = sim.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("sh_a"))
@@ -164,16 +164,6 @@ def test_simhash_banding_recall_is_exact(spark):
     }
     assert banded == brute
     assert (1, 100) in banded  # the injected exact dup (hamming 0)
-
-
-def test_simhash_banding_rejects_unsafe_config(spark):
-    import pytest
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError):
-        simhash_neardup_pairs(docs, n_bands=4, max_hamming=4)
-    with pytest.raises(ValueError):
-        simhash_neardup_pairs(docs, n_bands=5, max_hamming=2)
 
 
 def test_connected_components_transitive_closure(spark):
@@ -206,12 +196,12 @@ def test_fused_clusters_match_pair_composition(spark):
     )
     fused = {
         (r.doc_id, r.cluster_id)
-        for r in simhash_dedup_clusters(docs, n_bands=4, max_hamming=2).collect()
+        for r in simhash_dedup_clusters(docs).collect()
     }
     composed = {
         (r.doc_id, r.cluster_id)
         for r in connected_components(
-            simhash_neardup_pairs(docs, n_bands=4, max_hamming=2)
+            simhash_neardup_pairs(docs)
         ).collect()
     }
     assert fused == composed and len(fused) > 0
@@ -434,8 +424,6 @@ def test_x16_pipeline_reliable_checkpoint_identical(spark, tmp_path):
 
     from conftest import SF_SMOKE
     from financial_market_data_analysis_spark.plans.extensions import (
-        SIMHASH_BANDS,
-        SIMHASH_MAX_HAMMING,
         docs_augmented,
     )
     from financial_market_data_analysis_spark.operators.dedup import (
@@ -445,9 +433,7 @@ def test_x16_pipeline_reliable_checkpoint_identical(spark, tmp_path):
     docs = docs_augmented(spark, SF_SMOKE)
     default = {
         r.doc_id: r.cluster_id
-        for r in simhash_dedup_clusters(
-            docs, n_bands=SIMHASH_BANDS, max_hamming=SIMHASH_MAX_HAMMING
-        ).collect()
+        for r in simhash_dedup_clusters(docs).collect()
     }
     assert default, "x16 found no near-dup clusters at sf0.001"
     ckpt = str(tmp_path / "x16_ckpt")
@@ -460,10 +446,7 @@ def test_x16_pipeline_reliable_checkpoint_identical(spark, tmp_path):
             reliable = {
                 r.doc_id: r.cluster_id
                 for r in simhash_dedup_clusters(
-                    docs,
-                    n_bands=SIMHASH_BANDS,
-                    max_hamming=SIMHASH_MAX_HAMMING,
-                    checkpoint_dir=ckpt,
+                    docs, checkpoint_dir=ckpt
                 ).collect()
             }
     finally:
@@ -578,22 +561,23 @@ def test_bpe_encode_counts_match_trained_merges(spark):
     assert ids == {1}
 
 
-def test_rolling_corr_known_series(spark):
+def test_rolling_corr_known_series(spark, monkeypatch):
     """W12 semantics on engineered series: y = 2x + 1 gives corr = 1,
     y = -x gives corr = -1, and rows before the warm-up period are
     NULL; the sf0.001 parity row is vacuous (too few joint buckets for
     the 20-row frame), so this pins the operator locally."""
-    from financial_market_data_analysis_spark.operators.windows import rolling_corr
+    from financial_market_data_analysis_spark.operators import windows as W
 
+    monkeypatch.setattr(W, "ROLLING_PERIOD", 10)
     rows = [(i, float(i % 7 + i), 0.0) for i in range(30)]
     df = spark.createDataFrame(rows, ["t", "x", "y"]).withColumn(
         "y", 2 * F.col("x") + 1
     )
-    out = rolling_corr(df, "x", "y", ["t"], period=10).orderBy("t").collect()
+    out = W.rolling_corr(df, "x", "y", ["t"]).orderBy("t").collect()
     assert all(r["corr"] is None for r in out[:9])
     assert all(abs(r["corr"] - 1.0) < 1e-9 for r in out[9:])
     anti = df.withColumn("y", -F.col("x"))
-    out2 = rolling_corr(anti, "x", "y", ["t"], period=10).orderBy("t").collect()
+    out2 = W.rolling_corr(anti, "x", "y", ["t"]).orderBy("t").collect()
     assert all(abs(r["corr"] + 1.0) < 1e-9 for r in out2[9:])
 
 
@@ -831,7 +815,7 @@ def test_filter_funnel_is_conserving_and_every_stage_bites(spark):
         assert a.n_out == b.n_in
 
 
-def test_sliced_minhash_matches_sql_twin(spark):
+def test_sliced_minhash_matches_sql_twin(spark, monkeypatch):
     """x80's sliced sketch: every (doc, seed) minhash from the
     digest-slicing Spark build must equal the DuckDB twin — including
     that seed s really reads digest s//4 at offset (s%4)*8 (the
@@ -849,9 +833,10 @@ def test_sliced_minhash_matches_sql_twin(spark):
         (3, "iota kappa lambda mu nu xi omicron pi"),
     ]
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
+    monkeypatch.setattr(D, "SLICED_MINHASH_K", 8)
     got = sorted(
         (r.doc_id, r.seed, r.mh)
-        for r in D.sliced_minhash_signatures(df, n_hashes=8).collect()
+        for r in D.sliced_minhash_signatures(df).collect()
     )
     con = duckdb.connect()
     con.execute("CREATE TABLE d (doc_id BIGINT, text VARCHAR)")
@@ -860,7 +845,7 @@ def test_sliced_minhash_matches_sql_twin(spark):
         tuple(r)
         for r in con.execute(
             f"WITH sh AS ({X._shingles_sql('d')}) "
-            + D.sliced_minhash_sql("sh", n_hashes=8)
+            + D.sliced_minhash_sql()
         ).fetchall()
     )
     assert got == want

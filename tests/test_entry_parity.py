@@ -222,6 +222,22 @@ def test_bench_compare_flags_a_regression_with_documented_flags(tmp_path):
     assert "regressions: 1" in run.stdout
 
 
+def test_bench_summary_counts_failed_queries():
+    """``bench.py``'s summary: ``value`` sums the timings that ran, and a
+    failed query (timing -1) is named and counted in both the full record
+    and the stdout line, out of the queries attempted."""
+    import bench
+
+    timings = {"q1": 1.5, "q2": -1.0, "q3": 0.25, "q4": -1.0}
+    full, line = bench.summarize(timings, 2, 4, 0.1)
+    for rec in (full, line):
+        assert rec["value"] == 1.75
+        assert (rec["n_queries"], rec["n_failed"]) == (4, 2)
+        assert rec["failed"] == ["q2", "q4"]
+    assert full["queries"] == timings and full["cpus"] == 4
+    assert list(line["queries"]) == ["q1", "q3", "q2", "q4"]
+
+
 def test_catalog_is_pinned():
     """The 226 oracle texts and the ``queries()`` keys and order, pinned by
     digest. A change that alters an oracle on purpose updates the digest
@@ -336,72 +352,256 @@ def test_every_engine_function_is_reached_outside_tests():
     assert not dead, f"{len(dead)} functions only tests reach:\n" + "\n".join(dead)
 
 
-# Defaulted parameters that no production root sets but that stay, each
-# with its reason.
+# Defaulted parameters with one value in use (or a ``None`` default no
+# call leaves in place) that stay, each with its reason.
 _KEPT_OPTIONS = {
     ("connected_components", "checkpoint_dir"): "reliable checkpointing: "
     "the loop's lineage survives an executor loss (fault recovery)",
     ("simhash_dedup_clusters", "checkpoint_dir"): "reliable checkpointing: "
     "the loop's lineage survives an executor loss (fault recovery)",
-    ("load_csv", "mode"): "the policy for rejecting malformed outside input",
-    ("load_jsonl", "mode"): "the policy for rejecting malformed outside input",
     ("streaming_predictions", "max_staleness_seconds"): "the staleness "
     "check on stream input",
     ("streaming_predictions", "now_ts"): "the staleness check's test clock",
+    **{
+        o: "perfbench/ calls it with this value; the benchmark's calls keep "
+        "their signatures until a benchmark change"
+        for o in [
+            ("connected_components", "src"),
+            ("connected_components", "dst"),
+            ("incremental_indicators", "order_col"),
+            ("incremental_indicators", "partition_col"),
+            ("incremental_indicators", "tail_rows"),
+            ("minhash_clusters_oracle", "threshold"),
+            ("minhash_lsh_oracle", "threshold"),
+            ("parquet_append_sink", "partition_by"),
+            ("parquet_append_sink", "post_batch"),
+            ("parquet_append_sink", "trigger"),
+            ("streaming_predictions", "feature_cols"),
+            ("streaming_predictions", "order_col"),
+            ("watermarked", "ts_col"),
+        ]
+    },
 }
 
 
-def test_every_engine_option_is_set_outside_tests():
-    """Guard: every defaulted parameter of a top-level package function is
-    set by some call in production code (see ``_production_code``); with
-    one value in use, the value is a constant. Calls match by name. A
-    positional or keyword argument sets its parameter, and a call with
-    ``*args`` or ``**kwargs`` sets every parameter. An argument that only
-    forwards the caller's own unset parameter sets nothing, so the scan
-    repeats until nothing changes. The functions of ``_KEPT_UNREACHED``
-    are left to the reachability guard: no root calls them at all."""
-    funcs, _, run = _production_code()
-    positional: dict[str, list[list[str]]] = {}
-    options: dict[tuple[str, str], str] = {}
+_UNKNOWN = "<unknown>"
+
+
+def _option_values(funcs, run) -> dict[tuple[str, str], tuple[str, str, set[str], bool]]:
+    """Maps each defaulted parameter ``(function, parameter)`` of the
+    package's top-level functions to its file, its default, the values
+    production code passes it (``repr`` strings or ``_UNKNOWN``) and
+    whether some call leaves the default in place.
+
+    Calls match by name. A call that leaves the parameter unset passes
+    its default. A literal, or a name that module-level production code
+    binds to a literal (a module constant), is known by value; an argument that
+    forwards the caller's own option takes that option's values, so the
+    scan repeats until nothing changes; any other expression is unknown.
+    A call with ``*args`` or ``**kwargs`` passes unknown values and the
+    defaults, and a package function passed as a value (a name or
+    attribute not in call position, say a loader handed to a generic
+    reader) counts as called with unknown values for every parameter.
+    The functions of ``_KEPT_UNREACHED`` are left to the reachability
+    guard: no root calls them at all."""
+    consts: dict[str, str] = {}
+    for node in run:
+        if isinstance(node, ast.Assign) and len(node.targets) == 1 \
+                and isinstance(node.targets[0], ast.Name):
+            try:
+                v = repr(ast.literal_eval(node.value))
+            except ValueError:
+                v = _UNKNOWN
+            name = node.targets[0].id
+            consts[name] = v if consts.get(name, v) == v else _UNKNOWN
+
+    def known(v: ast.expr, local: set[str]) -> str:
+        if isinstance(v, ast.Name):
+            return consts.get(v.id, _UNKNOWN) if v.id not in local else _UNKNOWN
+        try:
+            return repr(ast.literal_eval(v))
+        except ValueError:
+            return _UNKNOWN
+
+    params: dict[str, list[tuple[list[str], list[str]]]] = {}
+    options: dict[tuple[str, str], tuple[str, str]] = {}
     for path, fn in funcs:
         a = fn.args
         pos = [x.arg for x in a.posonlyargs + a.args]
-        positional.setdefault(fn.name, []).append(pos)
-        if fn.name in _KEPT_UNREACHED:
-            continue
-        dflt = pos[len(pos) - len(a.defaults):] if a.defaults else []
-        dflt += [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-        for p in dflt:
-            options[(fn.name, p)] = path
-    calls = [
-        (getattr(node, "name", None), c)
-        for node in run
-        for c in ast.walk(node)
-        if isinstance(c, ast.Call)
-    ]
-    unset = set(options)
+        dflt = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+        dflt |= {x.arg: d for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None}
+        params.setdefault(fn.name, []).append((pos, list(dflt)))
+        if fn.name not in _KEPT_UNREACHED:
+            options |= {(fn.name, p): (path, known(d, set())) for p, d in dflt.items()}
+
+    sites = []  # (caller, names local to the caller, call or passed name)
+    for node in run:
+        local = {
+            n.arg if isinstance(n, ast.arg) else n.id
+            for n in ast.walk(node)
+            if isinstance(n, ast.arg)
+            or isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+        }
+        called = {id(c.func) for c in ast.walk(node) if isinstance(c, ast.Call)}
+        for c in ast.walk(node):
+            ref = c.id if isinstance(c, ast.Name) and c.id not in local else (
+                c.attr if isinstance(c, ast.Attribute) else None
+            )
+            if isinstance(c, ast.Call) or (ref in params and id(c) not in called):
+                sites.append((getattr(node, "name", None), local, c))
+
+    values: dict[tuple[str, str], set[str]] = {o: set() for o in options}
+    unset: set[tuple[str, str]] = set()
     while True:
-        was = unset
-        setting: set[tuple[str, str]] = set()
-        for caller, c in calls:
+        was = {o: set(s) for o, s in values.items()}
+        for caller, local, c in sites:
+            if not isinstance(c, ast.Call):
+                ref = getattr(c, "id", getattr(c, "attr", None))
+                for o in values:
+                    if o[0] == ref:
+                        values[o].add(_UNKNOWN)
+                continue
             name = getattr(c.func, "id", getattr(c.func, "attr", None))
+            starred = any(isinstance(a, ast.Starred) for a in c.args) or any(
+                k.arg is None for k in c.keywords
+            )
+            kw = {k.arg: k.value for k in c.keywords}
+            for pos, dflt in params.get(name, ()):
+                bound = dict(zip(pos, c.args)) | kw
+                for p in dflt:
+                    if (name, p) not in values:
+                        continue
+                    got = values[(name, p)]
+                    v = bound.get(p)
+                    if starred:
+                        got.add(_UNKNOWN)
+                    if v is None or starred:
+                        got.add(options[(name, p)][1])
+                        unset.add((name, p))
+                    elif isinstance(v, ast.Name) and (caller, v.id) in values:
+                        got |= values[(caller, v.id)]
+                    else:
+                        got.add(known(v, local))
+        if values == was:
+            return {o: (*options[o], values[o], o in unset) for o in options}
+
+
+def _flagged_options(opts) -> dict[tuple[str, str], str]:
+    """The options of ``_option_values`` with one known value in use, and
+    ``None`` defaults that no production call leaves in place, each with
+    the finding."""
+    flagged = {}
+    for o, (path, default, vals, unset) in sorted(opts.items()):
+        vals = vals or {default}  # no call at all: only the default could run
+        if len(vals) == 1 and _UNKNOWN not in vals:
+            flagged[o] = f"{path}::{o[0]}({o[1]}=) one value in use: {min(vals)}"
+        elif default == "None" and not unset:
+            flagged[o] = f"{path}::{o[0]}({o[1]}=None) no call leaves the default"
+    return flagged
+
+
+def test_every_engine_option_has_two_values_in_use():
+    """Guard: every defaulted parameter of a top-level package function
+    takes at least two values in production code, or an unknown one (see
+    ``_option_values``); with one value in use, the value is a constant.
+    A ``None`` default that no production call leaves in place goes too."""
+    funcs, _, run = _production_code()
+    opts = _option_values(funcs, run)
+    assert len(opts) > 100
+    flagged = _flagged_options(opts)
+    assert set(_KEPT_OPTIONS) <= set(flagged), (
+        "a kept option is gone or now in use with two values; drop it "
+        "from _KEPT_OPTIONS"
+    )
+    found = [flagged[o] for o in flagged if o not in _KEPT_OPTIONS]
+    assert not found, f"{len(found)} options:\n" + "\n".join(found)
+
+
+def test_option_guard_compares_values_and_sees_passed_functions():
+    """The option guard on a small module: literals and module constants
+    compare by value, forwarding takes the caller's values, a ``None``
+    default every call overrides is flagged, and a function passed as a
+    value (a loader handed to a generic reader) counts as called with
+    unknown values, so its options are not flagged."""
+    body = ast.parse(
+        """
+K = 3
+def one(df, n=2): ...
+def two(df, n=2): ...
+def fwd(df, k=4): ...
+def wrap(df, k=4): return fwd(df, k=k)
+def dead(df, out=None): ...
+def load(spark, path, sep=","): ...
+def read(loader, spark, **kw): return loader(spark, "p", **kw)
+def star(df, n=2): ...
+def root(x, args):
+    one(x, 3)
+    one(x, n=K)
+    two(x)
+    two(x, 5)
+    wrap(x)
+    wrap(x, k=4)
+    dead(x, out="a")
+    dead(x, out="b")
+    read(load, x)
+    star(*args)
+"""
+    ).body
+    funcs = [("m.py", n) for n in body if isinstance(n, ast.FunctionDef)]
+    flagged = _flagged_options(_option_values(funcs, body))
+    assert {o: m.split(" ", 1)[1] for o, m in flagged.items()} == {
+        ("one", "n"): "one value in use: 3",
+        ("wrap", "k"): "one value in use: 4",
+        ("fwd", "k"): "one value in use: 4",
+        ("dead", "out"): "no call leaves the default",
+    }
+
+
+def test_perfbench_calls_bind_to_package_signatures():
+    """Every call that a non-test ``perfbench/`` file makes to a package
+    function binds to the function's current signature (argument count
+    and keyword names). Tier-1 never runs the benchmark's traced live
+    tail, so a signature change would otherwise show up only as a failed
+    benchmark run."""
+    import importlib
+    import inspect
+
+    checked, broken = 0, []
+    for f in sorted(_ROOT.glob("perfbench/*.py")):
+        if f.name.startswith("test_"):
+            continue
+        tree = ast.parse(f.read_text())
+        names = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(_PKG.name):
+                mod = importlib.import_module(node.module)
+                for a in node.names:
+                    obj = getattr(mod, a.name, None)
+                    if obj is None:
+                        obj = importlib.import_module(f"{node.module}.{a.name}")
+                    names[a.asname or a.name] = obj
+        for c in ast.walk(tree):
+            if not isinstance(c, ast.Call):
+                continue
+            fn = c.func
+            if isinstance(fn, ast.Name):
+                obj = names.get(fn.id)
+            elif isinstance(fn, ast.Attribute) and isinstance(fn.value, ast.Name):
+                obj = getattr(names.get(fn.value.id), fn.attr, None)
+            else:
+                continue
+            if not (inspect.isfunction(obj) and obj.__module__.startswith(_PKG.name)):
+                continue
             if any(isinstance(a, ast.Starred) for a in c.args) or any(
                 k.arg is None for k in c.keywords
             ):
-                setting |= {o for o in options if o[0] == name}
                 continue
-            args = [(p, v) for pos in positional.get(name, ()) for p, v in zip(pos, c.args)]
-            for p, v in [*args, *((k.arg, k.value) for k in c.keywords)]:
-                if not (isinstance(v, ast.Name) and (caller, v.id) in unset):
-                    setting.add((name, p))
-        unset = set(options) - setting
-        if unset == was:
-            break
-    assert len(options) > 150
-    assert set(_KEPT_OPTIONS) <= unset, (
-        "a kept option is gone or now set; drop it from _KEPT_OPTIONS"
-    )
-    flagged = sorted(f"{options[o]}::{o[0]}({o[1]}=)" for o in unset - set(_KEPT_OPTIONS))
-    assert not flagged, (
-        f"{len(flagged)} options no production root sets:\n" + "\n".join(flagged)
-    )
+            checked += 1
+            try:
+                inspect.signature(obj).bind_partial(
+                    *[None] * len(c.args), **{k.arg: None for k in c.keywords}
+                )
+            except TypeError as e:
+                broken.append(f"{f.name}:{c.lineno} {obj.__name__}: {e}")
+    assert checked > 20
+    assert not broken, "\n".join(broken)

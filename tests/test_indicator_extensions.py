@@ -10,15 +10,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from financial_market_data_analysis_spark.ml import corr_matrix
+from financial_market_data_analysis_spark.operators import windows as W
 from financial_market_data_analysis_spark.operators.windows import rolling_median
 from financial_market_data_analysis_spark.plans.candles import candles_multires
 
 
-def test_rolling_median_even_frame_averages_middle_pair(spark):
+def test_rolling_median_even_frame_averages_middle_pair(spark, monkeypatch):
     rows = [(i, float(v)) for i, v in enumerate([5, 1, 4, 2, 9, 7, 3, 8])]
     df = spark.createDataFrame(rows, "t INT, v DOUBLE")
+    monkeypatch.setattr(W, "ROLLING_PERIOD", 4)
     out = (
-        rolling_median(df, "v", ["t"], period=4)
+        rolling_median(df, "v", ["t"])
         .orderBy("t")
         .select("median")
         .collect()
@@ -43,7 +45,7 @@ def test_multires_rollup_composition_equals_direct(spark, monkeypatch):
         .select("event_id", "ts", "value")
         .withColumn("ts", F.col("ts").cast("timestamp"))
     )
-    multi = candles_multires(ev, (300, 900)).filter(F.col("granularity") == 900)
+    multi = candles_multires(ev).filter(F.col("granularity") == 900)
     from financial_market_data_analysis_spark.plans import candles as C
 
     monkeypatch.setattr(C, "BUCKET_SECONDS", 900)
@@ -70,7 +72,7 @@ def test_multires_and_bucket_floor_align_negative_epochs(spark):
         [(1, -1.0, 10.0), (2, -301.0, 20.0), (3, 1.0, 30.0)],
         "event_id LONG, epoch_s DOUBLE, value DOUBLE",
     ).withColumn("ts", F.col("epoch_s").cast("timestamp"))
-    multi = candles_multires(ev, (300, 900))
+    multi = candles_multires(ev)
     coarse = {
         r.bucket_start for r in multi.filter(F.col("granularity") == 900).collect()
     }
@@ -108,16 +110,6 @@ def pytest_approx(x):
     return pytest.approx(x, abs=1e-9)
 
 
-def test_multires_rejects_non_nested_granularities(spark):
-    ev = spark.createDataFrame(
-        [(1, "2024-01-01 00:00:00", 1.0)], "event_id LONG, ts STRING, value DOUBLE"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    import pytest
-
-    with pytest.raises(ValueError, match="not a multiple"):
-        candles_multires(ev, (300, 700))
-
-
 def test_corr_matrix_matches_pairwise_corr_and_is_one_pass(spark):
     df = spark.createDataFrame(
         [(float(i), float(2 * i + 1), float(-i)) for i in range(10)],
@@ -140,12 +132,12 @@ def test_dup_spans_flags_exact_copies_only(spark):
         [(1, base), (2, base), (3, uniq)], "doc_id LONG, text STRING"
     )
     from financial_market_data_analysis_spark.functions import text as T
-    from financial_market_data_analysis_spark.plans import extensions as X
+    from financial_market_data_analysis_spark.operators import dedup as D
 
     toks = df.select(
         "doc_id",
         F.explode(
-            F.array_distinct(T.all_grams(T.tokens("text"), X.DUP_SPAN_N))
+            F.array_distinct(T.all_grams(T.tokens("text"), D.DUP_SPAN_N))
         ).alias("shingle"),
     )
     shared = (
@@ -194,6 +186,7 @@ def test_ewma_weights_most_recent_highest(spark):
 def test_containment_scores_fragment_near_one(spark):
     from financial_market_data_analysis_spark.operators.dedup import (
         jaccard_verify,
+        shingle_table,
     )
     from pyspark.sql import functions as F
 
@@ -203,7 +196,7 @@ def test_containment_scores_fragment_near_one(spark):
         [(1, words), (2, frag)], "doc_id LONG, text STRING"
     )
     pairs = spark.createDataFrame([(1, 2)], "doc_a LONG, doc_b LONG")
-    v = jaccard_verify(pairs, docs).withColumn(
+    v = jaccard_verify(pairs, shingle_table(docs)).withColumn(
         "containment",
         F.col("n_inter").cast("double") / F.least("n_a", "n_b").cast("double"),
     ).collect()[0]
@@ -248,19 +241,19 @@ def test_rsi_extremes_and_bounds(spark):
     up = spark.createDataFrame(
         [(i, float(i)) for i in range(20)], "t INT, v DOUBLE"
     )
-    rows = rsi(up, "v", ["t"], period=14).filter(F.col("rsi").isNotNull()).collect()
+    rows = rsi(up, "v", ["t"]).filter(F.col("rsi").isNotNull()).collect()
     # monotonically rising series: all-gain frames clamp to exactly 100
     assert rows and all(r.rsi == 100.0 for r in rows)
     down = spark.createDataFrame(
         [(i, float(100 - i)) for i in range(20)], "t INT, v DOUBLE"
     )
-    rows = rsi(down, "v", ["t"], period=14).filter(F.col("rsi").isNotNull()).collect()
+    rows = rsi(down, "v", ["t"]).filter(F.col("rsi").isNotNull()).collect()
     # monotonically falling: RSI exactly 0
     assert rows and all(r.rsi == 0.0 for r in rows)
     mixed = spark.createDataFrame(
         [(i, float(i % 3)) for i in range(30)], "t INT, v DOUBLE"
     )
-    rows = rsi(mixed, "v", ["t"], period=14).filter(F.col("rsi").isNotNull()).collect()
+    rows = rsi(mixed, "v", ["t"]).filter(F.col("rsi").isNotNull()).collect()
     assert all(0.0 <= r.rsi <= 100.0 for r in rows)
     # completely flat (dead) series: neutral 50, NOT the all-gain
     # clamp of 100 (r5 advice — 0/0 frames used to report maximal
@@ -268,7 +261,7 @@ def test_rsi_extremes_and_bounds(spark):
     flat = spark.createDataFrame(
         [(i, 7.0) for i in range(20)], "t INT, v DOUBLE"
     )
-    rows = rsi(flat, "v", ["t"], period=14).filter(F.col("rsi").isNotNull()).collect()
+    rows = rsi(flat, "v", ["t"]).filter(F.col("rsi").isNotNull()).collect()
     assert rows and all(r.rsi == 50.0 for r in rows)
 
 
@@ -330,7 +323,7 @@ def test_macd_no_extra_shuffles_per_stage(spark):
     assert plan.count("Exchange") <= 1, plan[:1500]
 
 
-def test_rolling_median_and_ewma_null_values_do_not_misalign(spark):
+def test_rolling_median_and_ewma_null_values_do_not_misalign(spark, monkeypatch):
     """r5 review regression: collect_list drops NULLs, so the full-frame
     gate must count VALUES, not rows — a gappy series must emit NULL
     (not a confidently wrong number) until a clean full frame exists."""
@@ -343,7 +336,8 @@ def test_rolling_median_and_ewma_null_values_do_not_misalign(spark):
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], "t INT, v DOUBLE"
     )
-    med = {r.t: r.median for r in rolling_median(df, "v", ["t"], period=4).collect()}
+    monkeypatch.setattr(W, "ROLLING_PERIOD", 4)
+    med = {r.t: r.median for r in rolling_median(df, "v", ["t"]).collect()}
     ew = {r.t: r.ewma for r in rolling_ewma(df, "v", ["t"], period=4).collect()}
     # frames containing the NULL at t=2 (t=2..5) hold only 3 values → NULL
     for t in (0, 1, 2, 3, 4, 5):
@@ -375,10 +369,6 @@ def test_pagerank_conserves_mass_and_ranks_hub_highest(spark):
     dangling nodes) total rank mass stays 1 every iteration, and the
     hub of a star graph outranks the leaves."""
     from financial_market_data_analysis_spark.operators.dedup import pagerank
-    from financial_market_data_analysis_spark.plans.extensions import (
-        PAGERANK_DAMPING,
-        PAGERANK_ITERS,
-    )
 
     # star: 0 - {1,2,3,4}, symmetrized — exercises the SAME operator
     # q_pagerank runs (r5 review: the test previously duplicated the
@@ -388,7 +378,7 @@ def test_pagerank_conserves_mass_and_ranks_hub_highest(spark):
         [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs],
         "src LONG, dst LONG",
     )
-    ranks = pagerank(edges, n_iters=PAGERANK_ITERS, damping=PAGERANK_DAMPING)
+    ranks = pagerank(edges)
     got = {r.doc_id: r.rank for r in ranks.collect()}
     assert abs(sum(got.values()) - 1.0) < 1e-12
     assert all(got[0] > got[k] for k in range(1, 5))
@@ -405,7 +395,7 @@ def test_pagerank_empty_graph_returns_empty(spark):
     assert [f.name for f in out.schema.fields] == ["doc_id", "rank"]
 
 
-def test_rolling_corr_and_rsi_null_gaps_emit_null(spark):
+def test_rolling_corr_and_rsi_null_gaps_emit_null(spark, monkeypatch):
     """r5 review regression (second pass): the count-based full-frame
     gate applies to rolling_corr (complete pairs) and rsi (real
     deltas) too — a gap inside the frame must yield NULL, not a
@@ -420,12 +410,14 @@ def test_rolling_corr_and_rsi_null_gaps_emit_null(spark):
         for i in range(10)
     ]
     df = spark.createDataFrame(rows, "t INT, x DOUBLE, y DOUBLE")
-    corr = {r.t: r.corr for r in rolling_corr(df, "x", "y", ["t"], period=4).collect()}
+    monkeypatch.setattr(W, "ROLLING_PERIOD", 4)
+    monkeypatch.setattr(W, "OSCILLATOR_PERIOD", 4)
+    corr = {r.t: r.corr for r in rolling_corr(df, "x", "y", ["t"]).collect()}
     # frames touching the t=3 gap (t=3..6) hold only 3 complete pairs
     for t in (0, 1, 2, 3, 4, 5, 6):
         assert corr[t] is None, t
     assert corr[7] is not None
-    r = {row.t: row.rsi for row in rsi(df, "x", ["t"], period=4).collect()}
+    r = {row.t: row.rsi for row in rsi(df, "x", ["t"]).collect()}
     # deltas at t=3 and t=4 are NULL (null value at t=3) → frames
     # t=4..7 lack 4 real deltas
     for t in (0, 1, 2, 3, 4, 5, 6, 7):
@@ -446,14 +438,14 @@ def test_adx_trends_flats_and_warmup(spark):
             "t INT, high DOUBLE, low DOUBLE, close DOUBLE",
         )
 
-    up = adx(bars([float(i) for i in range(40)]), "high", "low", "close", ["t"], period=14)
+    up = adx(bars([float(i) for i in range(40)]), "high", "low", "close", ["t"])
     got = up.filter(F.col("adx").isNotNull()).collect()
     # first non-null ADX needs period DX rows, each needing period deltas
     assert up.filter(F.col("adx").isNotNull()).count() == 40 - 2 * 14 + 1
     assert all(r.plus_di > r.minus_di and r.minus_di == 0.0 for r in got)
     assert all(r.dx == 100.0 and r.adx == 100.0 for r in got)
 
-    flat = adx(bars([5.0] * 40), "high", "low", "close", ["t"], period=14)
+    flat = adx(bars([5.0] * 40), "high", "low", "close", ["t"])
     rows = flat.filter(F.col("adx").isNotNull()).collect()
     # flat frame: ATR = high-low = 2 (nonzero), DMs all 0 → DI 0, and
     # the +DI+−DI = 0 clamp keeps DX/ADX at 0 instead of NULL/NaN
@@ -463,7 +455,7 @@ def test_adx_trends_flats_and_warmup(spark):
     )
 
 
-def test_chaikin_money_flow_bounds_and_flat_bars(spark):
+def test_chaikin_money_flow_bounds_and_flat_bars(spark, monkeypatch):
     """w22: CMF is a volume-weighted average of multipliers in [-1, 1],
     so every emitted value must sit inside that band; a flat bar
     (high == low) contributes zero flow rather than NULL-poisoning the
@@ -482,8 +474,9 @@ def test_chaikin_money_flow_bounds_and_flat_bars(spark):
     df = spark.createDataFrame(
         rows, "bucket_start long, high double, low double, close double, volume double"
     )
+    monkeypatch.setattr(W, "ROLLING_PERIOD", 10)
     out = W.chaikin_money_flow(
-        df, "high", "low", "close", "volume", ["bucket_start"], period=10
+        df, "high", "low", "close", "volume", ["bucket_start"]
     )
     vals = [r.cmf for r in out.filter(F.col("cmf").isNotNull()).collect()]
     assert len(vals) == 30 - 10 + 1
@@ -619,7 +612,7 @@ def test_gap_fill_locf_chunked_spine_long_range(spark, monkeypatch):
     assert (agg["lo_c"], agg["hi_c"]) == (7.0, 9.0)
 
 
-def test_rolling_beta_recovers_exact_linear_relation(spark):
+def test_rolling_beta_recovers_exact_linear_relation(spark, monkeypatch):
     """y = 2x + 3 exactly → beta = 2, alpha = 3 on every complete
     frame; a null gap re-arms the pair gate; a flat-x frame (var = 0)
     yields NULL rather than a division."""
@@ -630,8 +623,9 @@ def test_rolling_beta_recovers_exact_linear_relation(spark):
     xs = [1.0, 3.0, 2.0, 5.0, 4.0, 6.0, 8.0, 7.0]
     rows = [(i, x, 2.0 * x + 3.0) for i, x in enumerate(xs)]
     df = spark.createDataFrame(rows, "t INT, x DOUBLE, y DOUBLE")
+    monkeypatch.setattr(W, "ROLLING_PERIOD", 4)
     out = {r.t: (r.beta, r.alpha) for r in
-           rolling_beta(df, "y", "x", ["t"], period=4).collect()}
+           rolling_beta(df, "y", "x", ["t"]).collect()}
     for t in (0, 1, 2):
         assert out[t] == (None, None), t  # warm-up
     for t in (3, 4, 5, 6, 7):
@@ -641,7 +635,7 @@ def test_rolling_beta_recovers_exact_linear_relation(spark):
     gap = [(i, None if i == 2 else float(i + 1), float(i)) for i in range(8)]
     dg = spark.createDataFrame(gap, "t INT, x DOUBLE, y DOUBLE")
     got = {r.t: r.beta for r in
-           rolling_beta(dg, "y", "x", ["t"], period=4).collect()}
+           rolling_beta(dg, "y", "x", ["t"]).collect()}
     for t in (2, 3, 4, 5):  # frames touching the t=2 gap
         assert got[t] is None, t
     assert got[6] is not None
@@ -650,11 +644,11 @@ def test_rolling_beta_recovers_exact_linear_relation(spark):
         [(i, 5.0, float(i)) for i in range(6)], "t INT, x DOUBLE, y DOUBLE"
     )
     fb = {r.t: r.beta for r in
-          rolling_beta(flat, "y", "x", ["t"], period=4).collect()}
+          rolling_beta(flat, "y", "x", ["t"]).collect()}
     assert all(v is None for v in fb.values())
 
 
-def test_rolling_beta_range_frame_is_time_based(spark):
+def test_rolling_beta_range_frame_is_time_based(spark, monkeypatch):
     """w26's RANGE frame: the look-back is a fixed event-time span,
     not a row count — an isolated old point falls OUT of frame even
     though a ROWS frame would still include it; sparse stretches fail
@@ -671,7 +665,7 @@ def test_rolling_beta_range_frame_is_time_based(spark):
     ]
     df = spark.createDataFrame(rows, "t LONG, x DOUBLE, y DOUBLE")
     out = {r.t: (r.beta, r.alpha) for r in
-           rolling_beta_range(df, "y", "x", "t", span=10, min_pairs=5)
+           rolling_beta_range(df, "y", "x", "t", span=10)
            .collect()}
     # the outlier and the warm-up rows fail the ≥5-pair gate
     for t in (0, 100, 101, 102, 103):
@@ -683,8 +677,9 @@ def test_rolling_beta_range_frame_is_time_based(spark):
     flat = spark.createDataFrame(
         [(i, 5.0, float(i)) for i in range(6)], "t LONG, x DOUBLE, y DOUBLE"
     )
+    monkeypatch.setattr(W, "BETA_RANGE_MIN_PAIRS", 3)
     fb = {r.t: r.beta for r in
-          rolling_beta_range(flat, "y", "x", "t", span=10, min_pairs=3)
+          rolling_beta_range(flat, "y", "x", "t", span=10)
           .collect()}
     assert all(v is None for v in fb.values())
 
@@ -712,7 +707,7 @@ def test_rolling_beta_range_span_boundary_cross_engine(spark, duck):
         rolling_beta_range,
     )
 
-    span, min_pairs = 86400, 5
+    span, min_pairs = 86400, W.BETA_RANGE_MIN_PAIRS
     # group 1: six rows; at t=86400 the frame reaches t=0 exactly —
     # the boundary row is IN (6 pairs) and moves the fit
     g1 = [
@@ -738,7 +733,7 @@ def test_rolling_beta_range_span_boundary_cross_engine(spark, duck):
     df = spark.createDataFrame(rows, "bucket LONG, rx DOUBLE, ry DOUBLE")
     got = (
         rolling_beta_range(
-            df, "ry", "rx", "bucket", span=span, min_pairs=min_pairs
+            df, "ry", "rx", "bucket", span=span
         )
         .filter(F.col("beta").isNotNull())
         .select(

@@ -186,15 +186,14 @@ def test_extract_features_batch_contract(spark):
     assert out.count() == media.count()
 
 
-def test_kmeans_lloyd_converges_to_cluster_means(spark):
+def test_kmeans_lloyd_converges_to_cluster_means(spark, monkeypatch):
     """Two well-separated clusters with seeds one-per-cluster: after 2
     Lloyd iterations each centroid must equal its cluster's element-wise
     mean (rounded), with the right member counts; a seed that captures
     no vectors must drop out (cells can only shrink)."""
-    from financial_market_data_analysis_spark.operators.similarity import (
-        kmeans_lloyd,
-    )
+    from financial_market_data_analysis_spark.operators import similarity as S
 
+    monkeypatch.setattr(S, "EMB_DIM", 4)
     a = [[1.0, 0.0, 0.0, 0.1], [1.0, 0.1, 0.0, 0.0], [0.9, 0.0, 0.1, 0.0]]
     b = [[0.0, 1.0, 0.2, 0.0], [0.0, 0.9, 0.0, 0.1]]
     rows = [(i, v) for i, v in enumerate(a + b)]
@@ -207,7 +206,7 @@ def test_kmeans_lloyd_converges_to_cluster_means(spark):
     )
     got = {
         r.centroid_id: (r.n_assigned, [round(x, 6) for x in r.embedding])
-        for r in kmeans_lloyd(corpus, seeds, n_iter=2, dim=4).collect()
+        for r in S.kmeans_lloyd(corpus, seeds).collect()
     }
     assert set(got) == {0, 3}  # the member-less seed 9 dropped out
     assert got[0][0] == 3 and got[3][0] == 2

@@ -173,12 +173,10 @@ def test_source_quota_cap_invariants(spark, monkeypatch, pairs):
     )
 )
 @settings(**_SETTINGS)
-def test_kmeans_lloyd_partition_invariants(spark, vecs):
+def test_kmeans_lloyd_partition_invariants(spark, monkeypatch, vecs):
     """x34: every surviving centroid has >= 1 member, member counts sum
     to the corpus size, and K never grows."""
-    from financial_market_data_analysis_spark.operators.similarity import (
-        kmeans_lloyd,
-    )
+    from financial_market_data_analysis_spark.operators import similarity as S
 
     corpus = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
@@ -187,7 +185,8 @@ def test_kmeans_lloyd_partition_invariants(spark, vecs):
         [(i, v) for i, v in enumerate(vecs[:2])],
         "centroid_id long, embedding array<float>",
     )
-    out = kmeans_lloyd(corpus, seeds, n_iter=2, dim=4).collect()
+    monkeypatch.setattr(S, "EMB_DIM", 4)
+    out = S.kmeans_lloyd(corpus, seeds).collect()
     assert 1 <= len(out) <= 2
     assert all(r.n_assigned >= 1 for r in out)
     assert sum(r.n_assigned for r in out) == len(vecs)
@@ -195,22 +194,19 @@ def test_kmeans_lloyd_partition_invariants(spark, vecs):
 
 @given(st.lists(price, min_size=25, max_size=40))
 @settings(**_SETTINGS)
-def test_rolling_center_stats_bounded_by_frame_extremes(spark, closes):
+def test_rolling_center_stats_bounded_by_frame_extremes(spark, monkeypatch, closes):
     """W13/W14 invariant: the rolling median and the renormalized
     truncated EWMA are convex combinations of frame values, so every
     emitted value must lie within [min, max] of its trailing frame."""
-    from financial_market_data_analysis_spark.operators.windows import (
-        rolling_ewma,
-        rolling_median,
-    )
+    from financial_market_data_analysis_spark.operators import windows as W
 
     period = 10
+    monkeypatch.setattr(W, "ROLLING_PERIOD", period)
     df = spark.createDataFrame(
         [(i, float(v)) for i, v in enumerate(closes)], "t INT, v DOUBLE"
     )
-    out = rolling_ewma(
-        rolling_median(df, "v", ["t"], period=period),
-        "v", ["t"], period=period,
+    out = W.rolling_ewma(
+        W.rolling_median(df, "v", ["t"]), "v", ["t"], period=period
     ).collect()
     by_t = {r.t: r for r in out}
     for t, r in by_t.items():
@@ -225,18 +221,16 @@ def test_rolling_center_stats_bounded_by_frame_extremes(spark, closes):
 
 @given(st.lists(price, min_size=20, max_size=35))
 @settings(**_SETTINGS)
-def test_rsi_bounded_and_obv_telescopes(spark, closes):
+def test_rsi_bounded_and_obv_telescopes(spark, monkeypatch, closes):
     """W15: RSI ∈ [0, 100] on any series. W16: OBV's total equals the
     sum of signed volumes directly (the running sum telescopes)."""
-    from financial_market_data_analysis_spark.operators.windows import (
-        on_balance_volume,
-        rsi,
-    )
+    from financial_market_data_analysis_spark.operators import windows as W
 
+    monkeypatch.setattr(W, "OSCILLATOR_PERIOD", 5)
     rows = [(i, float(v), float((i % 7) + 1)) for i, v in enumerate(closes)]
     df = spark.createDataFrame(rows, "t INT, close DOUBLE, vol DOUBLE")
     out = (
-        on_balance_volume(rsi(df, "close", ["t"], period=5), "close", "vol", ["t"])
+        W.on_balance_volume(W.rsi(df, "close", ["t"]), "close", "vol", ["t"])
         .orderBy("t")
         .collect()
     )
@@ -300,7 +294,7 @@ def test_dup_span_removal_total_and_keeper_invariants(spark, doc_len, n_docs):
     rows = [(i, t) for i, t in texts.items()]
     rows.append((n_docs, texts[0]))  # exact copy of doc 0, higher id
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r.doc_id: r for r in dup_span_removal(df, n=8).collect()}
+    out = {r.doc_id: r for r in dup_span_removal(df).collect()}
     assert out[0].n_removed == 0  # the keeper survives whole
     assert out[0].clean_digest == hashlib.md5(texts[0].encode()).hexdigest()
     copy = out[n_docs]
@@ -398,18 +392,19 @@ def test_kmv_merge_equals_union_sketch_on_random_sets(spark, xs, ys):
 
 @given(st.lists(price, min_size=30, max_size=45))
 @settings(**_SETTINGS)
-def test_adx_dis_nonneg_and_dx_adx_bounded(spark, closes):
+def test_adx_dis_nonneg_and_dx_adx_bounded(spark, monkeypatch, closes):
     """W21: on any series, ±DI ≥ 0 (averages of non-negative DMs over a
     positive ATR), DX ∈ [0, 100] (a normalized spread of non-negatives),
     and ADX ∈ [0, 100] (an average of DX values)."""
-    from financial_market_data_analysis_spark.operators.windows import adx
+    from financial_market_data_analysis_spark.operators import windows as W
 
+    monkeypatch.setattr(W, "OSCILLATOR_PERIOD", 5)
     rows = [
         (i, float(v) + 0.5, float(v) - 0.5, float(v))
         for i, v in enumerate(closes)
     ]
     df = spark.createDataFrame(rows, "t INT, high DOUBLE, low DOUBLE, close DOUBLE")
-    for r in adx(df, "high", "low", "close", ["t"], period=5).collect():
+    for r in W.adx(df, "high", "low", "close", ["t"]).collect():
         for v in (r.plus_di, r.minus_di):
             if v is not None:
                 assert v >= -1e-9
@@ -459,7 +454,7 @@ def test_histogram_quantile_estimate_bounded_and_monotone(spark, vals):
     )
 )
 @settings(**_SETTINGS)
-def test_cmf_always_within_unit_band(spark, bars):
+def test_cmf_always_within_unit_band(spark, monkeypatch, bars):
     """w22 invariant: CMF is a volume-weighted mean of multipliers in
     [-1, 1], so it can never leave that band — for ANY bar geometry,
     including flat bars (range 0)."""
@@ -473,8 +468,9 @@ def test_cmf_always_within_unit_band(spark, bars):
     df = spark.createDataFrame(
         rows, "bucket_start long, high double, low double, close double, volume double"
     )
+    monkeypatch.setattr(W, "ROLLING_PERIOD", 10)
     out = W.chaikin_money_flow(
-        df, "high", "low", "close", "volume", ["bucket_start"], period=10
+        df, "high", "low", "close", "volume", ["bucket_start"]
     )
     vals = [r.cmf for r in out.collect() if r.cmf is not None]
     assert all(-1.0 - 1e-9 <= v <= 1.0 + 1e-9 for v in vals)
@@ -865,7 +861,6 @@ def test_evolving_load_conservation_and_widening_law(
     clean, quar = load_csv_evolving(
         spark,
         [(str(tmp / "old"), old_schema), (str(tmp / "new"), new_schema)],
-        header=False,
     )
     c_rows = clean.collect()
     n_quar = quar.count()

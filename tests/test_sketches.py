@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from financial_market_data_analysis_spark.operators import sketches as SK
+from financial_market_data_analysis_spark.operators import windows as W
 from financial_market_data_analysis_spark.operators.joins import (
     interval_lookup_join,
 )
@@ -95,8 +96,9 @@ def test_interval_lookup_boundary_conventions(spark):
          (6, 2, 150)],
         "pid INT, user_id INT, ts BIGINT",
     )
+    # no two intervals share a start, so the tiebreak column is moot
     out = interval_lookup_join(
-        pr, iv, ["user_id"], "ts", "s", "e", ["tag"]
+        pr, iv, ["user_id"], "ts", "s", "e", ["tag"], tie_col="s"
     )
     got = {r.pid: r.tag for r in out.collect()}
     # probe before any interval and probe for an interval-less user drop
@@ -124,7 +126,7 @@ def test_interval_lookup_same_start_last_tie_wins(spark):
     assert got == {1: "live", 2: "live"}
 
 
-def test_donchian_channel_and_breakouts(spark):
+def test_donchian_channel_and_breakouts(spark, monkeypatch):
     rows = [
         # t, high, low, close — breakout above on t=3, below on t=5
         (0, 10.0, 9.0, 9.5),
@@ -135,8 +137,9 @@ def test_donchian_channel_and_breakouts(spark):
         (5, 11.0, 8.0, 8.5),
     ]
     df = spark.createDataFrame(rows, "t INT, high DOUBLE, low DOUBLE, close DOUBLE")
+    monkeypatch.setattr(W, "ROLLING_PERIOD", 2)
     out = (
-        donchian_channel(df, "high", "low", "close", ["t"], period=2)
+        donchian_channel(df, "high", "low", "close", ["t"])
         .orderBy("t")
         .collect()
     )
@@ -258,7 +261,7 @@ def test_hll_registers_match_python_reference(spark):
     df = spark.createDataFrame([(k,) for k in keys], "k STRING")
     got = {
         r.register: r.rho
-        for r in SK.hll_registers(df, "k").collect()
+        for r in SK.hll_registers(df, "k", []).collect()
     }
     assert got == _py_hll_registers(keys)
 
@@ -294,7 +297,7 @@ def test_hll_estimate_raw_branch_accuracy(spark):
     n = 5000
     df = spark.createDataFrame([(f"u{i}",) for i in range(n)], "k STRING")
     est = SK.hll_estimate_from_registers(
-        SK.hll_registers(df, "k")
+        SK.hll_registers(df, "k", []), []
     ).collect()[0]
     assert abs(est.est_distinct - n) / n < 0.20
     # raw branch: with ~0 empty registers the linear-counting guard
@@ -314,7 +317,7 @@ def test_hll_estimate_formula_both_branches(spark):
     small = spark.createDataFrame(
         [(0, 1), (1, 61), (2, 3)], "register INT, rho INT"
     )
-    got = SK.hll_estimate_from_registers(small).collect()[0]
+    got = SK.hll_estimate_from_registers(small, []).collect()[0]
     assert got.est_distinct == round(m * math.log(m / 253), 6)
     # raw branch: every register set -> zeros == 0; one register at
     # the rho cap must contribute exactly 2^-61, not garbage
@@ -322,7 +325,7 @@ def test_hll_estimate_formula_both_branches(spark):
         [(j, 2) for j in range(m - 1)] + [(m - 1, 61)],
         "register INT, rho INT",
     )
-    got = SK.hll_estimate_from_registers(full).collect()[0]
+    got = SK.hll_estimate_from_registers(full, []).collect()[0]
     expected = alpha * m * m / ((m - 1) * 2.0**-2 + 2.0**-61)
     assert got.est_distinct == round(expected, 6)
     assert got.est_distinct > 0
@@ -337,10 +340,10 @@ def test_hll_null_keys_are_no_observation(spark):
     clean = with_nulls.filter(F.col("k").isNotNull())
     a = sorted(
         (r.register, r.rho)
-        for r in SK.hll_registers(with_nulls, "k").collect()
+        for r in SK.hll_registers(with_nulls, "k", []).collect()
     )
     b = sorted(
-        (r.register, r.rho) for r in SK.hll_registers(clean, "k").collect()
+        (r.register, r.rho) for r in SK.hll_registers(clean, "k", []).collect()
     )
     assert a == b
     assert all(reg is not None for reg, _ in a)

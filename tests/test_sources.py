@@ -416,7 +416,7 @@ def test_streaming_quarantine_ingest_exactly_once(spark, tmp_path):
         .csv(str(src))
     )
     q = quarantining_ingest_sink(
-        stream, clean_dir, quar_dir, ckpt
+        stream, clean_dir, quar_dir, ckpt, str(tmp_path / "drift")
     ).trigger(availableNow=True).start()
     assert q.awaitTermination(300)
 
@@ -616,7 +616,6 @@ def test_evolving_load_widens_retyped_column_not_quarantine(spark, tmp_path):
     clean, quar = load_csv_evolving(
         spark,
         [(str(old_p), old_schema), (str(new_p), new_schema)],
-        header=False,
     )
     rows = {r["doc_id"]: r for r in clean.collect()}
     q_rows = quar.collect()

@@ -655,8 +655,7 @@ def test_sliding_window_agg_streaming_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    agg = sliding_window_agg(P.watermarked(stream, "ts"), "ts", "value",
-                             "600 seconds", "300 seconds")
+    agg = sliding_window_agg(P.watermarked(stream, "ts"))
     q = (
         agg.writeStream.format("memory").queryName("sw_agg")
         .outputMode("append").trigger(availableNow=True).start()
@@ -667,8 +666,7 @@ def test_sliding_window_agg_streaming_parity(spark, tmp_path):
     assert len(emitted) > 0
     batch = {
         r.window_start: (r.avg_value, r.n)
-        for r in sliding_window_agg(ev, "ts", "value",
-                                    "600 seconds", "300 seconds").collect()
+        for r in sliding_window_agg(ev).collect()
     }
     for r in emitted:
         b_avg, b_n = batch[r.window_start]
@@ -694,7 +692,7 @@ def test_session_windows_streaming_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    agg = session_windows(P.watermarked(stream, "ts"), "ts", ("user_id",))
+    agg = session_windows(P.watermarked(stream, "ts"))
     q = (
         agg.writeStream.format("memory").queryName("sess_agg")
         .outputMode("append").trigger(availableNow=True).start()
@@ -705,7 +703,7 @@ def test_session_windows_streaming_parity(spark, tmp_path):
     assert len(emitted) > 0
     batch = {
         (r.user_id, r.session_start): (r.session_last, r.n_events, r.sum_value)
-        for r in session_windows(ev, "ts", ("user_id",)).collect()
+        for r in session_windows(ev).collect()
     }
     for r in emitted:
         last, n, s = batch[(r.user_id, r.session_start)]
@@ -734,7 +732,7 @@ def test_session_windows_restart_no_duplicate_sessions(spark, tmp_path):
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        agg = session_windows(P.watermarked(stream, "ts"), "ts", ("user_id",))
+        agg = session_windows(P.watermarked(stream, "ts"))
         q = (
             agg.writeStream.format("parquet")
             .option("path", out)
@@ -762,7 +760,7 @@ def test_session_windows_restart_no_duplicate_sessions(spark, tmp_path):
     # every emitted session matches the batch computation exactly
     batch = {
         (r.user_id, r.session_start): (r.session_last, r.n_events)
-        for r in session_windows(ev, "ts", ("user_id",)).collect()
+        for r in session_windows(ev).collect()
     }
     for r in emitted.collect():
         assert batch[(r.user_id, r.session_start)] == (r.session_last, r.n_events)
@@ -899,7 +897,7 @@ def test_stateful_indicator_suite_matches_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = P.stateful_indicator_suite(stream, ("symbol",), "ts")
+    out = P.stateful_indicator_suite(stream)
     q = (
         out.writeStream.format("memory").queryName("sis_out")
         .outputMode("append").trigger(availableNow=True).start()
@@ -1078,7 +1076,7 @@ def test_streaming_predictions_epoch_retry_idempotent(spark, tmp_path):
     assert final.filter(F.col("epoch_id") == 4).count() > 0
 
 
-def test_sliding_join_back_nondivisible_slide(spark):
+def test_sliding_join_back_nondivisible_slide(spark, monkeypatch):
     """slide ∤ length: every event appears exactly once per sliding
     window that contains it — ceil(length/slide) candidate starts plus
     a membership filter (floor division used to silently drop an edge
@@ -1086,9 +1084,7 @@ def test_sliding_join_back_nondivisible_slide(spark):
     attach windows the event is not in)."""
     import datetime
 
-    from financial_market_data_analysis_spark.operators.windows import (
-        sliding_join_back,
-    )
+    from financial_market_data_analysis_spark.operators import windows as W
 
     offsets = [0, 50, 250, 650, 950]
     base = datetime.datetime(2024, 1, 1, 0, 0, 0)  # epoch-multiple of 300
@@ -1096,7 +1092,8 @@ def test_sliding_join_back_nondivisible_slide(spark):
         [(base + datetime.timedelta(seconds=s), float(s)) for s in offsets],
         "ts timestamp, value double",
     )
-    out = sliding_join_back(ev, "ts", "value", 700, 300)
+    monkeypatch.setattr(W, "SLIDE_LENGTH_SECONDS", 700)
+    out = W.sliding_join_back(ev)
     got = {(int(r["ts"].timestamp()), r["window_start"]) for r in out.collect()}
 
     base_u = int(base.timestamp())
@@ -1241,7 +1238,7 @@ def test_momentum_incremental_line_history_matches_naive(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    out = P.stateful_momentum_suite(stream, ("symbol",), "ts")
+    out = P.stateful_momentum_suite(stream)
     q = (
         out.writeStream.format("memory").queryName("mom_incr")
         .outputMode("append").trigger(availableNow=True).start()
@@ -1496,7 +1493,7 @@ def test_stateful_gap_fill_fills_across_batch_boundary(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        stateful_gap_fill(stream, key_cols=("symbol",))
+        stateful_gap_fill(stream)
         .writeStream.format("memory")
         .queryName("gapfill_boundary_out")
         .outputMode("append")
@@ -1584,7 +1581,7 @@ def test_stateful_gap_fill_null_values_match_batch_across_cut(spark, tmp_path):
         .parquet(src)
     )
     q = (
-        stateful_gap_fill(stream, key_cols=("symbol",))
+        stateful_gap_fill(stream)
         .writeStream.format("memory")
         .queryName("gapfill_null_out")
         .outputMode("append")

@@ -44,11 +44,11 @@ def main() -> int:
     # operator APIs directly, pre-checkpoint.
     def _simhash_edges(spark, sf):
         from financial_market_data_analysis_spark.plans.extensions import (
-            docs_augmented, SIMHASH_BANDS, SIMHASH_MAX_HAMMING)
+            docs_augmented)
         from financial_market_data_analysis_spark.operators.dedup import (
             _simhash_sketches, _sketch_band_edges)
         sk = _simhash_sketches(docs_augmented(spark, sf), "doc_id", "text")
-        return _sketch_band_edges(sk, SIMHASH_BANDS, SIMHASH_MAX_HAMMING)
+        return _sketch_band_edges(sk)
 
     def _simhash_sketch_table(spark, sf):
         from financial_market_data_analysis_spark.plans.extensions import (
@@ -67,9 +67,11 @@ def main() -> int:
     def _gaussian_bucket(spark, sf):
         from financial_market_data_analysis_spark.sources.batch import load_table
         from financial_market_data_analysis_spark.operators.similarity import (
-            bucket_expr)
+            hyperplane_bucket_gaussian)
         e = load_table(spark, "embeddings", sf)
-        return e.select("vec_id", bucket_expr("embedding").alias("bucket"))
+        return e.select(
+            "vec_id", hyperplane_bucket_gaussian("embedding").alias("bucket")
+        )
 
     def _l2_exact_topk(spark, sf):
         from financial_market_data_analysis_spark.sources.batch import load_table
