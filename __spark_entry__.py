@@ -6665,10 +6665,7 @@ def _t13_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         s_bands = D.lsh_bands(D.shingle_arrays(stream), carry_cols=("sh_arr",))
         probe = s_bands.join(index, ["band", "band_hash"], "left")
-        n_inter = F.size(F.array_intersect("sh_arr", "corp_sh"))
-        jacc = n_inter / (
-            F.size("sh_arr") + F.size("corp_sh") - n_inter
-        )
+        jacc = D.array_jaccard("sh_arr", "corp_sh")["jaccard"]
         gate = (
             probe.select(
                 "doc_id",
@@ -6738,10 +6735,6 @@ def _t14_stream_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     corp_sh = D.shingle_arrays(D.ensure_parallelism(docs))
 
-    def _jacc(a: str, b: str):
-        inter = F.size(F.array_intersect(a, b))
-        return inter / (F.size(a) + F.size(b) - inter)
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         bands = D.lsh_bands(
             D.shingle_arrays(batch_df), carry_cols=("sh_arr",)
@@ -6749,7 +6742,7 @@ def _t14_stream_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx = spark.read.option("recursiveFileLookup", "true").parquet(index_dir)
         hits_idx = (
             bands.join(idx, ["band", "band_hash"])
-            .filter(_jacc("sh_arr", "m_sh") >= thr)
+            .filter(D.array_jaccard("sh_arr", "m_sh")["jaccard"] >= thr)
             .select("doc_id", "m_id")
         )
         right = bands.select(
@@ -6761,7 +6754,7 @@ def _t14_stream_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         hits_batch = (
             bands.join(right, ["band", "band_hash"])
             .filter(F.col("m_id") < F.col("doc_id"))
-            .filter(_jacc("sh_arr", "m_sh") >= thr)
+            .filter(D.array_jaccard("sh_arr", "m_sh")["jaccard"] >= thr)
             .select("doc_id", "m_id")
         )
         matched = (

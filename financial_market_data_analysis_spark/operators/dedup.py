@@ -92,8 +92,9 @@ def shingle_table(df: DataFrame) -> DataFrame:
     ``.distinct()`` shuffle is needed.
 
     Precondition: ``doc_id`` must be unique in ``df`` (one row per
-    document). Duplicate doc_id rows would inflate ``n_sh``/``n_inter``
-    in ``jaccard_verify``; dedupe upstream if the input can repeat."""
+    document). Duplicate doc_id rows would inflate per-doc overlap
+    counts such as ``decontaminate``'s; dedupe upstream if the input
+    can repeat."""
     toks_df = df.select(F.col("doc_id"), tokens().alias("__toks"))
     return toks_df.select(
         F.col("doc_id"), F.explode(_shingles(F.col("__toks"))).alias("shingle")
@@ -107,7 +108,9 @@ def shingle_arrays(df: DataFrame) -> DataFrame:
     whole MinHash signature/band computation stay row-local: zero
     shuffles until the band self-join. Docs with no shingles (fewer
     than n tokens) are dropped, matching the explode-based semantics
-    where they simply produce no rows.
+    where they simply produce no rows. The arrays are what
+    ``jaccard_verify`` reads; like ``shingle_table``, ``doc_id`` must be
+    unique in ``df``.
     """
     # The no-shingle filter is expressed on the TOKEN COUNT, before the
     # shingle transform: a filter on size(sh_arr) gets pushed below the
@@ -341,45 +344,51 @@ def lsh_candidate_pairs(sigs: DataFrame, band_size: int = BAND_SIZE) -> DataFram
     return band_candidate_pairs(bands)
 
 
-def jaccard_verify(pairs: DataFrame, sh: DataFrame) -> DataFrame:
+def array_jaccard(a: str, b: str) -> dict[str, Column]:
+    """Exact Jaccard of two per-doc DISTINCT shingle-array columns, as
+    named columns: ``n_inter`` = |A∩B|, ``n_a`` = |A|, ``n_b`` = |B|
+    (bigint) and ``jaccard`` = |A∩B| / |A∪B| (double, NULL when both
+    sets are empty). Row-local: no explode, no join on the shingle
+    value. The counts are set sizes only because ``_shingles`` is
+    ``array_distinct``; arrays with repeats would be over-counted."""
+    n_inter = F.size(F.array_intersect(a, b)).cast("bigint")
+    n_a = F.size(a).cast("bigint")
+    n_b = F.size(b).cast("bigint")
+    return {
+        "n_inter": n_inter,
+        "n_a": n_a,
+        "n_b": n_b,
+        "jaccard": safe_div(
+            n_inter.cast("double"), (n_a + n_b - n_inter).cast("double")
+        ),
+    }
+
+
+def jaccard_verify(pairs: DataFrame, sh_arr: DataFrame) -> DataFrame:
     """Exact token-shingle Jaccard for candidate pairs only, over an
-    (id, shingle) table such as ``shingle_table``'s.
+    (id, sh_arr) table such as ``shingle_arrays``'s.
 
-    |A∩B| via an equi-join of the two shingle sets on the shingle value;
-    |A|,|B| precomputed per document — no full cross-product anywhere.
+    Two joins: ``pairs ⋈ sh_arr`` on ``doc_a``, then ``⋈ sh_arr`` on
+    ``doc_b``; every count is then a row-local ``array_jaccard`` over the
+    two carried arrays — no cross-product, no explode, no per-doc sizes
+    aggregate. A pair whose doc has no shingles (fewer than ``SHINGLE``
+    tokens, so no ``shingle_arrays`` row) is dropped.
 
-    Caching is the CALLER's job (the r2 leak finding): ``sh`` is
-    referenced three times below (sizes + both sides of the
-    intersection join), so callers should pass a persisted — or
-    cheap-to-recompute, e.g. candidate-bounded — shingle table.
+    Caching is the CALLER's job (the r2 leak finding): ``sh_arr`` is
+    read twice (one per join side), so callers pass a persisted — or
+    cheap-to-recompute, e.g. candidate-bounded — shingle-array table.
+    ``doc_id`` must be unique in it.
     """
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    def side(s: str) -> DataFrame:
+        return sh_arr.select(
+            F.col("doc_id").alias(f"doc_{s}"), F.col("sh_arr").alias(f"sh_{s}")
+        )
 
-    inter = (
-        pairs.join(
-            sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle")), "doc_a"
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle")),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    return pairs.join(side("a"), "doc_a").join(side("b"), "doc_b").select(
+        "doc_a",
+        "doc_b",
+        *[c.alias(name) for name, c in array_jaccard("sh_a", "sh_b").items()],
     )
-    out = (
-        pairs.join(inter, ["doc_a", "doc_b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
-        .withColumn(
-            "jaccard",
-            safe_div(
-                F.col("n_inter").cast("double"),
-                (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-            ),
-        )
-    )
-    return out.select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -483,8 +492,11 @@ def minhash_lsh_dedup(df: DataFrame, threshold: float = 0.5, hash_method: str = 
     - candidate pairs are tiny → ``localCheckpoint`` materializes them
       eagerly, which both cuts the lineage and lets the corpus-wide
       caches be dropped;
-    - Jaccard verification only shingles CANDIDATE docs (broadcast
-      semi-join on the pair ids), so the verify cost is O(candidates),
+    - Jaccard verification re-reads that persisted shingle-array table:
+      two joins attach each candidate pair's arrays and the counts are
+      row-local ``array_intersect``/``size`` (``jaccard_verify``), so
+      no doc is re-shingled or exploded; beyond one in-memory read of
+      the arrays per join side, the set work is O(candidate pairs),
       not O(corpus).
 
     Returns an eagerly materialized (checkpointed) result; no cached
@@ -503,13 +515,12 @@ def minhash_lsh_dedup(df: DataFrame, threshold: float = 0.5, hash_method: str = 
     # holds only with one executor (``local[*]``): on a cluster the two
     # readers of a partition may run on different executors and each
     # compute it. ROADMAP item 7's two-executor run is what will test it.
+    # The eager pair checkpoint below is the band self-join, so by the
+    # time ``jaccard_verify`` reads ``shingled`` (twice, one per join
+    # side) its blocks are filled; the verify adds no shingle work.
     pairs = band_candidate_pairs(bands).localCheckpoint(eager=True)
     bands.unpersist()
-    cand = candidate_ids(pairs)
-    sh = shingled.join(F.broadcast(cand), "doc_id").select(
-        F.col("doc_id"), F.explode("sh_arr").alias("shingle")
-    )
-    verified = jaccard_verify(pairs, sh)
+    verified = jaccard_verify(pairs, shingled)
     out = verified.filter(F.col("jaccard") >= threshold).localCheckpoint(eager=True)
     shingled.unpersist()
     return out

@@ -459,15 +459,15 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     # verify cost is bounded to candidate docs: only docs appearing in a
-    # pair pay the tokenize→shingle→explode cost (r2 verdict item #5 —
+    # pair pay the tokenize→shingle cost (r2 verdict item #5 —
     # previously the WHOLE augmented corpus was re-shingled here).
     cand = D.ensure_parallelism(
         d.join(F.broadcast(D.candidate_ids(pairs)), "doc_id")
     )
-    sh = D.shingle_table(cand).persist()
-    verified = D.jaccard_verify(pairs, sh)
+    sh_arr = D.shingle_arrays(cand).persist()
+    verified = D.jaccard_verify(pairs, sh_arr)
     out = verified.filter(F.col("jaccard") >= NGRAM_JACCARD_MIN).localCheckpoint(eager=True)
-    sh.unpersist()
+    sh_arr.unpersist()
     return out
 
 
@@ -3228,15 +3228,15 @@ def q_doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # verify cost bounded to candidate docs, and the shingle table is
-    # PERSISTED across jaccard_verify's three references (its
-    # documented caller contract; the x6 pattern) — without this the
-    # whole augmented corpus would be re-shingled three times per run
+    # verify cost bounded to candidate docs, and the shingle arrays are
+    # PERSISTED across jaccard_verify's two join sides (its documented
+    # caller contract) — without this every candidate doc would be
+    # re-shingled once per side
     cand_docs = D.ensure_parallelism(
         aug.join(F.broadcast(D.candidate_ids(cand)), "doc_id")
     )
-    sh = D.shingle_table(cand_docs).persist()
-    scored = D.jaccard_verify(cand, sh)
+    sh_arr = D.shingle_arrays(cand_docs).persist()
+    scored = D.jaccard_verify(cand, sh_arr)
     w = Window.partitionBy("doc_a").orderBy(F.desc("jaccard"), "doc_b")
     out = (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -3250,7 +3250,7 @@ def q_doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    sh.unpersist()
+    sh_arr.unpersist()
     return out
 
 
@@ -3805,8 +3805,8 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_docs = D.ensure_parallelism(
         both.join(F.broadcast(D.candidate_ids(cand)), "doc_id")
     )
-    sh = D.shingle_table(cand_docs).persist()
-    scored = D.jaccard_verify(cand, sh)
+    sh_arr = D.shingle_arrays(cand_docs).persist()
+    scored = D.jaccard_verify(cand, sh_arr)
     out = (
         scored.filter(F.col("jaccard") >= X60_THRESHOLD)
         .select(
@@ -3820,7 +3820,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    sh.unpersist()
+    sh_arr.unpersist()
     return out
 
 
@@ -4997,19 +4997,16 @@ def q_lsh_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh_arr = D.shingle_arrays(D.ensure_parallelism(aug)).localCheckpoint(
         eager=False
     )
-    sh = sh_arr.select(
-        "doc_id", F.explode("sh_arr").alias("shingle")
-    ).localCheckpoint(eager=False)
     # everything below operates on pair/sample/truth frames that are
     # thousands of rows at most — run the sweep under a graph-sized
     # shuffle-partition count (the x16/x61 convention: session-width
     # shuffles of tiny frames are pure empty-task scheduling latency;
     # measured ~9 s -> ~6 s at sf0.1 from this scope alone)
     with scoped_confs(spark, GRAPH_SHUFFLE):
-        return _lsh_tuning_body(spark, sh_arr, sh)
+        return _lsh_tuning_body(spark, sh_arr)
 
 
-def _lsh_tuning_body(spark: SparkSession, sh_arr: DataFrame, sh: DataFrame) -> DataFrame:
+def _lsh_tuning_body(spark: SparkSession, sh_arr: DataFrame) -> DataFrame:
     present = sh_arr.select("doc_id").distinct()
     inj = (
         present.filter(
@@ -5057,18 +5054,17 @@ def _lsh_tuning_body(spark: SparkSession, sh_arr: DataFrame, sh: DataFrame) -> D
 
     # exact Jaccard is PAIR-intrinsic: verify each distinct pair once.
     # The injected truth pairs and every config's sampled candidates
-    # share ONE jaccard_verify pass — one sizes aggregate and one
-    # intersection join over the shingle table instead of five (the
-    # sizes groupBy alone profiled at 3-8 s of task time per verify
-    # call; jaccard values per pair are identical, so the truth set
-    # and each config's verified count are unchanged).
+    # share ONE jaccard_verify pass — one pair of joins against the
+    # shingle arrays instead of five (jaccard values per pair are
+    # identical, so the truth set and each config's verified count are
+    # unchanged).
     need = (
         inj.select("doc_a", "doc_b")
         .unionByName(samp.select("doc_a", "doc_b"))
         .distinct()
     )
     jac = (
-        D.jaccard_verify(need, sh)
+        D.jaccard_verify(need, sh_arr)
         .filter(F.col("jaccard") >= X69_THRESHOLD)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)  # feeds truth AND per-config verify
@@ -5243,9 +5239,6 @@ def q_neardup_method_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh_arr = D.shingle_arrays(D.ensure_parallelism(aug)).localCheckpoint(
         eager=False
     )
-    sh = sh_arr.select(
-        "doc_id", F.explode("sh_arr").alias("shingle")
-    ).localCheckpoint(eager=False)
     with scoped_confs(spark, GRAPH_SHUFFLE):
         present = sh_arr.select("doc_id").distinct()
         inj = (
@@ -5292,17 +5285,16 @@ def q_neardup_method_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         # exact Jaccard is PAIR-intrinsic: the injected truth pairs and
         # both methods' sampled candidates share ONE jaccard_verify
-        # pass — one sizes aggregate + one intersection join over the
-        # shingle table instead of three (the x69 restructure; jaccard
-        # per pair is identical, so truth and the per-method verified
-        # counts are unchanged).
+        # pass — one pair of joins against the shingle arrays instead
+        # of three (the x69 restructure; jaccard per pair is identical,
+        # so truth and the per-method verified counts are unchanged).
         need = (
             inj.select("doc_a", "doc_b")
             .unionByName(samp.select("doc_a", "doc_b"))
             .distinct()
         )
         jac = (
-            D.jaccard_verify(need, sh)
+            D.jaccard_verify(need, sh_arr)
             .filter(F.col("jaccard") >= X69_THRESHOLD)
             .select("doc_a", "doc_b")
             .localCheckpoint(eager=True)  # feeds truth AND verify counts
@@ -6611,8 +6603,8 @@ def q_minhash_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent, the w12 ULP convention).
 
     Scale shape: shingles/signatures are row-local; the candidate join
-    is the banded LSH equi-join (never all-pairs); the truth join
-    touches only candidate-pair shingle rows; the per-k sweep is one
+    is the banded LSH equi-join (never all-pairs); the truth verify
+    reads only candidate docs' shingle arrays; the per-k sweep is one
     conditional aggregate over a pairs-sized frame."""
     aug = docs_augmented(spark, sf_dir)
     # sliced signatures: 8 md5 digests serve all 32 seeds as 32-bit
@@ -6628,23 +6620,15 @@ def q_minhash_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = D.lsh_candidate_pairs(
         sigs.filter(F.col("seed") < D.N_MINHASH)
     ).localCheckpoint(eager=False)  # feeds truth AND estimate joins
-    # the TRUTH join tokenizes only candidate docs — the corpus-wide
+    # the TRUTH verify tokenizes only candidate docs — the corpus-wide
     # shingle table costs ~5x the rest of the query and only the
     # ~pairs-sized doc set ever reaches a Jaccard verification
-    sh = D.shingle_table(
+    sh_arr = D.shingle_arrays(
         aug.join(F.broadcast(D.candidate_ids(pairs)), "doc_id")
-    ).localCheckpoint(eager=False)  # feeds sizes AND the intersection
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    inter = (
-        pairs.join(
-            sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a"
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), "shingle"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
+    ).localCheckpoint(eager=False)  # read by both verify join sides
+    truth = D.jaccard_verify(pairs, sh_arr).select(
+        "doc_a", "doc_b", "n_inter",
+        (F.col("n_a") + F.col("n_b") - F.col("n_inter")).alias("u"),
     )
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"), "seed", F.col("mh").alias("mh_a")
@@ -6669,24 +6653,9 @@ def q_minhash_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
     )
-    t = (
-        matches.join(inter, ["doc_a", "doc_b"], "left")
-        .na.fill({"n_inter": 0})
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed(
-                "n_sh", "n_a"
-            ),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-                "n_sh", "n_b"
-            ),
-            "doc_b",
-        )
-        .withColumn("u", F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-        .localCheckpoint(eager=False)  # feeds the four per-k selects
-    )
+    t = matches.join(truth, ["doc_a", "doc_b"]).localCheckpoint(
+        eager=False
+    )  # feeds the four per-k selects
     per_k = [
         t.agg(
             F.lit(k).cast("int").alias("n_hashes"),

@@ -207,6 +207,84 @@ def test_fused_clusters_match_pair_composition(spark):
     assert fused == composed and len(fused) > 0
 
 
+def test_jaccard_verify_matches_set_arithmetic(spark):
+    """The array verify's counts are Python set arithmetic over each
+    doc's distinct token trigrams: a doc with fewer than 3 tokens has
+    no shingles and drops its pair; a trigram repeated inside one doc
+    counts once; a disjoint pair scores n_inter 0 and Jaccard 0.0, not
+    NULL; identical docs score 1.0. Column names and types are the
+    long-table verify's (only nullability moved: its counts were
+    aggregates, the sizes follow the shingle-array column)."""
+    from financial_market_data_analysis_spark.operators.dedup import (
+        jaccard_verify,
+        shingle_arrays,
+    )
+
+    texts = {
+        1: "alpha beta",  # 2 tokens: no shingles
+        2: "x y z x y z x y z",  # 3 distinct trigrams, each 2-3 times
+        3: "p q r s",
+        4: "x y z x y z x y z",  # identical to 2
+        5: "X y z w",  # shares "x y z" with 2 (tokens are lowercased)
+    }
+    pair_list = [(1, 2), (2, 3), (2, 4), (2, 5), (3, 5)]
+    docs = spark.createDataFrame(list(texts.items()), "doc_id LONG, text STRING")
+    pairs = spark.createDataFrame(pair_list, "doc_a LONG, doc_b LONG")
+    out = jaccard_verify(pairs, shingle_arrays(docs))
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("doc_a", "bigint"), ("doc_b", "bigint"), ("n_inter", "bigint"),
+        ("n_a", "bigint"), ("n_b", "bigint"), ("jaccard", "double"),
+    ]
+
+    def shingles(text: str) -> set[str]:
+        toks = text.lower().split()
+        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+
+    want = {}
+    for a, b in pair_list:
+        sa, sb = shingles(texts[a]), shingles(texts[b])
+        if sa and sb:
+            want[(a, b)] = (len(sa & sb), len(sa), len(sb), len(sa & sb) / len(sa | sb))
+    got = {
+        (r.doc_a, r.doc_b): (r.n_inter, r.n_a, r.n_b, r.jaccard)
+        for r in out.collect()
+    }
+    assert got == want
+    assert (1, 2) not in got
+    assert got[(2, 3)] == (0, 3, 2, 0.0) and got[(3, 5)] == (0, 2, 2, 0.0)
+    assert got[(2, 4)] == (3, 3, 3, 1.0)
+    assert got[(2, 5)] == (1, 3, 2, 0.25)
+
+
+def test_minhash_lsh_dedup_write_submits_few_jobs(spark, tmp_path):
+    """The benchmark's MinHash phase — one ``minhash_lsh_dedup`` whose
+    pairs are written to parquet — at sf0.001 submits at most 14 Spark
+    jobs (11-12 measured with the array verify; the exploded long-table
+    verify's joins, sizes aggregate and left join back submitted 23-24)."""
+    from conftest import SF_SMOKE
+
+    from financial_market_data_analysis_spark.operators.dedup import (
+        minhash_lsh_dedup,
+    )
+    from financial_market_data_analysis_spark.plans.extensions import (
+        docs_augmented,
+    )
+
+    sc = spark.sparkContext
+    group = "minhash_lsh_dedup_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        minhash_lsh_dedup(docs_augmented(spark, SF_SMOKE), threshold=0.5).write.parquet(
+            str(tmp_path / "pairs")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 1 <= n <= 14, n
+    assert spark.read.parquet(str(tmp_path / "pairs")).count() > 0
+
+
 def test_hash_split_is_stable_and_total(spark):
     docs = spark.range(500).withColumnRenamed("id", "doc_id")
     s1 = hash_split(docs).select("doc_id", "split")

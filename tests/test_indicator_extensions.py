@@ -186,7 +186,7 @@ def test_ewma_weights_most_recent_highest(spark):
 def test_containment_scores_fragment_near_one(spark):
     from financial_market_data_analysis_spark.operators.dedup import (
         jaccard_verify,
-        shingle_table,
+        shingle_arrays,
     )
     from pyspark.sql import functions as F
 
@@ -196,7 +196,7 @@ def test_containment_scores_fragment_near_one(spark):
         [(1, words), (2, frag)], "doc_id LONG, text STRING"
     )
     pairs = spark.createDataFrame([(1, 2)], "doc_a LONG, doc_b LONG")
-    v = jaccard_verify(pairs, shingle_table(docs)).withColumn(
+    v = jaccard_verify(pairs, shingle_arrays(docs)).withColumn(
         "containment",
         F.col("n_inter").cast("double") / F.least("n_a", "n_b").cast("double"),
     ).collect()[0]
